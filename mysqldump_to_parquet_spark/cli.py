@@ -122,10 +122,16 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="mysqldump-to-parquet", master=args.master)
     try:
         if args.export:
+            from pyspark.sql import Observation
+            from pyspark.sql import functions as F
+
             from .sources.dump_datasource import register
 
             register(spark)
-            df = spark.read.parquet(args.input)
+            obs = Observation("export")
+            df = spark.read.parquet(args.input).observe(
+                obs, F.count(F.lit(1)).alias("rows")
+            )
             (
                 df.write.format("mysqldump")
                 .option("path", args.output)
@@ -135,7 +141,11 @@ def main(argv: list[str] | None = None) -> int:
             )
             print(
                 json.dumps(
-                    {"exported": args.export, "rows": df.count(), "output": args.output}
+                    {
+                        "exported": args.export,
+                        "rows": obs.get["rows"],
+                        "output": args.output,
+                    }
                 )
             )
             return 0

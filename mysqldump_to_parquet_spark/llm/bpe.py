@@ -33,12 +33,12 @@ DuckDB twin unrolls the same K rounds as chained CTEs).  The delimiters
 are control chars absent from any real text corpus; a document that did
 contain them would still be encoded identically by both twins.
 
-Scale shape per round: one partial-aggregated pair count (shuffle carries
-one row per distinct pair, not per occurrence) and one map-only string
-replace; the corpus is re-checkpointed per round (the BFS/MLlib iterative-
-frame discipline) and only the single winning (pair, count) row ever
-reaches the driver — the corpus itself never does.  Word-level parallelism
-is unbounded: no window, no sort, no per-key state.
+Scale shape: the corpus is exploded and grouped ONCE into a small
+``(sym, freq)`` table of distinct words (the Sennrich et al. 2016 /
+HF-tokenizers shape); every round is a frequency-weighted pair count over
+that table, one TakeOrdered-1 whose single winning row reaches the
+driver, and a map-only replace re-checkpointed so lineage stays one round
+deep.  Per-round work follows the word vocabulary, not the corpus size.
 
 No reference counterpart (ingest-only engine); net-new per SURVEY §2.2.
 """
@@ -59,24 +59,9 @@ BPE_MERGES = 4
 BPE_OPEN = "\x01"
 BPE_CLOSE = "\x02"
 
-#: Corpus re-checkpoint cadence in merge rounds (r16, guide §5).  The
-#: corpus replace is a map-only codegen pass, so letting a few rounds'
-#: replaces STACK lazily and re-evaluating the stack inside the next
-#: round's ``affected`` filter is cheaper than eagerly materializing
-#: the full corpus every round: tools/bpe_k_sweep.py at sf1, K=89
-#: rounds, measured total 114.3 s at cadence 1 → 56.6 s at 4 → 47.1 s
-#: at 8, with per-round wall FLAT across rounds at every cadence
-#: (first-decile ≈ last-decile mean), i.e. lineage depth stays bounded
-#: by the cadence and never leaks round-over-round.  8 keeps the
-#: re-evaluated stack shallow (≤7 replaces — string codegen, no
-#: shuffle) while cutting ~7/8 of the corpus materializations; the
-#: learned rules are cadence-independent by construction (the counts
-#: path never reads the corpus checkpoint).
-BPE_CORPUS_CHECKPOINT_EVERY = 8
-
 
 def _pairs_of(df: DataFrame) -> DataFrame:
-    """Adjacent symbol pairs of every word (one row per occurrence).
+    """Adjacent symbol pairs of every distinct word, with its ``freq``.
 
     ``substr`` strips the outer brackets, then splitting on the
     ``\\x02\\x01`` inter-symbol seam yields the clean symbol list."""
@@ -85,7 +70,8 @@ def _pairs_of(df: DataFrame) -> DataFrame:
             F.split(
                 F.expr("substr(sym, 2, length(sym) - 2)"),
                 BPE_CLOSE + BPE_OPEN,
-            ).alias("l")
+            ).alias("l"),
+            "freq",
         )
         .where(F.size("l") >= 2)
         .select(
@@ -95,9 +81,10 @@ def _pairs_of(df: DataFrame) -> DataFrame:
                     " slice(l, 2, size(l) - 1),"
                     " (x, y) -> struct(x AS a, y AS b))"
                 )
-            ).alias("p")
+            ).alias("p"),
+            "freq",
         )
-        .select("p.a", "p.b")
+        .select("p.a", "p.b", "freq")
     )
 
 
@@ -109,114 +96,48 @@ def _bracketed(a: str, b: str | None = None) -> str:
 
 
 def _learn(spark: SparkSession, sf_dir: str):
-    """Run the {BPE_MERGES} merge rounds with INCREMENTAL pair
-    statistics — the real tokenizer-trainer loop; returns (rules, final
-    corpus), shared by q_bpe_merges and q_bpe_apply.
+    """Run the {BPE_MERGES} merge rounds over the distinct-word table;
+    returns (rules, final ``(sym, freq)`` table), shared by q_bpe_merges
+    and q_bpe_apply.
 
-    Counting every adjacent pair each round costs O(corpus) per round;
-    but a merge only changes the pair multiset of words CONTAINING the
-    merged pair.  So the full count runs once, and each round applies a
-    DELTA: pairs(affected words, after replace) minus pairs(affected
-    words, before), folded into the persisted counts table (sizes:
-    |affected| ≪ |corpus| after the first few merges, counts table =
-    |live pair vocabulary|).  The winning rule is then a TakeOrdered-1
-    over the SMALL counts table — no corpus scan decides a round.  The
-    corpus replace itself stays a map-only pass + checkpoint.  Measured
-    at sf0.1: 6.0 s → 4.3 s and the ×100-data scale factor drops from
-    4.1× to ~2× (per-round count work now follows |affected|); the
-    identical brute-force unrolled-CTE oracle hash-verifies every rule."""
+    A word's pairs count once per occurrence, so the pair count is
+    ``sum(freq)`` over the pairs of each distinct word — the same numbers
+    the brute-force unrolled-CTE oracle counts over every occurrence."""
     d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .where(F.length("w") > 0)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("freq"))
         .select(
             F.expr(
                 "array_join(transform(sequence(1, length(w)),"
                 f" i -> '{BPE_OPEN}' || substr(w, i, 1) || '{BPE_CLOSE}'),"
                 " '')"
-            ).alias("sym")
+            ).alias("sym"),
+            "freq",
         )
-        .localCheckpoint()
-    )
-    counts = (
-        _pairs_of(words)
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()
     )
     rules: list[tuple[int, str, str, int]] = []
-    cur = words
     for r in range(1, BPE_MERGES + 1):
         top = (
-            counts.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
+            _pairs_of(words)
+            .groupBy("a", "b")
+            .agg(F.sum("freq").alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
             .limit(1)
             .collect()  # exactly ONE row per round — the merge rule
         )
-        if not top or top[0].cnt <= 0:
+        if not top:
             break
         a, b, cnt = top[0].a, top[0].b, int(top[0].cnt)
         rules.append((r, a, b, cnt))
         pat, rep = _bracketed(a, b), _bracketed(a + b)
-        if r == BPE_MERGES:
-            # Final round (optimization r15): the post-collect update —
-            # affected filter, delta count, counts fold, corpus
-            # checkpoint — exists only to prepare round r+1, which
-            # never runs.  q_bpe_merges uses none of it; q_bpe_apply
-            # needs only the final REPLACE, left lazy here so its one
-            # map-only pass fuses into the apply action instead of
-            # eagerly materializing a corpus nobody may read.  Skipping
-            # the dead work removes three eager jobs (two of them
-            # corpus-sized passes) per call — measured 4.37 s → 4.08 s
-            # at sf0.1.
-            cur = cur.select(
-                F.replace(F.col("sym"), F.lit(pat), F.lit(rep)).alias("sym")
-            )
-            break
-        affected = cur.where(F.col("sym").contains(pat)).localCheckpoint()
-        replaced = affected.select(
-            F.replace(F.col("sym"), F.lit(pat), F.lit(rep)).alias("sym")
-        )
-        # (A one-pass delta — both pair lists concat-ed into one explode
-        # over one scan — was tried in r15 and measured SLOWER: the
-        # nested transform(zip_with(...)) struct-building runs as
-        # interpreted higher-order expressions and cost more than the
-        # second scan it saved.  Two-pass kept deliberately.)
-        delta = (
-            _pairs_of(replaced)
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .unionByName(
-                _pairs_of(affected)
-                .groupBy("a", "b")
-                .agg((-F.count(F.lit(1))).alias("d"))
-            )
-            .groupBy("a", "b")
-            .agg(F.sum("d").alias("d"))
-        )
-        counts = (
-            counts.join(delta, ["a", "b"], "full")
-            .select(
-                "a",
-                "b",
-                (
-                    F.coalesce(F.col("cnt"), F.lit(0))
-                    + F.coalesce(F.col("d"), F.lit(0))
-                ).alias("cnt"),
-            )
-            .where(F.col("cnt") > 0)
-            .localCheckpoint()
-        )
-        cur = cur.select(
-            F.replace(F.col("sym"), F.lit(pat), F.lit(rep)).alias("sym")
-        )
-        if r % BPE_CORPUS_CHECKPOINT_EVERY == 0:
-            # truncate lineage at the sweep-measured cadence; between
-            # checkpoints the next round's `affected` filter
-            # re-evaluates the (shallow) replace stack, which the
-            # K-sweep measured cheaper than a corpus materialization
-            # per round
-            cur = cur.localCheckpoint()
-    return rules, cur
+        words = words.select(
+            F.replace(F.col("sym"), F.lit(pat), F.lit(rep)).alias("sym"), "freq"
+        ).localCheckpoint()
+    return rules, words
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,20 +164,21 @@ def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-segment every document with them — here both run in the same K
     synchronous rounds, so the reported counts are the exact
     frequencies a {BPE_MERGES}-rule tokenizer would produce.  Scale
-    shape: one explode + partial-aggregated count over the transformed
-    corpus, global cut via TakeOrderedAndProject."""
-    _, cur = _learn(spark, sf_dir)
+    shape: one explode + partial-aggregated ``sum(freq)`` over the
+    distinct-word table, global cut via TakeOrderedAndProject."""
+    _, words = _learn(spark, sf_dir)
     return (
-        cur.select(
+        words.select(
             F.explode(
                 F.split(
                     F.expr("substr(sym, 2, length(sym) - 2)"),
                     BPE_CLOSE + BPE_OPEN,
                 )
-            ).alias("sym")
+            ).alias("sym"),
+            "freq",
         )
         .groupBy("sym")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
+        .agg(F.sum("freq").alias("n_occ"))
         .select(
             "sym",
             F.length("sym").cast("long").alias("sym_len"),

@@ -1293,7 +1293,9 @@ def ivf_index_staleness(spark: SparkSession, sf_dir: str) -> dict:
     import json
     import os
 
-    hit = _IVF_LAYOUTS.get(sf_dir)
+    with _CACHE_LOCK:  # fast lookups only — the seeding scan runs outside
+        hit = _IVF_LAYOUTS.get(sf_dir)
+        counts_hit = _IVF_CELL_COUNTS.get(sf_dir)
     if hit is None:
         raise ValueError(
             f"no written IVF layout for {sf_dir!r} in this session — "
@@ -1310,7 +1312,6 @@ def ivf_index_staleness(spark: SparkSession, sf_dir: str) -> dict:
     # signal is driver arithmetic, not a footer scan that grows with
     # every appended file.  A cold cache (first call for this layout)
     # pays the scan once and seeds it.
-    counts_hit = _IVF_CELL_COUNTS.get(sf_dir)
     if counts_hit is not None and counts_hit[0] == hit[0]:
         cur = dict(counts_hit[1])
     else:
@@ -1322,7 +1323,11 @@ def ivf_index_staleness(spark: SparkSession, sf_dir: str) -> dict:
             .collect()
             if r["cell"] is not None  # null rows are not index mass
         }
-        _IVF_CELL_COUNTS[sf_dir] = (hit[0], dict(cur))
+        with _CACHE_LOCK:
+            # seed only if no append re-stamped the layout during the
+            # scan — never clobber the counts that append just merged
+            if _IVF_LAYOUTS.get(sf_dir, (None,))[0] == hit[0]:
+                _IVF_CELL_COUNTS[sf_dir] = (hit[0], dict(cur))
     return _staleness_from_counts(fit_sizes, fit_total, cur)
 
 

@@ -50,6 +50,17 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def _default_driver_memory() -> str:
+    """Driver heap: ``SPARK_DRIVER_MEMORY`` if set, else half the host's
+    physical RAM capped at 32 GiB — a fixed 32g heap on a 16 GB host lets
+    the JVM grow until the kernel kills it."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(32 << 10, phys // 2 >> 20)}m"
+
+
 def configure_for_oracle(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-built session (idempotent)."""
     for k, v in RUNTIME_CONFS.items():
@@ -73,7 +84,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -172,10 +172,16 @@ def test_heavy_hitters_empty_when_flat(spark, tmp_path):
 )
 def test_bpe_merges_match_python_reference(spark, tmp_path, docs):
     """Distributed BPE rounds == a pure-Python reference implementation
-    (greedy left-to-right merge, count-then-lexicographic tie-break)."""
+    (greedy left-to-right merge, count-then-lexicographic tie-break), for
+    both the learned rules and the applied vocabulary head."""
     from collections import Counter
 
-    from mysqldump_to_parquet_spark.llm.bpe import BPE_MERGES, bpe_merges
+    from mysqldump_to_parquet_spark.llm.bpe import (
+        BPE_MERGES,
+        BPE_VOCAB_TOP,
+        bpe_apply,
+        bpe_merges,
+    )
 
     sf = _write_documents(spark, tmp_path, docs)
 
@@ -212,6 +218,12 @@ def test_bpe_merges_match_python_reference(spark, tmp_path, docs):
     # the feed-forward check: some later rule must involve a multi-char
     # symbol created by an earlier merge
     assert any(len(a) > 1 or len(b) > 1 for _, a, b, _ in expect[1:])
+
+    # the vocabulary head after all merges, counted per occurrence
+    occ = Counter(s for w in words for s in w)
+    vocab = sorted(occ.items(), key=lambda kv: (-kv[1], kv[0]))[:BPE_VOCAB_TOP]
+    got_vocab = [(r.sym, r.sym_len, r.n_occ) for r in bpe_apply(spark, sf).collect()]
+    assert got_vocab == [(s, len(s), n) for s, n in vocab]
 
 
 # ---------------------------------------------------- k examples per group
