@@ -115,47 +115,40 @@ _MODULES = [
 #: CORRECTNESS file landing later cannot invert the invariants
 #: touched-bucket pins this round (sub-module change annotations): q_tpch_q21, q_kmeans, q_ivf_index_append, q_sim_knn_join_ivf, q_bpe_merges, q_bpe_apply, q_dedup_phash
 _ORDER_BASE_COMMIT = "643b776"
-_ORDER_BASIS_ROUND = 15
+_ORDER_BASIS_ROUND = 16
 
 _CHECK_ORDER = (
         "q_tpch_q21", "q_kmeans", "q_ivf_index_append",
         "q_sim_knn_join_ivf", "q_bpe_merges", "q_bpe_apply",
-        "q_dedup_phash", "q_embed_centroids", "q_embed_quantize",
-        "q_knn_classify", "q_join_dpp", "q_lateral_topk",
-        "q_subquery_scalar", "q_tpch_q10", "q_tpch_q18", "q_tpch_q3",
-        "q_tpch_q5", "q_sim_ann_ivfpq", "q_sim_ann_lsh",
-        "q_sim_ann_lsh_batch", "q_agg_bool", "q_agg_collect",
-        "q_agg_grouping", "q_agg_minmax_by", "q_anomaly_mad",
-        "q_join_asof", "q_join_broadcast", "q_join_cross",
-        "q_join_full", "q_join_inner", "q_join_left", "q_join_salted",
-        "q_join_semi", "q_join_theta_range", "q_project_filter",
-        "q_set_except", "q_set_intersect", "q_set_union",
-        "q_sink_partitioned", "q_sort_limit", "q_src_csv",
-        "q_stream_dedup", "q_stream_session", "q_stream_sliding",
-        "q_stream_tumbling", "q_topk_per_group", "q_udaf_grouped",
-        "q_udf_pandas_scalar", "q_udtf_explode", "q_udtf_python",
+        "q_dedup_phash", "q_ingest_mysqldump", "q_scan_parquet",
         "q_tpch_q11", "q_tpch_q12", "q_tpch_q13", "q_tpch_q14",
-        "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_tpch_q19",
-        "q_tpch_q2", "q_tpch_q20", "q_tpch_q22", "q_tpch_q4",
-        "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
+        "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_check_constraints",
+        "q_cogroup_pandas", "q_cohort_retention", "q_decontaminate",
+        "q_entropy", "q_fingerprint", "q_fn_array_algebra",
+        "q_fn_bitwise", "q_fn_date_calendar", "q_fn_explode_outer",
+        "q_fn_hash", "q_fn_regex", "q_fn_string_pad", "q_gopher_rules",
+        "q_join_interval", "q_lang_id", "q_merge_upsert", "q_ngram_lm",
+        "q_pack_sequences", "q_quality_score", "q_repetition",
+        "q_resample_locf", "q_sample_stratified", "q_scd2",
+        "q_split_hash", "q_src_dump_datasource", "q_src_json",
+        "q_src_orc", "q_text_clean", "q_text_stats", "q_tfidf",
+        "q_token_count", "q_top_terms", "q_win_time_range",
+        "q_tpch_q19", "q_tpch_q2", "q_tpch_q20", "q_tpch_q22",
+        "q_tpch_q4", "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
         "q_dedup_against_index_exact", "q_dedup_against_index_ivf",
         "q_multimodal_audio", "q_multimodal_decode",
         "q_multimodal_frames", "q_multimodal_jpeg", "q_multimodal_meta",
         "q_multimodal_png", "q_multimodal_resize", "q_multimodal_video",
-        "q_sim_ann_partitioned", "q_sim_radius", "q_sim_topk",
-        "q_sim_ann_ivf", "q_sim_ann_ivf_batch",
-        "q_sim_ann_ivf_partitioned", "q_sim_knn_join_exact",
-        "q_check_constraints", "q_cogroup_pandas", "q_cohort_retention",
-        "q_decontaminate", "q_entropy", "q_fingerprint",
-        "q_fn_array_algebra", "q_fn_bitwise", "q_fn_date_calendar",
-        "q_fn_explode_outer", "q_fn_hash", "q_fn_regex",
-        "q_fn_string_pad", "q_gopher_rules", "q_ingest_mysqldump",
-        "q_join_interval", "q_lang_id", "q_merge_upsert", "q_ngram_lm",
-        "q_pack_sequences", "q_quality_score", "q_repetition",
-        "q_resample_locf", "q_sample_stratified", "q_scan_parquet",
-        "q_scd2", "q_split_hash", "q_src_dump_datasource", "q_src_json",
-        "q_src_orc", "q_text_clean", "q_text_stats", "q_tfidf",
-        "q_token_count", "q_top_terms", "q_win_time_range",
+        "q_sim_radius", "q_sim_topk", "q_dedup_chunks",
+        "q_dedup_components", "q_dedup_embedding", "q_dedup_exact",
+        "q_dedup_fuzzy", "q_dedup_near", "q_dedup_near_candidates",
+        "q_dedup_ngram_jaccard", "q_dedup_simhash",
+        "q_embed_covariance", "q_embed_pca", "q_sim_ann_ivf",
+        "q_sim_ann_ivf_batch", "q_sim_ann_ivf_partitioned",
+        "q_sim_knn_join_exact", "q_embed_centroids", "q_embed_quantize",
+        "q_join_dpp", "q_knn_classify", "q_lateral_topk",
+        "q_sim_ann_ivfpq", "q_sink_partitioned", "q_subquery_scalar",
+        "q_tpch_q10", "q_tpch_q18", "q_tpch_q3", "q_tpch_q5",
         "q_assoc_rules", "q_attribution_channels", "q_bm25",
         "q_cdc_apply", "q_chunk_tokens", "q_conversion_latency",
         "q_cooccur_pmi", "q_curation_report", "q_dedup_url",
@@ -176,19 +169,24 @@ _CHECK_ORDER = (
         "q_time_rollup", "q_unigram_logprob", "q_zipf_slope",
         "q_agg_quantile", "q_agg_rollup", "q_agg_sketch_distinct",
         "q_agg_stats", "q_agg_unpivot", "q_agg_weighted_median",
-        "q_agg_weighted_median_approx", "q_dedup_chunks",
-        "q_dedup_components", "q_dedup_embedding", "q_dedup_exact",
-        "q_dedup_fuzzy", "q_dedup_near", "q_dedup_near_candidates",
-        "q_dedup_ngram_jaccard", "q_dedup_semantic", "q_dedup_simhash",
-        "q_dedup_substring", "q_embed_covariance", "q_embed_pca",
-        "q_filter_null_in_like", "q_fn_array", "q_fn_cond", "q_fn_date",
-        "q_fn_json", "q_fn_map", "q_fn_math", "q_fn_string",
-        "q_interval_concurrency", "q_join_anti", "q_src_xml",
-        "q_win_cume", "q_win_lag_lead", "q_win_moving_avg",
+        "q_agg_weighted_median_approx", "q_dedup_semantic",
+        "q_dedup_substring", "q_filter_null_in_like", "q_fn_array",
+        "q_fn_cond", "q_fn_date", "q_fn_json", "q_fn_map", "q_fn_math",
+        "q_fn_string", "q_interval_concurrency", "q_join_anti",
+        "q_src_xml", "q_win_cume", "q_win_lag_lead", "q_win_moving_avg",
         "q_win_ntile", "q_win_period_over_period", "q_win_rank",
         "q_win_ratio", "q_win_rolling_corr", "q_win_running_distinct",
         "q_win_running_distinct_daily", "q_win_running_sum",
-        "q_zorder_cluster",
+        "q_zorder_cluster", "q_agg_bool", "q_agg_collect",
+        "q_agg_grouping", "q_agg_minmax_by", "q_anomaly_mad",
+        "q_join_asof", "q_join_broadcast", "q_join_cross",
+        "q_join_full", "q_join_inner", "q_join_left", "q_join_salted",
+        "q_join_semi", "q_join_theta_range", "q_project_filter",
+        "q_set_except", "q_set_intersect", "q_set_union",
+        "q_sort_limit", "q_src_csv", "q_stream_dedup",
+        "q_stream_session", "q_stream_sliding", "q_stream_tumbling",
+        "q_topk_per_group", "q_udaf_grouped", "q_udf_pandas_scalar",
+        "q_udtf_explode", "q_udtf_python",
 )
 
 _VERIFIED = frozenset({
@@ -239,8 +237,7 @@ _VERIFIED = frozenset({
         "q_scd2", "q_sessionize", "q_set_except", "q_set_except_all",
         "q_set_intersect", "q_set_intersect_all", "q_set_union",
         "q_sim_ann_ivf", "q_sim_ann_ivf_batch",
-        "q_sim_ann_ivf_partitioned", "q_sim_ann_ivfpq", "q_sim_ann_lsh",
-        "q_sim_ann_lsh_batch", "q_sim_ann_partitioned",
+        "q_sim_ann_ivf_partitioned", "q_sim_ann_ivfpq",
         "q_sim_knn_join_exact", "q_sim_knn_join_ivf", "q_sim_radius",
         "q_sim_topk", "q_sink_partitioned", "q_skyline", "q_sort_limit",
         "q_source_overlap", "q_split_drift", "q_split_hash",

@@ -2,8 +2,9 @@
 (SURVEY §2.2 extension surface — vector/embedding pipeline operators).
 
 Distributed PCA over an ``array<float>`` embedding column is a standard
-pre-processing step for the similarity stack (whitening before LSH,
-dimensionality reduction before IVF, SemDeDup-style cluster prep).  The
+pre-processing step for the similarity stack (whitening and
+dimensionality reduction before the IVF index, SemDeDup-style cluster
+prep).  The
 scalable shape is the textbook one:
 
 1. **one-pass Gram accumulation** — each partition folds its rows into a

@@ -15,7 +15,7 @@ Scale design (the whole point of these operators at 100 TB):
 * **n-gram Jaccard** is the exact verifier run on *candidate pairs only*
   (here a bounded doc subset) — at scale it post-filters LSH candidates.
 * **Embedding near-dup** is top-1-neighbor by cosine; brute force on a
-  bounded window here, the IVF/LSH path in ``similarity.py`` at scale.
+  bounded window here, the IVF index in ``similarity.py`` at scale.
 """
 
 from __future__ import annotations

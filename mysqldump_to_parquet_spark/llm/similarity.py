@@ -2,16 +2,19 @@
 
 Two paths, as a real ANN stack is layered:
 
-* **Brute-force cosine top-k** (`q_sim_topk`) — the exact baseline.  The
-  probe is broadcast (a literal); the scan computes one fold per row and
-  TakeOrderedAndProject keeps k rows per partition → k global.  At 100 TB
-  this is a single pass, no shuffle beyond the k-row merge.
-* **LSH-bucketed ANN** (`q_sim_ann_lsh`) — the scale path: random
-  hyperplane signatures (sign of ⟨v, r_i⟩) bucket the corpus; only the
-  probe's bucket (± optional multi-probe) is scanned.  Bucketing is a
-  deterministic literal-matrix product, so the candidate set is stable;
-  recall/latency trades via ``n_planes``.  An IVF variant would replace the
-  hyperplanes with k-means centroids (spark.ml KMeans) — same join shape.
+* **Brute-force cosine top-k** (`q_sim_topk`, `q_sim_radius`) — the exact
+  baseline.  The probe is broadcast (a literal); the scan computes one
+  fold per row and TakeOrderedAndProject keeps k rows per partition → k
+  global.  At 100 TB this is a single pass, no shuffle beyond the k-row
+  merge.
+* **IVF ANN** (`q_sim_ann_ivf*`) — the scale path and the one ANN index:
+  a spherical k-means coarse quantizer (spark.ml KMeans, fit once per
+  corpus on a bounded sample) assigns each vector to a cell; the corpus
+  is written ``partitionBy`` cell as int8 and 8-byte PQ codes, and a
+  probe reads only its nearest ``IVF_SCAN_FRACTION`` of cells, then
+  re-ranks the survivors by exact cosine.  The kNN join, the
+  dedup-against-index gate and the incremental append all run on the
+  same layout.
 """
 
 from __future__ import annotations
@@ -73,56 +76,6 @@ ORDER BY cosine DESC, vec_id ASC
 LIMIT 10
 """
 
-#: Banded random-hyperplane LSH: OR-construction over N_BANDS bands of
-#: N_PLANES sign bits each — a candidate matches if *any* band's probed
-#: bucket set contains its signature.  More bands ⇒ higher recall; more
-#: planes per band ⇒ narrower buckets.  Planes are seeded Gaussian draws
-#: (deterministic: fixed PCG64 seed per band) — the r7 integer-rational
-#: family collapsed to 41 distinct sawtooth vectors (everything reduced
-#: mod 41), so bands were heavily correlated and recall stalled at 0.6
-#: even at a 55 % candidate fraction.
-N_BANDS = 32
-N_PLANES = 12
-
-#: Query-directed multi-probe (Lv et al., VLDB'07): per band, probe every
-#: signature reachable by flipping any subset of the N_FLIP hyperplanes
-#: the PROBE lies closest to (smallest |margin| — the bits most likely to
-#: disagree for a true neighbor).  2^N_FLIP buckets of 2^N_PLANES per
-#: band — a 1/64 bucket-pruned read per band at scale, not a scan.
-#: Measured recall@10 on the sf0.01 fixture: 1.0 at a 0.40 candidate
-#: fraction (min 0.7 over a 9-probe robustness sweep — the fixture's
-#: true neighbors sit at cosine 0.24–0.38, near the noise floor, which
-#: is the hard regime for data-oblivious hyperplanes; the data-adapted
-#: IVF path below reaches 0.8 at 0.25 and stays the first-choice scale
-#: path for corpora like this).
-N_FLIP = 6
-
-
-def _band_planes(band: int):
-    """(N_PLANES, 64) float64 Gaussian hyperplanes for one band —
-    deterministic (seeded PCG64), regenerated identically on driver and
-    executors."""
-    import numpy as np
-
-    rng = np.random.default_rng(1_000_003 * band + 17)
-    return rng.standard_normal((N_PLANES, 64))
-
-
-def _probe_signatures():
-    """Per-band sorted arrays of the 2^N_FLIP probed signatures for the
-    fixed PROBE — pure NumPy, no Spark job at plan build.  Thin wrapper
-    over :func:`_probe_sigs_for_band` so there is exactly ONE flip-set
-    implementation: the in-memory filter (`sim_ann_lsh`) and the written
-    layout's pruned read (`sim_ann_partitioned`) can never desynchronize
-    (ADVICE r8)."""
-    import numpy as np
-
-    return [
-        np.array(_probe_sigs_for_band(b), dtype=np.int64)
-        for b in range(N_BANDS)
-    ]
-
-
 def _masked_rows(vs: pd.Series, dim: int = 64):
     """(valid_mask, (n_valid, dim) float64 matrix) for one Arrow batch of
     embedding arrays — NULL rows AND wrong-length rows are masked out
@@ -151,226 +104,6 @@ def _well_formed(df: DataFrame, col: str = "embedding") -> DataFrame:
     directory) at every stage of the index lifecycle (review r15)."""
     return df.where(
         F.col(col).isNotNull() & (F.size(col) == len(PROBE))
-    )
-
-
-def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH ANN: scan only rows whose signature lands in a
-    probed bucket in ≥1 band, rank candidates by exact cosine.
-
-    The signature stage is ONE vectorized Arrow pass — a single
-    (batch × 64) @ (64 × N_BANDS·N_PLANES) BLAS matmul per batch, the
-    same computation a 100 TB deployment runs ONCE at write time to
-    partition the corpus by (band, signature) so a probe is a
-    partition-pruned read of 2^N_FLIP/2^N_PLANES of each band (1/64
-    here), not a scan.  (The JVM-fold alternative plans
-    N_BANDS·N_PLANES = 384 interpreted 64-element aggregate folds per
-    row — measured 10× slower than one dgemm at this shape.)
-    Approximate ⇒ rows-only driver check; recall vs q_sim_topk is
-    pytest-asserted (floor 0.7, measured 1.0 at sf0.01)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.vstack([_band_planes(b) for b in range(N_BANDS)])  # (B·P, 64)
-    probe_sigs = _probe_signatures()
-    weights = (1 << np.arange(N_PLANES)).astype(np.int64)
-
-    @pandas_udf("boolean")
-    def _is_candidate(vs: pd.Series) -> pd.Series:
-        valid, mat = _masked_rows(vs)  # null embedding → not a candidate
-        bits = (mat @ planes.T) >= 0  # (n, B·P)
-        sigs = bits.reshape(len(mat), N_BANDS, N_PLANES).astype(
-            np.int64
-        ) @ weights  # (n, B)
-        ok = np.zeros(len(mat), dtype=bool)
-        for b in range(N_BANDS):
-            ok |= np.isin(sigs[:, b], probe_sigs[b])
-        out = np.zeros(len(vs), dtype=bool)
-        out[valid] = ok
-        return pd.Series(out)
-
-    e = load_table(spark, sf_dir, "embeddings")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    return (
-        e.where(_is_candidate(F.col("embedding")))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine_expr(dbl, _probe_col()), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-def _band_signature_udf(band: int):
-    """Vectorized UDF: embedding → this band's N_PLANES-bit signature
-    (one (batch × 64) @ (64 × N_PLANES) matmul per Arrow batch — the
-    write-time companion of :func:`sim_ann_lsh`'s all-band filter)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    planes = _band_planes(band)
-    weights = (1 << np.arange(N_PLANES)).astype(np.int64)
-
-    @pandas_udf("int")
-    def _sig(vs: pd.Series) -> pd.Series:
-        valid, mat = _masked_rows(vs)  # null embedding → null signature
-        bits = (mat @ planes.T) >= 0
-        sigs = (bits.astype(np.int64) @ weights).astype("int32")
-        out = pd.array([None] * len(vs), dtype="Int32")
-        out[valid] = sigs
-        return pd.Series(out)
-
-    return _sig
-
-
-def write_ann_partitioned(
-    df: DataFrame,
-    out_path: str,
-    band: int = 0,
-    prefix_bits: int = N_PLANES,
-    id_only: bool = False,
-) -> None:
-    """Materialize the deploy-time ANN layout: the corpus written
-    ``partitionBy`` the top-``prefix_bits`` bits of its band-``band``
-    LSH signature (``sigp``), with the FULL signature kept as a data
-    column — so a probe is a PARTITION-PRUNED read of the probed prefix
-    directories plus a pushed exact ``sig IN`` data filter (discovery
-    lists the partition tree once and caches it; a catalog-registered
-    layout prunes the listing too).  ``prefix_bits`` sizes directory
-    granularity to the corpus (see ``_layout_prefix_bits``); at the
-    default N_PLANES the prefix IS the signature and pruning alone
-    isolates the candidates.  This is the layout :func:`sim_ann_lsh`'s
-    100 TB claim rests on; a full deployment replicates it once per
-    band (the standard LSH storage trade: L layouts → OR-construction
-    recall), and the physical pruning is pytest-asserted
-    (tests/test_llm.py).
-
-    ``id_only`` (VERDICT r10 #3) writes an INDEX-ONLY band: just
-    ``(vec_id, sig, sigp0)`` — no label, no embedding — where ``sigp0``
-    is the row's *band-0* prefix.  Secondary bands only exist to widen
-    the candidate id set; the vectors live once, in band 0, and a probe
-    fetches secondary-band survivors from band 0 via a partition-pruned
-    (``sigp IN sigp0s``) broadcast semi-join.  This drops the
-    OR-construction's storage from L corpus copies to one copy + (L−1)
-    ~24 B/row id indexes (~1.2× at L=3 instead of 3×)."""
-    sig = _band_signature_udf(band)
-    shift = N_PLANES - prefix_bits
-    coded = df.withColumn("sig", sig(F.col("embedding"))).withColumn(
-        "sigp", F.shiftright(F.col("sig"), shift)
-    )
-    if id_only:
-        sig0 = _band_signature_udf(0)
-        coded = coded.select(
-            "vec_id",
-            "sig",
-            "sigp",
-            F.shiftright(sig0(F.col("embedding")), shift).alias("sigp0"),
-        )
-    (
-        # co-locate each bucket before the write: without this every
-        # task emits a file into every directory it touches
-        # (tasks × buckets small files — measured 463 files for a
-        # 500-row corpus); hash-partitioning on sigp yields one file
-        # per directory, which is also what keeps the probe's pruned
-        # read a handful of large sequential files at 100 TB
-        coded.repartition("sigp")
-        .write.partitionBy("sigp")
-        .mode("overwrite")
-        .parquet(out_path)
-    )
-
-
-def _probe_sigs_for_band(
-    band: int, n_flip: int = N_FLIP, probe=None
-) -> list[int]:
-    """The 2^``n_flip`` query-directed probe signatures for one band —
-    the SINGLE flip-set implementation (``_probe_signatures``, the
-    written layout's pruned read, and the batched multi-probe plan all
-    call it, ADVICE r8).  ``probe`` defaults to the module PROBE."""
-    import numpy as np
-
-    probe = np.array(PROBE if probe is None else probe, dtype=np.float64)
-    planes = _band_planes(band)
-    weights = (1 << np.arange(N_PLANES)).astype(np.int64)
-    margins = probe @ planes.T
-    psig = int(((margins >= 0).astype(np.int64)) @ weights)
-    weak = np.argsort(np.abs(margins) / np.linalg.norm(planes, axis=1))[
-        :n_flip
-    ]
-    sigs = set()
-    for mask in range(1 << n_flip):
-        s = psig
-        for i in range(n_flip):
-            if mask >> i & 1:
-                s ^= 1 << int(weak[i])
-        sigs.add(s)
-    return sorted(sigs)
-
-
-#: The written layout's OR-construction: L independently-partitioned
-#: views of the corpus — ONE full copy (band 0) plus L−1 id-only index
-#: bands (~24 B/row; r11, VERDICT r10 #3 — storage ~1.2× instead of
-#: L×) — probed with a WIDER flip set than the in-memory filter
-#: (reading more directories of one layout is far cheaper than storing
-#: another index band — the fundamental LSH storage/recall trade).  Full recall-vs-read-cost
-#: sweep (tools/sweep_ann_layout.py, r10 — curve table in BASELINE.md;
-#: the candidate set is granularity-independent, so the sweep is exact):
-#: on sf0.01 / sf0.1 (true neighbors at cosine 0.24–0.38, the near-noise
-#: regime that is worst-case for data-oblivious hyperplanes),
-#: L=2/flip=9 → recall 0.6/0.3; L=2/flip=11 → 0.9/0.7;
-#: **L=3/flip=10 → 0.8/0.9 (sf0.001: 1.0) at a 0.62 candidate
-#: fraction** — the knee; L=4/flip=11 → 1.0/1.0 but at a 0.91 candidate
-#: fraction (≈ a scan); L=8 doubles storage for +0.1 recall.  At
-#: full-granularity deployment (p = N_PLANES) the per-probe read is
-#: L·2^(flip−N_PLANES) = 3/4 of ONE corpus copy for recall ≥0.8 — the
-#: honest price of hyperplane LSH in this regime; the data-adapted IVF
-#: path (0.8 recall at a 0.25 scan) remains the first-choice deployment,
-#: exactly as the N_FLIP note above says.
-#:
-#: Granularity rule (measured r9, sf0.1): 2^N_PLANES = 4096 directories
-#: is sized for a ≥10⁹-row corpus (≥ a few hundred MB per bucket file);
-#: over 5 000 fixture rows it yields ~2-row files and the steady-state
-#: probe paid a 6.0 s small-file/listing floor where the 64-cell IVF
-#: layout (`sim_ann_ivf_partitioned`) probes the same corpus in 0.39 s.
-#: Like FAISS's nlist, DIRECTORY count must track corpus size — so the
-#: layout partitions on a corpus-sized PREFIX of the signature
-#: (``_layout_prefix_bits``: top-p bits, ~ANN_ROWS_PER_BUCKET rows per
-#: directory) and keeps the FULL signature as a data column.  A probe
-#: prunes directories on the prefix and applies the exact ``sig IN``
-#: predicate as a pushed data filter, so the CANDIDATE SET is identical
-#: at every granularity; what the coarse end trades is read
-#: amplification (whole prefix-buckets are read to filter them) for
-#: sane file sizes — the standard partition-granularity trade.  Past
-#: ~2^N_PLANES·ANN_ROWS_PER_BUCKET rows (~256k here) p reaches N_PLANES
-#: and the layout recovers exact-signature directories, where pruned
-#: read fraction = candidate fraction.  Measured effect at sf0.1:
-#: cold build 47.9 → 10.1 s, steady-state probe 6.0 → 1.2 s, recall
-#: unchanged (the candidate set is granularity-independent).  Measured
-#: amplification in the mid-granularity regime: the probe reads ~0.80
-#: of the corpus for a 0.25–0.27 candidate fraction (~3×) at the
-#: fixture scales (p=3–5) — cheap there because it is a handful of
-#: sequential files, and decaying to 1× as p → N_PLANES at real scale.
-ANN_LAYOUT_BANDS = 3
-ANN_LAYOUT_FLIP = 10
-
-#: target rows per written layout directory (per band)
-ANN_ROWS_PER_BUCKET = 64
-
-
-def _layout_prefix_bits(n_rows: int) -> int:
-    """Partition-prefix width for an ``n_rows`` corpus: enough top bits
-    of the signature that a directory holds ~ANN_ROWS_PER_BUCKET rows,
-    clamped to [1, N_PLANES]."""
-    import math
-
-    return max(
-        1,
-        min(
-            N_PLANES,
-            math.ceil(math.log2(max(1.0, n_rows / ANN_ROWS_PER_BUCKET))),
-        ),
     )
 
 
@@ -450,9 +183,9 @@ _CACHE_LOCK = _threading.RLock()
 def _cached_layout(cache: dict, spark: SparkSession, sf_dir: str,
                    prefix: str, build) -> str:
     """The SINGLE fingerprint-keyed layout-cache lifecycle (lookup →
-    compare → evict stale → mkdtemp → atexit cleanup → build → store),
-    shared by the LSH and IVF written layouts so the invalidation
-    semantics cannot desynchronize between them.  ``build(corpus_df,
+    compare → evict stale → mkdtemp → atexit cleanup → build → store)
+    for written index layouts (the IVF cell layout), so the
+    invalidation semantics live in one place.  ``build(corpus_df,
     root)`` materializes the layout under ``root``; the cached value
     (and return) is ``root`` itself.
 
@@ -492,201 +225,13 @@ def _cached_layout(cache: dict, spark: SparkSession, sf_dir: str,
         return root
 
 
-#: Session cache: sf_dir → (corpus fingerprint, layout root holding
-#: band{0..L-1} subdirs), so a repeated probe never re-writes the corpus
-#: (mirrors _IVF_CENTROIDS — the layout is the persistent artifact a
-#: deployment stores once).  A fingerprint miss evicts and DELETES the
-#: stale layout; every root is registered for interpreter-exit cleanup.
-_ANN_LAYOUTS: dict[str, tuple[tuple, str]] = {}
-
-
-def _ann_layout_root(spark: SparkSession, sf_dir: str) -> str:
-    """The materialized L-band layout for ``sf_dir``, built at most once
-    per corpus *content* (fingerprint-keyed, shared ``_cached_layout``
-    lifecycle).  Directory granularity is sized to the corpus at build
-    time and recorded in ``ann_meta.json`` beside the band dirs, so a
-    probe derives its prefix set from the layout itself — never from a
-    possibly-changed corpus."""
-    import json
-    import os
-
-    def _build(corpus, root):
-        p = _layout_prefix_bits(corpus.count())
-        for b in range(ANN_LAYOUT_BANDS):
-            write_ann_partitioned(
-                corpus,
-                os.path.join(root, f"band{b}"),
-                band=b,
-                prefix_bits=p,
-                # band 0 holds the one full corpus copy; the other
-                # bands are ~24 B/row id indexes (VERDICT r10 #3)
-                id_only=b > 0,
-            )
-        with open(os.path.join(root, "ann_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "prefix_bits": p,
-                    "bands": ANN_LAYOUT_BANDS,
-                    # only meaningful with ≥2 bands — an L=1 layout has
-                    # no secondary bands, and the probe's id-fetch
-                    # branch must not run over an empty union (review
-                    # r11: flag-unconditionally-True dereferenced None
-                    # if L were ever tuned to 1)
-                    "id_only_secondary": ANN_LAYOUT_BANDS > 1,
-                },
-                f,
-            )
-
-    return _cached_layout(_ANN_LAYOUTS, spark, sf_dir, "ann_layout_", _build)
-
-
-def sim_ann_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_sim_ann_partitioned: ANN probe over the *written* bucketed
-    layout — the partition-pruned read :func:`sim_ann_lsh` simulates
-    with a filter.  Builds the ``ANN_LAYOUT_BANDS``-copy OR-construction
-    once per corpus (one ``write_ann_partitioned`` per band, directory
-    granularity sized to the corpus), then each probe reads ONLY the
-    probed prefix directories of each copy (``sigp IN (…)`` reaches the
-    scan as a PartitionFilter — files outside the probe set are never
-    read — while the exact ``sig IN (…2^ANN_LAYOUT_FLIP values)``
-    predicate pushes into the pruned files, so the candidate set is
-    granularity-independent; partition *discovery* lists the tree once
-    per FileIndex and is cached; a deployed layout registers partitions
-    in a table catalog so the listing itself prunes too), unions the
-    per-band candidates,
-    de-duplicates by vec_id, and ranks by exact cosine.  Deterministic,
-    so the driver's rows-only check is stable; candidate-set exactness,
-    physical pruning, and the written path's recall@10 floor are
-    pytest-asserted.
-
-    Recall is PROBE-TUNABLE at read time: the layout stores the full
-    signature, so a wider flip set just reads more directories of the
-    SAME copies — no rewrite (the BASELINE.md sweep's L=3 column is the
-    read-time menu: flip=10 → 0.8/0.9, flip=11 → 1.0/0.9 at
-    sf0.01/sf0.1).  Only L (the number of corpus copies) is fixed at
-    write time."""
-    return lsh_probe_topk(spark, sf_dir, PROBE)
-
-
-def lsh_probe_topk(
-    spark: SparkSession, sf_dir: str, probe, k: int = 10
-) -> DataFrame:
-    """Probe-parametric serial form of ``sim_ann_partitioned`` (r13 —
-    same refactor as ``ivf_probe_topk``): the QPS harness and the
-    batch-equality tests drive the REAL written-LSH probe body with an
-    arbitrary probe vector."""
-    import json
-    import os
-
-    import numpy as np
-
-    probe = np.asarray(probe, dtype=np.float64)
-    root = _ann_layout_root(spark, sf_dir)
-    with open(os.path.join(root, "ann_meta.json")) as f:
-        meta = json.load(f)
-    # the layout is SELF-DESCRIBING: probe the bands it was built with
-    # (recorded at build time), never the module constant — a cached
-    # layout from an earlier configuration must not be probed for band
-    # directories it does not hold
-    shift = N_PLANES - meta["prefix_bits"]
-
-    def _band_df(b: int):
-        # held file-index handle per band (same r12 probe fix as
-        # _ivf_layout_df: spark.read.parquet re-lists the whole band
-        # tree per call; a probe service holds its handle open)
-        fp = _corpus_fingerprint(sf_dir)
-        app = spark.sparkContext.applicationId
-        hit = _handle_cache_get(_ANN_BAND_DFS, (sf_dir, b), fp, app)
-        if hit is not None:
-            return hit
-        df = spark.read.parquet(os.path.join(root, f"band{b}"))
-        return _handle_cache_put(_ANN_BAND_DFS, (sf_dir, b), fp, app, df)
-
-    def _pruned(b: int):
-        sigs = _probe_sigs_for_band(b, ANN_LAYOUT_FLIP, probe)
-        prefixes = sorted({s >> shift for s in sigs})
-        # directory-level pruning on the prefix + the exact pushed
-        # signature predicate: candidate set identical at every
-        # layout granularity.  ONE SQL string, not isin(list) — the
-        # 2^flip-value sig list through py4j Literals cost ~0.7 s per
-        # band per probe (r12; the parsed predicate is identical,
-        # PartitionFilters included — pytest-asserted)
-        return _band_df(b).where(
-            f"sigp IN ({','.join(str(int(p)) for p in prefixes)}) AND "
-            f"sig IN ({','.join(str(int(s)) for s in sigs)})"
-        )
-
-    cands = _pruned(0).select("vec_id", "label", "embedding")
-    if meta.get("id_only_secondary"):
-        # Secondary bands hold only (vec_id, sig, sigp0): union their
-        # candidate IDS, then fetch the vectors from band 0 — pruned to
-        # the candidates' recorded band-0 prefixes (a bounded driver
-        # list: ≤ 2^prefix_bits values), row-matched by a semi-join on
-        # vec_id.  The at-scale accounting of this trade: the old
-        # full-copy secondary bands read L·(2^flip/2^planes) = 0.75 of
-        # one copy sequentially; the id layout reads 0.25 (band 0's own
-        # probe) + two id-column scans + a fetch whose volume tracks
-        # the secondary CANDIDATE fraction (~0.5 here — hyperplane LSH
-        # barely prunes in this near-noise regime, the documented
-        # reason IVF is first choice).  Net: the same ~0.75-copy data
-        # motion at 1/2.5 the storage, with the fetch as a join instead
-        # of a sequential read.  No broadcast hint on purpose: the
-        # candidate id set is tiny at fixture scale (AQE broadcasts it)
-        # but corpus-fraction-sized at deploy flip=10, where forcing a
-        # broadcast would ship GBs to every task — AQE picks the
-        # shuffle join there.  dropDuplicates below removes overlap
-        # with band 0's own candidates.
-        sec = None
-        for b in range(1, meta["bands"]):
-            part = _pruned(b).select("vec_id", "sigp0")
-            sec = part if sec is None else sec.unionByName(part)
-        prefixes0 = [
-            r.sigp0 for r in sec.select("sigp0").distinct().collect()
-        ]
-        if prefixes0:
-            fetched = (
-                _band_df(0)
-                .where(
-                    "sigp IN ("
-                    + ",".join(str(int(p)) for p in prefixes0)
-                    + ")"
-                )
-                .join(
-                    sec.select("vec_id").distinct(),
-                    "vec_id",
-                    "left_semi",
-                )
-                .select("vec_id", "label", "embedding")
-            )
-            cands = cands.unionByName(fetched)
-    else:  # pre-r11 layout: every band carries the full rows
-        for b in range(1, meta["bands"]):
-            cands = cands.unionByName(
-                _pruned(b).select("vec_id", "label", "embedding")
-            )
-    # a vector probed in several bands is one physical band-0 row — one
-    # survivor is exact
-    cands = cands.dropDuplicates(["vec_id"])
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    pcol = F.array(*[F.lit(float(x)) for x in probe])
-    return (
-        cands.select(
-            "vec_id",
-            "label",
-            F.round(cosine_expr(dbl, pcol), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
 #: IVF parameters.  The CELL COUNT is corpus-adaptive (r10, closing the
 #: last fixed-granularity constant in the ANN stack): the FAISS nlist
 #: rule sizes the coarse grid as ~c·√n, so the expected cell holds
-#: ~√n/c vectors — cells track the corpus exactly as the LSH layout's
-#: ``_layout_prefix_bits`` tracks it.  A FIXED 64-cell grid (r5–r9) is
-#: wrong at both ends: at 10⁹ rows each cell holds 16M vectors (a probe
-#: reads nprobe·16M rows), and at 100 rows k-means barely converges.
+#: ~√n/c vectors, so cells track the corpus size.  A FIXED 64-cell
+#: grid (r5–r9) is wrong at both ends: at 10⁹ rows each cell holds 16M
+#: vectors (a probe reads nprobe·16M rows), and at 100 rows k-means
+#: barely converges.
 #: The r5 sweep at a FIXED 25 % scan fraction (fresh quantizer per
 #: point) already showed the finer-grid direction: 16 cells/probe 4 →
 #: recall@10 0.70, 64/16 → 0.80 on the sf0.01 fixture — finer
@@ -998,9 +543,11 @@ def write_ivf_partitioned(
     index itself shrinks ~3.7×).  Codes quantize the UNIT vector, so
     ``code·p̂ / ‖code‖`` approximates the cosine the re-rank finalizes;
     the per-vector ``scale`` column keeps the layout self-contained for
-    consumers that need approximate reconstruction.  One file per cell
-    via the same repartition-before-partitionBy discipline as
-    :func:`write_ann_partitioned`.
+    consumers that need approximate reconstruction.  One file per cell:
+    the codes are hash-partitioned on ``cell`` before ``partitionBy``
+    (without it every task emits a file into every directory it touches
+    — tasks × cells small files), which also keeps a probe's pruned read
+    a handful of large sequential files at scale.
 
     Degraded rows (null / wrong-dim embedding) are filtered OUT here —
     the layout never carries a ``__HIVE_DEFAULT_PARTITION__``
@@ -1148,9 +695,12 @@ def _pq_encode_udf(books):
     return _enc
 
 
-#: Session cache: sf_dir → (corpus fingerprint, written IVF layout dir) —
-#: same lifecycle as _ANN_LAYOUTS (fingerprint-keyed, stale dirs deleted,
-#: exit-time cleanup).
+#: Session cache: sf_dir → (corpus fingerprint, written IVF layout root),
+#: so a repeated probe never re-writes the corpus — the layout is the
+#: persistent artifact a deployment stores once.  ``_cached_layout``
+#: owns the lifecycle: a fingerprint miss evicts the entry (the stale
+#: tree stays until exit), and every root is registered for
+#: interpreter-exit cleanup.
 _IVF_LAYOUTS: dict[str, tuple[tuple, str]] = {}
 
 
@@ -1211,10 +761,6 @@ def _ivf_layout_dir(spark: SparkSession, sf_dir: str) -> str:
 #: cannot reuse another session's plan objects).
 _IVF_LAYOUT_DFS: "OrderedDict[str, tuple]" = OrderedDict()
 
-#: (sf_dir, band) → (fingerprint, applicationId, DataFrame) — the LSH
-#: probe's per-band file-index handles, same lifecycle/rationale.
-_ANN_BAND_DFS: "OrderedDict[tuple, tuple]" = OrderedDict()
-
 #: sf_dir → (corpus fingerprint, {cell: rows}) — the written layout's
 #: CURRENT per-cell row counts, maintained incrementally (r16, guide
 #: §6): seeded by the first staleness scan, advanced by each append's
@@ -1229,9 +775,8 @@ _IVF_CELL_COUNTS: dict[str, tuple] = {}
 #: LRU bound on the probe-handle caches: per-corpus fingerprint keying
 #: already REPLACES on regeneration, but a long-lived probe service
 #: cycling many distinct corpora would accumulate one plan object per
-#: (corpus[, band]) forever (VERDICT r12 nit #3).  32 comfortably holds
-#: every corpus a session realistically probes (the LSH layout holds
-#: ≤4 bands per corpus) while bounding the leak.
+#: corpus forever (VERDICT r12 nit #3).  32 comfortably holds every
+#: corpus a session realistically probes while bounding the leak.
 _PROBE_HANDLE_CACHE_MAX = 32
 
 
@@ -1656,11 +1201,11 @@ def sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate counts, so the re-ranked top-10 is bit-identical too
     (pytest-asserted).
 
-    NOTE: phase 1 executes when the DataFrame is BUILT (this, the PQ
-    variant, and the LSH id-fetch are the registry's only eager
-    probes) — the returned plan embeds the survivor-id snapshot, the
-    correct semantics for a point-in-time probe, but plan-only
-    consumers (gen_plans) pay the candidate scan."""
+    NOTE: phase 1 executes when the DataFrame is BUILT (this and the PQ
+    variant are the registry's only eager probes) — the returned plan
+    embeds the survivor-id snapshot, the correct semantics for a
+    point-in-time probe, but plan-only consumers (gen_plans) pay the
+    candidate scan."""
     return ivf_probe_topk(spark, sf_dir, PROBE, variant="int8")
 
 
@@ -1992,114 +1537,6 @@ def sim_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     jitters = base + rng.normal(0.0, 0.5, size=(ANN_BATCH_PROBES - 1, len(base)))
     return ann_probe_batch(
         spark, sf_dir, np.vstack([base, jitters]), variant="int8"
-    )
-
-
-def ann_probe_batch_lsh(
-    spark: SparkSession, sf_dir: str, probes, k: int = 10
-) -> DataFrame:
-    """Batched multi-probe over the written LSH layout — the LSH
-    sibling of :func:`ann_probe_batch` (r13): M probes, ONE lazy plan.
-
-    1. **Union band scans**: per band, one pruned read covering the
-       UNION of all probes' flip sets (``sigp IN`` PartitionFilter +
-       pushed ``sig IN`` — one SQL string, the r12 lesson).
-    2. **Signature → probe mapping**: a broadcast (band, sig,
-       probe_id) table (≤ M·L·2^flip rows of three ints) joins each
-       candidate row to exactly the probes whose flip set contains its
-       signature — the per-(probe, candidate) pairing is a JOIN, not a
-       Python loop.
-    3. **One grouped exact rank**: distinct (probe_id, vec_id) pairs
-       join the source corpus once; exact cosine against the M-row
-       broadcast probe table; top-k per probe via the WindowGroupLimit
-       rank cut.
-
-    No collect anywhere (the serial probe's secondary-band fetch
-    collects a bounded sigp0 prefix list; the batch replaces that
-    read-narrowing with the one corpus scan all M probes share).  No
-    broadcast hint on the pair join: candidate pairs are corpus-
-    fraction-sized at deploy flip widths, where AQE must choose the
-    shuffle join — same reasoning as the serial probe's semi-join."""
-    import json
-    import os
-
-    import numpy as np
-    from pyspark.sql.window import Window
-
-    probes_arr = np.asarray(probes, dtype=np.float64)
-    m = len(probes_arr)
-    root = _ann_layout_root(spark, sf_dir)
-    with open(os.path.join(root, "ann_meta.json")) as f:
-        meta = json.load(f)
-    shift = N_PLANES - meta["prefix_bits"]
-    fp = _corpus_fingerprint(sf_dir)
-    app = spark.sparkContext.applicationId
-
-    def _band_df(b: int):
-        hit = _handle_cache_get(_ANN_BAND_DFS, (sf_dir, b), fp, app)
-        if hit is not None:
-            return hit
-        df = spark.read.parquet(os.path.join(root, f"band{b}"))
-        return _handle_cache_put(_ANN_BAND_DFS, (sf_dir, b), fp, app, df)
-
-    map_rows = {"band": [], "sig": [], "probe_id": []}
-    band_sigs: dict[int, set] = {}
-    for b in range(meta["bands"]):
-        for p in range(m):
-            for s in _probe_sigs_for_band(b, ANN_LAYOUT_FLIP, probes_arr[p]):
-                map_rows["band"].append(b)
-                map_rows["sig"].append(int(s))
-                map_rows["probe_id"].append(p)
-                band_sigs.setdefault(b, set()).add(int(s))
-    sig_map = spark.createDataFrame(
-        pd.DataFrame(map_rows), "band int, sig int, probe_id int"
-    )
-
-    cand = None
-    for b in range(meta["bands"]):
-        sigs = sorted(band_sigs[b])
-        prefixes = sorted({s >> shift for s in sigs})
-        part = (
-            _band_df(b)
-            .where(
-                f"sigp IN ({','.join(str(p) for p in prefixes)}) AND "
-                f"sig IN ({','.join(str(s) for s in sigs)})"
-            )
-            .select("vec_id", "sig")
-            .withColumn("band", F.lit(b))
-        )
-        cand = part if cand is None else cand.unionByName(part)
-
-    pairs = (
-        cand.join(F.broadcast(sig_map), ["band", "sig"])
-        .select("probe_id", "vec_id")
-        .dropDuplicates(["probe_id", "vec_id"])
-    )
-
-    e = load_table(spark, sf_dir, "embeddings")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    probes_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in probes_arr[i]]) for i in range(m)],
-        "probe_id int, probe array<double>",
-    )
-    exact = (
-        e.join(pairs, "vec_id")
-        .join(F.broadcast(probes_df), "probe_id")
-        .select(
-            "probe_id",
-            "vec_id",
-            "label",
-            F.round(cosine_expr(dbl, F.col("probe")), 6).alias("cosine"),
-        )
-    )
-    w_rank = Window.partitionBy("probe_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w_rank))
-        .where(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy("probe_id", F.desc("cosine"), F.asc("vec_id"))
     )
 
 
@@ -2525,25 +1962,9 @@ ORDER BY qid
 """
 
 
-def sim_ann_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_sim_ann_lsh_batch: the batched multi-probe plan over the
-    written LSH layout, same deterministic probe set as
-    ``sim_ann_ivf_batch``; probe 0's rows are pytest-pinned identical
-    to ``sim_ann_partitioned``.  Approximate ⇒ rows-only driver
-    check."""
-    import numpy as np
-
-    base = np.array(PROBE, dtype=np.float64)
-    rng = np.random.default_rng(13)
-    jitters = base + rng.normal(
-        0.0, 0.5, size=(ANN_BATCH_PROBES - 1, len(base))
-    )
-    return ann_probe_batch_lsh(spark, sf_dir, np.vstack([base, jitters]))
-
-
 #: Radius search: cosine threshold and the bounded candidate id range
-#: (the verifier role — at scale the candidate set comes from the LSH/IVF
-#: buckets above, exactly as ngram-Jaccard verifies MinHash candidates).
+#: (the verifier role — at scale the candidate set comes from the IVF
+#: cells above, exactly as ngram-Jaccard verifies MinHash candidates).
 RADIUS_TAU = 0.15
 RADIUS_MAX_ID = 150
 
@@ -2690,13 +2111,10 @@ FROM embeddings
 QUERIES = {
     "q_sim_topk": sim_topk,
     "q_sim_radius": sim_radius,
-    "q_sim_ann_lsh": sim_ann_lsh,
     "q_sim_ann_ivf": sim_ann_ivf,
-    "q_sim_ann_partitioned": sim_ann_partitioned,
     "q_sim_ann_ivf_partitioned": sim_ann_ivf_partitioned,
     "q_sim_ann_ivfpq": sim_ann_ivfpq,
     "q_sim_ann_ivf_batch": sim_ann_ivf_batch,
-    "q_sim_ann_lsh_batch": sim_ann_lsh_batch,
     "q_sim_knn_join_exact": sim_knn_join_exact,
     "q_sim_knn_join_ivf": sim_knn_join_ivf,
     "q_dedup_against_index_exact": sim_dedup_against_index_exact,
@@ -2710,6 +2128,6 @@ ORACLE = {
     "q_sim_knn_join_exact": SIM_KNN_JOIN_SQL,
     "q_dedup_against_index_exact": DEDUP_AGAINST_INDEX_SQL,
     "q_ivf_index_append": IVF_INDEX_APPEND_SQL,
-    # q_sim_ann_lsh / q_sim_ann_ivf / the batch + ivf kNN-join and
+    # q_sim_ann_ivf / the batch + ivf kNN-join and
     # admission-gate forms: approximate-recall ANN — rows-only.
 }

@@ -913,6 +913,13 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
         data = _unescape_bytes(data)
         if data is None:
             return None
+    # NUL bytes (the ``\0`` escape) make pyarrow.csv miscount columns
+    # once a joined group passes ~0.5 MB, though each statement parses
+    # alone, and a failed group read re-parses every statement in the
+    # group.  NUL statements go straight to the tokenizer instead; clean
+    # statements in the same group stay on the fast path.
+    if b"\x00" in data:
+        return None
     arr = np.frombuffer(data, dtype=np.uint8)
     if arr.size == 0:
         return None

@@ -412,6 +412,33 @@ def admission_gate_stream(
     )
 
 
+def _require_default_committer(spark: SparkSession) -> None:
+    """Refuse the fused anti-join + append unless the session writes
+    through Spark's default commit protocol and Parquet committer.  The
+    fusion is safe only because output lands under ``_temporary`` until
+    the job-end commit (see :func:`_ingest_epoch`); a committer that
+    writes in place (a direct or magic object-store committer) would
+    let the anti-join's scan see this epoch's own files mid-job."""
+    for key, want in (
+        (
+            "spark.sql.sources.commitProtocolClass",
+            "org.apache.spark.sql.execution.datasources."
+            "SQLHadoopMapReduceCommitProtocol",
+        ),
+        (
+            "spark.sql.parquet.output.committer.class",
+            "org.apache.parquet.hadoop.ParquetOutputCommitter",
+        ),
+    ):
+        got = spark.conf.get(key, want)
+        if got != want:
+            raise RuntimeError(
+                "gated ingest appends to the embeddings table it reads "
+                "in the same write, which is safe only under the default "
+                f"commit protocol: {key} is {got!r}, expected {want!r}"
+            )
+
+
 def _ingest_epoch(
     spark: SparkSession,
     sf_dir: str,
@@ -462,6 +489,9 @@ def _ingest_epoch(
     from ..catalog import load_table
     from ..llm.similarity import ivf_index_append
 
+    # checked before the epoch's first write, so a refused epoch
+    # leaves no audit flags, primary rows or index rows behind
+    _require_default_committer(spark)
     flags = _gate_epoch(
         spark, sf_dir, out_dir, tau, exclude_self, batch_df, epoch_id
     )
@@ -495,7 +525,9 @@ def _ingest_epoch(
     # any output commits, and append-mode output lands under
     # _temporary until the job-end commit — a task can never list or
     # read this epoch's own files mid-job.  (Overwrite-into-read-path
-    # is what Spark rejects; append is supported.)
+    # is what Spark rejects; append is supported.)  The _temporary
+    # staging is the default committer's; `_require_default_committer`
+    # checked for it at the top of the epoch.
     aligned.write.mode("append").parquet(f"{sf_dir}/embeddings.parquet")
 
     # index second; verify_primary=False because the ordering the

@@ -1357,11 +1357,21 @@ class TestArrowFastPath:
         """A dump mixing fast-path statements (quotes doubled, commas and
         parens inside strings, NULLs, decimals, negative floats) with a
         slow-path statement (backslash escapes) converts to the same rows
-        the exhaustive grammar produces."""
+        the exhaustive grammar produces.  A statement carrying a NUL
+        byte (the ``\\0`` escape) is refused by the fast path outright
+        (pyarrow.csv miscounts columns on NUL-bearing payloads past
+        ~0.5 MB) and its row still converts exactly."""
         from mysqldump_to_parquet_spark.sources.mysqldump import (
+            _values_csv_bytes,
             convert_dump,
             parse_insert_full,
         )
+
+        nul_stmt = (
+            "INSERT INTO `t1` VALUES "
+            "(5,'nul\\0byte',0.5,2.00,0,'2024-05-06 07:08:09');"
+        )
+        assert _values_csv_bytes(nul_stmt) is None
 
         dump = (
             "CREATE TABLE `t1` (\n"
@@ -1379,12 +1389,14 @@ class TestArrowFastPath:
             "(3,'it''s, a (test), ok',-2.75,99999999.99,1,'2024-03-04 05:06:07');\n"
             "INSERT INTO `t1` VALUES "
             "(4,'line\\nbreak \\'q\\'',3.25,1.00,TRUE,'2024-04-05 06:07:08');\n"
+            + nul_stmt
+            + "\n"
         )
         p = tmp_path / "x.sql"
         p.write_text(dump)
         out = str(tmp_path / "out")
         counts = convert_dump(spark, str(p), out)
-        assert counts == {"t1": 4}
+        assert counts == {"t1": 5}
         rows = {
             r.id: r for r in spark.read.parquet(f"{out}/t1").collect()
         }
@@ -1393,6 +1405,8 @@ class TestArrowFastPath:
         assert str(rows[3].bal) == "99999999.99"  # exact decimal digits
         assert rows[4].name == "line\nbreak 'q'" and rows[4].ok is True
         assert rows[1].ts == datetime.datetime(2024, 1, 2, 3, 4, 5)
+        assert rows[5].name == "nul\x00byte"
+        assert str(rows[5].bal) == "2.00"
 
     def test_fast_path_matches_exhaustive_on_generated_rows(self):
         """Differential: the Arrow path and the exhaustive tokenizer parse

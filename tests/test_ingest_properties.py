@@ -208,7 +208,9 @@ def test_arrow_fast_path_matches_exhaustive_on_hostile_strings():
     strings mixing both quote-escape forms (\\' and ''), backslash runs,
     semantic escapes, unknown escapes, multibyte UTF-8, and top-level
     lookalike bytes (commas/parens) must decode identically to the
-    exhaustive tokenizer — and must never silently fall back en masse."""
+    exhaustive tokenizer — and must never silently fall back en masse:
+    the only statements refused are those carrying a NUL byte (the
+    ``\\0`` escape), which pyarrow.csv miscounts in large payloads."""
     import random
 
     from pyspark.sql import types as T
@@ -258,10 +260,13 @@ def test_arrow_fast_path_matches_exhaustive_on_hostile_strings():
         )
         stmt = f"INSERT INTO `t` VALUES {body};"
         _, _, slow = parse_insert_full(stmt)
+        has_nul = any("\x00" in r[1] for r in slow if r[1] is not None)
         fb = _values_csv_bytes(stmt)
         if fb is None:
+            assert has_nul, stmt[:200]  # only NUL statements fall back
             fallbacks += 1
             continue
+        assert not has_nul, stmt[:200]
         tbl = _arrow_read_values(fb[0], names, ft)
         fast = [tuple(d.values()) for d in tbl.to_pylist()]
         conv = [
@@ -269,7 +274,8 @@ def test_arrow_fast_path_matches_exhaustive_on_hostile_strings():
             for r in slow
         ]
         assert fast == conv, stmt[:200]
-    assert fallbacks == 0  # every generated statement is fast-path-eligible
+    # the generator draws the \0 escape, so both sides are exercised
+    assert 0 < fallbacks < 150
 
 
 def test_glued_introducers_always_fall_back_and_parse(spark=None):

@@ -11,7 +11,7 @@ from mysqldump_to_parquet_spark.llm.dedup import (
     dedup_near_minhash_ml,
     dedup_simhash,
 )
-from mysqldump_to_parquet_spark.llm.similarity import sim_ann_lsh, sim_topk
+from mysqldump_to_parquet_spark.llm.similarity import sim_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -94,22 +94,9 @@ def test_simhash_locality(spark):
     assert all(again[i] == by_id[i].simhash for i in by_id)
 
 
-def test_ann_recall_vs_exact(spark):
-    """LSH-bucketed ANN must return a subset of plausible neighbors with
-    high recall of the exact top-10 (32 Gaussian bands × 12 planes,
-    query-directed multi-probe; measured 1.0 here)."""
-    exact = [r.vec_id for r in sim_topk(spark, SF).collect()]
-    approx = [r.vec_id for r in sim_ann_lsh(spark, SF).collect()]
-    # every ANN result must be a real vector, ordered by cosine desc
-    assert len(approx) <= 10
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.7, f"recall {recall} (exact={exact}, approx={approx})"
-
-
 def test_ivf_recall_vs_exact(spark):
     """IVF probing 25% of the corpus-adaptive grid must recall most of
-    the exact top-10 (centroid-aligned probes are far better targeted
-    than hyperplane LSH; measured 0.8 at sf0.001 with the r10 adaptive
+    the exact top-10 (measured 0.8 at sf0.001 with the r10 adaptive
     grid)."""
     from mysqldump_to_parquet_spark.llm.similarity import sim_ann_ivf
 
@@ -125,143 +112,21 @@ def test_ivf_recall_vs_exact(spark):
 #: the 64-cell/probe-16 requantization (same 25% scan fraction as the old
 #: 16/4 which measured 0.7; was 0.1 before the spherical fix); round 10's
 #: corpus-adaptive grid (min(4√n, n/8)) re-measured 0.8/0.8/1.0 across
-#: sf0.001/0.01/0.1.  Round 8:
-#: LSH 1.0 (was 0.6) after replacing the mod-41 rational plane family
-#: (only 41 distinct vectors — bands were correlated) with seeded
-#: Gaussian planes + query-directed multi-probe; min 0.7 over a 9-probe
-#: robustness sweep.  dedup_near 1.0 (25/25 true pairs).  Bounds sit
+#: sf0.001/0.01/0.1.  dedup_near 1.0 (25/25 true pairs).  Bounds sit
 #: below the measured values only enough to absorb minor fixture
 #: regeneration drift, not algorithmic regression.
 SF_RECALL = "/root/testdata/sf0.01"
 
 
 def test_ann_recall_bounds_sf001(spark):
-    """sf0.01 recall@10 floors: IVF ≥ 0.7 (spherical coarse quantizer,
+    """sf0.01 recall@10 floor: IVF ≥ 0.7 (spherical coarse quantizer,
     corpus-adaptive grid — min(4√n, n/8) = 62 cells / nprobe 16 at
-    n=500, 25% scanned, measured 0.8), hyperplane LSH ≥ 0.7
-    (32 Gaussian bands × 12 planes, query-directed multi-probe,
-    measured 1.0)."""
+    n=500, 25% scanned, measured 0.8)."""
     from mysqldump_to_parquet_spark.llm.similarity import sim_ann_ivf
 
     exact = set(r.vec_id for r in sim_topk(spark, SF_RECALL).collect())
     ivf = set(r.vec_id for r in sim_ann_ivf(spark, SF_RECALL).collect())
-    lsh = set(r.vec_id for r in sim_ann_lsh(spark, SF_RECALL).collect())
     assert len(exact & ivf) / 10 >= 0.7, f"IVF recall {len(exact & ivf) / 10}"
-    assert len(exact & lsh) / 10 >= 0.7, f"LSH recall {len(exact & lsh) / 10}"
-
-
-def test_ann_partitioned_layout_prunes_and_matches(spark, tmp_path):
-    """The written ANN layout (r8; corpus-sized prefix granularity r9):
-    the probe must (a) read EXACTLY the band-0 candidate set the
-    in-memory signature filter defines — at ANY directory granularity,
-    since the exact sig predicate pushes into the pruned files — (b)
-    prune directories via a PartitionFilter on the prefix, and (c) rank
-    identically to exact cosine over those candidates.  Runs at sf0.01:
-    500 rows → prefix_bits 3.  The mechanism checks (a)/(b) use BAND 1,
-    whose flip-10 probe set covers 4 of 8 prefixes so directory pruning
-    is non-trivially observable (band 0's happens to cover all 8 at this
-    tiny prefix width — at deploy granularity p→N_PLANES every band
-    prunes; the probed-bucket fraction is 2^flip/2^planes regardless)."""
-    from mysqldump_to_parquet_spark.llm import similarity as S
-
-    sf = SF_RECALL
-    band = 1
-    out = str(tmp_path / f"band{band}")
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
-    pbits = S._layout_prefix_bits(e.count())
-    assert 1 < pbits < S.N_PLANES  # corpus-sized, neither degenerate end
-    S.write_ann_partitioned(e, out, band=band, prefix_bits=pbits)
-
-    # layout shape: one directory per signature PREFIX value
-    import os
-
-    dirs = {d for d in os.listdir(out) if d.startswith("sigp=")}
-    assert 1 < len(dirs) <= 1 << pbits
-    probe_sigs = set(S._probe_sigs_for_band(band, S.ANN_LAYOUT_FLIP))
-    assert len(probe_sigs) == 1 << S.ANN_LAYOUT_FLIP
-    shift = S.N_PLANES - pbits
-    prefixes = sorted({s >> shift for s in probe_sigs})
-    assert len(prefixes) < 1 << pbits  # some directories are unprobed
-
-    # (a) candidate-set exactness vs the in-memory signature UDF
-    sig = S._band_signature_udf(band)
-    expected = {
-        r.vec_id
-        for r in e.withColumn("s", sig(F.col("embedding")))
-        .where(F.col("s").isin(sorted(probe_sigs)))
-        .collect()
-    }
-    probed = spark.read.parquet(out).where(
-        F.col("sigp").isin(prefixes) & F.col("sig").isin(sorted(probe_sigs))
-    )
-    got = {r.vec_id for r in probed.collect()}
-    assert got == expected
-
-    # (b) physical pruning: the prefix predicate is a PARTITION filter
-    # (directory-level); the exact sig predicate pushes into the files
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "sigp" in plan.split(
-        "PartitionFilters:"
-    )[1].split("]")[0]
-
-    # and the executed scan READ fewer files than the layout holds
-    # (inputFiles() ignores pruning — read the scan's own numFiles
-    # metric after the action)
-    def _files_read(df) -> int:
-        df.collect()
-        leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            m = leaves.apply(i).metrics()
-            if m.contains("numFiles"):
-                total += m.apply("numFiles").value()
-        return total
-
-    n_all = _files_read(spark.read.parquet(out))
-    n_probed = _files_read(
-        spark.read.parquet(out).where(
-            F.col("sigp").isin(prefixes)
-            & F.col("sig").isin(sorted(probe_sigs))
-        )
-    )
-    assert 0 < n_probed < n_all
-
-    # (c) the registered operator (L-band OR-construction, wide flip)
-    # ranks EXACTLY the union of its bands' probed candidates by exact
-    # cosine — the flip-set implementation is shared with the in-memory
-    # filter, so the expected set comes from the same signature UDFs
-    union_cands: set = set()
-    for b in range(S.ANN_LAYOUT_BANDS):
-        sig_b = S._band_signature_udf(b)
-        union_cands |= {
-            r.vec_id
-            for r in e.withColumn("s", sig_b(F.col("embedding")))
-            .where(
-                F.col("s").isin(S._probe_sigs_for_band(b, S.ANN_LAYOUT_FLIP))
-            )
-            .collect()
-        }
-    rows = [r.vec_id for r in S.sim_ann_partitioned(spark, sf).collect()]
-    exact_over_cands = [
-        r.vec_id
-        for r in spark.createDataFrame(
-            e.where(F.col("vec_id").isin(sorted(union_cands))).collect()
-        )
-        .select(
-            "vec_id",
-            F.round(
-                S.cosine_expr(
-                    F.transform(F.col("embedding"), lambda x: x.cast("double")),
-                    S._probe_col(),
-                ),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-        .collect()
-    ]
-    assert rows == exact_over_cands
 
 
 def test_dedup_near_recall_vs_exact_truth(spark):
@@ -475,25 +340,6 @@ def test_ivf_fit_sample_layout_independent(spark, tmp_path, monkeypatch):
     assert recall >= 0.7, f"recall {recall} on sorted corpus"
 
 
-def test_ann_written_layout_recall_floor(spark):
-    """The WRITTEN OR-construction path (q_sim_ann_partitioned,
-    L=3 layouts probed at flip=10 → 1/4 of each layout's buckets)
-    carries a pinned recall of its own (VERDICT r8 #4, floor raised r10
-    per the sweep in tools/sweep_ann_layout.py / BASELINE.md): measured
-    0.8 on sf0.01 (0.9 on sf0.1, 1.0 on sf0.001) — the knee of the
-    recall-vs-read-cost curve, bought with 3 bands (one corpus copy +
-    two id-only indexes since r11) instead of the in-memory filter's
-    32."""
-    from mysqldump_to_parquet_spark.llm.similarity import sim_ann_partitioned
-
-    exact = {r.vec_id for r in sim_topk(spark, SF_RECALL).collect()}
-    approx = {
-        r.vec_id for r in sim_ann_partitioned(spark, SF_RECALL).collect()
-    }
-    recall = len(exact & approx) / 10
-    assert recall >= 0.8, f"written-path recall {recall}"
-
-
 def test_ivf_partitioned_layout_equals_in_memory_and_prunes(spark):
     """The written IVF layout (q_sim_ann_ivf_partitioned): write-time and
     probe-time assignment share the cached centroids and the same UDF,
@@ -535,42 +381,6 @@ def test_ivf_partitioned_layout_equals_in_memory_and_prunes(spark):
         spark.read.parquet(out).where(F.col("cell").isin(cells))
     )
     assert 0 < n_probed < n_all
-
-
-def test_ann_layout_secondary_bands_are_id_only(spark):
-    """The written LSH OR-construction stores ONE corpus copy (band 0)
-    plus (L−1) id-only secondary bands of (vec_id, sig, sigp0) —
-    VERDICT r10 #3: storage drops from 3 full copies to ~1.2×, with
-    recall unchanged because the candidate ID set is identical and the
-    vectors are fetched from band 0 by a pruned broadcast semi-join
-    (recall floor + candidate exactness pinned by the neighboring
-    tests)."""
-    import glob
-    import os
-
-    from mysqldump_to_parquet_spark.llm import similarity as S
-
-    root = S._ann_layout_root(spark, SF_RECALL)
-
-    def dir_bytes(band):
-        return sum(
-            os.path.getsize(p)
-            for p in glob.glob(
-                os.path.join(root, band, "**", "*.parquet"), recursive=True
-            )
-        )
-
-    for b in range(1, S.ANN_LAYOUT_BANDS):
-        cols = set(spark.read.parquet(os.path.join(root, f"band{b}")).columns)
-        assert cols == {"vec_id", "sig", "sigp0", "sigp"}
-
-    b0 = dir_bytes("band0")
-    secondary = sum(
-        dir_bytes(f"band{b}") for b in range(1, S.ANN_LAYOUT_BANDS)
-    )
-    assert 0 < secondary <= 0.25 * b0, (
-        f"secondary bands {secondary} B vs band0 {b0} B"
-    )
 
 
 def test_ivf_layout_is_int8_codes_and_probe_bytes_shrink(spark, tmp_path):
@@ -747,37 +557,14 @@ def test_ann_batch_equals_serial(spark):
             want = [(r.vec_id, r.label, r.cosine) for r in serial]
             assert got == want, (variant, p)
 
-    # the LSH layout's batch (r13): same contract — every probe's rows
-    # equal the probe-parametric serial path (the signature → probe
-    # pairing is a broadcast join, so candidate sets must agree
-    # band-for-band), both through the written OR-construction
-    lrows = S.ann_probe_batch_lsh(spark, SF_RECALL, probes).collect()
-    assert len(lrows) == 10 * len(probes)
-    for p in range(len(probes)):
-        serial = S.lsh_probe_topk(spark, SF_RECALL, probes[p]).collect()
-        got = [
-            (r.vec_id, r.label, r.cosine)
-            for r in lrows
-            if r.probe_id == p
-        ]
-        want = [(r.vec_id, r.label, r.cosine) for r in serial]
-        assert got == want, ("lsh", p)
-
-    # the registry keys' probe-0 groups are the fixed-PROBE serial
-    # results
-    for batch_fn, serial_fn in (
-        (S.sim_ann_ivf_batch, S.sim_ann_ivf_partitioned),
-        (S.sim_ann_lsh_batch, S.sim_ann_partitioned),
-    ):
-        reg = batch_fn(spark, SF_RECALL).collect()
-        reg0 = [
-            (r.vec_id, r.label, r.cosine) for r in reg if r.probe_id == 0
-        ]
-        fixed = [
-            (r.vec_id, r.label, r.cosine)
-            for r in serial_fn(spark, SF_RECALL).collect()
-        ]
-        assert reg0 == fixed, batch_fn.__name__
+    # the registry key's probe-0 group is the fixed-PROBE serial result
+    reg = S.sim_ann_ivf_batch(spark, SF_RECALL).collect()
+    reg0 = [(r.vec_id, r.label, r.cosine) for r in reg if r.probe_id == 0]
+    fixed = [
+        (r.vec_id, r.label, r.cosine)
+        for r in S.sim_ann_ivf_partitioned(spark, SF_RECALL).collect()
+    ]
+    assert reg0 == fixed
 
 
 def test_ivfpq_probe_equals_in_memory_and_adc_is_reconstruction_dot(spark):
@@ -825,9 +612,9 @@ def test_ivfpq_probe_equals_in_memory_and_adc_is_reconstruction_dot(spark):
 
 def test_ann_caches_invalidate_on_corpus_rewrite(spark, tmp_path):
     """Rewriting a corpus at the same path must invalidate BOTH the
-    materialized ANN layout and the IVF quantizer (VERDICT r8 #5 /
-    ADVICE r8): the caches key on a file fingerprint, and the stale
-    layout directory is deleted."""
+    materialized IVF layout and the IVF quantizer (VERDICT r8 #5 /
+    ADVICE r8): the caches key on a file fingerprint; the stale layout
+    is evicted but its tree stays until exit."""
     import os
 
     from mysqldump_to_parquet_spark.llm import similarity as S
@@ -836,21 +623,21 @@ def test_ann_caches_invalidate_on_corpus_rewrite(spark, tmp_path):
     src = spark.read.parquet(f"{SF}/embeddings.parquet")
     src.limit(100).write.parquet(f"{d}/embeddings.parquet")
 
-    root1 = S._ann_layout_root(spark, d)
-    assert root1 == S._ann_layout_root(spark, d)  # warm hit, no rebuild
+    root1 = S._ivf_layout_dir(spark, d)
+    assert root1 == S._ivf_layout_dir(spark, d)  # warm hit, no rebuild
     c1 = S.ivf_centroids(spark, d)
     assert S.ivf_centroids(spark, d) is c1  # warm hit: identical object
 
     # rewrite the corpus (different content => different fingerprint;
     # adaptive cell count clamps k <= n, so any size works)
     src.limit(80).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    root2 = S._ann_layout_root(spark, d)
+    root2 = S._ivf_layout_dir(spark, d)
     assert root2 != root1
     # the stale tree is NOT deleted eagerly (ADVICE r9: lazy DataFrames
     # from earlier probes may still reference its files) — it survives
     # until the atexit hook; eviction only stops SERVING it
     assert os.path.exists(root1), "eager delete would break live handles"
-    assert S._ann_layout_root(spark, d) == root2  # and stays evicted
+    assert S._ivf_layout_dir(spark, d) == root2  # and stays evicted
     # a warm hit returns the SAME matrix object (asserted above), so a
     # different object after the rewrite proves the quantizer re-fit
     c2 = S.ivf_centroids(spark, d)
@@ -858,7 +645,7 @@ def test_ann_caches_invalidate_on_corpus_rewrite(spark, tmp_path):
 
 
 def test_probe_handle_caches_are_lru_bounded():
-    """The probe-side file-index handle caches must not grow without
+    """The probe-side file-index handle cache must not grow without
     bound in a long-lived probe service cycling many corpora (VERDICT
     r12 nit #3): cycling >MAX keys holds the cache at MAX, evicting
     least-recently-USED (a get refreshes recency), and a stale
@@ -886,31 +673,8 @@ def test_probe_handle_caches_are_lru_bounded():
     # fingerprint / session mismatches miss (the r12 invalidation rule)
     assert S._handle_cache_get(cache, "corpus8", "fp2", "app") is None
     assert S._handle_cache_get(cache, "corpus8", "fp", "app2") is None
-    # and the production caches are bounded OrderedDicts of this shape
+    # and the production cache is a bounded OrderedDict of this shape
     assert isinstance(S._IVF_LAYOUT_DFS, OrderedDict)
-    assert isinstance(S._ANN_BAND_DFS, OrderedDict)
-
-
-def test_layout_prefix_bits_track_corpus():
-    """The written-layout directory count tracks corpus size (the
-    FAISS-nlist rule): expected rows per directory stays within 2× of
-    ANN_ROWS_PER_BUCKET, the width is monotone in n, and both clamps
-    hold (≥1 bit; never wider than the signature)."""
-    from mysqldump_to_parquet_spark.llm import similarity as S
-
-    assert S._layout_prefix_bits(0) == 1
-    assert S._layout_prefix_bits(S.ANN_ROWS_PER_BUCKET) == 1
-    assert S._layout_prefix_bits(500) == 3        # sf0.01 embeddings
-    assert S._layout_prefix_bits(2_000) == 5      # sf0.1 embeddings
-    # past ~2^N_PLANES * target the exact-signature layout is recovered
-    assert S._layout_prefix_bits(1 << 30) == S.N_PLANES
-    prev = 0
-    for n in (10, 100, 1_000, 10_000, 100_000, 1_000_000):
-        p = S._layout_prefix_bits(n)
-        assert prev <= p <= S.N_PLANES
-        prev = p
-        if p < S.N_PLANES:  # not yet clamped: cell-size bound holds
-            assert n / (1 << p) <= 2 * S.ANN_ROWS_PER_BUCKET
 
 
 def test_corpus_fingerprint_loud_on_missing_and_remote(tmp_path):
@@ -985,7 +749,7 @@ def test_corpus_fingerprint_recurses_into_partitions(spark, tmp_path):
     rels = [e[0] for e in fp1]
     assert any(os.sep in r for r in rels), f"no nested entries: {rels}"
 
-    root1 = S._ann_layout_root(spark, d)
+    root1 = S._ivf_layout_dir(spark, d)
     c1 = S.ivf_centroids(spark, d)
 
     # rewrite ONE partition in place: same directory tree, new files
@@ -995,15 +759,16 @@ def test_corpus_fingerprint_recurses_into_partitions(spark, tmp_path):
     )
     fp2 = S._corpus_fingerprint(d)
     assert fp2 != fp1, "partition rewrite not visible in fingerprint"
-    assert S._ann_layout_root(spark, d) != root1
+    assert S._ivf_layout_dir(spark, d) != root1
     assert S.ivf_centroids(spark, d) is not c1
 
 
 def test_ann_null_embeddings_skipped(spark, tmp_path):
     """A corpus containing NULL embedding rows must not crash the
-    vectorized signature/assignment UDFs (ADVICE r8: np.vstack raises on
-    None) — null rows get null signatures / null cells and are never
-    candidates, matching the pre-r8 expression-filter semantics."""
+    vectorized cell-assignment UDF (ADVICE r8: np.vstack raises on
+    None) — null rows get null cells and are never candidates, matching
+    the pre-r8 expression-filter semantics (the written layout's side
+    is test_ivf_layout_build_tolerates_degraded_embeddings)."""
     import numpy as np
 
     from mysqldump_to_parquet_spark.llm import similarity as S
@@ -1016,16 +781,6 @@ def test_ann_null_embeddings_skipped(spark, tmp_path):
     base.unionByName(nulls).write.parquet(f"{d}/embeddings.parquet")
     e = spark.read.parquet(f"{d}/embeddings.parquet")
 
-    # all-band candidate filter: runs, and the null row is not a candidate
-    out = S.sim_ann_lsh(spark, d).collect()
-    assert all(r.vec_id != 999_999 for r in out)
-
-    # per-band signature: null in, null out, non-null rows unaffected
-    sig = S._band_signature_udf(0)
-    got = {r.vec_id: r.s for r in e.withColumn("s", sig(F.col("embedding"))).collect()}
-    assert got[999_999] is None
-    assert sum(v is not None for v in got.values()) == 20
-
     # IVF assignment: null cell for the null row
     cent = np.eye(4, 64)
     cells = {
@@ -1034,10 +789,6 @@ def test_ann_null_embeddings_skipped(spark, tmp_path):
     }
     assert cells[999_999] is None
     assert sum(v is not None for v in cells.values()) == 20
-
-    # the written layout tolerates the null row (it lands in the default
-    # partition, which no probe signature ever selects)
-    S.write_ann_partitioned(e, str(tmp_path / "b0"), band=0)
 
 
 def test_components_merge_transitive_chain(spark, tmp_path):
@@ -1507,21 +1258,20 @@ def test_ann_layout_concurrent_cold_build_is_single(spark, tmp_path):
     )
 
     builds = []
-    real_build = S.write_ann_partitioned
+    real_build = S.write_ivf_partitioned
 
     def counting_build(*a, **kw):
         builds.append(1)
         return real_build(*a, **kw)
 
-    orig = S.write_ann_partitioned
-    S.write_ann_partitioned = counting_build
+    S.write_ivf_partitioned = counting_build
     try:
         roots: list = []
         errs: list = []
 
         def probe():
             try:
-                roots.append(S._ann_layout_root(spark, d))
+                roots.append(S._ivf_layout_dir(spark, d))
             except Exception as e:  # pragma: no cover - surfaced below
                 errs.append(e)
 
@@ -1532,13 +1282,13 @@ def test_ann_layout_concurrent_cold_build_is_single(spark, tmp_path):
             t.join()
         assert not errs, errs
         assert len(set(roots)) == 1
-        # one build per BAND of one layout — not two layouts' worth
-        assert len(builds) == S.ANN_LAYOUT_BANDS
+        # one layout write — not two layouts' worth
+        assert len(builds) == 1
         # warm path: no further builds
-        assert S._ann_layout_root(spark, d) == roots[0]
-        assert len(builds) == S.ANN_LAYOUT_BANDS
+        assert S._ivf_layout_dir(spark, d) == roots[0]
+        assert len(builds) == 1
     finally:
-        S.write_ann_partitioned = orig
+        S.write_ivf_partitioned = real_build
 
 
 def test_jpeg_codec_round_trip_and_all_markers():

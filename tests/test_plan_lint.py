@@ -129,8 +129,6 @@ _SWEEP_EXCLUDE = {
     "q_bpe_merges",  # iterative merge rounds execute jobs at plan-build
     "q_bpe_apply",  # same learn loop runs before the apply aggregation
     "q_sim_ann_ivf",  # quantizer fit executes jobs
-    "q_sim_ann_lsh",  # probe signature prep
-    "q_sim_ann_partitioned",  # materializes the bucketed layout once
     "q_embed_pca",  # Gram pass + driver eigh execute at plan-build (fit)
 }
 

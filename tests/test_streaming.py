@@ -792,6 +792,38 @@ def test_gated_ingest_stream_learns_and_replays(spark, tmp_path):
     )
 
 
+def test_gated_ingest_refuses_non_default_commit_protocol(spark, tmp_path):
+    """The ingest epoch fuses an anti-join read of embeddings.parquet
+    into the append that writes it — safe only under the default
+    commit protocol.  Another protocol class must be refused before
+    the epoch writes anything (no audit flags, no primary rows)."""
+    import os
+
+    from mysqldump_to_parquet_spark.streaming.stream import _ingest_epoch
+
+    corpus = str(tmp_path / "corpus")
+    spark.read.parquet(f"{SF}/embeddings.parquet").limit(20).write.parquet(
+        f"{corpus}/embeddings.parquet"
+    )
+    n0 = spark.read.parquet(f"{corpus}/embeddings.parquet").count()
+    out = str(tmp_path / "audit")
+    batch = spark.createDataFrame(
+        [(7_000_001, [0.5] * 64)], "qid long, qv array<double>"
+    )
+    key = "spark.sql.sources.commitProtocolClass"
+    old = spark.conf.get(key)
+    spark.conf.set(
+        key, "org.apache.spark.internal.io.HadoopMapReduceCommitProtocol"
+    )
+    try:
+        with pytest.raises(RuntimeError, match="commitProtocolClass"):
+            _ingest_epoch(spark, corpus, out, 0.9, False, batch, 0)
+    finally:
+        spark.conf.set(key, old)
+    assert not os.path.exists(out)
+    assert spark.read.parquet(f"{corpus}/embeddings.parquet").count() == n0
+
+
 def test_gated_ingest_stream_end_to_end(spark, tmp_path):
     """gated_ingest_stream through a REAL file-source stream: three
     arrival files drain to a final state identical to what the epochs

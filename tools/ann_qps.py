@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Concurrent-probe (QPS) measurement for the written ANN layouts
+"""Concurrent-probe (QPS) measurement for the written IVF layout
 (VERDICT r11 #3, batched form r12 #2): every probe number through r11
 was a single-query wall, but a deployed index serves many queries at
 once.
@@ -43,7 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))  # sibling tools
 
 NOISE_STD = 0.1
 
-VARIANTS = {"ivf_int8": "int8", "ivf_pq": "pq", "lsh": "lsh"}
+VARIANTS = {"ivf_int8": "int8", "ivf_pq": "pq"}
 
 
 def _probe_vectors(sf_dir: str, n: int):
@@ -89,12 +89,8 @@ def run_batched(
 ) -> dict:
     from mysqldump_to_parquet_spark.llm import similarity as S
 
-    if variant == "lsh":
-        def batch(ps):
-            return S.ann_probe_batch_lsh(spark, sf_dir, ps)
-    else:
-        def batch(ps):
-            return S.ann_probe_batch(spark, sf_dir, ps, variant=variant)
+    def batch(ps):
+        return S.ann_probe_batch(spark, sf_dir, ps, variant=variant)
 
     # warm the code path (codegen, Python worker pool) on a 2-probe batch
     batch(probes[:2]).collect()
@@ -160,7 +156,6 @@ def main() -> None:
     S._ivf_layout_df(spark, args.sf_dir)
     S.ivf_centroids(spark, args.sf_dir)
     S.pq_codebooks(spark, args.sf_dir)
-    S._ann_layout_root(spark, args.sf_dir)
     probes = _probe_vectors(args.sf_dir, args.probes)
 
     for name, variant in VARIANTS.items():
@@ -176,8 +171,6 @@ def main() -> None:
             continue
 
         def fn(p, _v=variant):
-            if _v == "lsh":
-                return S.lsh_probe_topk(spark, args.sf_dir, p).collect()
             return S.ivf_probe_topk(
                 spark, args.sf_dir, p, variant=_v
             ).collect()

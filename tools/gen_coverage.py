@@ -49,26 +49,6 @@ ROWS_ONLY_NOTES = {
         "within Hamming ≤ 8 — measured max 5 — random-pair median ≥ 12 "
         "— measured 18; plus bit-packing + determinism invariants)"
     ),
-    "q_sim_ann_lsh": (
-        "rows-only (hyperplane LSH, 32 Gaussian bands × 12 planes with "
-        "query-directed multi-probe; recall@10 ≥ 0.7 vs exact "
-        "q_sim_topk at sf0.01 — measured 1.0, min 0.7 over a 9-probe "
-        "robustness sweep — pytest-pinned)"
-    ),
-    "q_sim_ann_partitioned": (
-        "rows-only (probe over the WRITTEN OR-construction: 3 band "
-        "layouts — the r10-swept knee L=3/flip=10, curve in "
-        "BASELINE.md; one full copy + two id-only index bands since "
-        "r11, storage ~1.2× instead of 3×, schema+bytes pytest-pinned "
-        "— partitionBy a corpus-sized PREFIX of the "
-        "signature with the full signature as a pushed data filter — "
-        "sigp IN (…) reaches each scan as a PartitionFilter and the "
-        "candidate set is granularity-independent; candidate-set "
-        "exactness vs the shared flip-set implementation, physical "
-        "pruning, AND the written path's own recall@10 ≥ 0.8 vs exact "
-        "q_sim_topk at sf0.01 — measured 0.8 (0.9/1.0 at "
-        "sf0.1/sf0.001) — are pytest-asserted)"
-    ),
     "q_sim_ann_ivf": (
         "rows-only (spherical IVF, corpus-adaptive grid min(4√n, n/8) "
         "cells at a 25% scan fraction — r10; recall@10 ≥ 0.7 vs exact "
@@ -103,13 +83,6 @@ ROWS_ONLY_NOTES = {
         "broadcast re-rank; every probe's rows bit-identical to the "
         "probe-parametric serial path on both variants, pytest-"
         "asserted; 12–25× threaded-serial QPS at M=32, SCALING.md)"
-    ),
-    "q_sim_ann_lsh_batch": (
-        "rows-only (batched multi-probe over the written LSH layout, "
-        "r13: union band scans, broadcast (band, sig, probe_id) pair "
-        "join, one grouped exact rank; bit-identical to the serial "
-        "lsh_probe_topk per probe, pytest-asserted; ~6× serial QPS at "
-        "sf1, candidate-bound at sf10 — SCALING.md)"
     ),
     "q_sim_knn_join_ivf": (
         "rows-only (distributed index-backed kNN join, r13: executor-"

@@ -437,42 +437,6 @@ NOTES = {
         "back, then a ≤10-group partial aggregate. Fixed-width score "
         "buckets keep the plan free of the global-ntile total order."
     ),
-    "q_sim_ann_lsh": (
-        "Hyperplane-LSH ANN (rewritten r8 — Gaussian planes + query-"
-        "directed multi-probe): the candidate filter is ONE ArrowEval "
-        "stage — a (batch × 64) @ (64 × 384) BLAS matmul per batch "
-        "computing all 32 band signatures at once (the 384 interpreted "
-        "JVM folds it replaced were 10× slower), then exact cosine + "
-        "TakeOrderedAndProject on survivors only.  At 100 TB the "
-        "signature matmul runs ONCE at write time and the corpus is "
-        "partitioned by (band, signature): a probe reads 2^6/2^12 of "
-        "each band — partition-pruned, never a scan.  recall@10 1.0 "
-        "(pin 0.7) vs exact q_sim_topk at sf0.01."
-    ),
-    "q_sim_ann_partitioned": (
-        "The WRITTEN LSH layout (r8; OR-construction + corpus-sized "
-        "granularity r9; swept knee L=3/flip=10 r10; id-only secondary "
-        "bands r11): ONE full corpus copy (band 0) + two ~24 B/row id "
-        "indexes (vec_id, sig, sigp0) — storage ~1.2× instead of 3× — "
-        "each partitionBy a "
-        "corpus-sized PREFIX of its band's signature (~64 rows per "
-        "directory; at ≥256k rows the prefix IS the full signature), "
-        "full signature kept as a data column.  A probe prunes "
-        "directories on the prefix — `sigp IN (…)` is a "
-        "PartitionFilter on both scans, files outside the probe set "
-        "never read (numFiles plan-asserted) — applies the exact "
-        "`sig IN (…)` predicate inside the pruned files (candidate set "
-        "granularity-independent), unions the secondary bands' "
-        "candidate IDS, fetches their vectors from band 0 (pruned to "
-        "the recorded band-0 prefixes + a broadcast semi-join on "
-        "vec_id), dedups by vec_id, and ranks survivors by exact "
-        "cosine.  Sizing directories to the "
-        "corpus took the sf0.1 steady-state probe 6.0 → 1.2 s. "
-        "Written-path recall@10 0.8 at sf0.01 (pin 0.8; 0.9/1.0 at "
-        "sf0.1/sf0.001) vs the 32-band in-memory filter's 1.0 — the "
-        "knee of the measured recall-vs-read-cost curve (BASELINE.md), "
-        "bought with 3 bands instead of 32."
-    ),
     "q_sim_ann_ivf_partitioned": (
         "The WRITTEN IVF layout (r9; int8 codes r11): (vec_id, int8 "
         "code, scale) partitionBy coarse-quantizer cell (spherical "
@@ -521,21 +485,6 @@ NOTES = {
         "plan; at 100 TB the batch reads the corpus once for ALL "
         "probes where the serial form pays M point reads — 12-25× "
         "the threaded per-probe QPS at M=32 (SCALING.md)."
-    ),
-    "q_sim_ann_lsh_batch": (
-        "Batched multi-probe over the written LSH layout (r13): per "
-        "band, ONE pruned scan covers the union of all probes' flip "
-        "sets (sigp PartitionFilter + pushed sig IN); a broadcast "
-        "(band, sig, probe_id) table joins each candidate row to "
-        "exactly the probes whose flip set contains its signature — "
-        "the per-(probe, candidate) pairing is a join, not Python; "
-        "distinct pairs then rank by exact cosine against one shared "
-        "corpus scan with the WindowGroupLimit top-k cut.  No collect "
-        "(the serial probe's secondary-fetch prefix list is replaced "
-        "by the shared scan).  Gains are orchestration-bound at small "
-        "corpora (~6× at sf1) and candidate-bound at large (1.6× at "
-        "sf10: a ~0.5 candidate fraction × M is exact-cosine work no "
-        "batching removes — why IVF stays the first-choice layout)."
     ),
     "q_sim_knn_join_ivf": (
         "Distributed index-backed kNN JOIN (r13): the probe set is a "

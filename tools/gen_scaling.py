@@ -116,14 +116,6 @@ SF1_QUERIES = [
     "q_embed_covariance",
     "q_interval_concurrency",
     "q_dedup_semantic",
-    # round-8: rewritten signature stage (one BLAS matmul per batch) —
-    # the at-test-SF plan scans all signatures, so wall should track
-    # corpus size ~linearly; at deploy the same matmul runs at write time
-    "q_sim_ann_lsh",
-    # round-9: the materialized OR-construction layout — first call pays
-    # the 2-band write, steady-state probes are pruned reads; sf1 wall is
-    # dominated by the one-time layout build at this fixture scale
-    "q_sim_ann_partitioned",
     # round-13: the distributed kNN join (query set fixed at 30 rows, so
     # the decade measures the corpus side: layout scan + pair scoring
     # for the IVF form, the broadcast NLJ scan for the exact twin)
@@ -377,9 +369,6 @@ def run_sf1(spark, registry, sf1_dir: str) -> None:
         "(bpe/bfs/kmeans) confirm their sf0.1 cost is scheduling floor,",
         "not data.  `q_embed_covariance` is data-volume-bound by design",
         "(one Gram fold over every vector) — ~1.6× measured.",
-        "`q_sim_ann_partitioned`'s wall is dominated by its ONE-TIME",
-        "L-band layout write at this fixture scale; the steady-state",
-        "probe decade is measured in its own section below.",
         "`q_win_running_distinct` exact stays ~2× (user_id keying) with",
         "the day-grain primary lower; `q_agg_weighted_median` EXACT holds",
         "~1× after the r5 distinct-value-grain pre-aggregation.",
@@ -411,7 +400,6 @@ def run_ann(spark, sf1_dir: str | None, sf10_dir: str | None = None) -> None:
         dirs.append(("10", sf10_dir))
 
     layouts = [
-        ("LSH prefix layout", S._ann_layout_root, S.sim_ann_partitioned),
         ("IVF cell layout", S._ivf_layout_dir, S.sim_ann_ivf_partitioned),
         # shares the IVF layout (its build row is ~0 once IVF ran) but
         # scans 8 B/vector PQ codes instead of 64 B int8 codes
@@ -444,8 +432,7 @@ def run_ann(spark, sf1_dir: str | None, sf10_dir: str | None = None) -> None:
         "quantizer fit); probe = min-of-3 with the layout warm.",
         "IVF fit sample and cell count are corpus-bounded, so build grows",
         "with data volume while probe tracks the PRUNED fraction",
-        "(LSH: L·2^(flip−12) of one copy at deploy granularity; IVF:",
-        "nprobe/cells ≈ 1/4).",
+        "(nprobe/cells ≈ 1/4).",
         "",
         "| layout | sf | corpus rows | build (once) | probe (steady, min-of-3) |",
         "|---|---|---|---|---|",
@@ -455,6 +442,14 @@ def run_ann(spark, sf1_dir: str | None, sf10_dir: str | None = None) -> None:
             f"| {label} | {sf} | {n} | {build:.2f}s | {probe:.2f}s |"
         )
     lines += [
+        "",
+        "Hyperplane LSH, the second ANN index until it was retired in favour",
+        "of IVF, measured slower on every probe row: steady probe 0.94 / 0.86 /",
+        "0.96 / 1.79 / 2.38 s from sf0.001 to sf10 (IVF 0.60 / 0.56 / 0.64 /",
+        "0.93 / 1.03 s), batched M=32 at 0.66 QPS at sf10 and 0.26 QPS at 1M",
+        "vectors (IVF 5.4–9.5 and 4.8), and its in-memory filter at 0.46 s at",
+        "sf0.1 against the exact `q_sim_topk`'s 0.23 s over the same scan; it",
+        "won only the one-time build, 29.3 s against 41.5 s at sf10.",
         "",
         "Probe wall should grow far slower than corpus rows: the probed",
         "fraction is constant, so the pruned read grows linearly but",
@@ -472,20 +467,16 @@ def run_ann(spark, sf1_dir: str | None, sf10_dir: str | None = None) -> None:
         "the bytes that dominate at scale: the IVF probe is now a",
         "two-phase code-scan + exact re-rank (one extra collect + one",
         "source-corpus read per probe — ~+0.5 s of job floor at fixture",
-        "scale, ~¼ the index bytes at every scale), and the LSH probe",
-        "fetches secondary-band candidates from band 0 via a semi-join",
-        "(two extra jobs; storage 3× → ~1.2×, same ~0.75-copy total",
-        "data motion — see sim_ann_partitioned's accounting).",
+        "scale, ~¼ the index bytes at every scale).",
         "",
         "r12 removed the probe's DRIVER floor, found by the first QPS",
         "profile: the re-rank's isin(4096 ids) cost ~3 s of py4j",
         "Literal construction (now ONE SQL string building the same",
         "pushed-In plan) and every probe re-listed all cell dirs",
         "(~1.5 s; the file-index DataFrame is now held per corpus —",
-        "similarity.py _ivf_layout_df / _ANN_BAND_DFS).  Probe walls",
-        "dropped ~4-5× across every layout: IVF 4.30 → 0.93 s at sf1",
-        "and 5.11 → 1.03 s at sf10, LSH 6.49 → 1.79 s and",
-        "12.90 → 2.38 s; the decade growth the table pins is now",
+        "similarity.py _ivf_layout_df).  Probe walls dropped ~4-5×:",
+        "IVF 4.30 → 0.93 s at sf1 and 5.11 → 1.03 s at sf10; the",
+        "decade growth the table pins is now",
         "~2-2.5× for 400× rows — the pruned-read term barely emerges",
         "from the job floor.",
         "",

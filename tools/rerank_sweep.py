@@ -9,7 +9,7 @@ cut at 256/512/1024/2048/4096 for BOTH approximate orders (int8 code
 cosine, PQ ADC) and reports recall@10 plus the re-rank read cost
 (survivors × 256 B — the id-keyed float-vector fetch at scale).
 
-Method (the sweep_ann_layout.py pattern): the REAL fits — spherical
+Method: the REAL fits — spherical
 MLlib coarse quantizer (``ivf_centroids``) and seeded PQ codebooks
 (``pq_codebooks``) — plus the REAL quantizers (``_quantize_codes``, the
 ``_pq_encode_udf`` math) drive a NumPy re-enactment of the probe:
