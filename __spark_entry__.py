@@ -112,17 +112,29 @@ _MODULES = [
 # --- BEGIN GENERATED CHECK ORDER (tools/gen_window.py) ---
 #: inputs this ordering was generated from — tests re-derive
 #: the generator's view through these pins, so a newer
-#: CORRECTNESS file landing later cannot invert the invariants
-#: touched-bucket pins this round (sub-module change annotations): q_tpch_q21, q_kmeans, q_ivf_index_append, q_sim_knn_join_ivf, q_bpe_merges, q_bpe_apply, q_dedup_phash
+#: CORRECTNESS file landing later cannot invert the invariants;
+#: a plain tools/gen_window.py run re-reads the base and pins
 _ORDER_BASE_COMMIT = "643b776"
 _ORDER_BASIS_ROUND = 16
+#: touched-bucket pins (sub-module change annotations)
+_ORDER_PINS = (
+    "q_tpch_q21",
+    "q_kmeans",
+    "q_ivf_index_append",
+    "q_sim_knn_join_ivf",
+    "q_bpe_merges",
+    "q_bpe_apply",
+    "q_dedup_phash",
+    "q_graph_bfs",
+    "q_ingest_mysqldump",
+)
 
 _CHECK_ORDER = (
         "q_tpch_q21", "q_kmeans", "q_ivf_index_append",
         "q_sim_knn_join_ivf", "q_bpe_merges", "q_bpe_apply",
-        "q_dedup_phash", "q_ingest_mysqldump", "q_scan_parquet",
-        "q_tpch_q11", "q_tpch_q12", "q_tpch_q13", "q_tpch_q14",
-        "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_check_constraints",
+        "q_dedup_phash", "q_graph_bfs", "q_ingest_mysqldump",
+        "q_scan_parquet", "q_assoc_rules", "q_pagerank", "q_tpch_q11",
+        "q_tpch_q12", "q_tpch_q13", "q_tpch_q14", "q_check_constraints",
         "q_cogroup_pandas", "q_cohort_retention", "q_decontaminate",
         "q_entropy", "q_fingerprint", "q_fn_array_algebra",
         "q_fn_bitwise", "q_fn_date_calendar", "q_fn_explode_outer",
@@ -133,8 +145,9 @@ _CHECK_ORDER = (
         "q_split_hash", "q_src_dump_datasource", "q_src_json",
         "q_src_orc", "q_text_clean", "q_text_stats", "q_tfidf",
         "q_token_count", "q_top_terms", "q_win_time_range",
-        "q_tpch_q19", "q_tpch_q2", "q_tpch_q20", "q_tpch_q22",
-        "q_tpch_q4", "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
+        "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_tpch_q19",
+        "q_tpch_q2", "q_tpch_q20", "q_tpch_q22", "q_tpch_q4",
+        "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
         "q_dedup_against_index_exact", "q_dedup_against_index_ivf",
         "q_multimodal_audio", "q_multimodal_decode",
         "q_multimodal_frames", "q_multimodal_jpeg", "q_multimodal_meta",
@@ -149,11 +162,10 @@ _CHECK_ORDER = (
         "q_join_dpp", "q_knn_classify", "q_lateral_topk",
         "q_sim_ann_ivfpq", "q_sink_partitioned", "q_subquery_scalar",
         "q_tpch_q10", "q_tpch_q18", "q_tpch_q3", "q_tpch_q5",
-        "q_assoc_rules", "q_attribution_channels", "q_bm25",
-        "q_cdc_apply", "q_chunk_tokens", "q_conversion_latency",
-        "q_cooccur_pmi", "q_curation_report", "q_dedup_url",
-        "q_fn_variant", "q_funnel", "q_graph_bfs", "q_group_skew",
-        "q_join_null_safe", "q_pagerank", "q_profile_columns",
+        "q_attribution_channels", "q_bm25", "q_cdc_apply",
+        "q_chunk_tokens", "q_conversion_latency", "q_cooccur_pmi",
+        "q_curation_report", "q_dedup_url", "q_fn_variant", "q_funnel",
+        "q_group_skew", "q_join_null_safe", "q_profile_columns",
         "q_set_except_all", "q_set_intersect_all", "q_src_evolution",
         "q_src_nested", "q_ab_test", "q_agg_approx_distinct",
         "q_agg_cube", "q_agg_distinct", "q_agg_groupby", "q_agg_gsets",

@@ -740,17 +740,31 @@ def _next_is_literal(s: str, i: int, n: int) -> bool:
 # blobs, b'…' bit literals, X'…' hex strings, charset introducers,
 # arbitrary whitespace).  The overwhelming bulk
 # of a real mysqldump, though, is the canonical layout mysqldump itself
-# emits: ``INSERT INTO `t` VALUES (a,b,...),(a,b,...);`` with no backslash
-# escapes in sight.  For those statements the VALUES text IS a CSV dialect
-# (comma delimiter, single-quote quoting, '' doubling), so the parse can be
+# emits: ``INSERT INTO `t` VALUES (a,b,...),(a,b,...);``.  Once backslash
+# escapes are resolved, that VALUES text IS a CSV dialect (comma
+# delimiter, single-quote quoting, '' doubling), so the parse can be
 # handed to pyarrow.csv's C++ reader: a vectorized numpy scan validates the
 # structure and rewrites top-level ``),(`` separators to newlines, and one
-# ``read_csv`` call per Arrow batch converts every literal straight into
-# typed Arrow columns — measured 4.8× per core over the Python tokenizer
-# (8 → 39 MB/s/core on the ingest-bench shape).
+# ``read_csv`` call per statement group converts every literal straight
+# into typed Arrow columns — measured 4.8× per core over the Python
+# tokenizer (8 → 39 MB/s/core on the ingest-bench shape).
+#
+# Every step before ``read_csv`` is numpy/C:
+#
+# * escapes resolve through a 256-entry lookup table indexed by the byte
+#   after each escaping backslash (:func:`_unescape_bytes`), with no
+#   Python loop over escape sites — a per-site loop would dominate the
+#   parse of escape-dense text tables;
+# * ``\0`` resolves to SOH (0x01), not NUL: pyarrow.csv 16.1 miscounts
+#   columns on NUL-bearing payloads past ~0.5 MB, so NUL never reaches
+#   the reader.  :func:`_arrow_read_values` maps SOH back to NUL in every
+#   string column.  A statement whose raw text already holds 0x00 or 0x01
+#   takes the tokenizer, so SOH in a payload always means ``\0``;
+# * each statement group's CSV chunks append to ONE ``bytearray`` that
+#   the reader consumes in place — no per-chunk list, no join copy.
 #
 # Safety model: the fast path never guesses.  Any structural surprise —
-# a backslash anywhere in the statement, quote imbalance, a top-level paren
+# a trailing lone backslash, quote imbalance, a top-level paren
 # that is not exactly a row boundary, an Arrow conversion error (type
 # mismatch, int64 overflow, ragged row), a non-finite parsed double or a
 # NaN literal, a quote byte off a field boundary (glued charset
@@ -813,22 +827,18 @@ def _arrow_fast_types(schema: T.StructType):
     return out
 
 
-#: Byte-level MySQL escape substitutions for the fast path — mirrors
-#: ``_ESCAPES`` exactly, except ``\'`` becomes CSV ``''`` doubling so the
-#: result stays parseable under single-quote quoting.
-_ESC_BYTES = {
-    39: b"''",  # \'  → '' (CSV-doubled)
-    34: b'"',
-    48: b"\x00",
-    98: b"\x08",
-    110: b"\n",
-    114: b"\r",
-    116: b"\t",
-    90: b"\x1a",
-    92: b"\\",
-    37: b"\\%",
-    95: b"\\_",
-}
+#: Stand-in for NUL in fast-path CSV payloads (see the block comment).
+_NUL_STAND_IN = b"\x01"
+
+#: Byte written over the byte after an escaping backslash — mirrors
+#: ``_ESCAPES``, with ``\0`` → SOH.  Unlisted bytes map to themselves:
+#: MySQL drops the backslash of an unknown escape and keeps the byte
+#: (also the lead byte of a multibyte UTF-8 char — its continuation
+#: bytes are untouched).  ``\'``, ``\%`` and ``\_`` keep their byte
+#: too; :func:`_unescape_bytes` handles their backslash.
+_ESC_LUT = bytes(range(256)).translate(
+    bytes.maketrans(b"0bnrtZ", _NUL_STAND_IN + b"\x08\n\r\t\x1a")
+)
 
 
 def _unescape_bytes(data: bytes) -> bytes | None:
@@ -836,37 +846,37 @@ def _unescape_bytes(data: bytes) -> bytes | None:
     scan (escaped quotes must not count toward quote parity).
 
     A backslash starts an escape iff it is preceded by an even number of
-    consecutive backslashes — computed vectorized (run starts via a
-    shifted mask + searchsorted offsets), then the sparse escape sites
-    are spliced with C-speed byte slices.  ``\\'`` becomes ``''`` so the
-    output stays CSV-quotable; every other mapping mirrors ``_ESCAPES``
-    (default: drop the backslash, keep the byte — multibyte UTF-8 chars
-    work because only their lead byte follows the backslash and the
-    continuation bytes copy verbatim).  Returns None for a trailing lone
-    backslash (truncated statement — exhaustive path raises properly)."""
+    consecutive backslashes — computed vectorized over the backslash
+    positions alone (a run starts where the previous backslash is not
+    adjacent; the offset into its run decides).  The escape sites then
+    resolve in three array operations, never a Python loop: the byte
+    after each escaping backslash goes through :data:`_ESC_LUT`;
+    ``\\'`` becomes the CSV doubling ``''`` by writing a quote over its
+    backslash; every other escaping backslash is dropped by one delete,
+    except those of ``\\%`` and ``\\_``, which MySQL keeps.  ``\\0``
+    yields SOH, not NUL (:data:`_NUL_STAND_IN`).  Returns None for a
+    trailing lone backslash (truncated statement — exhaustive path
+    raises properly)."""
     import numpy as np
 
     arr = np.frombuffer(data, dtype=np.uint8)
-    bs = arr == 92
-    pos = np.nonzero(bs)[0]
+    pos = np.flatnonzero(arr == 92)
     if pos.size == 0:
         return data
-    prev = np.zeros_like(bs)
-    prev[1:] = bs[:-1]
-    run_starts = np.nonzero(bs & ~prev)[0]
-    idx = np.searchsorted(run_starts, pos, side="right") - 1
-    starts = pos[((pos - run_starts[idx]) % 2) == 0]
-    if starts.size and int(starts[-1]) + 1 >= len(data):
+    run_start = np.empty(pos.size, dtype=bool)
+    run_start[0] = True
+    run_start[1:] = np.diff(pos) != 1
+    run_id = np.cumsum(run_start) - 1
+    starts = pos[((pos - pos[run_start][run_id]) % 2) == 0]
+    if int(starts[-1]) + 1 >= arr.size:
         return None
-    parts = []
-    prev_end = 0
-    for p in starts.tolist():
-        parts.append(data[prev_end:p])
-        nxt = data[p + 1]
-        parts.append(_ESC_BYTES.get(nxt, data[p + 1 : p + 2]))
-        prev_end = p + 2
-    parts.append(data[prev_end:])
-    return b"".join(parts)
+    esc = arr[starts + 1]
+    out = arr.copy()
+    out[starts + 1] = np.frombuffer(_ESC_LUT, dtype=np.uint8)[esc]
+    quote = esc == 39
+    out[starts[quote]] = 39
+    drop = starts[~(quote | (esc == 37) | (esc == 95))]
+    return np.delete(out, drop).tobytes()
 
 
 def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
@@ -874,18 +884,21 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
     CSV bytes (one line per row, outer parens stripped), or None when any
     structural guard trips.
 
-    Backslash escapes are resolved first by :func:`_unescape_bytes` (so
-    text-corpus dumps full of ``\\'`` stay on the fast path), and
-    insignificant top-level whitespace is stripped (delimiter-adjacent
-    runs only — pretty-printed / reassembled multiline statements then
-    ride the fast path; a run between two value tokens is malformed and
-    rejects).  The numpy scan then proves three invariants before any
-    byte is moved: quote parity is balanced, every top-level ``(`` is
-    exactly a row opener, and every top-level ``)`` is exactly a row
-    closer — so a ``),(`` inside a quoted string can never split a row,
-    and any stray top-level paren (nested tuples, truncated statements)
-    routes to the exhaustive parser instead.  Returns the CSV payload
-    and the row count the caller must see back from Arrow."""
+    A statement whose raw VALUES text holds a NUL or SOH byte returns
+    None (SOH is the payload's stand-in for ``\\0``, see
+    :data:`_NUL_STAND_IN`).  Backslash escapes are then resolved by
+    :func:`_unescape_bytes` (so text-corpus dumps full of ``\\'`` and
+    ``\\0`` stay on the fast path), and insignificant top-level
+    whitespace is stripped (delimiter-adjacent runs only — pretty-printed
+    / reassembled multiline statements then ride the fast path; a run
+    between two value tokens is malformed and rejects).  The numpy scan
+    then proves three invariants before any byte is moved: quote parity
+    is balanced, every top-level ``(`` is exactly a row opener, and every
+    top-level ``)`` is exactly a row closer — so a ``),(`` inside a
+    quoted string can never split a row, and any stray top-level paren
+    (nested tuples, truncated statements) routes to the exhaustive
+    parser instead.  Returns the CSV payload and the row count the
+    caller must see back from Arrow."""
     import numpy as np
 
     tm = _INSERT_TABLE_RE.match(stmt)
@@ -905,35 +918,31 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
         return None
     seg = stmt[vpos + 6 :].strip(" \t\r\n")
     if seg.endswith(";"):
-        seg = seg[:-1].rstrip(" \t\r\n")
+        seg = seg.rstrip(";").rstrip(" \t\r\n")
     if len(seg) < 2 or not (seg.startswith("(") and seg.endswith(")")):
         return None
     data = seg[1:-1].encode("utf-8")
+    if b"\x00" in data or _NUL_STAND_IN in data:
+        return None
     if b"\\" in data:
         data = _unescape_bytes(data)
         if data is None:
             return None
-    # NUL bytes (the ``\0`` escape) make pyarrow.csv miscount columns
-    # once a joined group passes ~0.5 MB, though each statement parses
-    # alone, and a failed group read re-parses every statement in the
-    # group.  NUL statements go straight to the tokenizer instead; clean
-    # statements in the same group stay on the fast path.
-    if b"\x00" in data:
-        return None
     arr = np.frombuffer(data, dtype=np.uint8)
     if arr.size == 0:
         return None
-    # inclusive quote count; a position is inside a string iff the count of
-    # quotes STRICTLY BEFORE it is odd — for non-quote bytes that equals
-    # parity[pos] (UTF-8 continuation bytes are ≥ 0x80, so multibyte text
-    # can never alias the ASCII quote/paren/comma bytes tested here)
-    # int32 accumulator: the default int64 cumsum doubles the memory
-    # traffic of the scan's largest intermediate, and at 32 concurrent
-    # parse workers this whole routine is memory-bandwidth-bound (a
-    # statement is at most a few MB — far under the int32 range)
-    parity = np.cumsum(arr == 39, dtype=np.int32)
-    if int(parity[-1]) % 2 != 0:
+    # a position is inside a string iff the count of quotes STRICTLY
+    # BEFORE it is odd — for non-quote bytes that equals the inclusive
+    # count's parity, a running XOR of the quote mask (UTF-8
+    # continuation bytes are ≥ 0x80, so multibyte text can never alias
+    # the ASCII quote/paren/comma bytes tested here).  Only the parity
+    # matters: the bool XOR scan runs ~6× faster than an int32 cumsum
+    # (1.1 vs 6.2 ms per MB on one core).
+    quote = arr == 39
+    odd = np.bitwise_xor.accumulate(quote)
+    if odd[-1]:
         return None
+    top = ~odd
     # Top-level whitespace (space/tab/CR/LF outside quotes) is
     # insignificant in a VALUES list but would reach Arrow as part of an
     # unquoted field (" '...'" after a comma keeps the quotes literal) —
@@ -942,16 +951,18 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
     # mysqldump output (measured 6.4 → 17.5 MB/s on the multiline
     # ingest shape).  Whitespace inside quoted strings (odd parity) is
     # data and stays.  Deletion cannot create new top-level whitespace,
-    # so the rescan terminates after one pass.
-    ws = (arr == 32) | (arr == 9) | (arr == 13) | (arr == 10)
-    top_ws = ws & ((parity & 1) == 0)
-    if bool(top_ws.any()):
+    # so the rescan terminates after one pass.  One ``<= 0x20`` compare
+    # finds the candidates; the exact whitespace test runs on those few.
+    idx = np.flatnonzero((arr <= 32) & top)
+    if idx.size:
+        c = arr[idx]
+        idx = idx[(c == 32) | (c == 9) | (c == 13) | (c == 10)]
+    if idx.size:
         # Safety: a run may only be stripped when it touches a
         # STRUCTURAL byte — ',' '(' ')' or the data boundary.  A run
         # between two value bytes (``2 3``) or between two quotes
         # (``'a' 'b'``) is malformed SQL the exhaustive tokenizer
         # rejects loudly; stripping would instead silently fuse tokens.
-        idx = np.nonzero(top_ws)[0]
         run_break = np.diff(idx) > 1
         starts = idx[np.concatenate(([True], run_break))]
         ends = idx[np.concatenate((run_break, [True]))]
@@ -979,11 +990,12 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
         )
         if bool(empty.any()):
             return None
-        arr = arr[~top_ws]
+        arr = np.delete(arr, idx)
         if arr.size == 0:
             return None
-        data = arr.tobytes()
-        parity = np.cumsum(arr == 39, dtype=np.int32)
+        quote = arr == 39
+        odd = np.bitwise_xor.accumulate(quote)
+        top = ~odd
     # every quote must sit on a field boundary: an opening quote (odd
     # inclusive parity) only after '(' ',' or another quote ('' doubling),
     # a closing quote (even parity) only before ',' ')' or another quote.
@@ -991,10 +1003,11 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
     # half-quoted junk (``1.5'x'``) that Arrow CSV would keep as literal
     # mid-field quote bytes — silently diverging from the exhaustive
     # tokenizer, which resolves introducers via its rewind path.
-    qpos = np.nonzero(arr == 39)[0]
+    qpos = np.flatnonzero(quote)
     if qpos.size:
-        opening = qpos[(parity[qpos] % 2) == 1]
-        closing = qpos[(parity[qpos] % 2) == 0]
+        q_odd = odd[qpos]
+        opening = qpos[q_odd]
+        closing = qpos[~q_odd]
         # direct compares instead of np.isin: in1d's sort/unique machinery
         # measured ~15% of the scan on quote-heavy statements
         before = arr[opening[opening > 0] - 1]
@@ -1003,37 +1016,32 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
         after = arr[closing[closing < arr.size - 1] + 1]
         if not ((after == 44) | (after == 41) | (after == 39)).all():
             return None
-    cand = np.nonzero(
-        (arr[:-2] == 41) & (arr[1:-1] == 44) & (arr[2:] == 40)
-    )[0]
-    top = cand[(parity[cand] % 2) == 0]
-    po = np.nonzero(arr == 40)[0]
-    pc = np.nonzero(arr == 41)[0]
-    po_top = po[(parity[po] % 2) == 0]
-    pc_top = pc[(parity[pc] % 2) == 0]
+    # row structure: every top-level ')' is followed by ',(' and every
+    # top-level '(' is the one two bytes after such a ')' — so the
+    # top-level ')' positions are exactly the row separators
+    po_top = np.flatnonzero((arr == 40) & top)
+    pc_top = np.flatnonzero((arr == 41) & top)
     if not (
-        np.array_equal(po_top, top + 2) and np.array_equal(pc_top, top)
+        np.array_equal(po_top, pc_top + 2) and (arr[pc_top + 1] == 44).all()
     ):
         return None
-    if top.size == cand.size:
-        csv = data.replace(b"),(", b"\n")
-    else:  # some ),( live inside quoted strings — splice only the real ones
-        parts = []
-        prev = 0
-        for p in top.tolist():
-            parts.append(data[prev:p])
-            prev = p + 3
-        parts.append(data[prev:])
-        csv = b"\n".join(parts)
-    return csv, int(top.size) + 1
+    # each separator ``),(`` becomes one newline; a ``),(`` inside a
+    # quoted string is data and stays
+    out = np.delete(arr, np.concatenate((pc_top + 1, pc_top + 2)))
+    out[pc_top - 2 * np.arange(pc_top.size)] = 10
+    return out.tobytes(), int(pc_top.size) + 1
 
 
 def _arrow_read_values(
-    csv_payload: bytes, names: list[str], col_types
+    csv_payload: bytes | bytearray, names: list[str], col_types
 ) -> "object":
     """One pyarrow.csv read over the concatenated row lines of a batch of
     statements.  Raises on any conversion surprise — the caller falls back
     statement-by-statement.
+
+    SOH in the payload is the stand-in for NUL (:data:`_NUL_STAND_IN`)
+    and maps back to NUL in every string column here, before the caller
+    casts any carrier column to its target type.
 
     Non-finite floats are rejected HERE, centrally: Arrow parses a bare
     ``NaN``/``Inf`` literal into a float value the exhaustive parser
@@ -1046,6 +1054,16 @@ def _arrow_read_values(
     from pyarrow import csv as pacsv
 
     tbl = _arrow_csv_read(csv_payload, names, col_types, pacsv)
+    if _NUL_STAND_IN in csv_payload:
+        tbl = pa.Table.from_arrays(
+            [
+                pc.replace_substring(col, _NUL_STAND_IN.decode(), "\x00")
+                if pa.types.is_string(col.type)
+                else col
+                for col in tbl.columns
+            ],
+            names=tbl.column_names,
+        )
     for name, col in zip(tbl.column_names, tbl.columns):
         if pa.types.is_floating(col.type):
             bad = (pc.sum(pc.is_nan(col)).as_py() or 0) + (
@@ -1058,11 +1076,13 @@ def _arrow_read_values(
     return tbl
 
 
-def _arrow_csv_read(csv_payload: bytes, names: list[str], col_types, pacsv):
-    import io
+def _arrow_csv_read(
+    csv_payload: bytes | bytearray, names: list[str], col_types, pacsv
+):
+    import pyarrow as pa
 
     return pacsv.read_csv(
-        io.BytesIO(csv_payload),
+        pa.BufferReader(csv_payload),  # zero-copy over bytes or bytearray
         read_options=pacsv.ReadOptions(column_names=names, encoding="utf8"),
         parse_options=pacsv.ParseOptions(
             delimiter=",",
@@ -2083,9 +2103,12 @@ def _parse_stmts_to_arrow(stmts, table: str, schema: T.StructType, carrier):
     shared parse core of the line path and the fused multi-line path).
 
     Statements for other tables are skipped; fast-path-eligible ones
-    accumulate into a single Arrow-CSV read; the rest (and any fast
-    group whose typed cast fails) go through the exhaustive tokenizer —
-    identical C1–C3 error semantics on both paths."""
+    append their CSV rows to ONE ``bytearray`` payload, read by a single
+    Arrow-CSV call; the rest (and every statement of a fast group whose
+    read fails) go through the exhaustive tokenizer — identical C1–C3
+    error semantics on both paths.  Only references to the statements
+    are held until the read; the tokenizer's ``;`` normalization copies
+    just the statements it parses."""
     import pyarrow as pa
 
     names = [f.name for f in schema.fields]
@@ -2101,7 +2124,7 @@ def _parse_stmts_to_arrow(stmts, table: str, schema: T.StructType, carrier):
     def slow_batches(group):
         rows: list[dict] = []
         for stmt in group:
-            _, ins_cols, tuples = parse_insert_full(stmt)
+            _, ins_cols, tuples = parse_insert_full(stmt.rstrip(";") + ";")
             for tup in tuples:
                 if ins_cols is not None:  # --complete-insert dumps
                     tup = align_row(tup, ins_cols, schema, table)
@@ -2110,35 +2133,41 @@ def _parse_stmts_to_arrow(stmts, table: str, schema: T.StructType, carrier):
 
     slow_stmts: list[str] = []
     fast_stmts: list[str] = []
-    fast_chunks: list[bytes] = []
+    payload = bytearray()
     fast_rows = 0
     for stmt in stmts:
-        stmt = stmt.strip().rstrip(";") + ";"
+        stmt = stmt.strip()  # the same object unless it has edge whitespace
         if insert_table_name(stmt) != table:
             continue
         if fast_types is not None and not has_col_list_re.match(stmt):
             fb = _values_csv_bytes(stmt)
             if fb is not None:
+                if fast_stmts:
+                    payload += b"\n"
+                payload += fb[0]
                 fast_stmts.append(stmt)
-                fast_chunks.append(fb[0])
                 fast_rows += fb[1]
                 continue
         slow_stmts.append(stmt)
-    if fast_chunks:
+    tbl = None
+    if fast_stmts:
         try:
-            tbl = _arrow_read_values(b"\n".join(fast_chunks), names, fast_types)
+            tbl = _arrow_read_values(payload, names, fast_types)
             if tbl.num_rows != fast_rows:
                 raise DumpParseError("fast-path row-count drift")
             # non-finite literal rejection lives inside
             # _arrow_read_values (NaN must be counted Arrow-side,
             # before nulls blur into NaN in a numpy view)
-            yield from tbl.to_batches()
         except Exception:
             # any conversion surprise: re-parse those statements
             # through the exhaustive grammar, which parses them
             # correctly or raises the contextual DumpParseError
+            tbl = None
             slow_stmts = fast_stmts + slow_stmts
-    if slow_stmts or not fast_chunks:
+    del payload  # free it before the batches and the tokenizer run
+    if tbl is not None:
+        yield from tbl.to_batches()
+    if slow_stmts or not fast_stmts:
         yield from slow_batches(slow_stmts)
 
 

@@ -1357,10 +1357,10 @@ class TestArrowFastPath:
         """A dump mixing fast-path statements (quotes doubled, commas and
         parens inside strings, NULLs, decimals, negative floats) with a
         slow-path statement (backslash escapes) converts to the same rows
-        the exhaustive grammar produces.  A statement carrying a NUL
-        byte (the ``\\0`` escape) is refused by the fast path outright
-        (pyarrow.csv miscounts columns on NUL-bearing payloads past
-        ~0.5 MB) and its row still converts exactly."""
+        the exhaustive grammar produces.  A statement carrying the
+        ``\\0`` escape stays on the fast path (NUL rides the payload as
+        SOH), while one whose raw text holds an SOH byte falls back, and
+        both rows still convert exactly."""
         from mysqldump_to_parquet_spark.sources.mysqldump import (
             _values_csv_bytes,
             convert_dump,
@@ -1371,7 +1371,12 @@ class TestArrowFastPath:
             "INSERT INTO `t1` VALUES "
             "(5,'nul\\0byte',0.5,2.00,0,'2024-05-06 07:08:09');"
         )
-        assert _values_csv_bytes(nul_stmt) is None
+        assert _values_csv_bytes(nul_stmt) is not None
+        soh_stmt = (
+            "INSERT INTO `t1` VALUES "
+            "(6,'raw\x01soh',0.5,3.00,1,'2024-06-07 08:09:10');"
+        )
+        assert _values_csv_bytes(soh_stmt) is None
 
         dump = (
             "CREATE TABLE `t1` (\n"
@@ -1391,12 +1396,14 @@ class TestArrowFastPath:
             "(4,'line\\nbreak \\'q\\'',3.25,1.00,TRUE,'2024-04-05 06:07:08');\n"
             + nul_stmt
             + "\n"
+            + soh_stmt
+            + "\n"
         )
         p = tmp_path / "x.sql"
         p.write_text(dump)
         out = str(tmp_path / "out")
         counts = convert_dump(spark, str(p), out)
-        assert counts == {"t1": 5}
+        assert counts == {"t1": 6}
         rows = {
             r.id: r for r in spark.read.parquet(f"{out}/t1").collect()
         }
@@ -1407,6 +1414,51 @@ class TestArrowFastPath:
         assert rows[1].ts == datetime.datetime(2024, 1, 2, 3, 4, 5)
         assert rows[5].name == "nul\x00byte"
         assert str(rows[5].bal) == "2.00"
+        assert rows[6].name == "raw\x01soh" and str(rows[6].bal) == "3.00"
+
+    def test_nul_group_over_1mb_stays_on_fast_path(self, monkeypatch):
+        """A statement group past 1 MB whose text is full of the ``\\0``
+        escape parses in one Arrow-CSV read: pyarrow.csv miscounts
+        columns on NUL-bearing payloads past ~0.5 MB, so NUL travels as
+        SOH and maps back in the string columns.  The tokenizer is never
+        called, and the rows equal the tokenizer's."""
+        import pyarrow as pa
+
+        from mysqldump_to_parquet_spark.sources import mysqldump as md
+
+        schema = T.StructType(
+            [
+                T.StructField("id", T.LongType()),
+                T.StructField("s", T.StringType()),
+                T.StructField("bal", T.DecimalType(12, 2)),
+            ]
+        )
+        carrier = T.StructType([md.carrier_field(f) for f in schema.fields])
+        pieces = ["a\\0b", "\\0", "it\\'s", "x\\\\0", "\\0\\0,(),", "中\\n"]
+        stmts = [
+            "INSERT INTO `t` VALUES "
+            + ",".join(
+                f"({k * 1000 + i},'{pieces[i % 6] * (i % 9 + 1)}',{i}.25)"
+                for i in range(1000)
+            )
+            + ";"
+            for k in range(40)
+        ]
+        assert sum(map(len, stmts)) > 1024 * 1024
+        names = [f.name for f in schema.fields]
+        want = [
+            dict(zip(names, md.coerce_row(tup, schema, "t")))
+            for stmt in stmts
+            for tup in md.parse_insert_full(stmt)[2]
+        ]
+        assert sum("\x00" in r["s"] for r in want) > 10_000
+
+        def no_tokenizer(stmt):
+            raise AssertionError("fast-path group fell back to the tokenizer")
+
+        monkeypatch.setattr(md, "parse_insert_full", no_tokenizer)
+        batches = list(md._parse_stmts_to_arrow(stmts, "t", schema, carrier))
+        assert pa.Table.from_batches(batches).to_pylist() == want
 
     def test_fast_path_matches_exhaustive_on_generated_rows(self):
         """Differential: the Arrow path and the exhaustive tokenizer parse

@@ -15,7 +15,12 @@ Ties break alphabetically for determinism.  Output is the Python source
 of two pinned blocks (``_CHECK_ORDER``, ``_VERIFIED``) to paste into
 ``__spark_entry__.py``; run at end of round, after the last code commit:
 
-    python tools/gen_window.py [--base <round-base-commit>]
+    python tools/gen_window.py [--base <round-base-commit>] [--pin KEY ...] [--write]
+
+Without ``--base`` the generator reuses the base commit AND the pins of
+the committed block (``_ORDER_BASE_COMMIT``, ``_ORDER_PINS``), so a plain
+``--write`` reproduces the committed window for an unchanged tree and
+inputs.  A new ``--base`` starts a new round: pins then default to none.
 """
 
 from __future__ import annotations
@@ -174,20 +179,18 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--base",
-        default="1e016ae",
         help="base commit modules are diffed against (working tree "
         "included); pick the newest commit ALL of whose module edits "
-        "already have a driver row — for r10 that is the r9 driver "
-        "commit (CORRECTNESS_r09 evidenced every r9-touched module, "
-        "VERDICT r9)",
+        "already have a green CORRECTNESS row.  Default: the committed "
+        "_ORDER_BASE_COMMIT",
     )
     ap.add_argument("--window", type=int, default=50)
     ap.add_argument(
         "--pin",
         action="append",
-        default=[],
         metavar="KEY",
-        help="hoist KEY to the front of the touched bucket (repeatable)."
+        help="hoist KEY to the front of the touched bucket (repeatable; "
+        "default: the committed _ORDER_PINS unless --base is given)."
         "  Module granularity cannot see WHICH keys inside a touched "
         "module the diff actually hit — r14 left q_sim_knn_join_ivf "
         "(whose code materially changed) outside the window behind six "
@@ -208,6 +211,11 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as ep
+
+    if args.pin is None:
+        args.pin = list(ep._ORDER_PINS) if args.base is None else []
+    if args.base is None:
+        args.base = ep._ORDER_BASE_COMMIT
 
     key_module: dict[str, str] = {}
     for mod in ep._MODULES:
@@ -292,19 +300,16 @@ def main() -> None:
         )
 
     basis = newest_round(REPO)
-    pins_line = (
-        "#: touched-bucket pins this round (sub-module change "
-        f"annotations): {', '.join(args.pin)}\n"
-        if args.pin
-        else ""
-    )
+    pins = "".join(f'    "{k}",\n' for k in args.pin)
     text = (
         f"#: inputs this ordering was generated from — tests re-derive\n"
         f"#: the generator's view through these pins, so a newer\n"
-        f"#: CORRECTNESS file landing later cannot invert the invariants\n"
-        + pins_line
-        + f'_ORDER_BASE_COMMIT = "{args.base}"\n'
-        f"_ORDER_BASIS_ROUND = {basis}\n\n"
+        f"#: CORRECTNESS file landing later cannot invert the invariants;\n"
+        f"#: a plain tools/gen_window.py run re-reads the base and pins\n"
+        f'_ORDER_BASE_COMMIT = "{args.base}"\n'
+        f"_ORDER_BASIS_ROUND = {basis}\n"
+        f"#: touched-bucket pins (sub-module change annotations)\n"
+        f"_ORDER_PINS = (\n{pins})\n\n"
         + block("_CHECK_ORDER", order, "tuple")
         + "\n\n"
         + block("_VERIFIED", sorted(greens.keys() & key_module.keys()), "frozenset")
