@@ -133,21 +133,21 @@ _CHECK_ORDER = (
         "q_tpch_q21", "q_kmeans", "q_ivf_index_append",
         "q_sim_knn_join_ivf", "q_bpe_merges", "q_bpe_apply",
         "q_dedup_phash", "q_graph_bfs", "q_ingest_mysqldump",
-        "q_scan_parquet", "q_assoc_rules", "q_pagerank", "q_tpch_q11",
-        "q_tpch_q12", "q_tpch_q13", "q_tpch_q14", "q_check_constraints",
-        "q_cogroup_pandas", "q_cohort_retention", "q_decontaminate",
-        "q_entropy", "q_fingerprint", "q_fn_array_algebra",
-        "q_fn_bitwise", "q_fn_date_calendar", "q_fn_explode_outer",
-        "q_fn_hash", "q_fn_regex", "q_fn_string_pad", "q_gopher_rules",
+        "q_scan_parquet", "q_src_dump_datasource", "q_assoc_rules",
+        "q_pagerank", "q_tpch_q11", "q_tpch_q12", "q_tpch_q13",
+        "q_tpch_q14", "q_check_constraints", "q_cogroup_pandas",
+        "q_cohort_retention", "q_decontaminate", "q_entropy",
+        "q_fingerprint", "q_fn_array_algebra", "q_fn_bitwise",
+        "q_fn_date_calendar", "q_fn_explode_outer", "q_fn_hash",
+        "q_fn_regex", "q_fn_string_pad", "q_gopher_rules",
         "q_join_interval", "q_lang_id", "q_merge_upsert", "q_ngram_lm",
         "q_pack_sequences", "q_quality_score", "q_repetition",
         "q_resample_locf", "q_sample_stratified", "q_scd2",
-        "q_split_hash", "q_src_dump_datasource", "q_src_json",
-        "q_src_orc", "q_text_clean", "q_text_stats", "q_tfidf",
-        "q_token_count", "q_top_terms", "q_win_time_range",
-        "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_tpch_q19",
-        "q_tpch_q2", "q_tpch_q20", "q_tpch_q22", "q_tpch_q4",
-        "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
+        "q_split_hash", "q_src_json", "q_src_orc", "q_text_clean",
+        "q_text_stats", "q_tfidf", "q_token_count", "q_top_terms",
+        "q_win_time_range", "q_tpch_q15", "q_tpch_q16", "q_tpch_q17",
+        "q_tpch_q19", "q_tpch_q2", "q_tpch_q20", "q_tpch_q22",
+        "q_tpch_q4", "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
         "q_dedup_against_index_exact", "q_dedup_against_index_ivf",
         "q_multimodal_audio", "q_multimodal_decode",
         "q_multimodal_frames", "q_multimodal_jpeg", "q_multimodal_meta",

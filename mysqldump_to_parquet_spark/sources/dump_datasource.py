@@ -41,7 +41,6 @@ a dump table joins live against the rest of the engine.
 from __future__ import annotations
 
 import glob as globlib
-import math
 import os
 from datetime import date, datetime, timezone
 from decimal import Decimal
@@ -52,7 +51,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -64,6 +62,7 @@ from .mysqldump import (
     _open_dump_text,
     _arrow_fast_types,
     _arrow_read_values,
+    _offsets_and_data,
     _values_csv_bytes,
     align_row,
     coerce_row,
@@ -399,129 +398,42 @@ def _sql_type(dt: T.DataType, table: str, name: str) -> str:
     )
 
 
-def _sql_literal(v) -> str:
-    """One value as a dump literal, formatted so the reader (and MySQL)
-    parse back the identical value: '' doubling for quotes, 0x… for
-    binary (--hex-blob convention), exact digits for Decimal."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "1" if v else "0"
-    if isinstance(v, bytes):
-        return "0x" + v.hex() if v else "''"
-    if isinstance(v, str):
-        # control characters MUST be escaped or an embedded newline breaks
-        # the one-statement-per-line contract the splittable reader relies
-        # on (mysqldump escapes the same set)
-        s = (
-            v.replace("\\", "\\\\")
-            .replace("'", "''")
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            .replace("\0", "\\0")
-        )
-        return "'" + s + "'"
-    if isinstance(v, Decimal):
-        return format(v, "f")
-    if isinstance(v, float):
-        if not math.isfinite(v):
-            # repr() would emit a bare inf/-inf/nan token the reader (and
-            # MySQL) reject — fail at export, not on a later read-back
-            raise DumpParseError(
-                f"non-finite double {v!r} has no mysqldump literal; "
-                "NULL or clamp the column before export"
-            )
-        return repr(v)
-    if isinstance(v, datetime):
-        fmt = "%Y-%m-%d %H:%M:%S.%f" if v.microsecond else "%Y-%m-%d %H:%M:%S"
-        return "'" + v.strftime(fmt) + "'"
-    if isinstance(v, date):
-        return "'" + v.isoformat() + "'"
-    return str(v)
-
-
 class _WroteFile(WriterCommitMessage):
     def __init__(self, path: str, rows: int):
         self.path = path
         self.rows = rows
 
 
-class MysqldumpWriter(DataSourceWriter):
-    """Per-task: one ``part-<uuid>.sql`` of extended INSERTs; on commit the
-    driver writes ``00-schema.sql`` (DDL first lexicographically, so the
-    reader's head scan finds it).  Each task writes independently —
-    no driver fan-in of data, the layout every distributed sink needs."""
-
-    def __init__(self, schema: T.StructType, options: dict, overwrite: bool):
-        self._schema = schema
-        self._table = options["table"].lower()
-        self._dir = options["path"]
-        self._overwrite = overwrite
-
-    def write(self, rows) -> _WroteFile:
-        import uuid
-
-        os.makedirs(self._dir, exist_ok=True)
-        path = os.path.join(self._dir, f"part-{uuid.uuid4().hex}.sql")
-        n = 0
-        with open(path, "w", encoding="utf-8") as fh:
-            batch: list[str] = []
-
-            def flush():
-                if batch:
-                    fh.write(
-                        f"INSERT INTO `{self._table}` VALUES "
-                        + ",".join(batch)
-                        + ";\n"
-                    )
-                    batch.clear()
-
-            for row in rows:
-                vals = ",".join(_sql_literal(v) for v in row)
-                batch.append(f"({vals})")
-                n += 1
-                if len(batch) >= ROWS_PER_INSERT:
-                    flush()
-            flush()
-        return _WroteFile(path, n)
-
-    def commit(self, messages) -> None:
-        if self._overwrite:
-            # mode("overwrite") contract: the directory holds ONLY this
-            # job's output afterwards — remove part files from prior
-            # writes or a later read returns old rows merged with new
-            keep = {m.path for m in messages if m is not None}
-            for p in globlib.glob(os.path.join(self._dir, "part-*.sql")):
-                if p not in keep:
-                    os.remove(p)
-        cols = ",\n".join(
-            f"  `{f.name}` {_sql_type(f.dataType, self._table, f.name)}"
-            + ("" if f.nullable else " NOT NULL")
-            for f in self._schema.fields
-        )
-        ddl = f"CREATE TABLE `{self._table}` (\n{cols}\n);\n"
-        with open(os.path.join(self._dir, "00-schema.sql"), "w") as fh:
-            fh.write("-- exported by mysqldump_to_parquet_spark\n")
-            fh.write(ddl)
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.path):
-                os.remove(m.path)
+#: Two lower-case hex digits for every byte value.
+_HEX_PAIRS = b"".join(b"%02x" % b for b in range(256))
 
 
 def _lit_column(col, f: T.StructField, table: str):
-    """One Arrow column → its dump-literal string array (vectorized twin
-    of ``_sql_literal``; NULL handling applied last).  Literal text may
-    differ from the row path in round-trip-neutral ways (Arrow floats
-    print '1e-7' where repr gives '1e-07'; timestamps always carry
-    microseconds) — both reparse to identical values."""
+    """One Arrow column → its dump-literal string array (NULL handling
+    applied last), formatted so the reader (and MySQL) parse back the
+    identical value: '' doubling and backslash escapes for strings,
+    ``0x…`` for binary (the --hex-blob convention; empty bytes as ``''``),
+    exact digits for decimals, always-microsecond timestamps."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     dt = f.dataType
     quote = pa.scalar("'")
-    if isinstance(dt, T.BooleanType):
+    if isinstance(dt, T.BinaryType):
+        off, data = _offsets_and_data(col)
+        digits = np.frombuffer(_HEX_PAIRS, dtype=np.uint8).reshape(256, 2)
+        hexes = pa.Array.from_buffers(
+            pa.string(),
+            len(col),
+            [None, pa.py_buffer(2 * off), pa.py_buffer(digits[data])],
+        )
+        s = pc.if_else(
+            pc.equal(pc.binary_length(col), 0),
+            pa.scalar("''"),
+            pc.binary_join_element_wise("0x", hexes, ""),
+        )
+    elif isinstance(dt, T.BooleanType):
         s = pc.if_else(col, pa.scalar("1"), pa.scalar("0"))
     elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         utc = pc.cast(col, pa.timestamp("us", tz="UTC"))
@@ -556,14 +468,23 @@ def _lit_column(col, f: T.StructField, table: str):
     return pc.if_else(pc.is_null(col), pa.scalar("NULL"), s)
 
 
-class MysqldumpArrowWriter(DataSourceArrowWriter, MysqldumpWriter):
-    """Vectorized writer: Arrow RecordBatches in, extended-INSERT text
-    out.  Every literal is formatted by Arrow C++ kernels (casts,
-    strftime, escape replaces) and rows are assembled with one
-    ``binary_join_element_wise`` — Python only joins the finished row
-    strings into {ROWS_PER_INSERT}-row statements.  Schemas with a
-    BinaryType column use the row-at-a-time writer instead (hex-blob
-    literals have no Arrow kernel)."""
+class MysqldumpWriter(DataSourceArrowWriter):
+    """Per-task: one ``part-<uuid>.sql`` of extended INSERTs; on commit the
+    driver writes ``00-schema.sql`` (DDL first lexicographically, so the
+    reader's head scan finds it).  Each task writes independently —
+    no driver fan-in of data, the layout every distributed sink needs.
+
+    Arrow RecordBatches in, extended-INSERT text out.  Every literal is
+    formatted by Arrow C++ kernels (casts, strftime, escape replaces) or,
+    for binary, a numpy hex table over the value buffer, and rows are
+    assembled with one ``binary_join_element_wise`` — Python only joins
+    the finished row strings into {ROWS_PER_INSERT}-row statements."""
+
+    def __init__(self, schema: T.StructType, options: dict, overwrite: bool):
+        self._schema = schema
+        self._table = options["table"].lower()
+        self._dir = options["path"]
+        self._overwrite = overwrite
 
     def write(self, iterator) -> _WroteFile:
         import uuid
@@ -595,6 +516,30 @@ class MysqldumpArrowWriter(DataSourceArrowWriter, MysqldumpWriter):
                     fh.write(prefix + ",".join(chunk) + ";\n")
                 n += len(rows)
         return _WroteFile(path, n)
+
+    def commit(self, messages) -> None:
+        if self._overwrite:
+            # mode("overwrite") contract: the directory holds ONLY this
+            # job's output afterwards — remove part files from prior
+            # writes or a later read returns old rows merged with new
+            keep = {m.path for m in messages if m is not None}
+            for p in globlib.glob(os.path.join(self._dir, "part-*.sql")):
+                if p not in keep:
+                    os.remove(p)
+        cols = ",\n".join(
+            f"  `{f.name}` {_sql_type(f.dataType, self._table, f.name)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in self._schema.fields
+        )
+        ddl = f"CREATE TABLE `{self._table}` (\n{cols}\n);\n"
+        with open(os.path.join(self._dir, "00-schema.sql"), "w") as fh:
+            fh.write("-- exported by mysqldump_to_parquet_spark\n")
+            fh.write(ddl)
+
+    def abort(self, messages) -> None:
+        for m in messages:
+            if m is not None and os.path.exists(m.path):
+                os.remove(m.path)
 
 
 class MysqldumpDataSource(DataSource):
@@ -630,10 +575,7 @@ class MysqldumpDataSource(DataSource):
     def writer(self, schema: T.StructType, overwrite: bool) -> MysqldumpWriter:
         self._require("path")
         self._require("table")
-        if any(isinstance(f.dataType, T.BinaryType) for f in schema.fields):
-            # hex-blob literals have no Arrow kernel — row path
-            return MysqldumpWriter(schema, dict(self.options), overwrite)
-        return MysqldumpArrowWriter(schema, dict(self.options), overwrite)
+        return MysqldumpWriter(schema, dict(self.options), overwrite)
 
 
 def register(spark) -> None:

@@ -679,8 +679,8 @@ def _parse_values(s: str, i: int, table: str) -> list[tuple]:
             elif up[0] == "B" and len(tok) >= 2 and tok[1] == "'":
                 # BIT column literal (b'101') — numeric context, matching
                 # the BIT→integer DDL mapping.  The Arrow-CSV fast path
-                # never sees these: its quote-boundary guard routes any
-                # statement with a non-delimiter-adjacent quote here.
+                # reads these itself (:data:`_BIT_STAND_IN`); statements
+                # it refuses, and bad literals, land here.
                 if len(tok) < 3 or tok[-1] != "'" or tok[2:-1].strip("01"):
                     raise DumpParseError(
                         f"bad bit literal {tok[:40]!r} in INSERT for {table}"
@@ -760,6 +760,20 @@ def _next_is_literal(s: str, i: int, n: int) -> bool:
 #   the reader.  :func:`_arrow_read_values` maps SOH back to NUL in every
 #   string column.  A statement whose raw text already holds 0x00 or 0x01
 #   takes the tokenizer, so SOH in a payload always means ``\0``;
+# * binary and bit literals ride the payload too.  A ``0x…`` token, an
+#   ``X'…'``/``x'…'`` hex string and a ``b'…'``/``B'…'`` bit literal at a
+#   field start (right after ``(`` or ``,``) are rewritten into a token
+#   that starts with a stand-in byte: STX (0x02) for hex, ETX (0x03) for
+#   bits, followed by the digits (``0x41`` → STX ``41``; ``b'101'`` →
+#   the quoted field ``'`` ETX ``101'``).  Once Arrow has stripped the
+#   quotes, the stand-in is what tells the literal ``0x41`` from the
+#   quoted string ``'0x41'``.  :func:`_arrow_read_values` decodes the
+#   tokens by target type in numpy (hex → bytes or a big-endian integer,
+#   bits → an integer or ``ceil(nbits/8)`` bytes) and raises when a token
+#   lands in any other column.  A statement whose raw text holds 0x02 or
+#   0x03 takes the tokenizer, as raw NUL/SOH does; introducers glued to
+#   anything but a delimiter (``_binary'…'``) still fail the
+#   quote-boundary guard;
 # * each statement group's CSV chunks append to ONE ``bytearray`` that
 #   the reader consumes in place — no per-chunk list, no join copy.
 #
@@ -776,7 +790,8 @@ def _next_is_literal(s: str, i: int, n: int) -> bool:
 # all only reachable from hand-crafted dumps mysqldump never emits — are
 # QUOTED literals that Arrow CSV converts where coerce_row would raise:
 # '7' in a BIGINT column, '1.5' in a DOUBLE column, '1'/'TRUE' in a
-# BOOLEAN column, and a bare unquoted junk token in a StringType column.
+# BOOLEAN column, and a bare unquoted junk token in a StringType or
+# BinaryType column.
 
 _ARROW_SENTINEL = object()
 
@@ -803,32 +818,37 @@ def _carrier_pa_type(dt: T.DataType):
     raise DumpParseError(f"no carrier Arrow type for {dt.simpleString()}")
 
 
-def _arrow_fast_types(schema: T.StructType):
-    """Arrow CSV target types in CARRIER representation, or None when the
-    schema has a column the fast path does not handle (BinaryType: hex
-    literals need the exhaustive path)."""
-    import pyarrow as pa
+_FAST_PATH_TYPES = (
+    T.LongType, T.DoubleType, T.BooleanType, T.BinaryType,
+    T.TimestampType, T.DateType, T.DecimalType, T.StringType,
+)
 
-    out = {}
-    for f in schema.fields:
-        dt = f.dataType
-        if isinstance(dt, T.LongType):
-            out[f.name] = pa.int64()
-        elif isinstance(dt, T.DoubleType):
-            out[f.name] = pa.float64()
-        elif isinstance(dt, T.BooleanType):
-            out[f.name] = pa.bool_()
-        elif isinstance(
-            dt, (T.TimestampType, T.DateType, T.DecimalType, T.StringType)
-        ):
-            out[f.name] = pa.string()  # temporal/decimal ride as strings (C1)
-        else:
-            return None
-    return out
+
+def _arrow_fast_types(schema: T.StructType):
+    """Column name → Spark type for :func:`_arrow_read_values`, or None
+    when the schema has a column the fast path does not handle (any type
+    ``parse_create_table`` does not produce).
+
+    Every literal of the canonical layout rides the fast path: numbers,
+    NULL, quoted strings, and the binary literals ``0x…``, ``X'…'`` and
+    ``b'…'``, which the scan marks with the stand-in bytes STX (hex,
+    :data:`_HEX_STAND_IN`) and ETX (bits, :data:`_BIT_STAND_IN`) and the
+    read decodes into BinaryType, LongType (BIT(n<64)) and DecimalType
+    (BIT(64)) columns."""
+    if not all(isinstance(f.dataType, _FAST_PATH_TYPES) for f in schema.fields):
+        return None
+    return {f.name: f.dataType for f in schema.fields}
 
 
 #: Stand-in for NUL in fast-path CSV payloads (see the block comment).
 _NUL_STAND_IN = b"\x01"
+
+#: First byte of a hex-literal token (``0x…``/``X'…'``) and of a
+#: bit-literal token (``b'…'``) in fast-path CSV payloads.  Raw bytes
+#: 0x00–0x03 in a statement send it to the tokenizer, so these bytes in
+#: a payload always come from the scan.
+_HEX_STAND_IN = b"\x02"
+_BIT_STAND_IN = b"\x03"
 
 #: Byte written over the byte after an escaping backslash — mirrors
 #: ``_ESCAPES``, with ``\0`` → SOH.  Unlisted bytes map to themselves:
@@ -879,14 +899,24 @@ def _unescape_bytes(data: bytes) -> bytes | None:
     return np.delete(out, drop).tobytes()
 
 
+def _at_field_start(arr, pos):
+    """Mask of the positions ``pos`` that start a VALUES field: the
+    first byte, or the byte right after ``(`` or ``,``."""
+    import numpy as np
+
+    before = arr[np.maximum(pos - 1, 0)]
+    return (pos == 0) | (before == 40) | (before == 44)
+
+
 def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
     """Rewrite one canonical extended-INSERT statement's VALUES text into
     CSV bytes (one line per row, outer parens stripped), or None when any
     structural guard trips.
 
-    A statement whose raw VALUES text holds a NUL or SOH byte returns
-    None (SOH is the payload's stand-in for ``\\0``, see
-    :data:`_NUL_STAND_IN`).  Backslash escapes are then resolved by
+    A statement whose raw VALUES text holds a byte 0x00–0x03 returns
+    None (SOH, STX and ETX are the payload's stand-ins for ``\\0``, hex
+    and bit literals, see :data:`_NUL_STAND_IN`).  Backslash escapes are
+    then resolved by
     :func:`_unescape_bytes` (so text-corpus dumps full of ``\\'`` and
     ``\\0`` stay on the fast path), and insignificant top-level
     whitespace is stripped (delimiter-adjacent runs only — pretty-printed
@@ -897,8 +927,9 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
     top-level ``)`` is exactly a row closer — so a ``),(`` inside a
     quoted string can never split a row, and any stray top-level paren
     (nested tuples, truncated statements) routes to the exhaustive
-    parser instead.  Returns the CSV payload and the row count the
-    caller must see back from Arrow."""
+    parser instead.  Hex and bit literals at a field start become
+    stand-in tokens (block comment above).  Returns the CSV payload and
+    the row count the caller must see back from Arrow."""
     import numpy as np
 
     tm = _INSERT_TABLE_RE.match(stmt)
@@ -922,8 +953,8 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
     if len(seg) < 2 or not (seg.startswith("(") and seg.endswith(")")):
         return None
     data = seg[1:-1].encode("utf-8")
-    if b"\x00" in data or _NUL_STAND_IN in data:
-        return None
+    if not data or np.frombuffer(data, dtype=np.uint8).min() <= 3:
+        return None  # raw NUL or a stand-in byte
     if b"\\" in data:
         data = _unescape_bytes(data)
         if data is None:
@@ -1010,12 +1041,40 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
         closing = qpos[~q_odd]
         # direct compares instead of np.isin: in1d's sort/unique machinery
         # measured ~15% of the scan on quote-heavy statements
-        before = arr[opening[opening > 0] - 1]
-        if not ((before == 40) | (before == 44) | (before == 39)).all():
-            return None
+        opening = opening[opening > 0]
+        before = arr[opening - 1]
+        off_boundary = ~((before == 40) | (before == 44) | (before == 39))
+        if off_boundary.any():
+            # the one legal case: a hex/bit introducer letter at a field
+            # start (``,X'…'`` / ``(b'…'``) — rewritten in place into the
+            # quoted token ``'`` + stand-in + digits; the byte before
+            # the letter is top-level, since the letter and the quote
+            # after it are
+            o = opening[off_boundary]
+            letter = arr[o - 1] | 32  # ASCII lower case
+            if not (
+                ((letter == 120) | (letter == 98)) & _at_field_start(arr, o - 1)
+            ).all():
+                return None
+            if not arr.flags.writeable:
+                arr = arr.copy()
+            arr[o - 1] = 39
+            arr[o] = np.where(letter == 120, 2, 3)
         after = arr[closing[closing < arr.size - 1] + 1]
         if not ((after == 44) | (after == 41) | (after == 39)).all():
             return None
+    # ``0x…`` at a field start: '0' becomes the hex stand-in and the 'x'
+    # goes with the separator bytes below.  A memchr for the letter
+    # keeps the mask work off statements without one (``b"0x" in data``
+    # measured ~120 µs per 87 KB of digit-dense rows, 100× the memchr).
+    hex0 = np.empty(0, dtype=np.intp)
+    if b"x" in data or b"X" in data:
+        hex0 = np.flatnonzero((arr[1:] | 32) == 120)
+        hex0 = hex0[(arr[hex0] == 48) & top[hex0] & _at_field_start(arr, hex0)]
+        if hex0.size:
+            if not arr.flags.writeable:
+                arr = arr.copy()
+            arr[hex0] = 2
     # row structure: every top-level ')' is followed by ',(' and every
     # top-level '(' is the one two bytes after such a ')' — so the
     # top-level ')' positions are exactly the row separators
@@ -1027,8 +1086,8 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
         return None
     # each separator ``),(`` becomes one newline; a ``),(`` inside a
     # quoted string is data and stays
-    out = np.delete(arr, np.concatenate((pc_top + 1, pc_top + 2)))
-    out[pc_top - 2 * np.arange(pc_top.size)] = 10
+    out = np.delete(arr, np.concatenate((pc_top + 1, pc_top + 2, hex0 + 1)))
+    out[pc_top - 2 * np.arange(pc_top.size) - np.searchsorted(hex0, pc_top)] = 10
     return out.tobytes(), int(pc_top.size) + 1
 
 
@@ -1036,12 +1095,16 @@ def _arrow_read_values(
     csv_payload: bytes | bytearray, names: list[str], col_types
 ) -> "object":
     """One pyarrow.csv read over the concatenated row lines of a batch of
-    statements.  Raises on any conversion surprise — the caller falls back
-    statement-by-statement.
+    statements, into CARRIER-typed columns (``col_types``: column name →
+    Spark type, from :func:`_arrow_fast_types`).  Raises on any
+    conversion surprise — the caller falls back statement-by-statement.
 
     SOH in the payload is the stand-in for NUL (:data:`_NUL_STAND_IN`)
     and maps back to NUL in every string column here, before the caller
-    casts any carrier column to its target type.
+    casts any carrier column to its target type.  Binary columns read as
+    strings and hex/bit tokens decode by target type
+    (:func:`_decode_literals`); LongType columns read as strings only
+    when the payload holds a token at all.
 
     Non-finite floats are rejected HERE, centrally: Arrow parses a bare
     ``NaN``/``Inf`` literal into a float value the exhaustive parser
@@ -1053,18 +1116,22 @@ def _arrow_read_values(
     import pyarrow.compute as pc
     from pyarrow import csv as pacsv
 
-    tbl = _arrow_csv_read(csv_payload, names, col_types, pacsv)
-    if _NUL_STAND_IN in csv_payload:
-        tbl = pa.Table.from_arrays(
-            [
-                pc.replace_substring(col, _NUL_STAND_IN.decode(), "\x00")
-                if pa.types.is_string(col.type)
-                else col
-                for col in tbl.columns
-            ],
-            names=tbl.column_names,
-        )
+    tokens = _HEX_STAND_IN in csv_payload or _BIT_STAND_IN in csv_payload
+    read_types = {}
+    for name, dt in col_types.items():
+        if isinstance(dt, T.LongType) and not tokens:
+            read_types[name] = pa.int64()
+        elif isinstance(dt, T.DoubleType):
+            read_types[name] = pa.float64()
+        elif isinstance(dt, T.BooleanType):
+            read_types[name] = pa.bool_()
+        else:  # temporal/decimal ride as strings (C1), binary decodes below
+            read_types[name] = pa.string()
+    tbl = _arrow_csv_read(csv_payload, names, read_types, pacsv)
+    nul = _NUL_STAND_IN in csv_payload
+    cols = []
     for name, col in zip(tbl.column_names, tbl.columns):
+        dt = col_types[name]
         if pa.types.is_floating(col.type):
             bad = (pc.sum(pc.is_nan(col)).as_py() or 0) + (
                 pc.sum(pc.is_inf(col)).as_py() or 0
@@ -1073,7 +1140,163 @@ def _arrow_read_values(
                 raise DumpParseError(
                     f"{name}: non-finite literal on fast path"
                 )
-    return tbl
+        elif pa.types.is_string(col.type):
+            if nul:
+                col = pc.replace_substring(col, _NUL_STAND_IN.decode(), "\x00")
+            if tokens or isinstance(dt, T.BinaryType):
+                col = _decode_literals(col.combine_chunks(), dt, name)
+        cols.append(col)
+    return pa.Table.from_arrays(cols, names=tbl.column_names)
+
+
+#: Value of each byte as a hex digit / a bit digit; 255 marks a byte
+#: that is not one.
+_HEX_DIGITS = bytes(
+    int(chr(b), 16) if chr(b) in "0123456789abcdefABCDEF" else 255
+    for b in range(256)
+)
+_BIT_DIGITS = bytes(b - 48 if b in (48, 49) else 255 for b in range(256))
+
+
+def _offsets_and_data(arr):
+    """(offsets from 0, value bytes) of a string/binary Arrow array, as
+    zero-copy numpy views (the offsets are rebased copies)."""
+    import numpy as np
+
+    _validity, offsets, data = arr.buffers()
+    off = np.frombuffer(offsets, dtype=np.int32)[
+        arr.offset : arr.offset + len(arr) + 1
+    ]
+    if data is None:
+        return off - off[0], np.empty(0, dtype=np.uint8)
+    return off - off[0], np.frombuffer(data, dtype=np.uint8)[off[0] : off[-1]]
+
+
+def _token_digits(tok, lut: bytes, highest: int):
+    """Digit values of stand-in tokens (each value: one stand-in byte,
+    then digits) with the per-token digit counts; raises on a byte that
+    is not a digit."""
+    import numpy as np
+
+    off, data = _offsets_and_data(tok)
+    keep = np.ones(data.size, dtype=bool)
+    keep[off[:-1]] = False
+    dig = np.frombuffer(lut, dtype=np.uint8)[data[keep]]
+    if (dig > highest).any():
+        raise DumpParseError("bad hex/bit literal on fast path")
+    return dig, np.diff(off) - 1
+
+
+def _hex_bytes(tok):
+    """Hex tokens → (their bytes, concatenated; byte count per token)."""
+    dig, nd = _token_digits(tok, _HEX_DIGITS, 15)
+    if (nd & 1).any():
+        raise DumpParseError("odd-length hex literal on fast path")
+    return (dig[0::2] << 4) | dig[1::2], nd // 2
+
+
+def _right_aligned(vals, counts, width: int):
+    """Concatenated per-token values → one zero-padded row of ``width``
+    per token, each token's values at the right end of its row."""
+    import numpy as np
+
+    if (counts > width).any():
+        raise DumpParseError("hex/bit literal over 64 bits on fast path")
+    n = counts.size
+    start = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    m = np.zeros(n * width, dtype=np.uint8)
+    lead = np.arange(n) * width + width - counts - start
+    m[np.arange(vals.size) + np.repeat(lead, counts)] = vals
+    return m.reshape(n, width)
+
+
+def _token_ints(tok, hex_digits: bool):
+    """Hex (at most 8 bytes) or bit (at most 64 bits) tokens → (uint64
+    big-endian values, byte or bit count per token)."""
+    import numpy as np
+
+    if hex_digits:
+        data, counts = _hex_bytes(tok)
+        be = _right_aligned(data, counts, 8)
+    else:
+        dig, counts = _token_digits(tok, _BIT_DIGITS, 1)
+        be = np.packbits(_right_aligned(dig, counts, 64), axis=1)
+    return be.view(">u8").ravel().astype(np.uint64), counts
+
+
+def _binary_array(data, counts):
+    """Concatenated bytes + per-value lengths → a pyarrow binary array."""
+    import numpy as np
+    import pyarrow as pa
+
+    off = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), counts.size, [None, pa.py_buffer(off), pa.py_buffer(data)]
+    )
+
+
+def _decode_literals(arr, dt: T.DataType, name: str):
+    """Decode the stand-in tokens of one string column by target type
+    (block comment above):
+
+    * BinaryType: hex → its bytes, bits → ``ceil(nbits/8)`` big-endian
+      bytes (``b''`` → 0 bytes), any other value → its UTF-8 bytes;
+    * LongType: hex of at most 8 bytes or bits → the big-endian integer
+      (``0x`` and ``b''`` → 0), which must fit a signed long;
+    * DecimalType: the same value as a digit string (BIT(64) carrier);
+    * any other type holding a token raises, as does a value in a binary
+      column that carries U+FFFD (bytes the UTF-8 decode replaced;
+      :func:`coerce_row` raises the contextual error)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    off, data = _offsets_and_data(arr)
+    first = np.zeros(len(arr), dtype=np.uint8)
+    full = (off[1:] > off[:-1]) & arr.is_valid().to_numpy(zero_copy_only=False)
+    first[full] = data[off[:-1][full]]
+    hexm, bitm = first == 2, first == 3
+    has_hex, has_bit = bool(hexm.any()), bool(bitm.any())
+    hex_mask, bit_mask = pa.array(hexm), pa.array(bitm)
+    if isinstance(dt, T.BinaryType):
+        if pc.any(pc.match_substring(arr, "�")).as_py():
+            raise DumpParseError(f"{name}: mangled binary value")
+        out = arr.cast(pa.binary())
+        if has_hex:
+            data, counts = _hex_bytes(arr.filter(hex_mask))
+            out = pc.replace_with_mask(
+                out, hex_mask, _binary_array(data, counts)
+            )
+        if has_bit:
+            vals, nbits = _token_ints(arr.filter(bit_mask), hex_digits=False)
+            counts = (nbits + 7) // 8
+            be = vals.astype(">u8").view(np.uint8).reshape(-1, 8)
+            data = be[np.arange(8) >= 8 - counts[:, None]]
+            out = pc.replace_with_mask(
+                out, bit_mask, _binary_array(data, counts)
+            )
+        return out
+    if not (has_hex or has_bit):
+        return pc.cast(arr, pa.int64()) if isinstance(dt, T.LongType) else arr
+    if not isinstance(dt, (T.LongType, T.DecimalType)):
+        raise DumpParseError(
+            f"{name}: hex/bit literal in a {dt.simpleString()} column"
+        )
+    vals = np.zeros(len(arr), dtype=np.uint64)
+    if has_hex:
+        vals[hexm] = _token_ints(arr.filter(hex_mask), hex_digits=True)[0]
+    if has_bit:
+        vals[bitm] = _token_ints(arr.filter(bit_mask), hex_digits=False)[0]
+    vals = vals[hexm | bitm]
+    mask = pa.array(hexm | bitm)
+    if isinstance(dt, T.DecimalType):
+        return pc.replace_with_mask(arr, mask, pa.array(vals.astype(str)))
+    if (vals >= 2**63).any():
+        raise DumpParseError(f"{name}: bit/hex value overflows BIGINT")
+    plain = pc.cast(
+        pc.if_else(mask, pa.scalar(None, pa.string()), arr), pa.int64()
+    )
+    return pc.replace_with_mask(plain, mask, pa.array(vals.astype(np.int64)))
 
 
 def _arrow_csv_read(

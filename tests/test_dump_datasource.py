@@ -371,28 +371,24 @@ def test_datasource_shares_hardened_parser_paths(registered, tmp_path):
 
 
 def test_arrow_writer_selected_and_roundtrips_types(registered, spark, tmp_path):
-    """Binary-free schemas use the vectorized Arrow writer; its literals
-    (escaped strings, always-microsecond timestamps, exact decimals,
-    shortest-repr floats) reparse to identical values."""
+    """Every schema, binary included, uses the vectorized Arrow writer;
+    its literals (escaped strings, always-microsecond timestamps, exact
+    decimals, shortest-repr floats) reparse to identical values."""
     import datetime
     from decimal import Decimal
 
     from pyspark.sql import types as T
+    from pyspark.sql.datasource import DataSourceArrowWriter
 
     from mysqldump_to_parquet_spark.sources.dump_datasource import (
-        MysqldumpArrowWriter,
         MysqldumpDataSource,
-        MysqldumpWriter,
     )
 
     ds = MysqldumpDataSource({"path": str(tmp_path / "o"), "table": "t"})
     sch_plain = T.StructType([T.StructField("s", T.StringType())])
     sch_bin = T.StructType([T.StructField("b", T.BinaryType())])
-    assert isinstance(ds.writer(sch_plain, True), MysqldumpArrowWriter)
-    w = ds.writer(sch_bin, True)
-    assert isinstance(w, MysqldumpWriter) and not isinstance(
-        w, MysqldumpArrowWriter
-    )
+    assert isinstance(ds.writer(sch_plain, True), DataSourceArrowWriter)
+    assert isinstance(ds.writer(sch_bin, True), DataSourceArrowWriter)
 
     df = spark.createDataFrame(
         [
@@ -494,3 +490,33 @@ def test_bit_and_spatial_through_datasource(registered, tmp_path):
         for r in df.collect()
     }
     assert got == {1: (3, b"\xca\xfe"), 2: (5, None)}
+
+
+def test_binary_export_round_trip(registered, spark, tmp_path):
+    """Binary columns export as ``0x…`` hex through the Arrow writer
+    (empty bytes as ``''``) and read back byte-exact: NUL, quote,
+    backslash and newline bytes, every byte value, empty values and
+    NULLs."""
+    rows = [
+        (1, b"\x00'\\\n", b"a"),
+        (2, b"", None),
+        (3, None, b""),
+        (4, bytes(range(256)), b"0x41"),
+    ]
+    df = spark.createDataFrame(rows, "id long, p binary, q binary")
+    out = str(tmp_path / "bin")
+    df.write.format("mysqldump").option("table", "bin").mode(
+        "overwrite"
+    ).save(out)
+    back = (
+        spark.read.format("mysqldump")
+        .option("path", f"{out}/*.sql")
+        .option("table", "bin")
+        .load()
+    )
+
+    def as_bytes(v):
+        return None if v is None else bytes(v)
+
+    got = sorted((r.id, as_bytes(r.p), as_bytes(r.q)) for r in back.collect())
+    assert got == rows

@@ -1460,6 +1460,52 @@ class TestArrowFastPath:
         batches = list(md._parse_stmts_to_arrow(stmts, "t", schema, carrier))
         assert pa.Table.from_batches(batches).to_pylist() == want
 
+    def test_binary_group_over_1mb_stays_on_fast_path(self, monkeypatch):
+        """A statement group past 1 MB of ``--hex-blob`` output — ``0x…``
+        BLOBs (empty ``0x`` included), NULLs, ``b'…'`` into BIT(8) and
+        BIT(64), a quoted caption that spells ``'0x41'`` — parses in one
+        Arrow-CSV read: the scan marks each literal with a stand-in byte
+        and the read decodes it by column type.  The tokenizer is never
+        called, and the rows equal the tokenizer's."""
+        import pyarrow as pa
+
+        from mysqldump_to_parquet_spark.sources import mysqldump as md
+
+        ddl = (
+            "CREATE TABLE `b` (`id` bigint NOT NULL, `payload` blob,"
+            " `bits` bit(8), `big` bit(64), `caption` varchar(40))"
+        )
+        schema = md.parse_create_table(ddl).schema
+        carrier = T.StructType([md.carrier_field(f) for f in schema.fields])
+        payloads = ["0x", "NULL", "0x00275C0A", "0x" + "DEADBEEF" * 40, "X'ff00'"]
+        bits = ["b'101'", "b''", "NULL", "0x0F", "7", "B'11111111'"]
+        bigs = [f"b'{'1' * 64}'", "0xFFFFFFFFFFFFFFFF", "0x01", "NULL", "12"]
+        captions = ["'0x41'", "'it''s'", "NULL", "'a\\0b'", "'b''1'''"]
+        stmts = [
+            "INSERT INTO `b` VALUES "
+            + ",".join(
+                f"({k * 1000 + i},{payloads[i % 5]},{bits[i % 6]},"
+                f"{bigs[i % 5]},{captions[i % 5]})"
+                for i in range(1000)
+            )
+            + ";"
+            for k in range(12)
+        ]
+        assert sum(map(len, stmts)) > 1024 * 1024
+        names = [f.name for f in schema.fields]
+        want = [
+            dict(zip(names, md.coerce_row(tup, schema, "b")))
+            for stmt in stmts
+            for tup in md.parse_insert_full(stmt)[2]
+        ]
+
+        def no_tokenizer(stmt):
+            raise AssertionError("fast-path group fell back to the tokenizer")
+
+        monkeypatch.setattr(md, "parse_insert_full", no_tokenizer)
+        batches = list(md._parse_stmts_to_arrow(stmts, "b", schema, carrier))
+        assert pa.Table.from_batches(batches).to_pylist() == want
+
     def test_fast_path_matches_exhaustive_on_generated_rows(self):
         """Differential: the Arrow path and the exhaustive tokenizer parse
         the ingest-bench statement shape to identical carrier values."""

@@ -273,6 +273,152 @@ def test_arrow_fast_path_matches_exhaustive_on_hostile_strings():
     assert nul_stmts > 0
 
 
+def test_arrow_fast_path_matches_exhaustive_on_hostile_binary():
+    """Randomized differential for hex and bit literals on the fast path:
+    ``0x…``, ``X'…'`` and ``b'…'`` mixed with quoted strings (``'0x41'``
+    among them) in one binary column, bytes drawn from a pool with NUL,
+    quote, backslash and newline, into BLOB, BIT(8), BIT(64) and text
+    columns — every statement stays on the fast path and decodes as the
+    exhaustive tokenizer does.  Then the cases that must fall back:
+    each is refused by the scan or raises in the read, and the group
+    still ends where the tokenizer ends (same rows, or DumpParseError)."""
+    import random
+
+    import pyarrow as pa
+    import pytest
+    from pyspark.sql import types as T
+
+    from mysqldump_to_parquet_spark.sources.mysqldump import (
+        DumpParseError,
+        _arrow_fast_types,
+        _arrow_read_values,
+        _parse_stmts_to_arrow,
+        _values_csv_bytes,
+        carrier_field,
+        coerce_row,
+        parse_create_table,
+        parse_insert_full,
+    )
+
+    rng = random.Random(11)
+    pool = [0x00, 0x27, 0x5C, 0x0A, 0x41, 0x30, 0x78, 0xFF, 0x80, 0x01]
+    quoted_pool = ["a", "0", "x", "é", "中", ",", "(", ")", "''", "\\'",
+                   "\\\\", "\\n", "\\0", "\\Z", " "]
+
+    def mk_hex(nbytes):
+        raw = bytes(
+            rng.choice(pool) if rng.random() < 0.7 else rng.randrange(256)
+            for _ in range(nbytes)
+        )
+        digits = raw.hex()
+        digits = digits.upper() if rng.random() < 0.5 else digits
+        return rng.choice(["0x{}", "X'{}'", "x'{}'"]).format(digits)
+
+    def mk_bits(nbits):
+        return rng.choice("bB") + "'" + "".join(
+            rng.choice("01") for _ in range(nbits)
+        ) + "'"
+
+    def payload():
+        r = rng.random()
+        if r < 0.35:
+            return mk_hex(rng.randint(0, 12))
+        if r < 0.5:
+            return mk_bits(rng.randint(0, 20))
+        if r < 0.6:
+            return "NULL"
+        if r < 0.65:
+            return "'0x41'"
+        return "'" + "".join(
+            rng.choice(quoted_pool) for _ in range(rng.randint(0, 8))
+        ) + "'"
+
+    def small():
+        return rng.choice(
+            [mk_hex(rng.randint(0, 7)), mk_bits(rng.randint(0, 63)),
+             str(rng.randrange(256)), "NULL"]
+        )
+
+    def big():
+        return rng.choice(
+            [mk_hex(rng.randint(0, 8)), mk_bits(rng.randint(0, 64)),
+             str(rng.randrange(2**64)), "NULL"]
+        )
+
+    schema = parse_create_table(
+        "CREATE TABLE `t` (`id` bigint, `payload` blob, `bits` bit(8),"
+        " `big` bit(64), `caption` varchar(20))"
+    ).schema
+
+    def tokenizer(stmt, schema=schema):
+        return [
+            dict(zip([f.name for f in schema.fields],
+                     coerce_row(tup, schema, "t")))
+            for tup in parse_insert_full(stmt)[2]
+        ]
+
+    def fast(stmt, schema=schema):
+        fb = _values_csv_bytes(stmt)
+        if fb is None:
+            return None
+        return _arrow_read_values(
+            fb[0], [f.name for f in schema.fields], _arrow_fast_types(schema)
+        )
+
+    def assert_falls_back(stmt, schema=schema):
+        try:
+            tbl = fast(stmt, schema)
+        except Exception:
+            tbl = None
+        assert tbl is None, stmt[:200]
+        carrier = T.StructType([carrier_field(f) for f in schema.fields])
+        try:
+            want = tokenizer(stmt, schema)
+        except DumpParseError:
+            with pytest.raises(DumpParseError):
+                list(_parse_stmts_to_arrow([stmt], "t", schema, carrier))
+            return
+        got = _parse_stmts_to_arrow([stmt], "t", schema, carrier)
+        assert pa.Table.from_batches(list(got)).to_pylist() == want
+
+    def row(i, caption="'c''1'"):
+        return f"({i},{payload()},{small()},{big()},{caption})"
+
+    for _ in range(200):
+        body = ",".join(row(i) for i in range(rng.randint(1, 8)))
+        stmt = f"INSERT INTO `t` VALUES {body};"
+        tbl = fast(stmt)
+        assert tbl is not None, stmt[:200]
+        assert tbl.to_pylist() == tokenizer(stmt), stmt[:200]
+
+    bad_fields = [
+        ("caption", lambda: mk_hex(rng.randint(0, 4))),  # hex into text
+        ("caption", lambda: mk_bits(rng.randint(0, 9))),  # bits into text
+        ("payload", lambda: "0x" + "a" * rng.choice([1, 3, 5])),  # odd
+        ("payload", lambda: rng.choice(["0x4G", "X'0g'", "b'012'"])),
+        ("bits", lambda: mk_hex(rng.randint(9, 12))),  # > 8 bytes
+        ("big", lambda: "0x" + "ab" * 9),
+        ("payload", lambda: "'raw\x02stand-in'"),
+        ("payload", lambda: "'raw\x03stand-in'"),
+    ]
+    for _ in range(60):
+        col, gen = rng.choice(bad_fields)
+        vals = {"payload": payload(), "bits": small(), "big": big(),
+                "caption": "'x'"}
+        vals[col] = gen()
+        bad = "(9,{payload},{bits},{big},{caption})".format(**vals)
+        assert_falls_back(f"INSERT INTO `t` VALUES {row(1)},{bad},{row(2)};")
+    # a stand-in token in a DOUBLE column: the read raises, and the
+    # tokenizer takes the statement (b'1' is 1.0 there, 0x41 raises)
+    double_schema = parse_create_table(
+        "CREATE TABLE `t` (`id` bigint, `d` double)"
+    ).schema
+    for lit in ("b'1'", "0x41", "X'41'"):
+        assert_falls_back(
+            f"INSERT INTO `t` VALUES (1,2.5),(2,{lit});", double_schema
+        )
+
+
 def test_glued_introducers_always_fall_back_and_parse(spark=None):
     """Randomized guard check (round-3 ADVICE, high): any statement with
     a charset introducer glued to a quoted literal must be REJECTED by
