@@ -42,7 +42,14 @@ def main(argv: list[str] | None = None) -> int:
         "temp file, then parsed with full parallelism: "
         "mysqldump db | %(prog)s - -o out/)",
     )
-    ap.add_argument("--output", "-o", required=True, help="output directory")
+    ap.add_argument(
+        "--output",
+        "-o",
+        required=True,
+        help="output directory; a URI with a scheme (s3a://…, file://…) "
+        "converts each table through Spark's own Parquet writer instead "
+        "of the one-pass task-side writers",
+    )
     ap.add_argument(
         "--compression",
         default="zstd:1",
@@ -61,15 +68,6 @@ def main(argv: list[str] | None = None) -> int:
         help="'auto' (default) falls back to whole-file statement reassembly "
         "for dumps whose INSERTs span lines (no --extended-insert); 'never' "
         "errors instead, enforcing the splittable one-line layout",
-    )
-    ap.add_argument(
-        "--strategy",
-        choices=("auto", "onepass", "per_table"),
-        default="auto",
-        help="'auto' (default) converts one-pass (single scan, task-side "
-        "parquet writers) when the output filesystem is driver-reachable; "
-        "'per_table' forces the classic per-table jobs (object stores, "
-        "or Spark's own committer semantics)",
     )
     ap.add_argument("--master", default=None, help="Spark master (default local[cores])")
     ap.add_argument(
@@ -156,7 +154,6 @@ def main(argv: list[str] | None = None) -> int:
             compression=args.compression,
             progress=True,
             multiline=args.multiline,
-            strategy=args.strategy,
         )
         print(json.dumps({"tables": counts, "output": args.output}))
         return 0

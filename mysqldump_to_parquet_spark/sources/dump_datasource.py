@@ -14,37 +14,32 @@ first —
 
 Scale design:
 
-* **Splittable reads.** ``partitions()`` carves plain ``.sql`` files into
-  byte ranges (default 32 MB); each task seeks to its range start, aligns
-  to the next line boundary, and parses only statements *starting* inside
-  its range — the same ownership rule Hadoop text splitting uses, so every
-  one-statement-per-line INSERT is parsed exactly once and a 100 GB dump
-  fans out across the cluster with zero driver involvement.  Compressed
-  members (.gz/.bz2/.xz/.zst) are not seekable → one partition per file
-  (same behavior as every Hadoop text source; the scale path is many
-  files), decoded Python-side by the converter's shared open helper.
-* **Schema from DDL, driver-side and bounded.** ``schema()`` scans the
-  dump head (``DDL_SCAN_BYTES`` cap, loud error past it) for the table's
-  CREATE TABLE and reuses :func:`..mysqldump.parse_create_table` — the
-  same grammar, bug fixes, and type mapping as the CLI path.
-* **Same coercion contract.** Rows go through
-  :func:`..mysqldump.parse_insert_full` / ``align_row`` / ``coerce_row``
-  (C1–C3: loud on mismatch, int→float widening, exact DECIMAL digits),
-  then temporal/decimal carriers become real Python values so the
-  returned DataFrame needs no further casting.
-
-The bulk-conversion CLI keeps the Arrow ``mapInPandas`` pipeline (it is
-faster for whole-dump conversion); this source is the right surface when
-a dump table joins live against the rest of the engine.
+* **Splittable reads, both layouts.** ``partitions()`` carves plain
+  ``.sql`` files into byte ranges (default 32 MB); each task reads the
+  statements its range owns through the converter's own statement source
+  (:func:`..mysqldump._range_statements`: a statement belongs to the
+  range it starts in — Hadoop's line ownership for one-line dumps — and
+  multi-line INSERTs reassemble across lines), so every statement is
+  parsed exactly once and a 100 GB dump fans out across the cluster with
+  zero driver involvement.  Compressed members (.gz/.bz2/.xz/.zst) are
+  not seekable → one partition per file (same behavior as every Hadoop
+  text source; the scale path is many files).
+* **Schema from DDL, driver-side and streamed.** ``schema()`` finds the
+  table's CREATE TABLE anywhere in the sorted files — INSERT lines are
+  skipped by a byte-prefix test, without decoding — and reuses
+  :func:`..mysqldump.parse_create_table`: the same grammar, bug fixes,
+  and type mapping as the CLI path.
+* **Same parse core.** Statements become final-typed Arrow batches in
+  :func:`..mysqldump.parse_statements`, the function the converter's
+  one-pass task and per-table fallback call: the Arrow-CSV fast path,
+  the exhaustive tokenizer, identical C1–C3 semantics (loud on mismatch,
+  int→float widening, exact DECIMAL digits).
 """
 
 from __future__ import annotations
 
 import glob as globlib
 import os
-from datetime import date, datetime, timezone
-from decimal import Decimal
-from typing import Iterator
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -56,167 +51,53 @@ from pyspark.sql.datasource import (
 )
 
 from .mysqldump import (
-    _INSERT_COLS_RE,
     COMPRESSED_DUMP_EXTS,
     DumpParseError,
-    _open_dump_text,
-    _arrow_fast_types,
-    _arrow_read_values,
+    _ddl_statements,
     _offsets_and_data,
-    _values_csv_bytes,
-    align_row,
-    coerce_row,
-    insert_table_name,
-    iter_statements,
+    _open_dump,
+    _range_statements,
+    _table_batches,
     parse_create_table,
-    parse_insert_full,
 )
-
-#: Schema scan reads at most this many bytes of each file's head looking
-#: for the CREATE TABLE (mysqldump emits all DDL before any data).
-DDL_SCAN_BYTES = 64 * 1024 * 1024
 
 #: Default byte-range size for splitting plain .sql files.
 DEFAULT_SPLIT_MB = 32
 
 
 class _Range(InputPartition):
-    """One byte range of one file.  ``end is None`` → to EOF (gz files)."""
+    """One byte range of one file.  ``end == -1`` → the whole file,
+    streamed (compressed members)."""
 
-    def __init__(self, path: str, start: int, end: int | None):
+    def __init__(self, path: str, start: int, end: int):
         self.path = path
         self.start = start
         self.end = end
 
 
-def _open_text(path: str):
-    # extension-dispatched decode (.gz/.bz2/.xz stdlib, .zst via the
-    # zstd CLI) shared with the convert paths — this datasource decodes
-    # members Python-side inside tasks, so it reads every extension the
-    # converter does, including the JVM-undecodable .xz
-    return _open_dump_text(path)
-
-
-def _iter_head_statements(path: str) -> Iterator[str]:
-    """Statements from the file head, capped at DDL_SCAN_BYTES."""
-    seen = 0
-    with _open_text(path) as fh:
-
-        def lines():
-            nonlocal seen
-            for ln in fh:
-                seen += len(ln)
-                if seen > DDL_SCAN_BYTES:
-                    raise DumpParseError(
-                        f"{path}: no CREATE TABLE within the first "
-                        f"{DDL_SCAN_BYTES} bytes — is this a mysqldump file?"
-                    )
-                yield ln
-
-        yield from iter_statements(lines())
-
-
-def _finalize_row(row: tuple, schema: T.StructType, table: str) -> tuple:
-    """Carrier strings → Python temporal/decimal values (the JVM cast
-    stage of the bulk pipeline, done here in-process)."""
-    out = []
-    for v, f in zip(row, schema.fields):
-        if v is None:
-            out.append(None)
-        elif isinstance(f.dataType, T.TimestampType):
-            try:
-                dt = datetime.fromisoformat(v)
-            except ValueError as e:
-                # same wording as the JVM cast guard (finish_casts) so the
-                # C1/C3 error contract reads identically on every path
-                raise DumpParseError(
-                    f"{table}: cannot cast {f.name} value '{v}' to timestamp"
-                ) from e
-            # dumps carry naive UTC (reference: parquet_writer.rs:186-191);
-            # attach the zone so the result is session-tz independent
-            out.append(dt.replace(tzinfo=timezone.utc))
-        elif isinstance(f.dataType, T.DateType):
-            try:
-                out.append(date.fromisoformat(v))
-            except ValueError as e:
-                raise DumpParseError(
-                    f"{table}: cannot cast {f.name} value '{v}' to date"
-                ) from e
-        elif isinstance(f.dataType, T.DecimalType):
-            out.append(Decimal(v))
-        else:
-            out.append(v)
-    return tuple(out)
-
-
-#: Rows accumulated per Arrow RecordBatch emitted by the reader.
-READER_BATCH_ROWS = 65536
-
-
-def _pa_schema(schema: T.StructType):
-    """PyArrow schema matching the Spark result schema (None when a field
-    has no Arrow mapping — then the reader falls back to tuple yields)."""
-    import pyarrow as pa
-
-    out = []
-    for f in schema.fields:
-        dt = f.dataType
-        if isinstance(dt, T.LongType):
-            t = pa.int64()
-        elif isinstance(dt, T.IntegerType):
-            t = pa.int32()
-        elif isinstance(dt, T.DoubleType):
-            t = pa.float64()
-        elif isinstance(dt, T.FloatType):
-            t = pa.float32()
-        elif isinstance(dt, T.BooleanType):
-            t = pa.bool_()
-        elif isinstance(dt, T.StringType):
-            t = pa.string()
-        elif isinstance(dt, T.TimestampType):
-            t = pa.timestamp("us", tz="UTC")  # dumps carry naive UTC
-        elif isinstance(dt, T.DateType):
-            t = pa.date32()
-        elif isinstance(dt, T.DecimalType):
-            t = pa.decimal128(dt.precision, dt.scale)
-        elif isinstance(dt, T.BinaryType):
-            t = pa.binary()
-        else:
-            return None
-        out.append(pa.field(f.name, t, nullable=True))
-    return pa.schema(out)
-
-
-def _carrier_to_target(tbl, schema: T.StructType, pa_schema):
-    """Cast the fast path's carrier columns (timestamps/dates/decimals as
-    strings) to the target Arrow types — C++ casts, no Python objects.
-    Raises on any unconvertible value (caller falls back to the exhaustive
-    path, which raises the proper contextual error)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    cols = []
-    for f, pf, col in zip(schema.fields, pa_schema, tbl.columns):
-        if isinstance(f.dataType, T.TimestampType):
-            c = pc.assume_timezone(pc.cast(col, pa.timestamp("us")), "UTC")
-        else:
-            c = pc.cast(col, pf.type)
-        cols.append(c)
-    return pa.Table.from_arrays(cols, schema=pa_schema)
+def _table_schema(paths: list[str], table: str) -> T.StructType:
+    """The first CREATE TABLE for ``table`` in ``paths``, streamed in
+    order: mysqldump writes each table's DDL just before its data, so it
+    can sit anywhere in the dump."""
+    for path in paths:
+        with _open_dump(path) as fh:
+            for stmt in _ddl_statements(fh):
+                if stmt.startswith("CREATE TABLE"):
+                    parsed = parse_create_table(stmt)
+                    if parsed.table == table:
+                        return parsed.schema
+    raise DumpParseError(
+        f"{paths[0]}: no CREATE TABLE for {table!r} found — pass the "
+        "table's schema with .schema(...) to read a dump without its DDL"
+    )
 
 
 class MysqldumpReader(DataSourceReader):
-    """Splittable dump reader emitting Arrow ``RecordBatch``es.
-
-    Statements eligible for the shared Arrow-CSV fast path (see
-    ``mysqldump._values_csv_bytes``) accumulate into one ``read_csv`` +
-    typed-cast call per ~{READER_BATCH_ROWS} rows — string→timestamp/
-    date/decimal casts run in Arrow C++ and the batch crosses into the
-    JVM without ever materializing per-row Python objects.  Statements
-    the fast path refuses (and any batch whose typed cast fails) re-parse
-    through the exhaustive tokenizer into the same Arrow schema, so
-    error semantics (C1–C3, loud with column context) are identical on
-    both paths."""
+    """Splittable dump reader emitting Arrow ``RecordBatch``es: each
+    range's statements for the table go through
+    :func:`..mysqldump.parse_statements` in groups, so a batch crosses
+    into the JVM without per-row Python objects unless a statement needs
+    the exhaustive tokenizer."""
 
     def __init__(self, schema: T.StructType, options: dict):
         self._schema = schema
@@ -230,7 +111,7 @@ class MysqldumpReader(DataSourceReader):
         parts: list[_Range] = []
         for p in self._paths:
             if p.endswith(COMPRESSED_DUMP_EXTS):
-                parts.append(_Range(p, 0, None))  # not seekable
+                parts.append(_Range(p, 0, -1))  # not seekable
                 continue
             size = os.path.getsize(p)
             step = max(self._split_bytes, 1)
@@ -239,129 +120,8 @@ class MysqldumpReader(DataSourceReader):
         return parts
 
     def read(self, part: _Range):
-        if part.end is None:  # gz: stream the whole file
-            with _open_text(part.path) as fh:
-                yield from self._batches(fh)
-            return
-
-        def lines():
-            with open(part.path, "rb") as fh:
-                if part.start > 0:
-                    # LineRecordReader convention: back up one byte and
-                    # consume through the next newline.  Only the tail of a
-                    # line that STRADDLES the boundary is discarded — if
-                    # byte start-1 is itself '\n', this consumes just that
-                    # newline and a line beginning exactly at part.start is
-                    # read by its owner.  (Seeking to start and discarding
-                    # a whole line would drop such a line from both ranges:
-                    # the previous range's strict tell() < end check
-                    # already excluded it.)
-                    fh.seek(part.start - 1)
-                    fh.readline()
-                else:
-                    fh.seek(0)
-                while fh.tell() < part.end:
-                    # a line is owned by the range containing its first
-                    # byte; the owner reads past its end to finish the line
-                    raw = fh.readline()
-                    if not raw:
-                        break
-                    yield raw.decode("utf-8", errors="replace")
-
-        yield from self._batches(lines())
-
-    def _slow_rows(self, stmt: str) -> list[dict]:
-        """One statement through the exhaustive tokenizer, finalized."""
-        schema, table = self._schema, self._table
-        names = [f.name for f in schema.fields]
-        _t, columns, rows = parse_insert_full(stmt)
-        out = []
-        for row in rows:
-            if columns is not None:
-                row = align_row(row, columns, schema, table)
-            out.append(
-                dict(
-                    zip(
-                        names,
-                        _finalize_row(
-                            coerce_row(row, schema, table), schema, table
-                        ),
-                    )
-                )
-            )
-        return out
-
-    def _batches(self, lines):
-        """Accumulate statements into Arrow RecordBatches (module
-        docstring); tuple-yield fallback only when the schema has no
-        Arrow mapping."""
-        import pyarrow as pa
-
-        schema, table = self._schema, self._table
-        pa_schema = _pa_schema(schema)
-        if pa_schema is None:  # unmappable type: legacy row-at-a-time path
-            for line in lines:
-                stmt = line.strip()
-                if insert_table_name(stmt) != table:
-                    continue
-                for d in self._slow_rows(stmt):
-                    yield tuple(d.values())
-            return
-        fast_types = _arrow_fast_types(schema)
-        chunks: list[bytes] = []
-        chunk_stmts: list[str] = []
-        n_fast = 0
-        slow: list[dict] = []
-
-        def flush_fast():
-            nonlocal chunks, chunk_stmts, n_fast
-            if not chunks:
-                return []
-            try:
-                tbl = _arrow_read_values(
-                    b"\n".join(chunks),
-                    [f.name for f in schema.fields],
-                    fast_types,
-                )
-                if tbl.num_rows != n_fast:
-                    raise DumpParseError("fast-path row-count drift")
-                out = _carrier_to_target(tbl, schema, pa_schema)
-            except Exception:
-                # typed-cast or structural surprise: the exhaustive path
-                # either parses correctly or raises the loud contextual
-                # error — identical semantics to the pre-Arrow reader
-                rows = [d for s in chunk_stmts for d in self._slow_rows(s)]
-                out = pa.Table.from_pylist(rows, schema=pa_schema)
-            chunks, chunk_stmts, n_fast = [], [], 0
-            return out.to_batches()
-
-        def flush_slow():
-            nonlocal slow
-            if not slow:
-                return []
-            out = pa.Table.from_pylist(slow, schema=pa_schema)
-            slow = []
-            return out.to_batches()
-
-        for line in lines:
-            stmt = line.strip()
-            if insert_table_name(stmt) != table:
-                continue
-            fb = None
-            if fast_types is not None and not _INSERT_COLS_RE.match(stmt):
-                fb = _values_csv_bytes(stmt)
-            if fb is not None:
-                chunks.append(fb[0])
-                chunk_stmts.append(stmt)
-                n_fast += fb[1]
-                if n_fast >= READER_BATCH_ROWS:
-                    yield from flush_fast()
-            else:
-                slow.extend(self._slow_rows(stmt))
-                if len(slow) >= READER_BATCH_ROWS:
-                    yield from flush_slow()
-        yield from flush_fast()
-        yield from flush_slow()
+        stmts = _range_statements(part.path, part.start, part.end)
+        yield from _table_batches(stmts, self._table, self._schema)
 
 
 # ------------------------------------------------------------ write path
@@ -471,7 +231,7 @@ def _lit_column(col, f: T.StructField, table: str):
 class MysqldumpWriter(DataSourceArrowWriter):
     """Per-task: one ``part-<uuid>.sql`` of extended INSERTs; on commit the
     driver writes ``00-schema.sql`` (DDL first lexicographically, so the
-    reader's head scan finds it).  Each task writes independently —
+    reader's schema scan finds it at once).  Each task writes independently —
     no driver fan-in of data, the layout every distributed sink needs.
 
     Arrow RecordBatches in, extended-INSERT text out.  Every literal is
@@ -560,14 +320,7 @@ class MysqldumpDataSource(DataSource):
     def schema(self) -> T.StructType:
         path = self._require("path")
         table = self._require("table").lower()
-        first = (sorted(globlib.glob(path)) or [path])[0]
-        for stmt in _iter_head_statements(first):
-            if not stmt.lstrip().upper().startswith("CREATE TABLE"):
-                continue
-            parsed = parse_create_table(stmt)
-            if parsed.table == table:
-                return parsed.schema
-        raise DumpParseError(f"{first}: no CREATE TABLE for {table!r} found")
+        return _table_schema(sorted(globlib.glob(path)) or [path], table)
 
     def reader(self, schema: T.StructType) -> MysqldumpReader:
         return MysqldumpReader(schema, dict(self.options))

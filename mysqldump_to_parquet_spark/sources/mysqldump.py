@@ -32,19 +32,26 @@ Execution model (replaces the reference's 3-thread pipeline, main.rs:88–108):
   the reference grammar.  This two-pass split also removes the reference's
   "CREATE TABLE must precede its INSERTs, no interleaving" restriction
   (README.md:13–17).
-* Per table, INSERT lines are filtered (predicate prunes at the scan),
-  tokenized in ``mapPartitions`` (pure Python, no driver involvement),
-  coerced to carrier types, and written as Parquet.  Gzip dumps are
-  unsplittable → one task per *file*; parallelism at scale comes from many
-  dump files, which is how mysqldump output ships in practice.
+* One parse core, :func:`parse_statements`, turns a table's INSERT
+  statements into final-typed Arrow.  Three thin front ends feed it the
+  same statement sources (JVM text lines for one-line dumps, byte-range
+  reassembly for multi-line dumps and compressed members): the one-pass
+  convert task (:func:`convert_dump_onepass`), the per-table fallback
+  into Spark's Parquet sink for output the driver cannot reach, and the
+  ``format("mysqldump")`` reader.  Gzip dumps are unsplittable → one
+  task per *file*; parallelism at scale comes from many dump files,
+  which is how mysqldump output ships in practice.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
+from datetime import date, datetime, timezone
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -215,13 +222,13 @@ class MultilineDumpError(DumpParseError):
 
 
 class OnepassStagingInvisible(RuntimeError):
-    """The one-pass strategy's staging probe failed: an executor wrote a
+    """The one-pass convert's staging probe failed: an executor wrote a
     marker file under the staging directory but the driver cannot see it
     — driver and executors do not share the output filesystem, so the
     task-side parquet writers could never be committed by the driver's
-    final move.  ``convert_dump(strategy='auto')`` catches this and falls
-    back to the per-table JVM writers; ``strategy='onepass'`` propagates
-    it (the caller asked for a layout the cluster cannot honour)."""
+    final move.  ``convert_dump`` catches this and falls back to the
+    per-table Spark writers; a direct :func:`convert_dump_onepass` call
+    propagates it."""
 
 
 def _split_top_level(body: str) -> list[str]:
@@ -534,13 +541,8 @@ def parse_insert_full(stmt: str) -> tuple[str, list[str] | None, list[tuple]]:
     i = vpos + len("VALUES")
     rows = _parse_values(s, i, table)
     if not rows:
-        # header-only lines happen when a dump spreads one INSERT over
-        # multiple lines — fail loudly rather than silently writing 0 rows
-        # (the one-statement-per-line contract is documented in the module).
-        raise DumpParseError(
-            f"INSERT for {table} has no VALUES tuples on its line — "
-            "multi-line INSERT statements are not supported"
-        )
+        # fail loudly rather than silently writing 0 rows
+        raise DumpParseError(f"INSERT for {table} has no VALUES tuples")
     return table, columns, rows
 
 
@@ -792,31 +794,6 @@ def _next_is_literal(s: str, i: int, n: int) -> bool:
 # '7' in a BIGINT column, '1.5' in a DOUBLE column, '1'/'TRUE' in a
 # BOOLEAN column, and a bare unquoted junk token in a StringType or
 # BinaryType column.
-
-_ARROW_SENTINEL = object()
-
-
-def _carrier_pa_type(dt: T.DataType):
-    """Arrow type of one CARRIER column (see :func:`carrier_field` — the
-    carrier StructType has already rewritten temporal/decimal to string)."""
-    import pyarrow as pa
-
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.FloatType):
-        return pa.float32()
-    if isinstance(dt, T.BooleanType):
-        return pa.bool_()
-    if isinstance(dt, T.BinaryType):
-        return pa.binary()
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    raise DumpParseError(f"no carrier Arrow type for {dt.simpleString()}")
-
 
 _FAST_PATH_TYPES = (
     T.LongType, T.DoubleType, T.BooleanType, T.BinaryType,
@@ -1345,18 +1322,12 @@ def align_row(
 # --------------------------------------------------------------------------
 
 
-def carrier_field(f: T.StructField) -> T.StructField:
-    """Executor-side carrier type for a target field: temporal/decimal ride
-    as strings and are cast JVM-side (C1); the rest carry their own type."""
-    if isinstance(f.dataType, (T.TimestampType, T.DateType, T.DecimalType)):
-        return T.StructField(f.name, T.StringType(), True)
-    return T.StructField(f.name, f.dataType, True)
-
-
 def coerce_row(row: tuple, target: T.StructType, table: str) -> tuple:
     """Python-side value coercion mirroring the reference's write-time rules:
     Integer→Float widening (C2, parquet_writer.rs:162), everything else must
-    already match (C3 — mismatch raises with column context)."""
+    already match (C3 — mismatch raises with column context).  Temporal
+    and decimal values come out as their dump text; :func:`parse_statements`
+    converts them (C1)."""
     if len(row) != len(target.fields):
         raise DumpParseError(
             f"{table}: row has {len(row)} values, schema has {len(target.fields)}"
@@ -1396,9 +1367,9 @@ def coerce_row(row: tuple, target: T.StructType, table: str) -> tuple:
         elif isinstance(
             f.dataType, (T.TimestampType, T.DateType, T.DecimalType)
         ):
-            # ride as string; JVM-side casts finish C1.  FloatLit keeps the
-            # dump's exact digits — repr(float) would truncate DECIMALs
-            # beyond ~17 significant digits.
+            # ride as string until parse_statements finishes C1.  FloatLit
+            # keeps the dump's exact digits — repr(float) would truncate
+            # DECIMALs beyond ~17 significant digits.
             if isinstance(v, FloatLit):
                 v = v.raw
             elif isinstance(v, (bytes, bytearray)) and isinstance(
@@ -1450,40 +1421,151 @@ def coerce_row(row: tuple, target: T.StructType, table: str) -> tuple:
     return tuple(out)
 
 
-def finish_casts(df: DataFrame, target: T.StructType) -> DataFrame:
-    """JVM-side schema-directed casts from carrier columns to target types.
+def _arrow_type(dt: T.DataType):
+    """Arrow type of one target column — the types :func:`parse_create_table`
+    produces; any other Spark type raises."""
+    import pyarrow as pa
 
-    Timestamps use the reference's 'YYYY-mm-DD HH:mm:ss' layout (optional
-    fractional seconds — datetime(6) columns) under the UTC session zone
-    (C1, parquet_writer.rs:167–197).  A non-NULL value that fails its cast
-    raises with column context, preserving the reference's C3
-    mismatch-is-an-error contract (try_* alone would silently NULL it).
-    """
-    cols = []
-    for f in target.fields:
-        if isinstance(f.dataType, T.TimestampType):
-            cast = F.expr(
-                f"try_to_timestamp(`{f.name}`, 'yyyy-MM-dd HH:mm:ss[.SSSSSS]')"
-            )
-        elif isinstance(f.dataType, T.DateType):
-            cast = F.expr(f"try_cast(`{f.name}` AS date)")
-        elif isinstance(f.dataType, T.DecimalType):
-            cast = F.expr(f"try_cast(`{f.name}` AS {f.dataType.simpleString()})")
-        else:
-            cols.append(F.col(f.name).alias(f.name))
+    if isinstance(dt, T.DecimalType):
+        return pa.decimal128(dt.precision, dt.scale)
+    simple = {
+        T.LongType: pa.int64(),
+        T.DoubleType: pa.float64(),
+        T.BooleanType: pa.bool_(),
+        T.StringType: pa.string(),
+        T.BinaryType: pa.binary(),
+        T.DateType: pa.date32(),
+        T.TimestampType: pa.timestamp("us", tz="UTC"),  # dumps carry naive UTC
+    }
+    if type(dt) not in simple:
+        raise DumpParseError(f"no Arrow type for a {dt.simpleString()} column")
+    return simple[type(dt)]
+
+
+def parse_statements(stmts: list[str], table: str, schema: T.StructType):
+    """INSERT statements of ``table`` → one pyarrow Table in ``schema``'s
+    final types.  This is the only place dump text becomes typed Arrow:
+    the one-pass convert task, the per-table fallback and the DataSource
+    reader all call it (through :func:`_statement_groups`).
+
+    Fast-path-eligible statements append their CSV rows to ONE
+    ``bytearray`` payload, read by a single Arrow-CSV call into carrier
+    columns (temporal/decimal as strings) that Arrow C++ casts to the
+    target types — no per-row Python objects.  The other statements, and
+    every statement of the fast group when its read or a cast fails, go
+    through the exhaustive tokenizer, which parses them correctly or
+    raises the contextual :class:`DumpParseError` — identical C1–C3
+    semantics on both paths.  Only references to the statements are held
+    until the read."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    target = pa.schema(
+        [pa.field(f.name, _arrow_type(f.dataType)) for f in schema.fields]
+    )
+    names = schema.names
+    fast: list[str] = []
+    slow: list[str] = []
+    payload = bytearray()
+    fast_rows = 0
+    for stmt in stmts:
+        stmt = stmt.strip()  # the same object unless it has edge whitespace
+        fb = None if _INSERT_COLS_RE.match(stmt) else _values_csv_bytes(stmt)
+        if fb is None:
+            slow.append(stmt)
             continue
-        guarded = F.when(
-            F.col(f.name).isNotNull() & cast.isNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit(f"cannot cast {f.name} value '"),
-                    F.col(f.name),
-                    F.lit(f"' to {f.dataType.simpleString()}"),
-                )
-            ),
-        ).otherwise(cast)
-        cols.append(guarded.alias(f.name))
-    return df.select(*cols)
+        if fast:
+            payload += b"\n"
+        payload += fb[0]
+        fast.append(stmt)
+        fast_rows += fb[1]
+    parts = []
+    if fast:
+        try:
+            tbl = _arrow_read_values(payload, names, _arrow_fast_types(schema))
+            if tbl.num_rows != fast_rows:
+                raise DumpParseError("fast-path row-count drift")
+            cols = [
+                pc.assume_timezone(pc.cast(col, pa.timestamp("us")), "UTC")
+                if isinstance(f.dataType, T.TimestampType)
+                else pc.cast(col, pf.type)
+                for f, pf, col in zip(schema.fields, target, tbl.columns)
+            ]
+            parts.append(pa.Table.from_arrays(cols, schema=target))
+        except Exception:
+            # any read or cast surprise: re-parse those statements
+            # through the exhaustive grammar
+            slow = fast + slow
+    del payload  # free it before the tokenizer runs
+
+    def final(v, f: T.StructField):
+        """Dump text of a temporal/decimal value → its Python value (C1)."""
+        dt = f.dataType
+        if v is None or not isinstance(
+            dt, (T.TimestampType, T.DateType, T.DecimalType)
+        ):
+            return v
+        try:
+            if isinstance(dt, T.TimestampType):
+                # naive UTC, as the reference reads it (parquet_writer.rs:
+                # 186–191): the zone makes the value session-tz independent
+                return datetime.fromisoformat(v).replace(tzinfo=timezone.utc)
+            if isinstance(dt, T.DateType):
+                return date.fromisoformat(v)
+            return Decimal(v)
+        except (ValueError, ArithmeticError) as e:
+            raise DumpParseError(
+                f"{table}: cannot cast {f.name} value '{v}' to "
+                f"{dt.simpleString()}"
+            ) from e
+
+    rows = []
+    for stmt in slow:
+        _t, cols, tuples = parse_insert_full(stmt.rstrip(";") + ";")
+        for tup in tuples:
+            if cols is not None:  # --complete-insert dumps
+                tup = align_row(tup, cols, schema, table)
+            coerced = coerce_row(tup, schema, table)
+            rows.append(
+                {f.name: final(v, f) for v, f in zip(coerced, schema.fields)}
+            )
+    if rows:
+        parts.append(pa.Table.from_pylist(rows, schema=target))
+    return pa.concat_tables(parts) if parts else target.empty_table()
+
+
+#: Statement text buffered per table before one :func:`parse_statements`
+#: call (one Arrow-CSV read; one parquet row group or reader batch), in
+#: every front end.
+_PARSE_FLUSH_BYTES = 32 * 1024 * 1024
+
+
+def _statement_groups(
+    stmts: Iterable[str], tables
+) -> Iterator[tuple[str, list[str]]]:
+    """Route INSERT statements by table name: ``(table, statements)``
+    groups of at least _PARSE_FLUSH_BYTES, then each table's remainder.
+    Statements of no table in ``tables`` — DDL, and orphan INSERTs with
+    no CREATE TABLE (W3 parity) — are dropped."""
+    bufs: dict[str, list] = {}
+    for stmt in stmts:
+        table = insert_table_name(stmt)
+        if table not in tables:
+            continue
+        buf = bufs.setdefault(table, [[], 0])
+        buf[0].append(stmt)
+        buf[1] += len(stmt)
+        if buf[1] >= _PARSE_FLUSH_BYTES:
+            yield table, bufs.pop(table)[0]
+    for table, (group, _size) in bufs.items():
+        yield table, group
+
+
+def _table_batches(stmts: Iterable[str], table: str, schema: T.StructType):
+    """One table's final-typed Arrow batches out of a statement stream —
+    the body of the DataSource reader and of the per-table fallback."""
+    for _t, group in _statement_groups(stmts, (table,)):
+        yield from parse_statements(group, table, schema).to_batches()
 
 
 #: Upper bound on non-INSERT lines collected to the driver in pass 1 —
@@ -1492,12 +1574,27 @@ def finish_casts(df: DataFrame, target: T.StructType) -> DataFrame:
 MAX_DDL_LINES = 2_000_000
 
 
-#: DDL-pass scan granularity.  ``convert_dump`` scopes the session's
-#: ``maxPartitionBytes`` to PARSE_TASK_BYTES (2 MB) for the *parse*
-#: stages, but the DDL probe is a pure JVM predicate scan whose per-task
-#: cost is dominated by scheduling: at 16 GB, 2 MB splits = 8k tasks =
-#: 6.8 s where 128 MB splits = 129 tasks = 0.7 s (measured, idle host).
+#: DDL-pass scan granularity.  The DDL probe is a pure JVM predicate
+#: scan whose per-task cost is dominated by scheduling: at 16 GB, 2 MB
+#: splits = 8k tasks = 6.8 s where 128 MB splits = 129 tasks = 0.7 s
+#: (measured, idle host).
 _DDL_SCAN_SPLIT_BYTES = 128 * 1024 * 1024
+
+_SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
+_ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@contextlib.contextmanager
+def _session_conf(spark: SparkSession, key: str, value) -> Iterator[None]:
+    """Set a session conf for the block and restore it afterwards, on the
+    error path too; ``value=None`` leaves the conf as it is."""
+    prev = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def collect_schemas(
@@ -1528,11 +1625,7 @@ def collect_schemas(
     Arrow statement-crossing batches downstream — the aggregate rides the
     layout scan for free."""
     _require_jvm_text_decodable(dump_path, spark)
-    prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes", str(_DDL_SCAN_SPLIT_BYTES)
-    )
-    try:
+    with _session_conf(spark, _SPLIT_CONF, _DDL_SCAN_SPLIT_BYTES):
         lines_df = spark.read.text(dump_path)
         is_insert = _dml_line_pred()
         terminated = F.rtrim(F.col("value")).endswith(";")
@@ -1576,8 +1669,6 @@ def collect_schemas(
         # safe to collect whole (partition order — same ordering contract
         # the CollectLimit path had)
         ddl_lines = [r[0] for r in lines_df.where(is_ddl).collect()]
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
     schemas = build_schemas(iter_statements(ddl_lines))
     _require_tables(schemas, dump_path)
     if return_stats:
@@ -1632,17 +1723,10 @@ def build_schemas(stmts: Iterable[str]) -> dict[str, T.StructType]:
 # --------------------------------------------------------------------------
 
 
-#: Byte-range size for splitting a plain multi-line .sql file across
-#: reassembly tasks.  Small enough that a single 68 MB file fans out
-#: across the cores (~17 ranges); single-table dumps then parse on the
-#: same partitions shuffle-free, and multi-table parse stages are sized
-#: separately by :func:`parse_partition_counts`.
+#: Byte-range size for splitting a plain multi-line .sql file across the
+#: DDL pass's tasks (:func:`collect_schemas_multiline`).  Small enough
+#: that a single 68 MB file fans out across the cores (~17 ranges).
 MULTILINE_SPLIT_BYTES = 4 * 1024 * 1024
-
-#: Statement-batch flush threshold inside a reassembly task (bounds task
-#: memory when streaming an unsplittable .gz member).
-_STMT_FLUSH_BYTES = 32 * 1024 * 1024
-
 
 
 def _is_terminator_line(raw: bytes) -> bool:
@@ -1662,77 +1746,74 @@ def _iter_range_statements(path: str, start: int, end: int) -> Iterator[str]:
     """Reassembled statements owned by byte range ``[start, end)`` of a
     plain-text dump file.
 
-    Ownership rule (the multi-line analogue of Hadoop's line ownership,
-    which ``dump_datasource.MysqldumpReader`` uses for the one-line
-    layout): define A(x) = the end offset of the first terminator line
-    whose first byte is ≥ the newline-aligned position of x (A(0) = 0).
-    Range [start, end) owns exactly the lines in (A(start), A(end)] —
-    region boundaries are statement-terminator line ends, so every
-    statement's lines fall in exactly one region, each region reads at
-    most one statement past its nominal end, and concatenating regions
-    in offset order reproduces the sequential single-stream reassembly
-    byte for byte.
+    Ownership rule — Hadoop's line ownership, carried from lines to
+    statements: a statement starts where the previous statement's
+    terminator line ends (the first one at offset 0), and a range owns
+    exactly the statements that start in [N(start), N(end)), where N(x)
+    is the newline-aligned position of x (x itself when x = 0 or byte
+    x-1 is a newline, else just past the next newline).  So every
+    statement is owned by exactly one range, each range reads at most
+    one statement past its nominal end, and concatenating the ranges in
+    offset order reproduces the sequential single-stream reassembly.  In
+    a one-line dump every line is a statement, and the rule is exactly
+    LineRecordReader's split contract.
 
-    The range body is read in ONE ``fh.read`` and line-split in C (a
-    per-line ``readline`` loop measured ~4× slower — it held the whole
-    68 MB single-file bench ~1 s behind the one-line layout); only the
-    handful of lines past ``end`` stream via ``readline``."""
-    lines = _range_owned_lines(path, start, end)
-    if not lines:
-        return
-    text = b"\n".join(lines).decode("utf-8", errors="replace")
-    yield from iter_statements(text.split("\n"))
+    Lines stream and decode one at a time, so memory holds one line:
+    ``\\n`` is never part of a UTF-8 sequence, so the text equals a
+    whole-range decode."""
+    return iter_statements(
+        ln.decode("utf-8", errors="replace")
+        for ln in _range_owned_lines(path, start, end)
+    )
 
 
-def _range_owned_lines(path: str, start: int, end: int) -> list[bytes]:
-    """The raw line set owned by byte range ``[start, end)`` under the
-    ownership rule of :func:`_iter_range_statements`."""
+def _line_ending_at(fh, a: int) -> bytes:
+    """The line whose newline is byte ``a - 1`` of ``fh``, read backward
+    in 64 KiB steps (newline stripped)."""
+    parts: list[bytes] = []
+    pos = a - 1
+    while pos > 0:
+        lo = max(0, pos - 65536)
+        fh.seek(lo)
+        chunk = fh.read(pos - lo)
+        nl = chunk.rfind(b"\n")
+        parts.append(chunk[nl + 1 :])
+        if nl >= 0:
+            break
+        pos = lo
+    return b"".join(reversed(parts))
+
+
+def _range_owned_lines(path: str, start: int, end: int) -> Iterator[bytes]:
+    """The raw lines of the statements owned by byte range ``[start,
+    end)`` under the rule of :func:`_iter_range_statements`, streamed:
+    memory holds one line at a time."""
     with open(path, "rb") as fh:
-        a = 0
+        pos = 0
         if start > 0:
             # newline-align (LineRecordReader convention: back up one
             # byte so a line starting exactly at `start` is kept)
             fh.seek(start - 1)
             fh.readline()
-            a = fh.tell()
-        body = fh.read(end - a) if a < end else b""
-        if body and not body.endswith(b"\n"):
-            # complete the line straddling `end`: it starts before `end`,
-            # so it is never a boundary-stop candidate (the next range's
-            # alignment consumes it) — no terminator check here
-            body += fh.readline()
-        # forward scan: every further line starts ≥ end; consume through
-        # the first terminator (A(end)), the next range's boundary
-        tail: list[bytes] = []
-        while True:
-            raw = fh.readline()
-            if not raw:
-                break
-            tail.append(raw)
-            if _is_terminator_line(raw):
-                break
-    lines = body.split(b"\n")
-    if lines and lines[-1] == b"":
-        lines.pop()
-    lines.extend(ln.rstrip(b"\n") for ln in tail)
-    if start > 0:
-        # discard through the first terminator line — it ends a statement
-        # the PREVIOUS range owns and reads forward to finish.  If that
-        # boundary terminator already starts at/after `end`, the region
-        # (A(start), A(end)] is empty (range smaller than one statement).
-        off = a
-        keep = None
-        for i, ln in enumerate(lines):
-            if _is_terminator_line(ln):
-                if off >= end:
-                    return []
-                keep = i + 1
-                break
-            off += len(ln) + 1
-        if keep is None:
-            return []  # no terminator at/after start: own nothing
-        lines = lines[keep:]
-    return lines
+            pos = fh.tell()
+        if pos >= end:
+            return  # no line starts in the range: it owns nothing
+        # N(start) starts a statement iff the line before it ends one;
+        # otherwise the lines through the next terminator finish a
+        # statement the previous range owns
+        owning = pos == 0 or _is_terminator_line(_line_ending_at(fh, pos))
+        fh.seek(pos)
+        for raw in fh:
+            pos += len(raw)
+            if owning:
+                yield raw
+            # only lines ending at/after N(end), or ones being skipped,
+            # need classifying: a terminator there ends the last
+            # statement owned (or shows that none starts in the range)
+            if (pos >= end or not owning) and _is_terminator_line(raw):
+                if pos >= end:
+                    return
+                owning = True
 
 
 #: Compressed dump-member extensions (reference parity is .gz only,
@@ -1752,8 +1833,8 @@ COMPRESSED_DUMP_EXTS = (".gz", ".bz2", ".xz", ".zst")
 JVM_TEXT_DECODABLE_EXTS = (".gz", ".bz2", ".zst")
 
 
-class _ZstdTextStream:
-    """Streamed text over ``zstd -dc`` (context manager + line iterator).
+class _ZstdStream:
+    """Streamed bytes over ``zstd -dc`` (context manager + line iterator).
 
     There is no zstd module in the Python stdlib (3.11) and executors
     cannot call into the JVM, so Python-side member decode shells out to
@@ -1764,7 +1845,6 @@ class _ZstdTextStream:
     close (SIGPIPE) is not an input error."""
 
     def __init__(self, path: str):
-        import io
         import shutil
         import subprocess
 
@@ -1781,14 +1861,10 @@ class _ZstdTextStream:
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
         )
-        self._text = io.TextIOWrapper(
-            self._proc.stdout, encoding="utf-8", errors="replace"
-        )
         self._drained = False
 
     def __iter__(self):
-        for line in self._text:
-            yield line
+        yield from self._proc.stdout
         self._drained = True
 
     def __enter__(self):
@@ -1799,7 +1875,7 @@ class _ZstdTextStream:
         return False
 
     def close(self):
-        self._text.close()
+        self._proc.stdout.close()
         err = self._proc.stderr.read() if self._proc.stderr else b""
         if self._proc.stderr:
             self._proc.stderr.close()
@@ -1811,26 +1887,26 @@ class _ZstdTextStream:
             )
 
 
-def _open_dump_text(path: str):
-    """Streamed text handle for a possibly-compressed dump member —
+def _open_dump(path: str):
+    """Streamed binary handle for a possibly-compressed dump member —
     extension-dispatched, stdlib codecs where they exist (.gz/.bz2/.xz),
-    the zstd CLI for .zst.  Memory stays bounded by one line."""
-    kw = dict(encoding="utf-8", errors="replace")
+    the zstd CLI for .zst.  Iterating it yields raw lines, so memory
+    stays bounded by one line."""
     if path.endswith(".gz"):
         import gzip
 
-        return gzip.open(path, "rt", **kw)
+        return gzip.open(path, "rb")
     if path.endswith(".bz2"):
         import bz2
 
-        return bz2.open(path, "rt", **kw)
+        return bz2.open(path, "rb")
     if path.endswith(".xz"):
         import lzma
 
-        return lzma.open(path, "rt", **kw)
+        return lzma.open(path, "rb")
     if path.endswith(".zst"):
-        return _ZstdTextStream(path)
-    return open(path, "r", **kw)
+        return _ZstdStream(path)
+    return open(path, "rb")
 
 
 def _iter_member_statements(path: str) -> Iterator[str]:
@@ -1838,8 +1914,10 @@ def _iter_member_statements(path: str) -> Iterator[str]:
     line-by-line (no whole-file string: memory is bounded by one
     statement, not one file — arbitrarily large members are fine, just
     single-task)."""
-    with _open_dump_text(path) as fh:
-        yield from iter_statements(fh)
+    with _open_dump(path) as fh:
+        yield from iter_statements(
+            ln.decode("utf-8", errors="replace") for ln in fh
+        )
 
 
 def _require_jvm_text_decodable(
@@ -1921,22 +1999,28 @@ def _multiline_ranges(
     spark: SparkSession, dump_path: str, split_bytes: int | None = None
 ) -> list[tuple[str, int, int]]:
     """(path, start, end) reassembly ranges for a multi-line dump; end=-1
-    marks an unsplittable compressed member streamed whole."""
-    step = split_bytes or MULTILINE_SPLIT_BYTES
-    files = (
-        spark.read.format("binaryFile")
+    marks an unsplittable compressed member streamed whole.  Without
+    ``split_bytes`` the range size fills ~2 waves of cores but stays
+    within [8 MiB, _ONEPASS_SPLIT_BYTES], large enough for healthy
+    per-table row groups."""
+    files = [
+        (_local_path(r.path), int(r.length))
+        for r in spark.read.format("binaryFile")
         .load(dump_path)
         .select("path", "length")  # file status only; content column is
         .collect()                 # never materialized
-    )
+    ]
+    if split_bytes is None:
+        total = sum(n for p, n in files if not p.endswith(COMPRESSED_DUMP_EXTS))
+        waves = 2 * spark.sparkContext.defaultParallelism
+        split_bytes = min(_ONEPASS_SPLIT_BYTES, max(8 * 1024 * 1024, total // waves))
     ranges: list[tuple[str, int, int]] = []
-    for r in files:
-        p = _local_path(r.path)
+    for p, n in files:
         if p.endswith(COMPRESSED_DUMP_EXTS):
             ranges.append((p, 0, -1))  # -1 → stream whole member
         else:
-            for off in range(0, max(int(r.length), 1), step):
-                ranges.append((p, off, min(off + step, int(r.length))))
+            for off in range(0, max(n, 1), split_bytes):
+                ranges.append((p, off, min(off + split_bytes, n)))
     if not ranges:
         raise DumpParseError(f"{dump_path}: no dump files found")
     return ranges
@@ -1949,26 +2033,18 @@ def _range_statements(path: str, lo: int, hi: int) -> Iterator[str]:
     return _iter_range_statements(path, lo, hi)
 
 
-def _range_ddl_statements(path: str, lo: int, hi: int) -> Iterator[str]:
-    """CREATE TABLE / USE statements owned by one range, skipping INSERT
-    bodies at the bytes level (no decode, no join): a multi-line dump's
-    bytes are overwhelmingly tuple-continuation lines, and pass 1 only
-    needs the DDL.  Candidate statements are re-assembled through the
-    SAME grammar (:func:`iter_statements`) so cleanup/noise semantics
-    cannot drift; overcollection (e.g. a ``USES...`` statement) is
-    filtered there, and undercollection is impossible because every
-    statement start is prefix-tested."""
-    if hi < 0:
-        yield from (
-            s
-            for s in _iter_member_statements(path)
-            if not s.startswith(DML_PREFIXES)
-        )
-        return
+def _ddl_statements(lines: Iterable[bytes]) -> Iterator[str]:
+    """CREATE TABLE / USE statements out of raw dump lines, skipping
+    INSERT bodies at the bytes level (no decode, no join): a dump's bytes
+    are overwhelmingly INSERT text, and the DDL scans need only the DDL.
+    Candidate statements are re-assembled through the SAME grammar
+    (:func:`iter_statements`) so cleanup/noise semantics cannot drift;
+    overcollection (e.g. a ``USES...`` statement) is filtered there, and
+    undercollection is impossible because every statement start is
+    prefix-tested.  Streams: one candidate statement is held at a time."""
     buf: list[bytes] = []
-    in_stmt = False
-    collecting = False
-    for ln in _range_owned_lines(path, lo, hi):
+    in_stmt = collecting = False
+    for ln in lines:
         s = ln.strip()
         if (
             not s
@@ -1983,14 +2059,23 @@ def _range_ddl_statements(path: str, lo: int, hi: int) -> Iterator[str]:
             buf.append(ln)
         if s.endswith(b";"):
             in_stmt = False
-            collecting = False
-    if buf:
-        text = b"\n".join(buf).decode("utf-8", errors="replace")
-        yield from (
-            s
-            for s in iter_statements(text.split("\n"))
-            if not s.startswith(DML_PREFIXES)
-        )
+            if buf:
+                text = (b.decode("utf-8", errors="replace") for b in buf)
+                yield from (
+                    st
+                    for st in iter_statements(text)
+                    if not st.startswith(DML_PREFIXES)
+                )
+                buf = []
+
+
+def _range_ddl_statements(path: str, lo: int, hi: int) -> Iterator[str]:
+    """CREATE TABLE / USE statements owned by one reassembly range."""
+    if hi < 0:
+        with _open_dump(path) as fh:
+            yield from _ddl_statements(fh)
+        return
+    yield from _ddl_statements(_range_owned_lines(path, lo, hi))
 
 
 def _ranges_df(spark: SparkSession, ranges) -> DataFrame:
@@ -2006,64 +2091,14 @@ def _ranges_df(spark: SparkSession, ranges) -> DataFrame:
     )
 
 
-def multiline_stmts_df(
-    spark: SparkSession, dump_path: str, split_bytes: int | None = None
-) -> DataFrame:
-    """One-statement-per-row DataFrame (column ``value``) for a dump
-    whose INSERT statements span lines (no ``--extended-insert``).
-
-    Plain ``.sql`` files are carved into ``MULTILINE_SPLIT_BYTES`` ranges
-    and reassembled in parallel under the ownership rule of
-    :func:`_iter_range_statements` — a 68 MB single file fans out across
-    the cores instead of occupying one task (the round-4 wholetext path's
-    ceiling, 9.1 MB/s).  ``.gz`` members are not seekable → one task per
-    member.  The result feeds the SAME downstream machinery as the
-    one-line layout (:func:`insert_rows_df` with ``lines_df=``): JVM-side
-    per-table prefix filter, byte-share parse sizing, Arrow-CSV fast
-    path."""
-    import pandas as pd
-
-    ranges = _multiline_ranges(spark, dump_path, split_bytes)
-
-    def reassemble(batches):
-        for pdf in batches:
-            for path, lo, hi in pdf.itertuples(index=False):
-                it = _range_statements(path, int(lo), int(hi))
-                out: list[str] = []
-                size = 0
-                for stmt in it:
-                    out.append(stmt)
-                    size += len(stmt)
-                    if size >= _STMT_FLUSH_BYTES:
-                        yield pd.DataFrame(
-                            {"value": pd.Series(out, dtype="object")}
-                        )
-                        out, size = [], 0
-                if out:
-                    yield pd.DataFrame(
-                        {"value": pd.Series(out, dtype="object")}
-                    )
-
-    return _ranges_df(spark, ranges).mapInPandas(reassemble, "value string")
-
-
 def collect_schemas_multiline(
-    spark: SparkSession, dump_path: str, stmts_df: DataFrame | None = None
+    spark: SparkSession, dump_path: str
 ) -> dict[str, T.StructType]:
-    """Pass 1 for multi-line dumps: parallel range reassembly, then the
-    (tiny) CREATE TABLE / USE statement set collected to the driver.
-    Pass the persisted ``stmts_df`` to share one reassembly with the
-    per-table parse passes; without one, a map-only DDL scan filters
-    Python-side so INSERT text never crosses to the JVM."""
+    """Pass 1 for multi-line dumps: a map-only parallel DDL scan over the
+    reassembly ranges that filters Python-side, so INSERT text never
+    crosses to the JVM; the (tiny) CREATE TABLE / USE statement set is
+    collected to the driver."""
     import pandas as pd
-
-    if stmts_df is not None:
-        # iter_statements yields only CREATE TABLE / DML / USE, so the
-        # non-DML remainder is exactly the DDL+context set.
-        stmts = [r.value for r in stmts_df.where(~_dml_line_pred()).collect()]
-        schemas = build_schemas(stmts)
-        _require_tables(schemas, dump_path)
-        return schemas
 
     def ddl_only(batches):
         for pdf in batches:
@@ -2072,71 +2107,13 @@ def collect_schemas_multiline(
                 out.extend(_range_ddl_statements(path, int(lo), int(hi)))
             yield pd.DataFrame({"value": pd.Series(out, dtype="object")})
 
-    rdf = _ranges_df(spark, _multiline_ranges(spark, dump_path))
+    ranges = _multiline_ranges(spark, dump_path, MULTILINE_SPLIT_BYTES)
+    rdf = _ranges_df(spark, ranges)
     stmts = [r.value for r in rdf.mapInPandas(ddl_only, "value string").collect()]
     schemas = build_schemas(stmts)
     _require_tables(schemas, dump_path)
     return schemas
 
-
-def insert_rows_df_multiline_fused(
-    spark: SparkSession,
-    dump_path: str,
-    table: str,
-    schema: T.StructType,
-    split_bytes: int | None = None,
-) -> DataFrame:
-    """Pass 2 for a multi-line dump table: range reassembly and
-    statement parse fused into one ``mapInArrow`` stage.
-
-    The statements-DataFrame route (``multiline_stmts_df`` →
-    :func:`insert_rows_df`) crosses the full statement text
-    Python→JVM→Python around the persisted cache — measured ~1.3 s of a
-    3.5 s wall on the 68 MB single-file bench.  Fusing keeps the text
-    inside one Python worker per range; only parsed CARRIER batches
-    cross, exactly like the one-line layout's scan→parse stage.  For
-    multi-table dumps each table's job re-reads the raw ranges
-    (Python-side skip of foreign statements is cheap relative to the
-    cache's Arrow crossing: 2× end-to-end at 68 MB/8–32 tables); the
-    shared statements cache takes over once ``tables × corpus`` exceeds
-    MULTILINE_FUSED_SCAN_BUDGET — see ``convert_dump``."""
-    carrier = T.StructType([carrier_field(f) for f in schema.fields])
-    ranges = _multiline_ranges(spark, dump_path, split_bytes)
-
-    def fused(arrow_batches):
-        def grouped(it):
-            # flush in bounded statement groups: a plain range is ~one
-            # group; an unsplittable .gz member streams without ever
-            # holding its whole decompressed text
-            buf: list[str] = []
-            size = 0
-            for s in it:
-                buf.append(s)
-                size += len(s)
-                if size >= _STMT_FLUSH_BYTES:
-                    yield buf
-                    buf, size = [], 0
-            if buf:
-                yield buf
-
-        for batch in arrow_batches:
-            for i in range(batch.num_rows):
-                path = batch.column(0)[i].as_py()
-                lo = batch.column(1)[i].as_py()
-                hi = batch.column(2)[i].as_py()
-                for group in grouped(_range_statements(path, lo, hi)):
-                    yield from _parse_stmts_to_arrow(
-                        group, table, schema, carrier
-                    )
-
-    raw = _ranges_df(spark, ranges).mapInArrow(fused, carrier)
-    return finish_casts(raw, schema)
-
-
-#: Parse-stage task granularity: ~2 MB of INSERT text per task keeps the
-#: Python tokenizer busy for ~0.5 s — large against the per-task Arrow
-#: round-trip, small enough to smooth skew across cores.
-PARSE_TASK_BYTES = 2 * 1024 * 1024
 
 #: Target bytes per Arrow batch when statement text crosses JVM→Python
 #: (the mapInArrow line scans).  Spark's only knob is rows per batch
@@ -2151,13 +2128,9 @@ def _mean_dml_bytes(spark: SparkSession, dump_path: str):
     :func:`convert_dump_onepass` callers that pass precomputed schemas;
     ``convert_dump`` gets the same number for free from the DDL pass."""
     _require_jvm_text_decodable(dump_path, spark)  # before the conf
-    # save/set pair: a raised guard must not leak the 2 MB DDL-scan
-    # split size into the session (ADVICE r12)
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes", str(_DDL_SCAN_SPLIT_BYTES)
-    )
-    try:
+    # scope: a raised guard must not leak the DDL-scan split size into
+    # the session (ADVICE r12)
+    with _session_conf(spark, _SPLIT_CONF, _DDL_SCAN_SPLIT_BYTES):
         return (
             spark.read.text(dump_path)
             .select(
@@ -2166,8 +2139,6 @@ def _mean_dml_bytes(spark: SparkSession, dump_path: str):
             .agg(F.avg("ib"))
             .collect()[0][0]
         )
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
 def _stmt_cross_rows(mean_stmt_bytes, session_rows: int = 10_000) -> int:
@@ -2192,215 +2163,34 @@ def _stmt_cross_rows(mean_stmt_bytes, session_rows: int = 10_000) -> int:
     return max(floor, min(cap, int(_STMT_CROSS_BATCH_BYTES / mean_stmt_bytes)))
 
 
-def parse_partition_counts(
-    lines_df: DataFrame, cores: int, n_tables: int
-) -> dict[str, int]:
-    """Per-table parse-stage partition counts from each table's actual
-    byte share of the dump.
-
-    One lightweight aggregate over the (cached) INSERT lines replaces the
-    old one-size-fits-all ``repartition(2 × cores)``: with T tables that
-    scheme launches ``T × 2 × cores`` tasks no matter how small each
-    table is, and the per-task overhead (Arrow round-trip, scheduling)
-    dwarfs the parse work — measured 5× end-to-end slowdown at 8 tables.
-    Sizing by bytes keeps every task ≥ ~PARSE_TASK_BYTES while still
-    fanning wide enough to fill the cores across concurrent table jobs.
-    """
-    # regexp over a 96-byte prefix, not the full (multi-KB) statement:
-    # halves this aggregate's cost at 2 GB (2.8 → 1.5 s measured).  96
-    # covers the longest prefix + a 64-char table name (MySQL's limit).
-    tbl = F.regexp_extract(
-        F.substring("value", 1, 96),
-        r'^(?:INSERT\s+(?:IGNORE\s+)?|REPLACE\s+)INTO\s+[`"]?([^`"\s(]+)',
-        1,
-    )
-    rows = (
-        lines_df.select(tbl.alias("tbl"), F.length("value").alias("len"))
-        .groupBy("tbl")
-        .agg(F.sum("len").alias("bytes"))
-        .collect()
-    )
-    # Fill the machine: aim for ~2×cores concurrently runnable tasks
-    # across all table jobs, but never tasks smaller than ~1/8 of the
-    # target chunk.  Parse tasks target 4×PARSE_TASK_BYTES (~8 MB): the
-    # mapInArrow worker round-trip dominates 2 MB tasks (single-table
-    # sweep: 2 MB tasks 1.77 s vs 8 MB tasks 1.07 s on 256 MB), and
-    # with T tables running concurrently the per-table fan-out only
-    # needs to fill its slice of the cores, not all of them.
-    fair_share = max(1, (2 * cores) // max(1, n_tables))
-    chunk = 4 * PARSE_TASK_BYTES
-    out = {}
-    for r in rows:
-        by_bytes = -(-int(r["bytes"]) // chunk)  # ceil
-        cap = max(1, -(-int(r["bytes"]) // (PARSE_TASK_BYTES // 8)))
-        out[r["tbl"]] = max(1, min(max(by_bytes, min(fair_share, cap)), 2 * cores))
-    return out
-
-
-def insert_rows_df(
-    spark: SparkSession,
-    dump_path: str,
-    table: str,
-    schema: T.StructType,
-    lines_df: DataFrame | None = None,
-    parse_partitions: int | None = None,
-) -> DataFrame:
-    """Pass 2 (per table): parallel parse of that table's INSERT lines.
-
-    The parse runs inside ``mapInArrow`` — statement batches arrive as
-    Arrow and parsed CARRIER columns leave as Arrow, so the fast path's
-    ``read_csv`` output crosses into the JVM with no pandas round-trip
-    and no per-row Python objects (the row-at-a-time pickle path of an
-    RDD ``createDataFrame`` measured ~5× slower end-to-end even via
-    pandas; dropping pandas removed the nullable-dtype hop too).  Lines
-    are spread across all cores first: a dump file yields few input
-    splits relative to the CPU cost of parsing."""
-    carrier = T.StructType([carrier_field(f) for f in schema.fields])
-    if lines_df is None:
-        _require_jvm_text_decodable(dump_path, spark)
-        lines_df = spark.read.text(dump_path).where(_dml_line_pred())
-    # JVM-side per-table prefilter: without it, every table's pass would
-    # repartition and Python-tokenize ALL tables' INSERT lines (O(tables ×
-    # dump) parse work) with only the per-statement name check discarding
-    # foreign rows.  mysqldump writes the table name back-quoted, but cover
-    # the bare/double-quoted spellings too; the Python-side name check stays
-    # as the correctness guard.
-    tbl_prefixes = [
-        kw + spelling
-        for kw in DML_PREFIXES
-        for spelling in (f" `{table}`", f' "{table}"', f" {table} ", f" {table}(")
-    ]
-    pred = F.col("value").startswith(tbl_prefixes[0])
-    for p in tbl_prefixes[1:]:
-        pred = pred | F.col("value").startswith(p)
-    lines_df = lines_df.where(pred)
-    # Spread lines across cores before the CPU-heavy parse — but only when
-    # the input itself is under-split (a single .sql/.sql.gz file → 1-few
-    # scan tasks).  A many-file dump already provides the parallelism, and
-    # a full shuffle of raw dump text at 100 TB would dwarf the parse cost.
-    # ``parse_partitions`` (from :func:`parse_partition_counts`) sizes the
-    # stage to the table's byte share; the 2×cores fallback covers direct
-    # single-table calls.
-    cores = spark.sparkContext.defaultParallelism
-    target = parse_partitions if parse_partitions is not None else 2 * cores
-    cur = lines_df.rdd.getNumPartitions()
-    # Without a byte-share target, "under-split" keeps its conservative
-    # meaning (fewer splits than cores) so a well-split many-file dump
-    # never shuffles its raw text.
-    threshold = cores if parse_partitions is None else target
-    if cur < threshold:
-        # Under-split input (single .sql/.sql.gz → few scan tasks): balance
-        # with a shuffle of just this table's bytes.
-        if cur != target:
-            lines_df = lines_df.repartition(target)
-    elif parse_partitions is not None and cur > 4 * target:
-        # Grossly over-split for this table's share (many-file dump, small
-        # table): merge WITHOUT a shuffle — scheduling thousands of
-        # near-empty Arrow tasks costs more than the parse itself.
-        lines_df = lines_df.coalesce(target)
-    elif parse_partitions is None and cur > cores:
-        # Direct-call over-split (large single file at the 2 MB scan
-        # granularity): merge to one task per core, still shuffle-free.
-        # The mapInArrow worker round-trip dominates 2 MB tasks —
-        # measured on a 256 MB single-table dump: 129×2 MB tasks 1.77 s,
-        # 64 tasks 1.40 s, 32 tasks (= cores, one wave) 1.07 s.  Splits
-        # stay 2 MB on disk, so coalesced tasks read contiguous ranges
-        # of uniform byte size — no straggler risk from the merge.
-        lines_df = lines_df.coalesce(cores)
-    def parse_batches(arrow_batches):
-        """Statement batches in, CARRIER-typed Arrow batches out — via
-        ``mapInArrow``, so the fast path's ``read_csv`` output crosses
-        into the JVM with no pandas round-trip and no per-row Python
-        objects; only fallback statements materialize Python values."""
-        for batch in arrow_batches:
-            yield from _parse_stmts_to_arrow(
-                batch.column(0).to_pylist(), table, schema, carrier
-            )
-
-    raw = lines_df.mapInArrow(parse_batches, carrier)
-    return finish_casts(raw, schema)
-
-
-def _parse_stmts_to_arrow(stmts, table: str, schema: T.StructType, carrier):
-    """One group of INSERT statements → CARRIER-typed Arrow batches (the
-    shared parse core of the line path and the fused multi-line path).
-
-    Statements for other tables are skipped; fast-path-eligible ones
-    append their CSV rows to ONE ``bytearray`` payload, read by a single
-    Arrow-CSV call; the rest (and every statement of a fast group whose
-    read fails) go through the exhaustive tokenizer — identical C1–C3
-    error semantics on both paths.  Only references to the statements
-    are held until the read; the tokenizer's ``;`` normalization copies
-    just the statements it parses."""
-    import pyarrow as pa
-
-    names = [f.name for f in schema.fields]
-    fast_types = _arrow_fast_types(schema)
-    has_col_list_re = _INSERT_COLS_RE
-    carrier_pa = pa.schema(
-        [
-            pa.field(f.name, _carrier_pa_type(f.dataType), True)
-            for f in carrier.fields
-        ]
-    )
-
-    def slow_batches(group):
-        rows: list[dict] = []
-        for stmt in group:
-            _, ins_cols, tuples = parse_insert_full(stmt.rstrip(";") + ";")
-            for tup in tuples:
-                if ins_cols is not None:  # --complete-insert dumps
-                    tup = align_row(tup, ins_cols, schema, table)
-                rows.append(dict(zip(names, coerce_row(tup, schema, table))))
-        return pa.Table.from_pylist(rows, schema=carrier_pa).to_batches()
-
-    slow_stmts: list[str] = []
-    fast_stmts: list[str] = []
-    payload = bytearray()
-    fast_rows = 0
-    for stmt in stmts:
-        stmt = stmt.strip()  # the same object unless it has edge whitespace
-        if insert_table_name(stmt) != table:
-            continue
-        if fast_types is not None and not has_col_list_re.match(stmt):
-            fb = _values_csv_bytes(stmt)
-            if fb is not None:
-                if fast_stmts:
-                    payload += b"\n"
-                payload += fb[0]
-                fast_stmts.append(stmt)
-                fast_rows += fb[1]
-                continue
-        slow_stmts.append(stmt)
-    tbl = None
-    if fast_stmts:
-        try:
-            tbl = _arrow_read_values(payload, names, fast_types)
-            if tbl.num_rows != fast_rows:
-                raise DumpParseError("fast-path row-count drift")
-            # non-finite literal rejection lives inside
-            # _arrow_read_values (NaN must be counted Arrow-side,
-            # before nulls blur into NaN in a numpy view)
-        except Exception:
-            # any conversion surprise: re-parse those statements
-            # through the exhaustive grammar, which parses them
-            # correctly or raises the contextual DumpParseError
-            tbl = None
-            slow_stmts = fast_stmts + slow_stmts
-    del payload  # free it before the batches and the tokenizer run
-    if tbl is not None:
-        yield from tbl.to_batches()
-    if slow_stmts or not fast_stmts:
-        yield from slow_batches(slow_stmts)
-
-
-#: Per-table statement-buffer flush threshold inside a one-pass task
-#: (one Arrow parse + one parquet row group per flush).
-_ONEPASS_FLUSH_BYTES = 32 * 1024 * 1024
-
-#: Input split size for the one-pass scan: big enough that a task's
-#: per-table row groups stay healthy even when tables interleave.
+#: Input split size for the one-line statement source: big enough that a
+#: one-pass task's per-table row groups stay healthy even when tables
+#: interleave.
 _ONEPASS_SPLIT_BYTES = 64 * 1024 * 1024
+
+
+def _statement_source(
+    spark: SparkSession, dump_path: str, multiline: bool
+) -> DataFrame:
+    """The convert's statement source, shared by the one-pass task and
+    the per-table fallback: the dump's INSERT lines (one-line layout;
+    run it with ``maxPartitionBytes`` scoped to _ONEPASS_SPLIT_BYTES), or
+    one row per reassembly range (multi-line layout, compressed members).
+    :func:`_source_statements` turns its Arrow batches back into
+    statements inside the task."""
+    if multiline:
+        return _ranges_df(spark, _multiline_ranges(spark, dump_path))
+    return spark.read.text(dump_path).where(_dml_line_pred())
+
+
+def _source_statements(arrow_batches, multiline: bool) -> Iterator[str]:
+    """Statements out of the Arrow batches of a :func:`_statement_source`."""
+    for batch in arrow_batches:
+        if not multiline:
+            yield from batch.column(0).to_pylist()
+            continue
+        for path, lo, hi in zip(*(c.to_pylist() for c in batch.columns)):
+            yield from _range_statements(path, lo, hi)
 
 
 #: Orphaned staging directories older than this are swept at the start
@@ -2494,8 +2284,8 @@ def _probe_staging_visibility(spark: SparkSession, staging: str) -> None:
         raise OnepassStagingInvisible(
             f"an executor wrote {marker!r} but the driver cannot see it"
             f"{detail} — output filesystem is not shared between driver "
-            "and executors; use strategy='per_table' or point output_dir "
-            "at a shared mount"
+            "and executors; convert_dump falls back to the per-table "
+            "Spark writers, or point output_dir at a shared mount"
         )
     os.unlink(marker)
 
@@ -2532,14 +2322,12 @@ def convert_dump_onepass(
     """ONE-pass multi-table conversion: each task parses its byte range
     of the dump and writes EVERY table it sees straight to parquet.
 
-    The classic per-table design persists the statement text and runs
-    one job per table — the JVM prefix filter then re-reads the whole
-    cache T times (T × corpus of storage traffic: measured the dominant
-    cost at 2 GB / 16 tables).  Here the dump text is read exactly once,
-    statements group by table inside the task, and per-table
-    ``pyarrow.parquet`` writers emit final-typed row groups (the same
-    carrier→target Arrow casts the DataSource reader uses — identical
-    C1–C3 semantics, fast-path fallbacks included).
+    The dump text is read exactly once (a per-table design re-reads the
+    whole statement source T times: measured the dominant cost at 2 GB /
+    16 tables), statements group by table inside the task, and per-table
+    ``pyarrow.parquet`` writers emit the final-typed row groups of
+    :func:`parse_statements` — the same parse core as the per-table
+    fallback and the DataSource reader.
 
     Commit protocol (v1-style, speculation-safe): tasks write to
     ``{output_dir}/_staging_{job}/`` under attempt-unique filenames and
@@ -2558,25 +2346,21 @@ def convert_dump_onepass(
     import shutil as _shutil
     import uuid
 
-    from .dump_datasource import _carrier_to_target, _pa_schema
-
     if not multiline:
         _require_jvm_text_decodable(dump_path, spark)
     if "://" in output_dir:
         # os.path.abspath('s3://bucket/out') would silently mangle the
         # URI into '<cwd>/s3:/bucket/out' and "succeed" locally while
         # the caller believes the data went to the object store
-        # (ADVICE r5, medium).  The per-table strategy's JVM DataFrame
-        # writers are the remote-output path.
+        # (ADVICE r5, medium).  convert_dump's per-table Spark writers
+        # are the remote-output path.
         raise ValueError(
             "onepass writes through driver-side filesystem moves; "
             f"output_dir {output_dir!r} has a scheme os.path cannot "
-            "address — use strategy='per_table' (or 'auto') for "
-            "object-store output"
+            "address — convert_dump writes object-store output through "
+            "the per-table Spark writers"
         )
-    session_rows = int(
-        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    )
+    session_rows = int(spark.conf.get(_ARROW_BATCH_CONF))
     stmt_rows = stmt_batch_rows
     if schemas is None:
         if multiline:
@@ -2598,15 +2382,6 @@ def convert_dump_onepass(
         stmt_rows = _stmt_cross_rows(
             _mean_dml_bytes(spark, dump_path), session_rows
         )
-    pa_schemas = {t: _pa_schema(s) for t, s in schemas.items()}
-    if any(v is None for v in pa_schemas.values()):
-        raise DumpParseError(
-            "onepass: a table has a column type with no Arrow mapping"
-        )
-    carriers = {
-        t: T.StructType([carrier_field(f) for f in s.fields])
-        for t, s in schemas.items()
-    }
     out_abs = os.path.abspath(output_dir)
     _gc_orphaned_staging(out_abs)
     staging = os.path.join(out_abs, f"_staging_{uuid.uuid4().hex}")
@@ -2627,67 +2402,25 @@ def convert_dump_onepass(
             _shutil.rmtree(staging, ignore_errors=True)
             raise
 
-    def run_task(stmt_iter):
-        """Shared task body: statements (any table, any source) →
-        per-table parquet files in staging + one report RecordBatch."""
+    def run_task(arrow_batches):
+        """Task body: statements (any table) → per-table parquet files
+        in staging + one report RecordBatch."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        bufs: dict[str, list] = {}  # table -> [stmts, byte_size]
+        codec, level = parse_compression(compression)
         writers: dict[str, list] = {}  # table -> [writer, path, rows]
-
-        def flush(table: str) -> None:
-            stmts, _n = bufs.pop(table)
-            schema = schemas[table]
-            try:
-                batches = list(
-                    _parse_stmts_to_arrow(stmts, table, schema, carriers[table])
-                )
-                if not batches:
-                    return
-                final = _carrier_to_target(
-                    pa.Table.from_batches(batches), schema, pa_schemas[table]
-                )
-            except DumpParseError:
-                raise
-            except Exception:
-                # carrier→target cast surprise: exhaustive re-parse —
-                # values the slow path can represent still convert, and
-                # a genuinely bad value raises the contextual C1/C3
-                # error (same fallback contract as the DataSource reader)
-                from .dump_datasource import _finalize_row
-
-                names = [f.name for f in schema.fields]
-                rows = []
-                for stmt in stmts:
-                    _t, cols, tuples = parse_insert_full(stmt)
-                    for tup in tuples:
-                        if cols is not None:
-                            tup = align_row(tup, cols, schema, table)
-                        rows.append(
-                            dict(
-                                zip(
-                                    names,
-                                    _finalize_row(
-                                        coerce_row(tup, schema, table),
-                                        schema,
-                                        table,
-                                    ),
-                                )
-                            )
-                        )
-                if not rows:
-                    return
-                final = pa.Table.from_pylist(rows, schema=pa_schemas[table])
+        stmts = _source_statements(arrow_batches, multiline)
+        for table, group in _statement_groups(stmts, schemas):
+            final = parse_statements(group, table, schemas[table])
             if table not in writers:
                 d = os.path.join(staging, table)
                 os.makedirs(d, exist_ok=True)
                 path = os.path.join(
                     d, f"part-{pid:05d}-{uuid.uuid4().hex}.parquet"
                 )
-                codec, level = parse_compression(compression)
                 writers[table] = [
                     pq.ParquetWriter(
                         path,
@@ -2701,79 +2434,26 @@ def convert_dump_onepass(
             w = writers[table]
             w[0].write_table(final)
             w[2] += final.num_rows
-
-        for stmt in stmt_iter:
-            table = insert_table_name(stmt.strip())
-            if table not in schemas:
-                continue  # orphan INSERT: no CREATE TABLE (W3 parity)
-            buf = bufs.setdefault(table, [[], 0])
-            buf[0].append(stmt)
-            buf[1] += len(stmt)
-            if buf[1] >= _ONEPASS_FLUSH_BYTES:
-                flush(table)
-        for table in list(bufs):
-            flush(table)
-        report = [(t, w[1], w[2]) for t, w in writers.items()]
         for w in writers.values():
             w[0].close()
-        return pa.RecordBatch.from_arrays(
+        yield pa.RecordBatch.from_arrays(
             [
-                pa.array([r[0] for r in report], pa.string()),
-                pa.array([r[1] for r in report], pa.string()),
-                pa.array([r[2] for r in report], pa.int64()),
+                pa.array(list(writers), pa.string()),
+                pa.array([w[1] for w in writers.values()], pa.string()),
+                pa.array([w[2] for w in writers.values()], pa.int64()),
             ],
             names=["table", "path", "nrows"],
         )
 
-    def parse_lines(arrow_batches):
-        yield run_task(
-            s
-            for batch in arrow_batches
-            for s in batch.column(0).to_pylist()
-        )
-
-    def parse_ranges(arrow_batches):
-        def stmts():
-            for batch in arrow_batches:
-                for i in range(batch.num_rows):
-                    yield from _range_statements(
-                        batch.column(0)[i].as_py(),
-                        batch.column(1)[i].as_py(),
-                        batch.column(2)[i].as_py(),
-                    )
-
-        yield run_task(stmts())
-
-    prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes", str(_ONEPASS_SPLIT_BYTES)
-    )
-    prev_arb = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    if stmt_rows is not None:  # direct call: size the crossing ourselves
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(stmt_rows)
-        )
     try:
-        if multiline:
-            # reassembly range size: fill ~2 waves of cores, but keep
-            # ranges large enough for healthy per-table row groups
-            ranges = _multiline_ranges(spark, dump_path)
-            total = sum(hi - lo for _p, lo, hi in ranges if hi > 0)
-            cores = spark.sparkContext.defaultParallelism
-            split = min(
-                _ONEPASS_SPLIT_BYTES,
-                max(8 * 1024 * 1024, total // max(1, 2 * cores)),
+        with _session_conf(
+            spark, _SPLIT_CONF, _ONEPASS_SPLIT_BYTES
+        ), _session_conf(spark, _ARROW_BATCH_CONF, stmt_rows):
+            rep = (
+                _statement_source(spark, dump_path, multiline)
+                .mapInArrow(run_task, "table string, path string, nrows long")
+                .collect()
             )
-            ranges = _multiline_ranges(spark, dump_path, split)
-            src = _ranges_df(spark, ranges)
-            rep = src.mapInArrow(
-                parse_ranges, "table string, path string, nrows long"
-            ).collect()
-        else:
-            lines = spark.read.text(dump_path).where(_dml_line_pred())
-            rep = lines.mapInArrow(
-                parse_lines, "table string, path string, nrows long"
-            ).collect()
         counts = {t: 0 for t in schemas}
         for t in schemas:
             d = os.path.join(out_abs, t)
@@ -2792,19 +2472,14 @@ def convert_dump_onepass(
         return counts
     finally:
         _shutil.rmtree(staging, ignore_errors=True)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", prev_arb
-        )
 
 
 def _require_tables(schemas: dict, dump_path: str) -> None:
     """Fail loud when the DDL pass found nothing to convert — a silent
     empty output directory hides input problems.  Lives at the shared
     collect_schemas/collect_schemas_multiline layer so every entry
-    point (convert_dump, convert_dump_onepass called directly, the
-    fused paths) is covered.  The common causes: the
-    path matched no dump content, or the dump uses non-canonical
+    point (convert_dump, convert_dump_onepass called directly) is
+    covered.  The common causes: the path matched no dump content, or the dump uses non-canonical
     lowercase keywords (statement classification matches the exact
     ``CREATE TABLE`` / ``INSERT INTO`` prefixes mysqldump emits — the
     hot line filters stay byte-literal on purpose; per-line case folding
@@ -2818,51 +2493,108 @@ def _require_tables(schemas: dict, dump_path: str) -> None:
         )
 
 
-def _onepass_or_fallback(
+#: Width of the per-table fallback's thread pool: how many table jobs
+#: run at once.
+_TABLE_WRITERS = 8
+
+
+def _table_df(
+    source: DataFrame, table: str, schema: T.StructType, multiline: bool
+) -> DataFrame:
+    """One table's rows out of a :func:`_statement_source`: ONE
+    ``mapInArrow`` of the parse core, with no repartition and no cache.
+    One-line sources are pruned to the table's own lines by a JVM-side
+    prefix filter first; multi-line ones skip foreign statements
+    Python-side."""
+    from functools import reduce
+
+    if not multiline:
+        # mysqldump writes the table name back-quoted; cover the
+        # bare/double-quoted spellings too — the Python-side name check
+        # stays the correctness guard.  Table names are lowercased (like
+        # insert_table_name does), so `Users` lines reach table `users`;
+        # 96 chars hold the longest prefix with a 64-char name.
+        head = F.lower(F.substring("value", 1, 96))
+        source = source.where(
+            reduce(
+                lambda a, b: a | b,
+                (
+                    head.startswith((kw + spelling).lower())
+                    for kw in DML_PREFIXES
+                    for spelling in (
+                        f" `{table}`", f' "{table}"', f" {table} ", f" {table}("
+                    )
+                ),
+            )
+        )
+    return source.mapInArrow(
+        lambda batches: _table_batches(
+            _source_statements(batches, multiline), table, schema
+        ),
+        # every column nullable, as in the one-pass writers' Arrow schema
+        T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields]),
+    )
+
+
+def _convert_per_table(
     spark: SparkSession,
     dump_path: str,
     output_dir: str,
     compression: str,
-    schemas: dict,
+    schemas: dict[str, T.StructType],
     *,
     multiline: bool,
-    forced: bool,
+    stmt_rows: int | None,
     progress: bool,
-    stmt_batch_rows: int | None = None,
-) -> dict[str, int] | None:
-    """Run :func:`convert_dump_onepass`; on a staging-visibility failure
-    return ``None`` so an ``auto`` caller falls through to the per-table
-    writers (a ``forced`` caller re-raises).  Shared by the one-line and
-    multiline branches of :func:`convert_dump` so the fallback policy
-    cannot drift between them."""
-    import contextlib
+) -> dict[str, int]:
+    """The fallback for output the driver cannot reach (a scheme in
+    ``output_dir``, or :class:`OnepassStagingInvisible`): per table,
+    :func:`_table_df` over the one-pass statement source into Spark's
+    Parquet sink, with the row count from an ``observe`` metric on the
+    write.  Table jobs run from a fixed-width thread pool, each one
+    re-reading the source."""
     import sys
+    import time as _time
+    from concurrent.futures import ThreadPoolExecutor
 
-    from ..progress import ProgressReporter
+    from pyspark.sql import Observation
 
-    live = (
-        ProgressReporter(spark, "ingest") if progress else contextlib.nullcontext()
-    )
-    try:
-        with live:
-            return convert_dump_onepass(
-                spark,
-                dump_path,
-                output_dir,
-                compression,
-                schemas=schemas,
-                multiline=multiline,
-                stmt_batch_rows=stmt_batch_rows,
-            )
-    except OnepassStagingInvisible:
-        if forced:
-            raise
-        print(
-            "[ingest] one-pass staging not driver-visible — "
-            "falling back to per-table writers",
-            file=sys.stderr,
+    codec, level = parse_compression(compression)
+    if level is not None and codec != "zstd":
+        # parquet-mr has a level knob for zstd only; a gzip/brotli level
+        # this path cannot honor fails loudly instead of silently
+        # writing at the default level (the one-pass pyarrow writers
+        # honor those levels fine)
+        raise ValueError(
+            f"the per-table Spark writer cannot honor a {codec} level "
+            f"({compression!r}); use zstd:N or a plain codec on this path"
         )
-        return None
+    source = _statement_source(spark, dump_path, multiline)
+
+    def one_table(item: tuple[str, T.StructType]) -> tuple[str, int]:
+        table, schema = item
+        t0 = _time.perf_counter()
+        obs = Observation(f"ingest_{table}")
+        df = _table_df(source, table, schema, multiline)
+        writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write
+        if level is not None:
+            # parquet-mr reads the level from the JOB's Hadoop conf, and
+            # Spark's file sinks copy writer options into that conf, so
+            # the level rides the write instead of mutating the
+            # session-global conf (ADVICE r11)
+            writer = writer.option("parquet.compression.codec.zstd.level", str(level))
+        writer.mode("overwrite").parquet(f"{output_dir}/{table}", compression=codec)
+        n = int(obs.get["rows"])
+        if progress:
+            dt = _time.perf_counter() - t0
+            print(f"[ingest] {table}: {n:,} rows in {dt:.1f}s", file=sys.stderr)
+        return table, n
+
+    with _session_conf(spark, _SPLIT_CONF, _ONEPASS_SPLIT_BYTES), _session_conf(
+        spark, _ARROW_BATCH_CONF, stmt_rows
+    ):
+        with ThreadPoolExecutor(min(_TABLE_WRITERS, len(schemas))) as pool:
+            return dict(pool.map(one_table, schemas.items()))
 
 
 def convert_dump(
@@ -2871,31 +2603,17 @@ def convert_dump(
     output_dir: str,
     compression: str = "snappy",
     progress: bool = False,
-    max_concurrency: int = 8,
     multiline: str = "auto",
-    strategy: str = "auto",
 ) -> dict[str, int]:
     """Full reference pipeline: dump → one Snappy Parquet dataset per table.
 
-    Returns {table: row_count}.  ``strategy`` (default 'auto'): multi-table
-    dumps with driver-reachable output convert ONE-PASS — each task parses
-    its byte range once and writes every table it sees (see
-    :func:`convert_dump_onepass`; 86 → 359 MB/s at 2 GB/16 tables).
-    'per_table' forces the classic design: driver-side DDL pass, then a
-    parallel INSERT parse per table over a shared statement cache, write
-    jobs submitted from a thread pool with row counts from an ``observe``
-    metric on the write itself — still the path for single-table dumps
-    (Spark's committer, already single-scan) and object-store output.
-
-    Design note (measured, round 4): a staged alternative — one pass
-    writing the lines ``partitionBy(table)`` to parquet, per-table jobs
-    reading only their pruned partition — was benchmarked at 1 GB / 16
-    tables and LOST to this shared cache (24.0 s vs 20.5 s; naive 2 MB-
-    split staging was 5× worse from small-file explosion).  The cache's
-    per-table re-scan is cheap relative to the extra full write+read the
-    staging pass costs at this table count; staging only pays when
-    |tables| is large enough that O(tables × corpus) cache scanning
-    dominates — worth revisiting for 1000-table dumps, not 16.
+    Returns {table: row_count}.  Whenever the driver can reach the output
+    (no scheme in ``output_dir``, and the staging probe passes) the dump
+    converts ONE-PASS: each task parses its byte range once and writes
+    every table it sees (see :func:`convert_dump_onepass`; 86 → 359 MB/s
+    at 2 GB/16 tables).  Otherwise each table converts in its own Spark
+    job into Spark's Parquet sink (:func:`_convert_per_table`).  Both
+    read the same statement source and call the same parse core.
 
     ``multiline``: 'auto' (default) detects dumps whose INSERT statements
     span lines (no --extended-insert) and switches to byte-range
@@ -2911,280 +2629,99 @@ def convert_dump(
     polling the driver's StatusTracker) — the analogue of the
     reference's three spinners (src/main.rs:63–86).
     """
-    import contextlib
     import sys
     import time as _time
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import Observation
 
     from ..progress import ProgressReporter
 
     if multiline not in ("auto", "never"):
         raise ValueError(f"multiline must be 'auto' or 'never', got {multiline!r}")
-    if strategy not in ("auto", "onepass", "per_table"):
-        raise ValueError(
-            f"strategy must be 'auto', 'onepass' or 'per_table', got {strategy!r}"
-        )
-    if strategy == "onepass" and "://" in output_dir:
-        # fail before any work: forced onepass cannot address a
-        # scheme'd URI (ADVICE r5, medium) — and must not silently
-        # convert into <cwd>/s3:/bucket/out
-        raise ValueError(
-            "strategy='onepass' requires a driver-addressable "
-            f"(scheme-less) output_dir; got {output_dir!r} — use "
-            "strategy='auto' or 'per_table' for object-store output"
-        )
-    # Scope the file-split size to the parse-task granularity for the
-    # duration of the convert (restored in the ``finally`` below): the
-    # per-table parse scans yield ~bytes/2MB native splits, and the
-    # spreading ``repartition`` in insert_rows_df becomes a no-op
-    # (cur ≥ threshold), so the raw dump text is never shuffled:
-    # parallelism comes from parallel file reads.  The DDL pass and the
-    # one-pass scan carve their own granularity (collect_schemas scopes
-    # _DDL_SCAN_SPLIT_BYTES — 2 MB tasks measured 10× pure scheduling
-    # overhead on its JVM predicate scan — and convert_dump_onepass
-    # scopes _ONEPASS_SPLIT_BYTES).  Gzip members stay unsplittable
-    # regardless (their parallelism is per file); the multi-line
-    # reassembly path carves its own byte ranges (MULTILINE_SPLIT_BYTES)
-    # and ignores this setting.
-    prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(PARSE_TASK_BYTES))
-    prev_arb = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    use_multiline = False
-    cached = None  # the persisted multi-table line set, if any
+    use_multiline, stmt_rows = False, None
     try:
-        try:
-            if _has_xz_members(spark, dump_path):
-                # .xz has no Hadoop codec, so the one-line JVM text scan
-                # cannot decode it — route through the Python-decoded
-                # reassembly path, which handles BOTH layouts (one-line
-                # statements are single lines to it) at one task per
-                # member, exactly like .gz members.
-                if multiline == "never":
-                    raise DumpParseError(
-                        f"{dump_path}: .xz members need Python-side "
-                        "decode (the reassembly path), which "
-                        "multiline='never' forbids; recompress with "
-                        "zstd/gzip/bzip2 for the JVM-decoded layout"
-                    )
-                raise MultilineDumpError(
-                    f"{dump_path}: .xz member routed to Python-side decode"
-                )
-            schemas, mean_dml = collect_schemas(
-                spark, dump_path, return_stats=True
-            )
-            # Size the Arrow statement-crossing batches in BYTES, not
-            # rows: extended-insert statements run ~100 KB–1 MB each, and
-            # the session's 10,000-row default let the JVM accumulate
-            # ~800 MB Arrow buffers per in-flight task before anything
-            # crossed to Python — 32 concurrent tasks thrashed allocation
-            # and measured 90 MB/s where a ~32 MB batch target measures
-            # 314 MB/s on the same 2 GB dump.  The mean statement size
-            # rides the DDL pass's aggregate scan for free.
-            stmt_rows = _stmt_cross_rows(mean_dml, int(prev_arb))
-            spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(stmt_rows),
-            )
-        except MultilineDumpError:
+        if _has_xz_members(spark, dump_path):
+            # .xz has no Hadoop codec, so the one-line JVM text scan
+            # cannot decode it — route through the Python-decoded
+            # reassembly path, which handles BOTH layouts (one-line
+            # statements are single lines to it) at one task per
+            # member, exactly like .gz members.
             if multiline == "never":
-                raise
-            use_multiline = True
-            # map-only parallel DDL scan first (INSERT text never crosses
-            # to the JVM).  Multi-table multiline dumps then convert
-            # ONE-PASS (range reassembly feeding the same single-scan
-            # task-writer machinery as the one-line layout — no per-table
-            # re-read at any table count); single-table dumps use the
-            # fused range parse (Spark's own parquet committer, one scan
-            # anyway); the statements cache remains for non-shared-FS
-            # output where task-side writers can't commit.
-            schemas = collect_schemas_multiline(spark, dump_path)
-            if strategy != "per_table" and "://" not in output_dir:
-                # one-pass for ANY table count (single-table measured
-                # 96 vs 39 MB/s against the fused+Spark-sink path at
-                # 68 MB); fused remains the object-store-output fallback
-                counts = _onepass_or_fallback(
+                raise DumpParseError(
+                    f"{dump_path}: .xz members need Python-side "
+                    "decode (the reassembly path), which "
+                    "multiline='never' forbids; recompress with "
+                    "zstd/gzip/bzip2 for the JVM-decoded layout"
+                )
+            raise MultilineDumpError(
+                f"{dump_path}: .xz member routed to Python-side decode"
+            )
+        schemas, mean_dml = collect_schemas(spark, dump_path, return_stats=True)
+        # Size the Arrow statement-crossing batches in BYTES, not rows:
+        # extended-insert statements run ~100 KB–1 MB each, and the
+        # session's 10,000-row default let the JVM accumulate ~800 MB
+        # Arrow buffers per in-flight task before anything crossed to
+        # Python — 32 concurrent tasks thrashed allocation and measured
+        # 90 MB/s where a ~32 MB batch target measures 314 MB/s on the
+        # same 2 GB dump.  The mean statement size rides the DDL pass's
+        # aggregate scan for free.
+        stmt_rows = _stmt_cross_rows(
+            mean_dml, int(spark.conf.get(_ARROW_BATCH_CONF))
+        )
+    except MultilineDumpError:
+        if multiline == "never":
+            raise
+        use_multiline = True
+        schemas = collect_schemas_multiline(spark, dump_path)
+        if progress:
+            print(
+                "[ingest] multi-line INSERT layout detected — byte-range "
+                "statement reassembly (parallel within files)",
+                file=sys.stderr,
+            )
+    if progress:
+        print(
+            f"[ingest] {len(schemas)} table(s): {sorted(schemas)}",
+            file=sys.stderr,
+        )
+    counts = None
+    t0 = _time.perf_counter()
+    with ProgressReporter(spark, "ingest") if progress else contextlib.nullcontext():
+        if "://" not in output_dir:
+            try:
+                counts = convert_dump_onepass(
                     spark,
                     dump_path,
                     output_dir,
                     compression,
-                    schemas,
-                    multiline=True,
-                    forced=strategy == "onepass",
-                    progress=progress,
+                    schemas=schemas,
+                    multiline=use_multiline,
+                    stmt_batch_rows=stmt_rows,
                 )
-                if counts is not None:
-                    if progress:
-                        for t in schemas:
-                            print(
-                                f"[ingest] {t}: {counts[t]:,} rows "
-                                "(multiline one-pass)",
-                                file=sys.stderr,
-                            )
-                    return {t: counts[t] for t in schemas}
-            if len(schemas) > 1:
-                lines = cached = multiline_stmts_df(spark, dump_path).persist()
-                # Reassembled statements are statement-sized rows (up to
-                # ~1 MB at mysqldump's net_buffer default) crossing
-                # JVM→Python in the per-table parse: cap the Arrow batch
-                # like the one-line branch, statically (no mean-size
-                # stats exist before the reassembly scan) — 64 × ~1 MB
-                # bounds JVM buffers at ~64 MB per in-flight task.  Only
-                # ever TIGHTEN the session conf: a user bound below 64
-                # stays exactly as configured, and Spark's zero/negative
-                # "no limit" sentinel means no user bound (we impose 64).
-                spark.conf.set(
-                    "spark.sql.execution.arrow.maxRecordsPerBatch",
-                    str(
-                        64
-                        if int(prev_arb) <= 0
-                        else min(64, int(prev_arb))
-                    ),
-                )
-            if progress:
+            except OnepassStagingInvisible:
                 print(
-                    "[ingest] multi-line INSERT layout detected — "
-                    "byte-range statement reassembly (parallel within "
-                    "files)",
+                    "[ingest] one-pass staging not driver-visible — "
+                    "falling back to per-table writers",
                     file=sys.stderr,
                 )
-        if progress:
-            print(
-                f"[ingest] {len(schemas)} table(s): {sorted(schemas)}",
-                file=sys.stderr,
-            )
-        # one-pass strategy: one-line dumps with a driver-reachable
-        # output filesystem read the text exactly once and write from
-        # the tasks (see convert_dump_onepass).  Multi-table: removes
-        # the T× cache re-reads (dominant cost at ≥2 GB).  Single-table:
-        # the pyarrow writers beat the JVM cast+sink stage 434 vs
-        # 112 MB/s at 1 GB, so auto uses one-pass there too.
-        if not use_multiline and (
-            strategy == "onepass"
-            or (strategy == "auto" and "://" not in output_dir)
-        ):
-            t0 = _time.perf_counter()
-            counts = _onepass_or_fallback(
+        if counts is None:
+            counts = _convert_per_table(
                 spark,
                 dump_path,
                 output_dir,
                 compression,
                 schemas,
-                multiline=False,
-                forced=strategy == "onepass",
+                multiline=use_multiline,
+                stmt_rows=stmt_rows,
                 progress=progress,
-                stmt_batch_rows=stmt_rows,
             )
-            if counts is not None:
-                if progress:
-                    dt = _time.perf_counter() - t0
-                    for t in schemas:
-                        print(
-                            f"[ingest] {t}: {counts[t]:,} rows (one-pass, "
-                            f"{dt:.1f}s total)",
-                            file=sys.stderr,
-                        )
-                return {t: counts[t] for t in schemas}
-        if not use_multiline:
-            lines = spark.read.text(dump_path).where(_dml_line_pred())
-            if len(schemas) > 1:
-                lines = cached = lines.persist()
-        elif cached is None:
-            lines = None  # multiline fused range parse (per-table jobs)
-        parse_parts: dict[str, int] = {}
-        if len(schemas) > 1 and lines is not None:
-            # One cheap aggregate over the cached lines sizes each table's
-            # parse stage to its byte share (see parse_partition_counts);
-            # the fused multiline path (lines is None) sizes itself by
-            # range instead.
-            cores = spark.sparkContext.defaultParallelism
-            parse_parts = {
-                t.lower(): n
-                for t, n in parse_partition_counts(
-                    lines, cores, len(schemas)
-                ).items()
-            }
-
-        def _one_table(item: tuple[str, T.StructType]) -> tuple[str, int]:
-            table, schema = item
-            t0 = _time.perf_counter()
-            if lines is None:
-                # single-table multiline: reassembly+parse fused in one
-                # stage, statement text never crosses to the JVM
-                df = insert_rows_df_multiline_fused(
-                    spark, dump_path, table, schema
+        elif progress:
+            dt = _time.perf_counter() - t0
+            for t in schemas:
+                print(
+                    f"[ingest] {t}: {counts[t]:,} rows (one-pass, "
+                    f"{dt:.1f}s total)",
+                    file=sys.stderr,
                 )
-            else:
-                # both layouts otherwise converge on insert_rows_df:
-                # ``lines`` holds one-line INSERT statements either way
-                # (native lines for --extended-insert dumps,
-                # range-reassembled statements for multi-line dumps)
-                df = insert_rows_df(
-                    spark,
-                    dump_path,
-                    table,
-                    schema,
-                    lines_df=lines,
-                    parse_partitions=parse_parts.get(table),
-                )
-            obs = Observation(f"ingest_{table}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            codec, level = parse_compression(compression)
-            writer = df.write.mode("overwrite")
-            if level is not None:
-                # parquet-mr reads the level from the JOB's Hadoop conf,
-                # and Spark's file sinks copy writer options into that
-                # conf (newHadoopConfWithOptions), so the level rides
-                # the write instead of mutating the session-global conf
-                # — two convert_dump calls racing on one SparkSession
-                # can no longer cross-apply levels (ADVICE r11; the
-                # override-wins behavior is probed in
-                # tests/test_ingest.py).  ONLY zstd has that knob; a
-                # gzip/brotli level this path cannot honor fails loudly
-                # instead of silently writing at the default level
-                # (review r11; the pyarrow one-pass path honors those
-                # levels fine).
-                if codec != "zstd":
-                    raise ValueError(
-                        f"the per-table Spark writer cannot honor a "
-                        f"{codec} level ({compression!r}); use zstd:N "
-                        f"or a plain codec on this path"
-                    )
-                writer = writer.option(
-                    "parquet.compression.codec.zstd.level", str(level)
-                )
-            writer.parquet(f"{output_dir}/{table}", compression=codec)
-            n = int(obs.get["rows"])
-            if progress:
-                dt = _time.perf_counter() - t0
-                print(f"[ingest] {table}: {n:,} rows in {dt:.1f}s", file=sys.stderr)
-            return table, n
-
-        items = list(schemas.items())
-        live = (
-            ProgressReporter(spark, "ingest")
-            if progress
-            else contextlib.nullcontext()
-        )
-        with live:
-            if len(items) == 1:
-                counts = dict([_one_table(items[0])])
-            else:
-                with ThreadPoolExecutor(
-                    max_workers=min(max_concurrency, len(items))
-                ) as pool:
-                    counts = dict(pool.map(_one_table, items))
-        return {t: counts[t] for t in schemas}  # deterministic table order
-    finally:
-        try:
-            if cached is not None:
-                cached.unpersist()
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-            spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", prev_arb
-            )
+    return {t: counts[t] for t in schemas}  # deterministic table order
 
 
 # --------------------------------------------------------------------------

@@ -153,19 +153,18 @@ def test_cli_export_round_trip(spark, tmp_path, capsys, monkeypatch):
 
 
 def test_cli_strategy_per_table_end_to_end(spark, tmp_path, capsys, monkeypatch):
-    """--strategy per_table drives the classic per-table jobs through the
-    full CLI path (arg parsing → convert → JSON report) and lands the
-    same dataset as the default one-pass path — the object-store-output
-    configuration stays exercised end-to-end, not just via the library
-    differential in test_ingest.py."""
+    """A scheme'd --output drives the per-table jobs through the full CLI
+    path (arg parsing → convert → JSON report) and lands the same dataset
+    as the default one-pass path — the object-store-output configuration
+    stays exercised end-to-end, not just via the library differential in
+    test_ingest.py."""
     monkeypatch.setattr(session_mod, "get_spark", lambda **kw: _NoStop(spark))
     dump = tmp_path / "demo.sql"
     dump.write_text(DEMO_DUMP)
     rc = cli.main(
         [
             str(dump),
-            "--output", str(tmp_path / "pt"),
-            "--strategy", "per_table",
+            "--output", f"file://{tmp_path}/pt",
         ]
     )
     assert rc == 0

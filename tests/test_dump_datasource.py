@@ -13,7 +13,7 @@ import pytest
 from mysqldump_to_parquet_spark.sources.dump_datasource import (
     MysqldumpDataSource,
 )
-from mysqldump_to_parquet_spark.sources.mysqldump import DEMO_DUMP
+from mysqldump_to_parquet_spark.sources.mysqldump import DEMO_DUMP, DumpParseError
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -520,3 +520,62 @@ def test_binary_export_round_trip(registered, spark, tmp_path):
 
     got = sorted((r.id, as_bytes(r.p), as_bytes(r.q)) for r in back.collect())
     assert got == rows
+
+
+MULTILINE_DUMP = (
+    "CREATE TABLE `t` (`id` int NOT NULL, `v` varchar(8));\n"
+    "INSERT INTO `t` VALUES\n(1,'a'),\n(2,'b'),\n(3,'c');\n"
+)
+
+
+@pytest.mark.parametrize("ext", ["sql", "sql.gz"])
+def test_multiline_dump_reads_like_convert(registered, tmp_path, ext):
+    """An INSERT spread over lines (no --extended-insert) reads through
+    format("mysqldump") exactly as convert_dump converts it: the reader
+    and the converter share one statement source and one parse core."""
+    from mysqldump_to_parquet_spark.sources.mysqldump import convert_dump
+
+    p = tmp_path / f"ml.{ext}"
+    if ext.endswith(".gz"):
+        with gzip.open(p, "wt") as fh:
+            fh.write(MULTILINE_DUMP)
+    else:
+        p.write_text(MULTILINE_DUMP)
+    got = sorted(
+        map(
+            tuple,
+            registered.read.format("mysqldump")
+            .option("path", str(p))
+            .option("table", "t")
+            .load()
+            .collect(),
+        )
+    )
+    assert convert_dump(registered, str(p), str(tmp_path / "out")) == {"t": 3}
+    want = sorted(
+        map(tuple, registered.read.parquet(str(tmp_path / "out/t")).collect())
+    )
+    assert got == want == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_schema_found_past_64_mib_of_other_inserts(tmp_path):
+    """mysqldump writes each table's DDL just before its data, so a
+    table's CREATE TABLE can sit far into the dump: schema() finds it
+    past 64 MiB of another table's INSERT lines (a few long lines keep
+    the fixture fast)."""
+    stmt = "INSERT INTO `other` VALUES " + "(1,'x')," * (3 << 20) + "(2,'y');\n"
+    p = tmp_path / "late_ddl.sql"
+    with open(p, "w") as fh:
+        fh.write("CREATE TABLE `other` (`id` int, `v` varchar(4));\n")
+        for _ in range(3):
+            fh.write(stmt)
+        assert fh.tell() > 64 * 1024 * 1024
+        fh.write("CREATE TABLE `late` (`id` bigint NOT NULL, `s` text);\n")
+        fh.write("INSERT INTO `late` VALUES (1,'a');\n")
+    schema = MysqldumpDataSource({"path": str(p), "table": "late"}).schema()
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in schema] == [
+        ("id", "bigint", False),
+        ("s", "string", True),
+    ]
+    with pytest.raises(DumpParseError, match=r"\.schema\("):
+        MysqldumpDataSource({"path": str(p), "table": "absent"}).schema()

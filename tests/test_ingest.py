@@ -475,8 +475,8 @@ def test_xz_one_line_dump_routes_to_python_decode(spark, tmp_path):
 
 
 def test_xz_guard_on_direct_jvm_paths(spark, tmp_path):
-    """Direct collect_schemas / insert_rows_df / onepass callers get a
-    loud error for .xz inputs instead of a garbage JVM text scan."""
+    """Direct collect_schemas / onepass callers get a loud error for .xz
+    inputs instead of a garbage JVM text scan."""
     from mysqldump_to_parquet_spark.sources.mysqldump import (
         collect_schemas,
         convert_dump_onepass,
@@ -623,8 +623,11 @@ def test_multitable_parallel_counts_and_prefilter(spark, tmp_path):
 def test_many_file_dump_skips_text_shuffle(spark, tmp_path):
     """When the dump arrives as many files (input splits ≥ cores), the raw
     INSERT text must NOT be repartitioned — no Exchange below the Python
-    parse stage."""
-    from mysqldump_to_parquet_spark.sources.mysqldump import insert_rows_df
+    parse stage of the per-table fallback."""
+    from mysqldump_to_parquet_spark.sources.mysqldump import (
+        _statement_source,
+        _table_df,
+    )
 
     n_files = spark.sparkContext.defaultParallelism + 2
     ddl = "CREATE TABLE `t` (`id` int);\n"
@@ -642,7 +645,8 @@ def test_many_file_dump_skips_text_shuffle(spark, tmp_path):
     spark.conf.set("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     try:
-        df = insert_rows_df(spark, str(tmp_path / "*.sql"), "t", schema)
+        source = _statement_source(spark, str(tmp_path / "*.sql"), False)
+        df = _table_df(source, "t", schema, multiline=False)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert sorted(r.id for r in df.collect()) == list(range(n_files))
@@ -682,7 +686,7 @@ def test_multitable_conversion_fails_loudly_on_bad_table(spark, tmp_path):
         "INSERT INTO `good2` VALUES (3);\n"
     )
     with pytest.raises(Exception, match="cannot cast ts"):
-        convert_dump(spark, str(dump), str(tmp_path / "out"))
+        convert_dump(spark, str(dump), f"file://{tmp_path}/out")
 
 
 class TestMultilineRangeOwnership:
@@ -750,87 +754,44 @@ class TestMultilineRangeOwnership:
             )
             assert got == want, f"boundary at byte {cut}"
 
-    def test_stmts_df_matches_sequential(self, spark, tmp_path):
-        """The Spark-side statements DataFrame (parallel ranges) yields
-        the same multiset of statements as the sequential grammar."""
+    def _spark_statements(self, spark, path, split_bytes=None):
+        """Statements of the convert's range source, reassembled inside
+        Spark tasks (one task per range)."""
+        import pyarrow as pa
+
         from mysqldump_to_parquet_spark.sources.mysqldump import (
-            multiline_stmts_df,
+            _multiline_ranges,
+            _ranges_df,
+            _source_statements,
         )
 
+        def stmts(batches):
+            got = list(_source_statements(batches, multiline=True))
+            yield pa.RecordBatch.from_pydict({"value": got})
+
+        ranges = _multiline_ranges(spark, path, split_bytes)
+        rows = _ranges_df(spark, ranges).mapInArrow(stmts, "value string")
+        return sorted(r.value for r in rows.collect())
+
+    def test_stmts_df_matches_sequential(self, spark, tmp_path):
+        """The Spark-side range source (parallel ranges) yields the same
+        multiset of statements as the sequential grammar."""
         f = tmp_path / "ml.sql"
         f.write_text(self.DUMP)
-        got = sorted(
-            r.value
-            for r in multiline_stmts_df(
-                spark, str(f), split_bytes=512
-            ).collect()
-        )
+        got = self._spark_statements(spark, str(f), split_bytes=512)
         assert got == sorted(self._sequential())
-
-    def test_cached_and_fused_paths_agree(self, spark, tmp_path):
-        """convert_dump picks fused-per-table below the re-scan budget
-        and the statements cache above it; both pipelines must produce
-        identical rows (the cache path otherwise loses end-to-end
-        coverage at test sizes)."""
-        from mysqldump_to_parquet_spark.sources.mysqldump import (
-            build_schemas,
-            insert_rows_df,
-            insert_rows_df_multiline_fused,
-            iter_statements,
-            multiline_stmts_df,
-        )
-
-        dump = (
-            "CREATE TABLE `a` (`id` bigint NOT NULL, `v` varchar(16));\n"
-            "CREATE TABLE `b` (`id` bigint NOT NULL, `w` double);\n"
-            + "".join(
-                f"INSERT INTO `a` VALUES\n({i},\n'x{i}');\n"
-                f"INSERT INTO `b` VALUES\n({i}, {i}.5),\n({i + 500}, NULL);\n"
-                for i in range(200)
-            )
-        )
-        f = tmp_path / "two.sql"
-        f.write_text(dump)
-        schemas = build_schemas(iter_statements(dump.splitlines()))
-        stmts = multiline_stmts_df(spark, str(f)).persist()
-        try:
-            for t, s in schemas.items():
-                cached = sorted(
-                    map(
-                        tuple,
-                        insert_rows_df(
-                            spark, str(f), t, s, lines_df=stmts
-                        ).collect(),
-                    )
-                )
-                fused = sorted(
-                    map(
-                        tuple,
-                        insert_rows_df_multiline_fused(
-                            spark, str(f), t, s
-                        ).collect(),
-                    )
-                )
-                assert cached == fused and len(cached) > 0, t
-        finally:
-            stmts.unpersist()
 
     def test_gz_member_streams(self, spark, tmp_path):
         """.gz members are unsplittable: streamed whole on one task,
         same statement set."""
         import gzip
 
-        from mysqldump_to_parquet_spark.sources.mysqldump import (
-            multiline_stmts_df,
-        )
-
         f = tmp_path / "ml.sql.gz"
         with gzip.open(f, "wt") as fh:
             fh.write(self.DUMP)
-        got = sorted(
-            r.value for r in multiline_stmts_df(spark, str(f)).collect()
+        assert self._spark_statements(spark, str(f)) == sorted(
+            self._sequential()
         )
-        assert got == sorted(self._sequential())
 
 
 def test_enum_values_with_parens_and_keywords():
@@ -1001,9 +962,9 @@ def test_parse_insert_variants():
 
 
 def test_onepass_matches_per_table_exactly(spark, tmp_path):
-    """strategy='onepass' (single scan, task-side pyarrow writers,
+    """The one-pass convert (single scan, task-side pyarrow writers,
     report-then-commit) must produce value-identical datasets to the
-    classic per-table path across every logical type, including a table
+    per-table fallback across every logical type, including a table
     with zero INSERTs (schema-only dataset)."""
     dump = tmp_path / "op.sql"
     dump.write_text(
@@ -1022,8 +983,9 @@ def test_onepass_matches_per_table_exactly(spark, tmp_path):
             for i in range(300)
         )
     )
-    a = convert_dump(spark, str(dump), str(tmp_path / "a"), strategy="onepass")
-    b = convert_dump(spark, str(dump), str(tmp_path / "b"), strategy="per_table")
+    a = convert_dump(spark, str(dump), str(tmp_path / "a"))
+    # a scheme'd output dir takes the per-table fallback
+    b = convert_dump(spark, str(dump), f"file://{tmp_path}/b")
     assert a == b == {"acct": 300, "log": 300, "empty_t": 0}
     for t in a:
         da = spark.read.parquet(str(tmp_path / "a" / t))
@@ -1032,6 +994,19 @@ def test_onepass_matches_per_table_exactly(spark, tmp_path):
         assert sorted(map(tuple, da.collect())) == sorted(
             map(tuple, db.collect())
         ), t
+
+
+def test_per_table_fallback_reads_mixed_case_table_names(spark, tmp_path):
+    """Table names are lowercased on ingest; the per-table fallback's JVM
+    prefix filter must still route `Users` INSERT lines to table `users`,
+    as the one-pass convert does."""
+    dump = tmp_path / "case.sql"
+    dump.write_text(
+        "CREATE TABLE `Users` (`id` int);\n"
+        "INSERT INTO `Users` VALUES (1),(2);\n"
+    )
+    assert convert_dump(spark, str(dump), str(tmp_path / "a")) == {"users": 2}
+    assert convert_dump(spark, str(dump), f"file://{tmp_path}/b") == {"users": 2}
 
 
 @pytest.mark.parametrize(
@@ -1079,41 +1054,6 @@ def test_convert_dump_replace_and_ignore(spark, tmp_path):
     ig = {x.id: x.v for x in spark.read.parquet(str(tmp_path / "out" / "ig")).collect()}
     assert r == {1: "a", 2: "b"}
     assert ig == {10: "x", 11: "y", 12: "z"}
-
-
-def test_parse_partition_counts_scale_with_bytes(spark):
-    """Parse-stage sizing: small tables get few partitions (never the old
-    2x-cores blanket), large tables scale by ~PARSE_TASK_BYTES chunks."""
-    from mysqldump_to_parquet_spark.sources.mysqldump import (
-        PARSE_TASK_BYTES,
-        parse_partition_counts,
-    )
-
-    big = "INSERT INTO `big` VALUES " + "(1,'x')," * 60_000  # ~0.5 MB
-    rows = [("INSERT INTO `tiny` VALUES (1,'a');",)] + [(big,)] * 12  # ~6 MB
-    lines = spark.createDataFrame(rows, "value string")
-    counts = parse_partition_counts(lines, cores=32, n_tables=2)
-    assert set(counts) == {"big", "tiny"}
-    assert counts["tiny"] == 1  # one 34-byte statement -> one task
-    total_big = 12 * len(big)
-    assert counts["big"] >= total_big // PARSE_TASK_BYTES
-    assert counts["big"] <= 64
-
-
-def test_parse_partition_counts_insert_variants(spark):
-    """REPLACE INTO / INSERT IGNORE statements attribute to their table."""
-    from mysqldump_to_parquet_spark.sources.mysqldump import parse_partition_counts
-
-    rows = [
-        ("INSERT INTO `a` VALUES (1);",),
-        ("REPLACE INTO `b` VALUES (1);",),
-        ("INSERT IGNORE INTO `c` VALUES (1);",),
-        ('INSERT INTO "d" VALUES (1);',),
-        ("INSERT INTO e VALUES (1);",),
-    ]
-    lines = spark.createDataFrame(rows, "value string")
-    counts = parse_partition_counts(lines, cores=8, n_tables=5)
-    assert set(counts) == {"a", "b", "c", "d", "e"}
 
 
 MULTIDB_DUMP = """-- MySQL dump (mysqldump --databases db1 db2)
@@ -1422,8 +1362,6 @@ class TestArrowFastPath:
         columns on NUL-bearing payloads past ~0.5 MB, so NUL travels as
         SOH and maps back in the string columns.  The tokenizer is never
         called, and the rows equal the tokenizer's."""
-        import pyarrow as pa
-
         from mysqldump_to_parquet_spark.sources import mysqldump as md
 
         schema = T.StructType(
@@ -1433,7 +1371,6 @@ class TestArrowFastPath:
                 T.StructField("bal", T.DecimalType(12, 2)),
             ]
         )
-        carrier = T.StructType([md.carrier_field(f) for f in schema.fields])
         pieces = ["a\\0b", "\\0", "it\\'s", "x\\\\0", "\\0\\0,(),", "中\\n"]
         stmts = [
             "INSERT INTO `t` VALUES "
@@ -1452,13 +1389,14 @@ class TestArrowFastPath:
             for tup in md.parse_insert_full(stmt)[2]
         ]
         assert sum("\x00" in r["s"] for r in want) > 10_000
+        for r in want:  # the tokenizer's DECIMAL text → its final value
+            r["bal"] = Decimal(r["bal"])
 
         def no_tokenizer(stmt):
             raise AssertionError("fast-path group fell back to the tokenizer")
 
         monkeypatch.setattr(md, "parse_insert_full", no_tokenizer)
-        batches = list(md._parse_stmts_to_arrow(stmts, "t", schema, carrier))
-        assert pa.Table.from_batches(batches).to_pylist() == want
+        assert md.parse_statements(stmts, "t", schema).to_pylist() == want
 
     def test_binary_group_over_1mb_stays_on_fast_path(self, monkeypatch):
         """A statement group past 1 MB of ``--hex-blob`` output — ``0x…``
@@ -1467,8 +1405,6 @@ class TestArrowFastPath:
         Arrow-CSV read: the scan marks each literal with a stand-in byte
         and the read decodes it by column type.  The tokenizer is never
         called, and the rows equal the tokenizer's."""
-        import pyarrow as pa
-
         from mysqldump_to_parquet_spark.sources import mysqldump as md
 
         ddl = (
@@ -1476,7 +1412,6 @@ class TestArrowFastPath:
             " `bits` bit(8), `big` bit(64), `caption` varchar(40))"
         )
         schema = md.parse_create_table(ddl).schema
-        carrier = T.StructType([md.carrier_field(f) for f in schema.fields])
         payloads = ["0x", "NULL", "0x00275C0A", "0x" + "DEADBEEF" * 40, "X'ff00'"]
         bits = ["b'101'", "b''", "NULL", "0x0F", "7", "B'11111111'"]
         bigs = [f"b'{'1' * 64}'", "0xFFFFFFFFFFFFFFFF", "0x01", "NULL", "12"]
@@ -1498,13 +1433,14 @@ class TestArrowFastPath:
             for stmt in stmts
             for tup in md.parse_insert_full(stmt)[2]
         ]
+        for r in want:  # BIT(64) rides DECIMAL(20,0): text → final value
+            r["big"] = None if r["big"] is None else Decimal(r["big"])
 
         def no_tokenizer(stmt):
             raise AssertionError("fast-path group fell back to the tokenizer")
 
         monkeypatch.setattr(md, "parse_insert_full", no_tokenizer)
-        batches = list(md._parse_stmts_to_arrow(stmts, "b", schema, carrier))
-        assert pa.Table.from_batches(batches).to_pylist() == want
+        assert md.parse_statements(stmts, "b", schema).to_pylist() == want
 
     def test_fast_path_matches_exhaustive_on_generated_rows(self):
         """Differential: the Arrow path and the exhaustive tokenizer parse
@@ -1650,27 +1586,27 @@ class TestArrowFastPath:
         assert ok.column("score").to_pylist() == [None, 2.5]
 
 
-def test_statement_longer_than_split_parses_once(spark, tmp_path):
-    """A single INSERT line LARGER than the 2 MB parse split must parse
-    exactly once with no row loss or duplication: Hadoop's line reader
-    assigns a line to the split containing its start and reads past the
-    split end — the splittable-parse contract this pins."""
-    from mysqldump_to_parquet_spark.sources.mysqldump import (
-        PARSE_TASK_BYTES,
-        convert_dump,
-    )
+def test_statement_longer_than_split_parses_once(
+    spark, tmp_path, monkeypatch
+):
+    """A single INSERT line LARGER than the parse split (1 MiB here) must
+    parse exactly once with no row loss or duplication: Hadoop's line
+    reader assigns a line to the split containing its start and reads
+    past the split end — the splittable-parse contract this pins."""
+    from mysqldump_to_parquet_spark.sources import mysqldump as M
 
+    monkeypatch.setattr(M, "_ONEPASS_SPLIT_BYTES", 1024 * 1024)
     n_rows = 90_000  # ~32 B/row -> one ~2.9 MB statement line
     vals = ",".join(f"({i},'user_{i:08d}',{i}.5)" for i in range(n_rows))
     stmt = f"INSERT INTO `t` VALUES {vals};\n"
-    assert len(stmt) > PARSE_TASK_BYTES
+    assert len(stmt) > 2 * M._ONEPASS_SPLIT_BYTES
     dump = tmp_path / "big.sql"
     dump.write_text(
         "CREATE TABLE `t` (`id` bigint NOT NULL, `name` varchar(20), "
         "`score` double);\n" + stmt
     )
     out = tmp_path / "out"
-    counts = convert_dump(spark, str(dump), str(out))
+    counts = M.convert_dump(spark, str(dump), str(out))
     assert counts == {"t": n_rows}
     back = spark.read.parquet(f"{out}/t")
     assert back.count() == n_rows
@@ -1827,7 +1763,7 @@ def test_empty_or_lowercase_dump_fails_loud(spark, tmp_path):
 
 
 def test_onepass_scales_in_table_count(spark, tmp_path):
-    """The one-pass strategy's cost is one scan regardless of table
+    """The one-pass convert's cost is one scan regardless of table
     count (the classic per-table path re-reads the statement cache T
     times — the design note in convert_dump).  200 tables convert in a
     single pass with correct per-table routing; the one-scan property is
@@ -1841,9 +1777,7 @@ def test_onepass_scales_in_table_count(spark, tmp_path):
             fh.write(f"INSERT INTO `t{t:03d}` VALUES {vals};\n")
     tracker = spark.sparkContext.statusTracker()
     jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    counts = convert_dump(
-        spark, str(dump), str(tmp_path / "out"), strategy="onepass"
-    )
+    counts = convert_dump(spark, str(dump), str(tmp_path / "out"))
     jobs_run = len(tracker.getJobIdsForGroup(None) or []) - jobs_before
     assert counts == {f"t{t:03d}": 30 for t in range(200)}
     # spot-check routing: values landed in their own table
@@ -1870,14 +1804,14 @@ def test_bit64_full_range_and_introducer_literals(spark, tmp_path):
         f"(1,b'{'1' * 64}',b'1',_binary X'DEAD'),"
         f"(2,0xFFFFFFFFFFFFFFFF,_binary b'11',_binary 0x41);\n"
     )
-    for strategy in ("onepass", "per_table"):
-        out = str(tmp_path / f"out_{strategy}")
-        convert_dump(spark, str(dump), out, strategy=strategy)
+    # a plain path converts one-pass; a scheme'd one per table
+    for out in (str(tmp_path / "out_onepass"), f"file://{tmp_path}/out_pt"):
+        convert_dump(spark, str(dump), out)
         got = {
             r.id: (int(r.big), r.small, bytes(r.payload))
             for r in spark.read.parquet(f"{out}/t").collect()
         }
-        assert got == {1: (full, 1, b"\xde\xad"), 2: (full, 3, b"A")}, strategy
+        assert got == {1: (full, 1, b"\xde\xad"), 2: (full, 3, b"A")}, out
 
 
 def test_mixed_plain_and_gzip_glob(spark, tmp_path):

@@ -1,7 +1,7 @@
-"""Guards around the one-pass strategy's shared-filesystem contract
+"""Guards around the one-pass convert's shared-filesystem contract
 (ADVICE r5): scheme'd output must never be abspath-mangled into a local
-path, and a non-shared staging directory must fail loud (forced) or fall
-back (auto) instead of surfacing as FileNotFoundError after the parse.
+path, and a non-shared staging directory must fall back to the per-table
+writers instead of surfacing as FileNotFoundError after the parse.
 """
 
 from __future__ import annotations
@@ -20,15 +20,12 @@ DUMP = (
 
 
 def test_forced_onepass_scheme_output_raises(spark, tmp_path):
-    """strategy='onepass' with an object-store URI fails before any work
-    — previously os.path.abspath mangled it into <cwd>/s3:/bucket/out and
-    wrote locally while reporting success."""
+    """The one-pass entry point with an object-store URI fails before any
+    work — previously os.path.abspath mangled it into <cwd>/s3:/bucket/out
+    and wrote locally while reporting success.  (convert_dump routes such
+    output to the per-table writers before it gets here.)"""
     dump = tmp_path / "d.sql"
     dump.write_text(DUMP)
-    with pytest.raises(ValueError, match="onepass"):
-        M.convert_dump(spark, str(dump), "s3://bucket/out", strategy="onepass")
-    # the direct entry point carries the same guard (covers callers that
-    # bypass convert_dump, same policy as the zero-table guard)
     with pytest.raises(ValueError, match="scheme"):
         M.convert_dump_onepass(spark, str(dump), "s3a://bucket/out")
 
@@ -54,9 +51,8 @@ def test_staging_probe_detects_invisible_marker(spark, tmp_path, monkeypatch):
 def test_auto_falls_back_per_table_when_staging_invisible(
     spark, tmp_path, monkeypatch
 ):
-    """strategy='auto' on a cluster whose executors cannot share the
-    output filesystem silently selects the per-table JVM writers; forced
-    'onepass' propagates the probe failure."""
+    """convert_dump on a cluster whose executors cannot share the output
+    filesystem silently selects the per-table Spark writers."""
     dump = tmp_path / "d.sql"
     dump.write_text(DUMP)
 
@@ -69,10 +65,6 @@ def test_auto_falls_back_per_table_when_staging_invisible(
     assert counts == {"t": 3}
     got = {r.id: r.v for r in spark.read.parquet(str(out / "t")).collect()}
     assert got == {1: "a", 2: "b", 3: "c"}
-    with pytest.raises(M.OnepassStagingInvisible):
-        M.convert_dump(
-            spark, str(dump), str(tmp_path / "out2"), strategy="onepass"
-        )
 
 
 def test_staging_lifecycle_clean_and_orphan_gc(spark, tmp_path):
@@ -91,7 +83,7 @@ def test_staging_lifecycle_clean_and_orphan_gc(spark, tmp_path):
     dump.write_text(DUMP)
     out = tmp_path / "out"
 
-    counts = M.convert_dump(spark, str(dump), str(out), strategy="onepass")
+    counts = M.convert_dump(spark, str(dump), str(out))
     assert counts == {"t": 3}
     assert not [p for p in os.listdir(out) if p.startswith("_staging_")]
 
@@ -107,7 +99,7 @@ def test_staging_lifecycle_clean_and_orphan_gc(spark, tmp_path):
     os.utime(orphan / "part-00000-x.parquet", (old, old))
     os.utime(orphan, (old, old))
 
-    counts = M.convert_dump(spark, str(dump), str(out), strategy="onepass")
+    counts = M.convert_dump(spark, str(dump), str(out))
     assert counts == {"t": 3}
     assert not orphan.exists()  # swept
     assert live.exists()  # a concurrent convert's staging survives

@@ -10,6 +10,8 @@ default packing), mixed column types including the reference's five plus
 the fixed-forward DECIMAL/DATE/BOOLEAN.
 
     python tools/bench_ingest.py [--mb 64] [--tables 8]
+    python tools/bench_ingest.py --dumpgen-seed 1 --mb 160 --keep-dump
+    python tools/bench_ingest.py --dump-path DUMP [--file-uri]
 
 Prints ONE JSON line: {"dump_mb": ..., "rows": ..., "wall_s": ...,
 "mb_per_s": ..., "rows_per_s": ...}.  The dump is generated to a temp
@@ -172,6 +174,24 @@ def main() -> None:
         "reuse.  The caller owns cleanup.",
     )
     ap.add_argument(
+        "--dumpgen-seed",
+        type=int,
+        default=None,
+        metavar="SEED",
+        help="generate the dump with perfbench/dumpgen.py (the `ingest` "
+        "workload's 8-table dump, all mapped types, escapes, binary "
+        "literals) at this seed and --mb size, instead of the "
+        "round-robin bench_N tables; --tables is then ignored",
+    )
+    ap.add_argument(
+        "--file-uri",
+        action="store_true",
+        help="hand the output dir to convert_dump as a file:// URI: "
+        "output with a scheme takes the per-table fallback (one Spark "
+        "Parquet write per table) instead of the one-pass task-side "
+        "writers, so the same dump times both paths",
+    )
+    ap.add_argument(
         "--dump-path",
         default=None,
         metavar="FILE",
@@ -180,6 +200,8 @@ def main() -> None:
         "generation).  Incompatible with --gzip/--multiline reshaping.",
     )
     args = ap.parse_args()
+    if args.dumpgen_seed is not None and args.dump_path:
+        ap.error("--dumpgen-seed generates a dump; --dump-path reuses one")
     if args.dump_path and (args.gzip or args.multiline):
         ap.error("--dump-path reuses a plain dump; cannot reshape it")
     if args.keep_dump and (args.gzip or args.multiline):
@@ -217,12 +239,21 @@ def main() -> None:
             # reuse run must inherit it, or the per-table round-robin
             # assertions (and the recorded `tables`) silently lie
             args.tables = side["tables"]
+            table_rows = side.get("table_rows")
         else:
             dump = os.path.join(work, "bench.sql")
-            rows = generate_dump(dump, args.mb, args.tables)
+            table_rows = None
+            if args.dumpgen_seed is not None:
+                from perfbench import dumpgen
+
+                record = dumpgen.generate(dump, args.dumpgen_seed, args.mb)
+                table_rows = {t: r["rows"] for t, r in record["tables"].items()}
+                rows, args.tables = sum(table_rows.values()), len(table_rows)
+            else:
+                rows = generate_dump(dump, args.mb, args.tables)
             with open(dump + ".rows", "w") as fh:
                 json.dump({"rows": rows, "tables": args.tables,
-                           "mb": args.mb}, fh)
+                           "mb": args.mb, "table_rows": table_rows}, fh)
         dump_mb = os.path.getsize(dump) / 1024 / 1024
         if args.multiline:
             # rewrite each extended INSERT as a multi-line statement:
@@ -297,7 +328,8 @@ def main() -> None:
                 f.write(f"INSERT INTO `warm` VALUES\n{_row(1)};\n")
             else:
                 f.write(f"INSERT INTO `warm` VALUES {_row(1)};\n")
-        convert_dump(spark, warm, os.path.join(warmdir, "warm_out"))
+        warm_out = os.path.join(warmdir, "warm_out")
+        convert_dump(spark, warm, f"file://{warm_out}" if args.file_uri else warm_out)
         # spawn the full Python-worker pool up front (same startup-cost
         # policy as the JVM warmup: worker fork+import is session setup,
         # not conversion throughput; both layouts benefit equally)
@@ -368,7 +400,7 @@ def main() -> None:
             got = reader.load().count()
             wall = time.perf_counter() - t0
             # the scan reads the WHOLE dump; rows credited are bench_0's
-            expected = sum(
+            expected = table_rows["bench_0"] if table_rows else sum(
                 1 for i in range(rows) if (i // ROWS_PER_STMT) % args.tables == 0
             )
             assert got == expected, (got, expected)
@@ -382,7 +414,10 @@ def main() -> None:
                 out = os.path.join(work, "out")
             t0 = time.perf_counter()
             counts = convert_dump(
-                spark, dump, out, compression=args.compression
+                spark,
+                dump,
+                f"file://{out}" if args.file_uri else out,
+                compression=args.compression,
             )
             wall = time.perf_counter() - t0
 
@@ -408,6 +443,7 @@ def main() -> None:
         }
         if not args.datasource:
             rec["compression"] = args.compression
+            rec["file_uri"] = args.file_uri
             rec["out_mb"] = round(out_bytes / 1048576, 1)
         if args.gzip:
             rec["input_codec"] = args.codec
