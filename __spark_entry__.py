@@ -160,8 +160,8 @@ _CHECK_ORDER = (
         "q_sim_ann_ivf_batch", "q_sim_ann_ivf_partitioned",
         "q_sim_knn_join_exact", "q_embed_centroids", "q_embed_quantize",
         "q_join_dpp", "q_knn_classify", "q_lateral_topk",
-        "q_sim_ann_ivfpq", "q_sink_partitioned", "q_subquery_scalar",
-        "q_tpch_q10", "q_tpch_q18", "q_tpch_q3", "q_tpch_q5",
+        "q_sink_partitioned", "q_subquery_scalar", "q_tpch_q10",
+        "q_tpch_q18", "q_tpch_q3", "q_tpch_q5",
         "q_attribution_channels", "q_bm25", "q_cdc_apply",
         "q_chunk_tokens", "q_conversion_latency", "q_cooccur_pmi",
         "q_curation_report", "q_dedup_url", "q_fn_variant", "q_funnel",
@@ -249,9 +249,9 @@ _VERIFIED = frozenset({
         "q_scd2", "q_sessionize", "q_set_except", "q_set_except_all",
         "q_set_intersect", "q_set_intersect_all", "q_set_union",
         "q_sim_ann_ivf", "q_sim_ann_ivf_batch",
-        "q_sim_ann_ivf_partitioned", "q_sim_ann_ivfpq",
-        "q_sim_knn_join_exact", "q_sim_knn_join_ivf", "q_sim_radius",
-        "q_sim_topk", "q_sink_partitioned", "q_skyline", "q_sort_limit",
+        "q_sim_ann_ivf_partitioned", "q_sim_knn_join_exact",
+        "q_sim_knn_join_ivf", "q_sim_radius", "q_sim_topk",
+        "q_sink_partitioned", "q_skyline", "q_sort_limit",
         "q_source_overlap", "q_split_drift", "q_split_hash",
         "q_src_csv", "q_src_dump_datasource", "q_src_evolution",
         "q_src_json", "q_src_nested", "q_src_orc", "q_src_xml",

@@ -10,11 +10,11 @@ Two paths, as a real ANN stack is layered:
 * **IVF ANN** (`q_sim_ann_ivf*`) — the scale path and the one ANN index:
   a spherical k-means coarse quantizer (spark.ml KMeans, fit once per
   corpus on a bounded sample) assigns each vector to a cell; the corpus
-  is written ``partitionBy`` cell as int8 and 8-byte PQ codes, and a
+  is written ``partitionBy`` cell as one int8 code per vector, and a
   probe reads only its nearest ``IVF_SCAN_FRACTION`` of cells, then
-  re-ranks the survivors by exact cosine.  The kNN join, the
-  dedup-against-index gate and the incremental append all run on the
-  same layout.
+  re-ranks the survivors by exact cosine.  The serial and batched
+  probes, the kNN join, the dedup-against-index gate and the
+  incremental append all read that one code column.
 """
 
 from __future__ import annotations
@@ -469,85 +469,57 @@ def _quantize_codes(mat):
     return codes, np.where(amax > 0, safe, 0.0)
 
 
-def _ivf_encode(df: DataFrame, centroids, codebooks=None) -> DataFrame:
-    """The ONE (vec_id, code, scale[, pq_code], cell) encode plan both
-    the full layout build and the incremental append write through —
-    extracted from :func:`write_ivf_partitioned` (VERDICT r15 task 2)
-    so the appended rows can never drift from the built rows in
-    quantizer, rounding, or column order."""
+def _ivf_encode(df: DataFrame, centroids) -> DataFrame:
+    """The ONE (vec_id, code, cell) encode plan both the full layout
+    build and the incremental append write through — extracted from
+    :func:`write_ivf_partitioned` (VERDICT r15 task 2) so the appended
+    rows can never drift from the built rows in quantizer, rounding,
+    or column order."""
     from pyspark.sql.functions import pandas_udf
 
     dim = len(PROBE)
 
-    @pandas_udf("struct<code: array<tinyint>, scale: double>")
-    def _codes(vs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
+    @pandas_udf("array<tinyint>")
+    def _codes(vs: pd.Series) -> pd.Series:
         valid, mat = _masked_rows(vs, dim)
-        codes, scale = _quantize_codes(mat)
+        codes, _ = _quantize_codes(mat)
         # scatter valid rows back by hand — pandas/NumPy masked
         # assignment coerces a list of arrays into a 2-D block and
         # rejects it; the loop is O(batch) pointer stores, the math
         # above stays vectorized
-        out_c = [None] * len(vs)
-        out_s = [None] * len(vs)
+        out = [None] * len(vs)
         j = 0
         for i, ok in enumerate(valid):
             if ok:
-                out_c[i] = codes[j]
-                out_s[i] = float(scale[j])
+                out[i] = codes[j]
                 j += 1
-        return pd.DataFrame(
-            {
-                "code": pd.Series(out_c, dtype=object),
-                "scale": pd.Series(out_s, dtype=object),
-            }
-        )
+        return pd.Series(out, dtype=object)
 
     assigned = ivf_assign(
         df.withColumn("_v", _unit_expr(F.col("embedding"))), "_v", centroids
     )
-    cols = [
-        "vec_id",
-        F.col("_q.code").alias("code"),
-        F.col("_q.scale").alias("scale"),
-        "cell",
-    ]
-    coded = assigned.withColumn("_q", _codes(F.col("_v")))
-    if codebooks is not None:
-        # 8-byte PQ codes beside the 64-byte int8 codes: the
-        # bandwidth-bound candidate scan (sim_ann_ivfpq) reads ONLY
-        # this column — column pruning keeps the int8 probe's bytes
-        # unchanged, and the layout grows ~3 %.
-        coded = coded.withColumn(
-            "pq_code", _pq_encode_udf(codebooks)(F.col("_v"))
-        )
-        cols.insert(3, "pq_code")
-    return coded.select(*cols)
+    return assigned.select("vec_id", _codes(F.col("_v")).alias("code"), "cell")
 
 
-def write_ivf_partitioned(
-    df: DataFrame, out_path: str, centroids, codebooks=None
-) -> None:
+def write_ivf_partitioned(df: DataFrame, out_path: str, centroids) -> None:
     """Materialize the deploy-time IVF layout: **int8 codes**, written
     ``partitionBy`` the coarse-quantizer cell id (assignment on the
     L2-normalized vectors, same spherical geometry as the fit), so a
     probe is a partition-pruned read of nprobe/cells of the data — and
     of ~¼ the bytes per row the pre-r11 float layout paid (64×1 B codes
-    + one double scale vs 64×4 B raw floats; VERDICT r10 #2).
+    vs 64×4 B raw floats; VERDICT r10 #2).
 
-    The layout stores ``(vec_id, code, scale)`` only — the float
-    vectors stay in the source corpus, which the probe's exact re-rank
-    reads for its ≤IVF_RERANK survivors (at 100 TB that fetch is an
-    id-keyed point read against the primary store, never a scan; the
-    index itself shrinks ~3.7×).  Codes quantize the UNIT vector, so
-    ``code·p̂ / ‖code‖`` approximates the cosine the re-rank finalizes;
-    the per-vector ``scale`` column keeps the layout self-contained for
-    consumers that need approximate reconstruction.  One file per cell:
-    the codes are hash-partitioned on ``cell`` before ``partitionBy``
-    (without it every task emits a file into every directory it touches
-    — tasks × cells small files), which also keeps a probe's pruned read
-    a handful of large sequential files at scale.
+    The layout stores ``(vec_id, code)`` only — the float vectors stay
+    in the source corpus, which the probe's exact re-rank reads for its
+    ≤IVF_RERANK survivors (at 100 TB that fetch is an id-keyed point
+    read against the primary store, never a scan; the index itself
+    shrinks ~4×).  Codes quantize the UNIT vector, so ``code·p̂ /
+    ‖code‖`` approximates the cosine the re-rank finalizes; cosine
+    ignores a vector's length, so no per-vector scale is stored.  One
+    file per cell: the codes are hash-partitioned on ``cell`` before
+    ``partitionBy`` (without it every task emits a file into every
+    directory it touches — tasks × cells small files), which also keeps
+    a probe's pruned read a handful of large sequential files at scale.
 
     Degraded rows (null / wrong-dim embedding) are filtered OUT here —
     the layout never carries a ``__HIVE_DEFAULT_PARTITION__``
@@ -556,143 +528,12 @@ def write_ivf_partitioned(
     the same :func:`_well_formed` filter) stays exactly symmetric with
     a from-scratch rebuild on such corpora (review r15)."""
     (
-        _ivf_encode(_well_formed(df), centroids, codebooks)
+        _ivf_encode(_well_formed(df), centroids)
         .repartition("cell")
         .write.partitionBy("cell")
         .mode("overwrite")
         .parquet(out_path)
     )
-
-
-# ------------------------------------------------------ product quantization
-
-#: PQ geometry (the FAISS IVF-PQ recipe): the 64-dim unit vector splits
-#: into PQ_M contiguous subspaces of 64/PQ_M dims; each subvector is
-#: replaced by the id of its nearest subspace centroid.  PQ_K = 256
-#: centroids per subspace → ONE BYTE per subspace, so a vector's PQ
-#: code is PQ_M bytes — 8 here, vs 64 for the int8 code and 256 for
-#: float32 — the representation that makes billion-row candidate scans
-#: memory-bandwidth-feasible.  The ADC score is exact-reconstruction
-#: dot: cos(v, p) ≈ v̂_reconstructed · p̂ = Σ_m (c_{m,code_m} · p̂_m),
-#: a per-probe (PQ_M × PQ_K) lookup table, and the top-IVF_RERANK
-#: survivors are exact-re-ranked from the source corpus exactly like
-#: the int8 path — so PQ only has to get the true top-10 into the top
-#: ~4k.
-PQ_M = 8
-PQ_K = 256
-PQ_ITERS = 15
-
-#: Sentinel coordinate for unused codebook rows (k < PQ_K on tiny
-#: corpora): far enough that a padded row can never win an argmin
-#: against any real unit-vector centroid.
-_PQ_PAD = 1.0e6
-
-#: Fit-once cache: corpus dir → (fingerprint, (PQ_M, PQ_K, dsub)
-#: codebook tensor) — same lifecycle as _IVF_CENTROIDS.
-_PQ_CODEBOOKS: dict[str, tuple[tuple, "object"]] = {}
-
-
-def _kmeans_np(x, k: int, seed: int, iters: int = PQ_ITERS):
-    """Seeded NumPy Lloyd k-means for the tiny per-subspace fits
-    (≤ ~32k × 8 doubles — a driver-side codebook fit, exactly like
-    FAISS trains PQ codebooks on a bounded sample).  Empty clusters
-    keep their previous centroid (standard small-k fallback)."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    k = max(1, min(k, len(x)))
-    cent = x[rng.choice(len(x), size=k, replace=False)].copy()
-    for _ in range(iters):
-        d2 = (
-            (x * x).sum(1)[:, None]
-            - 2.0 * (x @ cent.T)
-            + (cent * cent).sum(1)[None, :]
-        )
-        assign = d2.argmin(1)
-        for j in range(k):
-            m = assign == j
-            if m.any():
-                cent[j] = x[m].mean(0)
-    return cent
-
-
-def pq_codebooks(spark: SparkSession, sf_dir: str):
-    """Per-subspace PQ codebooks for ``sf_dir``, fit exactly once on the
-    same seeded-uniform unit-vector sample policy as the coarse
-    quantizer (a sorted/clustered corpus must not bias the fit)."""
-    import numpy as np
-
-    fp = _corpus_fingerprint(sf_dir)
-    hit = _PQ_CODEBOOKS.get(sf_dir)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    with _CACHE_LOCK:
-        hit = _PQ_CODEBOOKS.get(sf_dir)
-        if hit is None or hit[0] != fp:
-            e = _well_formed(load_table(spark, sf_dir, "embeddings"))
-            n = e.count()
-            target = _ivf_fit_sample_target(PQ_K)
-            frac = min(1.0, 1.05 * float(target) / max(n, 1))
-            src = e if frac >= 1.0 else e.sample(fraction=frac, seed=42)
-            rows = src.select(
-                _unit_expr(F.col("embedding")).alias("v")
-            ).collect()
-            x = np.array([r.v for r in rows if r.v is not None], float)
-            dim = len(PROBE)
-            dsub = dim // PQ_M
-            # Padding for the k < PQ_K tail (tiny corpora) is a HUGE
-            # sentinel, not zero: a zero "centroid" sits at the origin
-            # and WINS the encoder's argmin for any subvector closer to
-            # the origin than to a real centroid (review r11) — the
-            # sentinel makes padded rows unreachable by construction,
-            # so padded ids are never emitted and their garbage ADC lut
-            # entries are never referenced.
-            books = np.full((PQ_M, PQ_K, dsub), _PQ_PAD)
-            if len(x) == 0:
-                # zero usable vectors: one real origin centroid per
-                # subspace — every (nonexistent) probe candidate would
-                # code to 0; mirrors ivf_centroids' k<2 degenerate path
-                # instead of crashing the layout build (review r11)
-                books[:, 0] = 0.0
-            else:
-                for m in range(PQ_M):
-                    sub = x[:, m * dsub : (m + 1) * dsub]
-                    cent = _kmeans_np(sub, PQ_K, seed=42 + m)
-                    books[m, : len(cent)] = cent
-            _PQ_CODEBOOKS[sf_dir] = (fp, books)
-        return _PQ_CODEBOOKS[sf_dir][1]
-
-
-def _pq_encode_udf(books):
-    """pandas_udf: unit-vector column → PQ code as ``binary`` (PQ_M
-    bytes; uint8 subspace centroid ids — Spark's tinyint is signed, so
-    bytes is the honest container)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    b = np.ascontiguousarray(books)  # (m, k, dsub)
-    bsq = (b * b).sum(axis=2)  # (m, k)
-    dim = len(PROBE)
-    dsub = dim // PQ_M
-
-    @pandas_udf("binary")
-    def _enc(vs: pd.Series) -> pd.Series:
-        valid, mat = _masked_rows(vs, dim)
-        n = len(mat)
-        codes = np.zeros((n, PQ_M), dtype=np.uint8)
-        for m in range(PQ_M):
-            sub = mat[:, m * dsub : (m + 1) * dsub]  # (n, dsub)
-            d2 = bsq[m][None, :] - 2.0 * (sub @ b[m].T)  # (n, k)
-            codes[:, m] = d2.argmin(1).astype(np.uint8)
-        out = [None] * len(vs)
-        j = 0
-        for i, ok in enumerate(valid):
-            if ok:
-                out[i] = bytes(codes[j])
-                j += 1
-        return pd.Series(out, dtype=object)
-
-    return _enc
 
 
 #: Session cache: sf_dir → (corpus fingerprint, written IVF layout root),
@@ -712,12 +553,7 @@ def _ivf_layout_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def _build(corpus, root):
         cells = os.path.join(root, "cells")
-        write_ivf_partitioned(
-            corpus,
-            cells,
-            ivf_centroids(spark, sf_dir),
-            pq_codebooks(spark, sf_dir),
-        )
+        write_ivf_partitioned(corpus, cells, ivf_centroids(spark, sf_dir))
         # Fit-time per-cell row counts, the reference distribution the
         # append path's staleness signal compares against (VERDICT r15
         # task 2).  A parquet count is footer metadata — no row scan.
@@ -734,14 +570,7 @@ def _ivf_layout_dir(spark: SparkSession, sf_dir: str) -> str:
         }
         with open(os.path.join(root, "ivf_meta.json"), "w") as f:
             json.dump(
-                {
-                    "fit_cell_sizes": sizes,
-                    "fit_total": sum(sizes.values()),
-                    # recorded so the append path never has to infer
-                    # the layout schema by re-listing every cell dir
-                    # (r16, guide §6)
-                    "pq": "pq_code" in reader.schema.names,
-                },
+                {"fit_cell_sizes": sizes, "fit_total": sum(sizes.values())},
                 f,
             )
 
@@ -936,8 +765,8 @@ def ivf_index_append(
     is micro-batch-sized).
 
     Mechanics: the batch rides the SAME encode plan as the build
-    (:func:`_ivf_encode` — existing centroids route, existing PQ
-    codebooks encode, so appended rows are byte-identical to what a
+    (:func:`_ivf_encode` — existing centroids route and the one int8
+    quantizer encodes, so appended rows are byte-identical to what a
     rebuild under the same quantizer writes), lands as NEW part files
     under the existing ``cell=N`` directories (``mode("append")`` +
     ``partitionBy`` — old files are never rewritten; pytest pins their
@@ -972,8 +801,6 @@ def ivf_index_append(
     bounded leak the eviction path already documents."""
     import os
 
-    import json
-
     with _CACHE_LOCK:  # fast lookups only — no Spark jobs under it
         hit = _IVF_LAYOUTS.get(sf_dir)
         if hit is None:
@@ -992,27 +819,6 @@ def ivf_index_append(
                 "the fit-time quantizer"
             )
         centroids = cent_hit[1]
-        pq_hit = _PQ_CODEBOOKS.get(sf_dir)
-        codebooks = pq_hit[1] if pq_hit is not None else None
-
-    # "does this layout carry PQ codes" comes from the build's own
-    # metadata (one local json read, r16 guide §6) instead of
-    # spark.read.parquet(cells_dir) schema inference, which eagerly
-    # LISTS every cell directory — at streaming-epoch cadence that
-    # listing grows with every appended file (the r15 soak's p95
-    # tail).  Fallback covers a layout whose meta predates the key.
-    with open(os.path.join(root, "ivf_meta.json")) as f:
-        meta = json.load(f)
-    if "pq" in meta:
-        has_pq = bool(meta["pq"])
-    else:
-        has_pq = "pq_code" in spark.read.parquet(cells_dir).schema.names
-    if has_pq and codebooks is None:
-        raise ValueError(
-            f"layout at {cells_dir!r} carries pq_code but no PQ "
-            "codebooks are cached — appending without them would "
-            "fork the layout schema"
-        )
 
     if verify_primary:
         e = load_table(spark, sf_dir, "embeddings")
@@ -1036,9 +842,9 @@ def ivf_index_append(
     # discipline, now shared)
     n_in = admitted.count()
     well_formed = _well_formed(admitted.select("vec_id", "embedding"))
-    coded = _ivf_encode(
-        well_formed, centroids, codebooks if has_pq else None
-    ).localCheckpoint(eager=True)  # one encode: counts + write
+    coded = _ivf_encode(well_formed, centroids).localCheckpoint(
+        eager=True
+    )  # one encode: counts + write
     writable = coded.where(F.col("cell").isNotNull())
     # ONE job over the checkpointed batch yields both the routable
     # count and the batch's distinct cells with their sizes (r16 —
@@ -1100,8 +906,6 @@ def ivf_index_append(
         # new part files).
         fp_new = _corpus_fingerprint(sf_dir)
         _IVF_CENTROIDS[sf_dir] = (fp_new, centroids)
-        if codebooks is not None:
-            _PQ_CODEBOOKS[sf_dir] = (fp_new, codebooks)
         _IVF_LAYOUTS[sf_dir] = (fp_new, root)
         _IVF_LAYOUT_DFS.pop(sf_dir, None)
         # advance the incremental staleness counts with this append's
@@ -1134,10 +938,9 @@ def ivf_index_refit(spark: SparkSession, sf_dir: str) -> dict:
     last piece of the index lifecycle (build → probe → gate → append →
     staleness → REFIT): drop the session quantizer/layout caches for
     ``sf_dir`` and rebuild from the current primary store, so the
-    centroids and PQ codebooks are REFIT on the grown corpus (the
-    opposite contract to :func:`ivf_index_append`, which deliberately
-    reuses the fit-time quantizer and so accumulates the drift this
-    call clears).
+    centroids are REFIT on the grown corpus (the opposite contract to
+    :func:`ivf_index_append`, which deliberately reuses the fit-time
+    quantizer and so accumulates the drift this call clears).
 
     Eviction follows `_cached_layout`'s lifecycle exactly: cache
     entries are popped, the stale tree is NOT deleted eagerly
@@ -1151,7 +954,6 @@ def ivf_index_refit(spark: SparkSession, sf_dir: str) -> dict:
         _IVF_LAYOUTS.pop(sf_dir, None)
         _IVF_LAYOUT_DFS.pop(sf_dir, None)
         _IVF_CENTROIDS.pop(sf_dir, None)
-        _PQ_CODEBOOKS.pop(sf_dir, None)
         _IVF_CELL_COUNTS.pop(sf_dir, None)
     _ivf_layout_dir(spark, sf_dir)  # rebuild = refit + rewrite
     return ivf_index_staleness(spark, sf_dir)
@@ -1188,9 +990,10 @@ def sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. **Code scan**: read ONLY the probed cell directories of the
        layout (``cell IN (…)`` reaches the scan as a PartitionFilter),
-       rank by the int8 approximation ``code·p̂ / ‖code‖`` (per-vector
-       scale cancels out of cosine), keep the top IVF_RERANK ids —
-       ≤4096 ids to the driver, the probe's only collect.
+       rank by the int8 approximation ``code·p̂ / ‖code‖`` (the
+       quantizer's per-vector scale cancels out of cosine), keep the
+       top IVF_RERANK ids — ≤4096 ids to the driver, the probe's only
+       collect.
     2. **Exact re-rank**: fetch the survivors' float vectors from the
        source corpus (id-keyed point read at scale; a pushed
        ``vec_id IN`` filter here) and rank by exact cosine.
@@ -1201,75 +1004,61 @@ def sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate counts, so the re-ranked top-10 is bit-identical too
     (pytest-asserted).
 
-    NOTE: phase 1 executes when the DataFrame is BUILT (this and the PQ
-    variant are the registry's only eager probes) — the returned plan
-    embeds the survivor-id snapshot, the correct semantics for a
-    point-in-time probe, but plan-only consumers (gen_plans) pay the
-    candidate scan."""
-    return ivf_probe_topk(spark, sf_dir, PROBE, variant="int8")
+    NOTE: phase 1 executes when the DataFrame is BUILT (this is the
+    registry's only eager probe) — the returned plan embeds the
+    survivor-id snapshot, the correct semantics for a point-in-time
+    probe, but plan-only consumers (gen_plans) pay the candidate
+    scan."""
+    return ivf_probe_topk(spark, sf_dir, PROBE)
+
+
+def _code_scores(codes: pd.Series, hats):
+    """The ONE int8 scorer of the serial and batched probes:
+    ``(len(hats), len(codes))`` approximate cosines ``code·p̂ / ‖code‖``
+    of each code against each unit probe row of ``hats``; a null,
+    wrong-dim or all-zero code scores -2.0, below any cosine.  One
+    dgemv per probe, not one dgemm over all — matrix-matrix BLAS may
+    round differently, and sharing this body is what keeps the batch
+    bit-identical to serial probes (pytest-pinned)."""
+    import numpy as np
+
+    valid, mat = _masked_rows(codes, hats.shape[1])  # codes as float64
+    norm = np.linalg.norm(mat, axis=1)
+    safe = np.where(norm > 0, norm, 1.0)
+    out = np.full((len(hats), len(codes)), -2.0)
+    for j, h in enumerate(hats):
+        out[j, valid] = np.where(norm > 0, (mat @ h) / safe, -2.0)
+    return out
 
 
 def ivf_probe_topk(
-    spark: SparkSession, sf_dir: str, probe, variant: str = "int8", k: int = 10
+    spark: SparkSession, sf_dir: str, probe, k: int = 10
 ) -> DataFrame:
     """Probe-parametric serial probe over the written IVF layout — the
-    shared two-phase body of ``sim_ann_ivf_partitioned`` (int8 codes)
-    and ``sim_ann_ivfpq`` (8-byte ADC), with the probe vector as a
-    parameter so the QPS harness and the batch-equality tests drive the
-    REAL code path instead of mirrored copies (r13; tools/ann_qps.py
-    carried the mirror through r12)."""
+    two-phase body of ``sim_ann_ivf_partitioned``, with the probe
+    vector as a parameter so the QPS harness and the batch-equality
+    tests drive the REAL code path instead of mirrored copies (r13;
+    tools/ann_qps.py carried the mirror through r12)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     probe = np.asarray(probe, dtype=np.float64)
-    p_hat = probe / np.linalg.norm(probe)
-    cells = _ivf_cells_for_hat(ivf_centroids(spark, sf_dir), p_hat)
-    layout = _ivf_layout_df(spark, sf_dir).where(F.col("cell").isin(cells))
+    hats = (probe / np.linalg.norm(probe))[None, :]
+    cells = _ivf_cells_for_hat(ivf_centroids(spark, sf_dir), hats[0])
+    layout = _prune_layout_to_cells(_ivf_layout_df(spark, sf_dir), cells)
 
-    if variant == "int8":
-        dim = len(probe)
-
-        @pandas_udf("double")
-        def _score(cs: pd.Series) -> pd.Series:
-            valid, mat = _masked_rows(cs, dim)  # int8 codes as float64
-            norm = np.linalg.norm(mat, axis=1)
-            cos = (mat @ p_hat) / np.where(norm > 0, norm, 1.0)
-            out = np.full(len(cs), -2.0)  # null/zero code: below any cos
-            out[valid] = np.where(norm > 0, cos, -2.0)
-            return pd.Series(out)
-
-        scored = layout.select("vec_id", _score(F.col("code")).alias("acos"))
-    elif variant == "pq":
-        books = pq_codebooks(spark, sf_dir)
-        dsub = len(probe) // PQ_M
-        # lut[m, k] = codebook centroid (m, k) · probe subvector m
-        lut = np.einsum("mkd,md->mk", books, p_hat.reshape(PQ_M, dsub))
-        marange = np.arange(PQ_M)
-
-        @pandas_udf("double")
-        def _score(codes: pd.Series) -> pd.Series:
-            valid = codes.notna().to_numpy()
-            out = np.full(len(codes), -2.0)
-            if valid.any():
-                mat = np.frombuffer(
-                    b"".join(codes[valid]), dtype=np.uint8
-                ).reshape(-1, PQ_M)
-                out[valid] = lut[marange[None, :], mat].sum(axis=1)
-            return pd.Series(out)
-
-        scored = layout.select(
-            "vec_id", _score(F.col("pq_code")).alias("acos")
-        )
-    else:
-        raise ValueError(f"unknown IVF probe variant {variant!r}")
+    @pandas_udf("double")
+    def _score(cs: pd.Series) -> pd.Series:
+        return pd.Series(_code_scores(cs, hats)[0])
 
     survivors = (
-        scored.orderBy(F.desc("acos"), F.asc("vec_id"))
+        layout.select("vec_id", _score(F.col("code")).alias("acos"))
+        .orderBy(F.desc("acos"), F.asc("vec_id"))
         .limit(IVF_RERANK)
         .collect()
     )
     return _exact_rerank(
-        spark, sf_dir, [r.vec_id for r in survivors], probe=probe, k=k
+        spark, sf_dir, [r.vec_id for r in survivors], probe, k=k
     )
 
 
@@ -1277,13 +1066,14 @@ def _exact_rerank(
     spark: SparkSession,
     sf_dir: str,
     ids: list,
-    probe=None,
+    probe,
     k: int = 10,
 ) -> DataFrame:
-    """Shared refine stage of the code-index probes: fetch the ≤
-    IVF_RERANK survivors' float vectors from the SOURCE corpus (a
-    pushed ``vec_id IN`` filter here; an id-keyed point read against
-    the primary store at 100 TB) and rank by exact cosine.
+    """Refine stage of the serial probe: fetch the ≤ IVF_RERANK
+    survivors' float vectors from the SOURCE corpus (a pushed
+    ``vec_id IN`` filter here; an id-keyed point read against the
+    primary store at 100 TB) and rank by exact cosine against
+    ``probe``.
 
     The IN predicate is built as ONE SQL string, not
     ``isin(python_list)``: the r12 QPS profile found ~3 s of every
@@ -1300,11 +1090,7 @@ def _exact_rerank(
     else:
         e = e.where(F.lit(False))  # SQL `IN ()` does not parse
     dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    pcol = (
-        _probe_col()
-        if probe is None
-        else F.array(*[F.lit(float(x)) for x in probe])
-    )
+    pcol = F.array(*[F.lit(float(x)) for x in probe])
     return (
         e.select(
             "vec_id",
@@ -1316,39 +1102,13 @@ def _exact_rerank(
     )
 
 
-def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_sim_ann_ivfpq: IVF-PQ probe over the written cell layout — the
-    FAISS ``IndexIVFPQ`` recipe, the third rung of the probe-bytes
-    ladder (float 256 B → int8 64 B → PQ **8 B** per vector):
-
-    1. **ADC scan**: read ONLY (vec_id, pq_code) in the probed cell
-       directories; score each candidate from a per-probe
-       (PQ_M × PQ_K) lookup table ``lut[m][k] = c_{m,k} · p̂_m`` —
-       asymmetric distance computation, one table build per probe and
-       one byte-indexed gather per candidate, no float vectors read.
-    2. **Exact re-rank**: the top IVF_RERANK ids refine from the source
-       corpus (shared :func:`_exact_rerank`).
-
-    At fixture scales IVF_RERANK exceeds the probed candidate count, so
-    the top-10 is IDENTICAL to ``sim_ann_ivf``'s (pytest-asserted) —
-    ADC order only matters past ~4k candidates, where its job is merely
-    to keep the true top-10 inside the top ~4k (measured at sf10:
-    recall@10 1.0, same as the int8 path).  Approximate ⇒ rows-only
-    driver check."""
-    return ivf_probe_topk(spark, sf_dir, PROBE, variant="pq")
-
-
 #: probes in the registry's deterministic batch key (PROBE + seeded
 #: jitters — distinct cell sets, fixed across runs)
 ANN_BATCH_PROBES = 4
 
 
 def ann_probe_batch(
-    spark: SparkSession,
-    sf_dir: str,
-    probes,
-    variant: str = "int8",
-    k: int = 10,
+    spark: SparkSession, sf_dir: str, probes, k: int = 10
 ) -> DataFrame:
     """Batched multi-probe ANN over the written IVF layout — M probes
     composed into ONE lazy plan (VERDICT r12 #2: the serial probe's
@@ -1361,14 +1121,14 @@ def ann_probe_batch(
     Phases, all in one composed DataFrame (no collect anywhere):
 
     1. **Union cell scan**: one partition-pruned read of the union of
-       all probes' cell sets (``cell IN (…)`` as one SQL string — the
-       r12 py4j-Literal lesson).
+       all probes' cell sets (the same :func:`_prune_layout_to_cells`
+       ``cell IN (…)`` SQL string as the serial probe — the r12
+       py4j-Literal lesson).
     2. **Per-(probe, candidate) scores in a single vectorized stage**:
        ``mapInPandas`` groups each Arrow batch by cell and scores it
-       against exactly the probes that probed that cell — per probe the
-       SAME NumPy ops as the serial scorer (a dgemv per probe, not one
-       dgemm over all — matrix-matrix BLAS may round differently and
-       the batch is pytest-pinned bit-identical to serial probes).
+       against exactly the probes that probed that cell, through the
+       serial probe's own scorer (:func:`_code_scores`), so the batch
+       is bit-identical to serial probes by construction.
     3. **Per-probe IVF_RERANK cut**: ``row_number() OVER (PARTITION BY
        probe_id ORDER BY acos DESC, vec_id)`` — Spark pushes the rank
        predicate into a WindowGroupLimit, so every scan partition
@@ -1392,39 +1152,15 @@ def ann_probe_batch(
     from pyspark.sql.window import Window
 
     probes_arr = np.asarray(probes, dtype=np.float64)
-    m, dim = probes_arr.shape
-    norms = np.linalg.norm(probes_arr, axis=1)
-    hats = probes_arr / norms[:, None]
+    m = len(probes_arr)
+    hats = probes_arr / np.linalg.norm(probes_arr, axis=1)[:, None]
     centroids = ivf_centroids(spark, sf_dir)
     cell_probes: dict[int, list[int]] = {}
     for p in range(m):
         for c in _ivf_cells_for_hat(centroids, hats[p]):
             cell_probes.setdefault(c, []).append(p)
     c2p = {c: np.asarray(ps, dtype=np.int64) for c, ps in cell_probes.items()}
-    union_cells = sorted(c2p)
-
-    layout = _ivf_layout_df(spark, sf_dir).where(
-        f"cell IN ({','.join(str(int(c)) for c in union_cells)})"
-    )
-    if variant == "pq":
-        books = pq_codebooks(spark, sf_dir)
-        dsub = dim // PQ_M
-        # luts[p] built with the serial scorer's exact einsum call per
-        # probe (a batched 3-operand contraction may take a different
-        # BLAS path and round differently in the last ulp — the batch
-        # is pinned bit-identical to serial, so keep the op identical)
-        luts = np.stack(
-            [
-                np.einsum("mkd,md->mk", books, hats[p].reshape(PQ_M, dsub))
-                for p in range(m)
-            ]
-        )
-        marange = np.arange(PQ_M)
-        code_col = "pq_code"
-    elif variant == "int8":
-        code_col = "code"
-    else:
-        raise ValueError(f"unknown IVF probe variant {variant!r}")
+    layout = _prune_layout_to_cells(_ivf_layout_df(spark, sf_dir), sorted(c2p))
 
     def _score_batches(pdfs):
         for pdf in pdfs:
@@ -1434,42 +1170,8 @@ def ann_probe_batch(
                 if pids is None:
                     continue
                 vids = grp["vec_id"].to_numpy().astype(np.int64)
-                if variant == "int8":
-                    valid, mat = _masked_rows(grp[code_col], dim)
-                    norm = np.linalg.norm(mat, axis=1)
-                    safe = np.where(norm > 0, norm, 1.0)
-                    for p in pids:
-                        cos = (mat @ hats[p]) / safe
-                        out = np.full(len(grp), -2.0)
-                        out[valid] = np.where(norm > 0, cos, -2.0)
-                        outs.append((p, vids, out))
-                else:
-                    codes = grp[code_col]
-                    valid = codes.notna().to_numpy()
-                    mat = (
-                        np.frombuffer(
-                            b"".join(codes[valid]), dtype=np.uint8
-                        ).reshape(-1, PQ_M)
-                        if valid.any()
-                        else np.empty((0, PQ_M), dtype=np.uint8)
-                    )
-                    # one gather for ALL this cell's probes: adc[p, r]
-                    # = Σ_m luts[p, m, mat[r, m]] — the m-axis sum runs
-                    # in the same ascending order as the serial
-                    # scorer's per-probe .sum(axis=1), so values stay
-                    # bit-identical; what changes is 32 Python-loop
-                    # fancy-gathers per batch → 1 (sf10 PQ batch wall
-                    # was gather-bound at 24 s vs int8's 4 s — int8
-                    # rides dgemv, PQ rides indexing)
-                    if len(mat):
-                        adc = luts[pids][:, marange[None, :], mat].sum(
-                            axis=2
-                        )
-                    for j, p in enumerate(pids):
-                        out = np.full(len(grp), -2.0)
-                        if len(mat):
-                            out[valid] = adc[j]
-                        outs.append((p, vids, out))
+                scores = _code_scores(grp["code"], hats[pids])
+                outs.extend((p, vids, s) for p, s in zip(pids, scores))
             if outs:
                 yield pd.DataFrame(
                     {
@@ -1484,7 +1186,7 @@ def ann_probe_batch(
                     }
                 )
 
-    scored = layout.select("cell", "vec_id", code_col).mapInPandas(
+    scored = layout.select("cell", "vec_id", "code").mapInPandas(
         _score_batches, "probe_id int, vec_id bigint, acos double"
     )
     w_cut = Window.partitionBy("probe_id").orderBy(
@@ -1535,9 +1237,7 @@ def sim_ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = np.array(PROBE, dtype=np.float64)
     rng = np.random.default_rng(13)
     jitters = base + rng.normal(0.0, 0.5, size=(ANN_BATCH_PROBES - 1, len(base)))
-    return ann_probe_batch(
-        spark, sf_dir, np.vstack([base, jitters]), variant="int8"
-    )
+    return ann_probe_batch(spark, sf_dir, np.vstack([base, jitters]))
 
 
 def _knn_route_queries(
@@ -2113,7 +1813,6 @@ QUERIES = {
     "q_sim_radius": sim_radius,
     "q_sim_ann_ivf": sim_ann_ivf,
     "q_sim_ann_ivf_partitioned": sim_ann_ivf_partitioned,
-    "q_sim_ann_ivfpq": sim_ann_ivfpq,
     "q_sim_ann_ivf_batch": sim_ann_ivf_batch,
     "q_sim_knn_join_exact": sim_knn_join_exact,
     "q_sim_knn_join_ivf": sim_knn_join_ivf,

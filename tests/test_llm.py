@@ -385,9 +385,9 @@ def test_ivf_partitioned_layout_equals_in_memory_and_prunes(spark):
 
 def test_ivf_layout_is_int8_codes_and_probe_bytes_shrink(spark, tmp_path):
     """The written IVF layout stores int8 codes, not float vectors
-    (VERDICT r10 #2): schema is exactly (vec_id, code, scale, cell)
-    with code array<tinyint>, and the per-row bytes a probe reads
-    (code + scale) are ≤ 1/3 of the float embedding's — measured by an
+    (VERDICT r10 #2): schema is exactly (vec_id, code, cell) with code
+    array<tinyint>, and the per-row bytes a probe reads (the code) are
+    ≤ 1/3 of the float embedding's — measured by an
     encoder-matched A/B (same rows, same writer, one file each, so the
     ratio is the schema's, not the fixture's 12-row-per-cell-file
     metadata overhead).  The FAISS code-index + refine-from-source
@@ -402,9 +402,8 @@ def test_ivf_layout_is_int8_codes_and_probe_bytes_shrink(spark, tmp_path):
 
     out = S._ivf_layout_dir(spark, SF_RECALL)
     df = spark.read.parquet(out)
-    assert set(df.columns) == {"vec_id", "code", "scale", "pq_code", "cell"}
+    assert sorted(df.columns) == ["cell", "code", "vec_id"]
     assert dict(df.dtypes)["code"] == "array<tinyint>"
-    assert dict(df.dtypes)["pq_code"] == "binary"
 
     # encoder-matched A/B from the real corpus rows
     emb = spark.read.parquet(
@@ -413,7 +412,7 @@ def test_ivf_layout_is_int8_codes_and_probe_bytes_shrink(spark, tmp_path):
     mat = np.vstack(emb["embedding"].to_numpy()).astype(np.float64)
     norms = np.linalg.norm(mat, axis=1)
     unit = mat / np.where(norms > 0, norms, 1.0)[:, None]
-    codes, scale = S._quantize_codes(unit)
+    codes, _ = S._quantize_codes(unit)
 
     f_float = str(tmp_path / "float.parquet")
     f_code = str(tmp_path / "code.parquet")
@@ -434,33 +433,10 @@ def test_ivf_layout_is_int8_codes_and_probe_bytes_shrink(spark, tmp_path):
             {
                 "vec_id": emb["vec_id"].to_numpy(),
                 "code": pa.array(list(codes), type=pa.list_(pa.int8())),
-                "scale": scale,
             }
         ),
         f_code,
     )
-    # PQ leg (r11): REAL 8-byte codes from the fitted codebooks — the
-    # ADC scan reads ≤ 1/4 of even the int8 probe's bytes (8 vs 64+8
-    # per row before encoding overhead)
-    books = S.pq_codebooks(spark, SF_RECALL)
-    dsub = unit.shape[1] // S.PQ_M
-    cols_pq = []
-    for m in range(S.PQ_M):
-        sub = unit[:, m * dsub : (m + 1) * dsub]
-        d2 = (books[m] ** 2).sum(1)[None, :] - 2.0 * (sub @ books[m].T)
-        cols_pq.append(d2.argmin(1).astype(np.uint8))
-    pq_codes = [bytes(row) for row in np.stack(cols_pq, axis=1)]
-    f_pq = str(tmp_path / "pq.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": emb["vec_id"].to_numpy(),
-                "pq_code": pa.array(pq_codes, type=pa.binary()),
-            }
-        ),
-        f_pq,
-    )
-
     def col_bytes(path, prefixes):
         md = pq.ParquetFile(path).metadata
         tot = 0
@@ -471,22 +447,18 @@ def test_ivf_layout_is_int8_codes_and_probe_bytes_shrink(spark, tmp_path):
                     tot += col.total_compressed_size
         return tot
 
-    probe_bytes = col_bytes(f_code, ("code", "scale"))
+    probe_bytes = col_bytes(f_code, ("code",))
     emb_bytes = col_bytes(f_float, ("embedding",))
     assert probe_bytes > 0 < emb_bytes
     assert probe_bytes <= emb_bytes / 3, (
         f"probe reads {probe_bytes} B of codes vs {emb_bytes} B of floats"
     )
-    pq_bytes = col_bytes(f_pq, ("pq_code",))
-    assert 0 < pq_bytes <= probe_bytes / 4, (
-        f"ADC scan reads {pq_bytes} B vs int8 probe's {probe_bytes} B"
-    )
 
 
 def test_ann_probes_concurrent_equal_serial(spark):
-    """8 threads probing the written IVF and IVF-PQ layouts through the
-    REAL registry functions return results identical to the serial
-    probe (VERDICT r11 #3: a deployed index serves many queries; the
+    """8 threads probing the written IVF layout through the REAL
+    registry function return results identical to the serial probe
+    (VERDICT r11 #3: a deployed index serves many queries; the
     layout/fit caches must serve warm hits lock-free and build cold
     state exactly once under contention — similarity.py:_cached_layout).
     Aggregate-QPS numbers live in SCALING.md (tools/ann_qps.py)."""
@@ -500,18 +472,18 @@ def test_ann_probes_concurrent_equal_serial(spark):
             for r in fn(spark, SF_RECALL).collect()
         ]
 
-    for fn in (S.sim_ann_ivf_partitioned, S.sim_ann_ivfpq):
-        serial = rows(fn)
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            results = list(pool.map(lambda _: rows(fn), range(8)))
-        assert all(r == serial for r in results), fn.__name__
+    serial = rows(S.sim_ann_ivf_partitioned)
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        results = list(
+            pool.map(lambda _: rows(S.sim_ann_ivf_partitioned), range(8))
+        )
+    assert all(r == serial for r in results)
 
     # cold-cache contention: drop every cache, race 8 threads on the
     # first build — one build, identical results
     S._IVF_LAYOUTS.clear()
     S._IVF_LAYOUT_DFS.clear()  # r12: the probe-side file-index handle
     S._IVF_CENTROIDS.clear()
-    S._PQ_CODEBOOKS.clear()
     with ThreadPoolExecutor(max_workers=8) as pool:
         cold = list(
             pool.map(
@@ -524,12 +496,13 @@ def test_ann_probes_concurrent_equal_serial(spark):
 
 def test_ann_batch_equals_serial(spark):
     """The batched multi-probe plan (VERDICT r12 #2) returns, for every
-    probe and both variants, rows BIT-IDENTICAL to the probe-parametric
-    serial path — same survivor cut (window rank ≡ global limit under
-    the same (acos DESC, vec_id) order), same exact-cosine re-rank
-    (per-probe dgemv, not one dgemm, so the floats match to the last
-    ulp).  Probe 0 is the fixed PROBE, so the registry key's first
-    group also equals sim_ann_ivf_partitioned's output exactly."""
+    probe, rows BIT-IDENTICAL to the probe-parametric serial path —
+    same survivor cut (window rank ≡ global limit under the same (acos
+    DESC, vec_id) order), same scorer (similarity._code_scores: per-probe
+    dgemv, not one dgemm, so the floats match to the last ulp), same
+    exact-cosine re-rank.  Probe 0 is the fixed PROBE, so the registry
+    key's first group also equals sim_ann_ivf_partitioned's output
+    exactly."""
     import numpy as np
 
     from mysqldump_to_parquet_spark.llm import similarity as S
@@ -540,22 +513,15 @@ def test_ann_batch_equals_serial(spark):
         [base, base + rng.normal(0.0, 0.5, size=(2, len(base)))]
     )
 
-    for variant in ("int8", "pq"):
-        brows = S.ann_probe_batch(
-            spark, SF_RECALL, probes, variant=variant
-        ).collect()
-        assert len(brows) == 10 * len(probes)
-        for p in range(len(probes)):
-            serial = S.ivf_probe_topk(
-                spark, SF_RECALL, probes[p], variant=variant
-            ).collect()
-            got = [
-                (r.vec_id, r.label, r.cosine)
-                for r in brows
-                if r.probe_id == p
-            ]
-            want = [(r.vec_id, r.label, r.cosine) for r in serial]
-            assert got == want, (variant, p)
+    brows = S.ann_probe_batch(spark, SF_RECALL, probes).collect()
+    assert len(brows) == 10 * len(probes)
+    for p in range(len(probes)):
+        serial = S.ivf_probe_topk(spark, SF_RECALL, probes[p]).collect()
+        got = [
+            (r.vec_id, r.label, r.cosine) for r in brows if r.probe_id == p
+        ]
+        want = [(r.vec_id, r.label, r.cosine) for r in serial]
+        assert got == want, p
 
     # the registry key's probe-0 group is the fixed-PROBE serial result
     reg = S.sim_ann_ivf_batch(spark, SF_RECALL).collect()
@@ -565,49 +531,6 @@ def test_ann_batch_equals_serial(spark):
         for r in S.sim_ann_ivf_partitioned(spark, SF_RECALL).collect()
     ]
     assert reg0 == fixed
-
-
-def test_ivfpq_probe_equals_in_memory_and_adc_is_reconstruction_dot(spark):
-    """The IVF-PQ probe (q_sim_ann_ivfpq, r11 — the FAISS IndexIVFPQ
-    recipe, 8 B/vector candidate scan): (a) its top-10 EQUALS
-    sim_ann_ivf's exactly at fixture scale (the re-rank covers every
-    probed candidate, so any codebook would do — what this pins is the
-    cell set + plumbing); (b) the ADC lookup-table score of a code
-    equals the reconstruction·probe dot computed by hand — the identity
-    that makes ADC 'asymmetric distance' and not a heuristic; (c) the
-    codebook fit is deterministic (seeded)."""
-    import numpy as np
-
-    from mysqldump_to_parquet_spark.llm import similarity as S
-
-    mem = [
-        (r.vec_id, r.label, r.cosine)
-        for r in S.sim_ann_ivf(spark, SF_RECALL).collect()
-    ]
-    pq = [
-        (r.vec_id, r.label, r.cosine)
-        for r in S.sim_ann_ivfpq(spark, SF_RECALL).collect()
-    ]
-    assert pq == mem
-
-    books = S.pq_codebooks(spark, SF_RECALL)
-    assert books.shape == (S.PQ_M, S.PQ_K, len(S.PROBE) // S.PQ_M)
-    assert np.array_equal(books, S.pq_codebooks(spark, SF_RECALL))
-
-    # (b) hand-check ADC on one arbitrary code
-    probe = np.array(S.PROBE, float)
-    probe_hat = probe / np.linalg.norm(probe)
-    dsub = len(S.PROBE) // S.PQ_M
-    lut = np.einsum("mkd,md->mk", books, probe_hat.reshape(S.PQ_M, dsub))
-    code = np.array([3, 250, 0, 17, 99, 255, 42, 128], dtype=np.uint8)
-    recon = np.concatenate([books[m, code[m]] for m in range(S.PQ_M)])
-    assert abs(lut[np.arange(S.PQ_M), code].sum() - recon @ probe_hat) < 1e-12
-
-    # (c) seeded NumPy k-means: deterministic, k clamps to n
-    x = np.arange(40, dtype=float).reshape(10, 4)
-    c1 = S._kmeans_np(x, 256, seed=7)
-    c2 = S._kmeans_np(x, 256, seed=7)
-    assert c1.shape == (10, 4) and np.array_equal(c1, c2)
 
 
 def test_ann_caches_invalidate_on_corpus_rewrite(spark, tmp_path):
@@ -1883,7 +1806,7 @@ def test_ivf_index_append_equals_rebuild(spark, tmp_path):
     surface from the very next probe (self-top-1 at cosine 1.0);
     (d) layout contents AND kNN-join results over (build + append) are
     EXACTLY a from-scratch rebuild on the union corpus under the same
-    quantizer (the rebuild reuses the re-stamped centroids/codebooks —
+    quantizer (the rebuild reuses the re-stamped centroids —
     refitting them is what `refit_due` schedules, not what an append
     does); (e) the staleness signal reads ~1/9 appended mass, no skew,
     no refit — then flips refit_due when a skewed batch piles 30 %
@@ -1955,7 +1878,7 @@ def test_ivf_index_append_equals_rebuild(spark, tmp_path):
     fixture_q = S._knn_join_queries(spark, corpus)
     got_append = S.ivf_knn_join(spark, corpus, fixture_q, k=3).collect()
     rows_append = {
-        r.vec_id: (r.cell, bytes(r.pq_code), list(r.code), r.scale)
+        r.vec_id: (r.cell, list(r.code))
         for r in spark.read.parquet(cells).collect()
     }
     S._IVF_LAYOUTS.pop(corpus)
@@ -1963,7 +1886,7 @@ def test_ivf_index_append_equals_rebuild(spark, tmp_path):
     cells2 = S._ivf_layout_dir(spark, corpus)
     assert cells2 != cells, "rebuild did not produce a fresh layout"
     rows_rebuild = {
-        r.vec_id: (r.cell, bytes(r.pq_code), list(r.code), r.scale)
+        r.vec_id: (r.cell, list(r.code))
         for r in spark.read.parquet(cells2).collect()
     }
     assert rows_append == rows_rebuild

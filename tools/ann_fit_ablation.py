@@ -25,7 +25,7 @@ measures the regime the fix exists for:
    in probed cells, recall = |exact top-10 ∩ candidate top-10| / 10.
    This isolates the QUANTIZER's recall — the written probe's int8 +
    IVF_RERANK refine stage is order-preserving far beyond top-10
-   (see tools/rerank_sweep.py for that margin).
+   (BASELINE.md records that margin).
 
 Prints one JSON line per arm; paste the result into BASELINE.md.
 

@@ -43,8 +43,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))  # sibling tools
 
 NOISE_STD = 0.1
 
-VARIANTS = {"ivf_int8": "int8", "ivf_pq": "pq"}
-
 
 def _probe_vectors(sf_dir: str, n: int):
     import pyarrow.parquet as pq
@@ -84,13 +82,11 @@ def run_level(fn, probes, concurrency: int) -> dict:
     }
 
 
-def run_batched(
-    spark, sf_dir, probes, variant: str, with_recall: bool = False
-) -> dict:
+def run_batched(spark, sf_dir, probes, with_recall: bool = False) -> dict:
     from mysqldump_to_parquet_spark.llm import similarity as S
 
     def batch(ps):
-        return S.ann_probe_batch(spark, sf_dir, ps, variant=variant)
+        return S.ann_probe_batch(spark, sf_dir, ps)
 
     # warm the code path (codegen, Python worker pool) on a 2-probe batch
     batch(probes[:2]).collect()
@@ -118,8 +114,6 @@ def run_batched(
             hits += len(exact & by_p.get(p, set()))
         rec["recall_at_10"] = round(hits / (10 * len(probes)), 4)
     return rec
-
-
 
 
 def main() -> None:
@@ -155,29 +149,21 @@ def main() -> None:
     # build once + hold the file-index handles open (the r12 probe fix)
     S._ivf_layout_df(spark, args.sf_dir)
     S.ivf_centroids(spark, args.sf_dir)
-    S.pq_codebooks(spark, args.sf_dir)
     probes = _probe_vectors(args.sf_dir, args.probes)
 
-    for name, variant in VARIANTS.items():
-        if args.batched:
-            rec = {"layout": f"{name}_batched", "sf_dir": args.sf_dir}
-            rec.update(
-                run_batched(
-                    spark, args.sf_dir, probes, variant,
-                    with_recall=args.recall,
-                )
-            )
-            print(json.dumps(rec))
-            continue
-
-        def fn(p, _v=variant):
-            return S.ivf_probe_topk(
-                spark, args.sf_dir, p, variant=_v
-            ).collect()
+    if args.batched:
+        rec = {"layout": "ivf_int8_batched", "sf_dir": args.sf_dir}
+        rec.update(
+            run_batched(spark, args.sf_dir, probes, with_recall=args.recall)
+        )
+        print(json.dumps(rec))
+    else:
+        def fn(p):
+            return S.ivf_probe_topk(spark, args.sf_dir, p).collect()
 
         fn(probes[0])  # warm the code path (codegen, worker pool)
         for lvl in [int(x) for x in args.levels.split(",")]:
-            rec = {"layout": name, "sf_dir": args.sf_dir}
+            rec = {"layout": "ivf_int8", "sf_dir": args.sf_dir}
             rec.update(run_level(fn, probes, lvl))
             print(json.dumps(rec))
     spark.stop()

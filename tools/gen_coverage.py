@@ -59,7 +59,7 @@ ROWS_ONLY_NOTES = {
     ),
     "q_sim_ann_ivf_partitioned": (
         "rows-only (probe over the WRITTEN partitionBy(cell) IVF "
-        "layout — int8 codes + scale since r11, ~1/4 the probe bytes "
+        "layout — int8 codes since r11, ~1/4 the probe bytes "
         "(pinned ≤1/3), top-4096 code-cosine survivors exact-re-ranked "
         "from the source corpus; cell IN (…) reaches the scan as a "
         "PartitionFilter, nprobe/cells of the data read; write-time "
@@ -67,21 +67,12 @@ ROWS_ONLY_NOTES = {
         "top-10 EQUALS sim_ann_ivf's exactly — equality + pruning + "
         "bytes pytest-asserted)"
     ),
-    "q_sim_ann_ivfpq": (
-        "rows-only (IVF-PQ, r11 — the FAISS IndexIVFPQ recipe: 8-byte "
-        "PQ codes in the written cell layout, ADC lookup-table scan of "
-        "the probed cells + exact re-rank of the top 4096 from the "
-        "source corpus; top-10 EQUALS sim_ann_ivf at fixture scale and "
-        "at sf10 where the ADC cut truncates 50k→4k (recall@10 1.0) — "
-        "equality, ADC=reconstruction-dot identity, and codebook "
-        "determinism pytest-asserted)"
-    ),
     "q_sim_ann_ivf_batch": (
         "rows-only (batched multi-probe plan, r13: M probes in ONE "
         "composed job — union-cell scan, vectorized per-(probe, "
         "candidate) scores, WindowGroupLimit rank cut, one grouped "
         "broadcast re-rank; every probe's rows bit-identical to the "
-        "probe-parametric serial path on both variants, pytest-"
+        "probe-parametric serial path (one shared scorer), pytest-"
         "asserted; 12–25× threaded-serial QPS at M=32, SCALING.md)"
     ),
     "q_sim_knn_join_ivf": (

@@ -439,13 +439,13 @@ NOTES = {
     ),
     "q_sim_ann_ivf_partitioned": (
         "The WRITTEN IVF layout (r9; int8 codes r11): (vec_id, int8 "
-        "code, scale) partitionBy coarse-quantizer cell (spherical "
+        "code) partitionBy coarse-quantizer cell (spherical "
         "assignment on unit vectors, one file per cell) — no float "
         "vectors in the index, ~1/4 the probe bytes (pinned ≤1/3 by an "
         "encoder-matched A/B test).  A probe reads codes in the "
         "nprobe/cells probed directories — `cell IN (…)` is a "
         "PartitionFilter — keeps the top 4096 by the int8 cosine "
-        "approximation (scale cancels out of cosine), and exact-"
+        "approximation (cosine is scale-invariant), and exact-"
         "re-ranks those from the source corpus (the FAISS IVF + "
         "refine-from-flat recipe; at 100 TB that fetch is an id-keyed "
         "point read).  Write-time and probe-time assignment share the "
@@ -456,19 +456,6 @@ NOTES = {
         "data-adapted cells beat data-oblivious hyperplanes at equal "
         "read fraction; the r10 corpus-adaptive grid (min(4√n, n/8) "
         "cells, 25% probed) measured 0.8/0.8/1.0 across the decade."
-    ),
-    "q_sim_ann_ivfpq": (
-        "IVF-PQ (r11, FAISS IndexIVFPQ): the written cell layout "
-        "carries an 8-byte-per-vector PQ code column beside the int8 "
-        "codes; a probe builds one (8×256) lookup table from the "
-        "fingerprint-cached codebooks, ADC-scores ONLY the probed "
-        "cells' pq_code bytes (cell IN (…) PartitionFilter + column "
-        "pruning — no float or int8 bytes read), and exact-re-ranks "
-        "the top 4096 from the source corpus.  32× less candidate-"
-        "scan bandwidth than float32 — the representation that makes "
-        "billion-row scans feasible; correctness pinned by top-10 "
-        "equality with sim_ann_ivf and the ADC=reconstruction-dot "
-        "identity."
     ),
     "q_sim_ann_ivf_batch": (
         "Batched multi-probe ANN (r13): M probes composed into ONE "

@@ -401,9 +401,6 @@ def run_ann(spark, sf1_dir: str | None, sf10_dir: str | None = None) -> None:
 
     layouts = [
         ("IVF cell layout", S._ivf_layout_dir, S.sim_ann_ivf_partitioned),
-        # shares the IVF layout (its build row is ~0 once IVF ran) but
-        # scans 8 B/vector PQ codes instead of 64 B int8 codes
-        ("IVF-PQ (ADC probe)", S._ivf_layout_dir, S.sim_ann_ivfpq),
     ]
     rows = []
     for label, build_fn, probe_fn in layouts:
@@ -451,6 +448,15 @@ def run_ann(spark, sf1_dir: str | None, sf10_dir: str | None = None) -> None:
         "sf0.1 against the exact `q_sim_topk`'s 0.23 s over the same scan; it",
         "won only the one-time build, 29.3 s against 41.5 s at sf10.",
         "",
+        "IVF-PQ, an 8-byte product-quantization code column written beside",
+        "the int8 code and scored by lookup-table (ADC) probes, was retired",
+        "so the layout keeps one code: it led these tool-measured probe rows",
+        "(steady probe 0.55 / 0.51 / 0.57 / 0.78 / 0.96 s, batched M=32 14.9",
+        "QPS at sf1, 9.5 at sf10 and 5.8 at 1M vectors), but its ADC order",
+        "reached recall@10 0.93 at the 4096 re-rank cut on 1M distinct",
+        "vectors where the int8 order held 1.0 at every cut, the JVM kNN",
+        "join scores only the int8 code, and no benchmark times a PQ probe.",
+        "",
         "Probe wall should grow far slower than corpus rows: the probed",
         "fraction is constant, so the pruned read grows linearly but",
         "starts from a small-file floor at tiny fixtures.  A probe ×",
@@ -484,8 +490,7 @@ def run_ann(spark, sf1_dir: str | None, sf10_dir: str | None = None) -> None:
         "the QPS section below): the 1M-row fit-sample ablation",
         "(tools/ann_fit_ablation.py — recall floor holds at n=1M,",
         "scaled sample ahead at tight nprobe), the IVF_RERANK knee",
-        "sweep (tools/rerank_sweep.py — 4096 stays: the PQ rung needs",
-        "all of it at 1M distinct vectors), and concurrent-probe QPS",
+        "sweep (BASELINE.md — 4096 stays), and concurrent-probe QPS",
         "(tools/ann_qps.py).",
     ]
     path = os.path.join(
