@@ -40,7 +40,9 @@ def main(argv: list[str] | None = None) -> int:
         ".sql.zst / .sql.bz2 / .sql.xz (glob ok; one task per compressed "
         "member), or '-' to read the dump from stdin (spooled to a local "
         "temp file, then parsed with full parallelism: "
-        "mysqldump db | %(prog)s - -o out/)",
+        "mysqldump db | %(prog)s - -o out/).  The layout is detected: "
+        "one-line INSERTs (--extended-insert) or statements spanning "
+        "lines both convert, with no flag",
     )
     ap.add_argument(
         "--output",
@@ -60,14 +62,6 @@ def main(argv: list[str] | None = None) -> int:
         "with 2.4× fewer output bytes, and writeback is the larger "
         "half of the past-page-cache tax (r10 A/B).  Pass snappy to "
         "match the reference converter byte-for-byte.",
-    )
-    ap.add_argument(
-        "--multiline",
-        choices=("auto", "never"),
-        default="auto",
-        help="'auto' (default) falls back to whole-file statement reassembly "
-        "for dumps whose INSERTs span lines (no --extended-insert); 'never' "
-        "errors instead, enforcing the splittable one-line layout",
     )
     ap.add_argument("--master", default=None, help="Spark master (default local[cores])")
     ap.add_argument(
@@ -153,7 +147,6 @@ def main(argv: list[str] | None = None) -> int:
             args.output,
             compression=args.compression,
             progress=True,
-            multiline=args.multiline,
         )
         print(json.dumps({"tables": counts, "output": args.output}))
         return 0

@@ -37,9 +37,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # mysqldump INSERT statements are long lines; Arrow batches of a few
-    # thousand rows keep pandas-UDF memory bounded.
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
 }
 
 

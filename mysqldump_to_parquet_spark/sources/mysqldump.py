@@ -216,9 +216,9 @@ class DumpParseError(ValueError):
 
 class MultilineDumpError(DumpParseError):
     """The dump spreads INSERT statements over multiple lines (no
-    --extended-insert / reformatted).  Not an error for ``convert_dump``
-    with ``multiline='auto'`` — it switches to the whole-file reassembly
-    path (reference parity: main.rs:110–145 accumulates lines until ';')."""
+    --extended-insert / reformatted).  Not an error for ``convert_dump``,
+    which switches to byte-range statement reassembly (reference parity:
+    main.rs:110–145 accumulates lines until ';')."""
 
 
 class OnepassStagingInvisible(RuntimeError):
@@ -1536,7 +1536,9 @@ def parse_statements(stmts: list[str], table: str, schema: T.StructType):
 
 #: Statement text buffered per table before one :func:`parse_statements`
 #: call (one Arrow-CSV read; one parquet row group or reader batch), in
-#: every front end.
+#: every front end.  Also the byte cap of the Arrow batches that carry
+#: statement text into the convert's tasks (:func:`_statement_source`),
+#: so one crossing batch holds about one flush.
 _PARSE_FLUSH_BYTES = 32 * 1024 * 1024
 
 
@@ -1581,16 +1583,15 @@ MAX_DDL_LINES = 2_000_000
 _DDL_SCAN_SPLIT_BYTES = 128 * 1024 * 1024
 
 _SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
-_ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+_ARROW_BYTES_CONF = "spark.sql.execution.arrow.maxBytesPerBatch"
 
 
 @contextlib.contextmanager
 def _session_conf(spark: SparkSession, key: str, value) -> Iterator[None]:
     """Set a session conf for the block and restore it afterwards, on the
-    error path too; ``value=None`` leaves the conf as it is."""
+    error path too."""
     prev = spark.conf.get(key)
-    if value is not None:
-        spark.conf.set(key, str(value))
+    spark.conf.set(key, str(value))
     try:
         yield
     finally:
@@ -1598,16 +1599,33 @@ def _session_conf(spark: SparkSession, key: str, value) -> Iterator[None]:
 
 
 def collect_schemas(
-    spark: SparkSession, dump_path: str, return_stats: bool = False
-):
-    """Pass 1: reassemble DDL from the (tiny) non-INSERT line set.
+    spark: SparkSession, dump_path: str
+) -> dict[str, T.StructType]:
+    """Pass 1 of a one-line dump read by the JVM text scan: the DDL, with
+    a loud error for ``.xz`` input (Hadoop has no xz codec, so the scan
+    would hand the raw compressed bytes back as garbage "lines").  A
+    ``dir/*`` glob pays one file listing for that check; ``convert_dump``
+    makes the same listing once for its whole discovery and routes .xz
+    members through byte-range reassembly instead."""
+    if _xz_listing(spark, dump_path)[0]:
+        raise DumpParseError(
+            f"{dump_path}: .xz is not JVM-decodable (Hadoop has no xz "
+            "codec); use convert_dump (routes .xz through Python-side "
+            "reassembly decode) or recompress with zstd/gzip/bzip2"
+        )
+    return _line_schemas(spark, dump_path)
+
+
+def _line_schemas(
+    spark: SparkSession, dump_path: str
+) -> dict[str, T.StructType]:
+    """Reassemble DDL from the (tiny) non-INSERT line set.
 
     The collected set also includes INSERT lines *not* terminated by ';' —
     for a one-line-INSERT dump that set is empty, so detection of a
     multi-line layout costs nothing on the fast path; when such lines (or
     orphan '(' continuation lines) appear, :class:`MultilineDumpError` is
-    raised and ``convert_dump(multiline='auto')`` switches to byte-range
-    reassembly.
+    raised and ``convert_dump`` switches to byte-range reassembly.
 
     Two single-stage scans, never a ``limit``: a ``limit(N)`` probe on a
     one-line dump can never reach N matching rows, so Spark's incremental
@@ -1615,16 +1633,9 @@ def collect_schemas(
     16 GB that measured 49 s of the 110 s convert (sequential barrier
     rounds over 8k 2 MB tasks).  Scan 1 is a map-side aggregate (a few
     scalars to the driver: ddl-line count, multiline-marker count, one
-    sample marker, mean INSERT-line bytes) that decides the layout and
-    bounds the collect; scan 2 collects the proven-tiny DDL line set.
-    Both run at ``_DDL_SCAN_SPLIT_BYTES`` splits: 16 GB ≈ 1.4 s total
-    (was 49 s).
-
-    ``return_stats=True`` → ``(schemas, mean_dml_bytes)`` where
-    ``mean_dml_bytes`` (None when the dump has no INSERT lines) sizes the
-    Arrow statement-crossing batches downstream — the aggregate rides the
-    layout scan for free."""
-    _require_jvm_text_decodable(dump_path, spark)
+    sample marker) that decides the layout and bounds the collect; scan 2
+    collects the proven-tiny DDL line set.  Both run at
+    ``_DDL_SCAN_SPLIT_BYTES`` splits: 16 GB ≈ 1.4 s total (was 49 s)."""
     with _session_conf(spark, _SPLIT_CONF, _DDL_SCAN_SPLIT_BYTES):
         lines_df = spark.read.text(dump_path)
         is_insert = _dml_line_pred()
@@ -1646,12 +1657,10 @@ def collect_schemas(
             F.when(is_marker, F.struct(ordinal, F.col("value"))).alias(
                 "sample"
             ),
-            F.when(is_insert, F.octet_length("value")).alias("ib"),
         ).agg(
             F.sum("d").alias("d"),
             F.sum("m").alias("m"),
             F.min("sample").alias("sample"),
-            F.avg("ib").alias("mean_dml"),
         ).collect()[0]
         if stats.m:
             raise MultilineDumpError(
@@ -1671,8 +1680,6 @@ def collect_schemas(
         ddl_lines = [r[0] for r in lines_df.where(is_ddl).collect()]
     schemas = build_schemas(iter_statements(ddl_lines))
     _require_tables(schemas, dump_path)
-    if return_stats:
-        return schemas, stats.mean_dml
     return schemas
 
 
@@ -1721,12 +1728,6 @@ def build_schemas(stmts: Iterable[str]) -> dict[str, T.StructType]:
 # multi-line dump fallback (byte-range-splittable statement reassembly —
 # reference parity for dumps without --extended-insert, main.rs:110–145)
 # --------------------------------------------------------------------------
-
-
-#: Byte-range size for splitting a plain multi-line .sql file across the
-#: DDL pass's tasks (:func:`collect_schemas_multiline`).  Small enough
-#: that a single 68 MB file fans out across the cores (~17 ranges).
-MULTILINE_SPLIT_BYTES = 4 * 1024 * 1024
 
 
 def _is_terminator_line(raw: bytes) -> bool:
@@ -1823,14 +1824,15 @@ def _range_owned_lines(path: str, start: int, end: int) -> Iterator[bytes]:
 #: the reference's .gz handling.
 COMPRESSED_DUMP_EXTS = (".gz", ".bz2", ".xz", ".zst")
 
-#: The subset Spark's JVM text scan decodes transparently (probed r12:
+#: Spark's JVM text scan decodes .gz/.bz2/.zst transparently (probed r12:
 #: Hadoop's GzipCodec handles concatenated members, BZip2Codec is pure
 #: Java AND splittable, ZStandardCodec rides the bundled zstd-jni).
 #: ``.xz`` has NO Hadoop codec — ``spark.read.text`` would hand the raw
 #: compressed bytes back as garbage "lines", so .xz inputs are routed
 #: through the Python-decoded reassembly path (``convert_dump``) and
-#: fail loudly everywhere else (:func:`_require_jvm_text_decodable`).
-JVM_TEXT_DECODABLE_EXTS = (".gz", ".bz2", ".zst")
+#: fail loudly in :func:`collect_schemas`.  A dump path ending in one of
+#: these suffixes answers "does it match .xz members?" without a listing.
+_DECISIVE_EXTS = (".sql",) + COMPRESSED_DUMP_EXTS
 
 
 class _ZstdStream:
@@ -1920,64 +1922,46 @@ def _iter_member_statements(path: str) -> Iterator[str]:
         )
 
 
-def _require_jvm_text_decodable(
-    dump_path: str, spark: SparkSession | None = None
-) -> None:
-    """Loud guard for ``spark.read.text`` call sites: .xz has no Hadoop
-    codec, so the JVM scan would hand the raw compressed bytes back as
-    garbage "lines" and the parse would fail confusingly downstream (or
-    worse).  Without ``spark`` this is a string-suffix check only (no
-    listing job), which a glob/directory pattern matching .xz members
-    slips past (ADVICE r12) — pass ``spark`` to pay one file-status
-    listing on non-decisive patterns and close that hole.
-    ``convert_dump`` instead routes .xz members found by its own listing
-    through the Python-decoded reassembly path, which handles them."""
-    p = str(dump_path)
-    is_xz = p.endswith(".xz")
-    if not is_xz and spark is not None and not p.endswith(
-        (".sql", ".gz", ".bz2", ".zst")
-    ):
-        is_xz = _has_xz_members(spark, dump_path)
-    if is_xz:
-        raise DumpParseError(
-            f"{dump_path}: .xz is not JVM-decodable (Hadoop has no xz "
-            "codec); use convert_dump (routes .xz through Python-side "
-            "reassembly decode) or recompress with zstd/gzip/bzip2"
-        )
+def _dump_files(spark: SparkSession, dump_path: str) -> list[tuple[str, int]]:
+    """``(uri, length)`` of every file ``dump_path`` (path or glob)
+    matches: one binaryFile file-status listing, the content column is
+    never materialized.
 
-
-def _has_xz_members(spark: SparkSession, dump_path: str) -> bool:
-    """Does ``dump_path`` (path or glob) match any .xz member?  Decided
-    WITHOUT a listing job when the pattern itself is decisive (a glob
-    ending in .sql/.gz/.bz2/.zst cannot match .xz); ambiguous patterns
-    pay one file-status listing.
-
-    Only a no-files-matched listing answers False — any OTHER listing
+    Only a no-files-matched listing answers ``[]`` — any OTHER listing
     failure (permissions, transient FS fault) re-raises: swallowing it
     would silently route a glob that DOES contain .xz onto the JVM text
-    scan, resurfacing the garbage-lines failure this guard exists to
+    scan, resurfacing the garbage-lines failure the .xz check exists to
     prevent one layer deeper (VERDICT r12 nit #1)."""
-    p = str(dump_path)
-    if p.endswith(".xz"):
-        return True
-    if p.endswith((".sql", ".gz", ".bz2", ".zst")):
-        return False
     from pyspark.errors import AnalysisException
 
     try:
-        files = (
+        rows = (
             spark.read.format("binaryFile")
             .load(dump_path)
-            .select("path")
+            .select("path", "length")
             .collect()
         )
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             # no files: let the caller's own scan raise its own error
-            return False
+            return []
         raise
-    return any(r.path.endswith(".xz") for r in files)
+    return [(r.path, int(r.length)) for r in rows]
+
+
+def _xz_listing(
+    spark: SparkSession, dump_path: str
+) -> tuple[bool, list[tuple[str, int]] | None]:
+    """``(matches .xz members?, the listing that answered it)``.  A
+    pattern whose own suffix is decisive answers without a listing job
+    (listing ``None``); any other pattern pays one :func:`_dump_files`,
+    which the caller may reuse."""
+    p = str(dump_path)
+    if p.endswith(_DECISIVE_EXTS):
+        return p.endswith(".xz"), None
+    files = _dump_files(spark, p)
+    return any(f.endswith(".xz") for f, _n in files), files
 
 
 def _local_path(uri: str) -> str:
@@ -1996,24 +1980,17 @@ def _local_path(uri: str) -> str:
 
 
 def _multiline_ranges(
-    spark: SparkSession, dump_path: str, split_bytes: int | None = None
+    spark: SparkSession, dump_path: str, files: list[tuple[str, int]]
 ) -> list[tuple[str, int, int]]:
-    """(path, start, end) reassembly ranges for a multi-line dump; end=-1
-    marks an unsplittable compressed member streamed whole.  Without
-    ``split_bytes`` the range size fills ~2 waves of cores but stays
-    within [8 MiB, _ONEPASS_SPLIT_BYTES], large enough for healthy
-    per-table row groups."""
-    files = [
-        (_local_path(r.path), int(r.length))
-        for r in spark.read.format("binaryFile")
-        .load(dump_path)
-        .select("path", "length")  # file status only; content column is
-        .collect()                 # never materialized
-    ]
-    if split_bytes is None:
-        total = sum(n for p, n in files if not p.endswith(COMPRESSED_DUMP_EXTS))
-        waves = 2 * spark.sparkContext.defaultParallelism
-        split_bytes = min(_ONEPASS_SPLIT_BYTES, max(8 * 1024 * 1024, total // waves))
+    """(path, start, end) reassembly ranges over a :func:`_dump_files`
+    listing; end=-1 marks an unsplittable compressed member streamed
+    whole.  The range size fills ~2 waves of cores but stays within
+    [8 MiB, _ONEPASS_SPLIT_BYTES], large enough for healthy per-table
+    row groups.  The DDL pass and the convert share these ranges."""
+    files = [(_local_path(uri), n) for uri, n in files]
+    total = sum(n for p, n in files if not p.endswith(COMPRESSED_DUMP_EXTS))
+    waves = 2 * spark.sparkContext.defaultParallelism
+    split_bytes = min(_ONEPASS_SPLIT_BYTES, max(8 * 1024 * 1024, total // waves))
     ranges: list[tuple[str, int, int]] = []
     for p, n in files:
         if p.endswith(COMPRESSED_DUMP_EXTS):
@@ -2092,12 +2069,12 @@ def _ranges_df(spark: SparkSession, ranges) -> DataFrame:
 
 
 def collect_schemas_multiline(
-    spark: SparkSession, dump_path: str
+    spark: SparkSession, dump_path: str, ranges: list[tuple[str, int, int]]
 ) -> dict[str, T.StructType]:
     """Pass 1 for multi-line dumps: a map-only parallel DDL scan over the
-    reassembly ranges that filters Python-side, so INSERT text never
-    crosses to the JVM; the (tiny) CREATE TABLE / USE statement set is
-    collected to the driver."""
+    convert's reassembly ranges that filters Python-side, so INSERT text
+    never crosses to the JVM; the (tiny) CREATE TABLE / USE statement set
+    is collected to the driver."""
     import pandas as pd
 
     def ddl_only(batches):
@@ -2107,60 +2084,11 @@ def collect_schemas_multiline(
                 out.extend(_range_ddl_statements(path, int(lo), int(hi)))
             yield pd.DataFrame({"value": pd.Series(out, dtype="object")})
 
-    ranges = _multiline_ranges(spark, dump_path, MULTILINE_SPLIT_BYTES)
     rdf = _ranges_df(spark, ranges)
     stmts = [r.value for r in rdf.mapInPandas(ddl_only, "value string").collect()]
     schemas = build_schemas(stmts)
     _require_tables(schemas, dump_path)
     return schemas
-
-
-#: Target bytes per Arrow batch when statement text crosses JVM→Python
-#: (the mapInArrow line scans).  Spark's only knob is rows per batch
-#: (no byte cap exists in 4.1), so the row count is derived from the
-#: dump's measured mean statement size — see :func:`_stmt_cross_rows`.
-_STMT_CROSS_BATCH_BYTES = 32 * 1024 * 1024
-
-
-def _mean_dml_bytes(spark: SparkSession, dump_path: str):
-    """Mean INSERT-line byte length — one single-stage map-side aggregate
-    (None when the dump has no INSERT lines).  Used by direct
-    :func:`convert_dump_onepass` callers that pass precomputed schemas;
-    ``convert_dump`` gets the same number for free from the DDL pass."""
-    _require_jvm_text_decodable(dump_path, spark)  # before the conf
-    # scope: a raised guard must not leak the DDL-scan split size into
-    # the session (ADVICE r12)
-    with _session_conf(spark, _SPLIT_CONF, _DDL_SCAN_SPLIT_BYTES):
-        return (
-            spark.read.text(dump_path)
-            .select(
-                F.when(_dml_line_pred(), F.octet_length("value")).alias("ib")
-            )
-            .agg(F.avg("ib"))
-            .collect()[0][0]
-        )
-
-
-def _stmt_cross_rows(mean_stmt_bytes, session_rows: int = 10_000) -> int:
-    """Rows per Arrow crossing batch targeting ~_STMT_CROSS_BATCH_BYTES.
-
-    Floor 16 (a degenerate dump of giant statements still amortizes the
-    per-batch crossing); never RAISED above ``session_rows`` (the
-    session's configured ``arrow.maxRecordsPerBatch``) — a user who
-    lowered the conf to bound executor memory keeps their bound; the
-    sizing only ever tightens it, so the floor itself is clamped to the
-    session value when the user set it below 16.  Spark documents zero
-    or negative as "no limit" — that sentinel means NO user bound (the
-    byte-targeted sizing applies freely), not a 1-row bound."""
-    if session_rows <= 0:  # Spark's unlimited sentinel
-        if not mean_stmt_bytes:
-            return 10_000  # no stats: fall back to Spark's default bound
-        return max(16, int(_STMT_CROSS_BATCH_BYTES / mean_stmt_bytes))
-    cap = session_rows
-    floor = min(16, cap)
-    if not mean_stmt_bytes:
-        return cap
-    return max(floor, min(cap, int(_STMT_CROSS_BATCH_BYTES / mean_stmt_bytes)))
 
 
 #: Input split size for the one-line statement source: big enough that a
@@ -2169,18 +2097,35 @@ def _stmt_cross_rows(mean_stmt_bytes, session_rows: int = 10_000) -> int:
 _ONEPASS_SPLIT_BYTES = 64 * 1024 * 1024
 
 
+@contextlib.contextmanager
 def _statement_source(
-    spark: SparkSession, dump_path: str, multiline: bool
-) -> DataFrame:
+    spark: SparkSession, dump_path: str, ranges: list | None
+) -> Iterator[DataFrame]:
     """The convert's statement source, shared by the one-pass task and
-    the per-table fallback: the dump's INSERT lines (one-line layout;
-    run it with ``maxPartitionBytes`` scoped to _ONEPASS_SPLIT_BYTES), or
-    one row per reassembly range (multi-line layout, compressed members).
+    the per-table fallback: the dump's INSERT lines (``ranges`` None:
+    one-line layout, JVM text scan), or one row per reassembly range.
     :func:`_source_statements` turns its Arrow batches back into
-    statements inside the task."""
-    if multiline:
-        return _ranges_df(spark, _multiline_ranges(spark, dump_path))
-    return spark.read.text(dump_path).where(_dml_line_pred())
+    statements inside the task.
+
+    Consume it inside the block, which scopes the input split size to
+    _ONEPASS_SPLIT_BYTES and caps the Arrow batches that carry statement
+    text JVM→Python at _PARSE_FLUSH_BYTES, never above a tighter session
+    value.  Extended-insert statements run ~100 KB–1 MB each, and a
+    row-only bound let the JVM build ~800 MB batches per in-flight task
+    (measured 90 MB/s where ~32 MB batches measured 314 MB/s on a 2 GB
+    dump).  Spark still applies the session's ``maxRecordsPerBatch``
+    and cuts a batch at whichever limit comes first, one row past the
+    byte cap at most."""
+    # the session value is a Spark byte string ("64m", "67108864b")
+    utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    user_cap = utils.byteStringAsBytes(spark.conf.get(_ARROW_BYTES_CONF))
+    with _session_conf(spark, _SPLIT_CONF, _ONEPASS_SPLIT_BYTES), _session_conf(
+        spark, _ARROW_BYTES_CONF, min(_PARSE_FLUSH_BYTES, user_cap)
+    ):
+        if ranges is None:
+            yield spark.read.text(dump_path).where(_dml_line_pred())
+        else:
+            yield _ranges_df(spark, ranges)
 
 
 def _source_statements(arrow_batches, multiline: bool) -> Iterator[str]:
@@ -2315,9 +2260,9 @@ def convert_dump_onepass(
     dump_path: str,
     output_dir: str,
     compression: str = "snappy",
-    schemas: dict[str, T.StructType] | None = None,
-    multiline: bool = False,
-    stmt_batch_rows: int | None = None,
+    *,
+    schemas: dict[str, T.StructType],
+    ranges: list[tuple[str, int, int]] | None,
 ) -> dict[str, int]:
     """ONE-pass multi-table conversion: each task parses its byte range
     of the dump and writes EVERY table it sees straight to parquet.
@@ -2339,15 +2284,15 @@ def convert_dump_onepass(
     DataSource writer); ``convert_dump`` falls back to the per-table
     path otherwise.
 
-    ``multiline=True`` swaps the statement source from JVM text lines to
-    the byte-range reassembly (:func:`_range_statements`) — the same
+    ``schemas`` and ``ranges`` are ``convert_dump``'s discovery: ranges
+    None reads the dump's lines through the JVM text scan, a range list
+    reads byte-range reassembly (:func:`_range_statements`) — the same
     single-scan/commit machinery then serves the no---extended-insert
-    layout, with no per-table re-read at any table count."""
+    layout and .xz members, with no per-table re-read at any table
+    count."""
     import shutil as _shutil
     import uuid
 
-    if not multiline:
-        _require_jvm_text_decodable(dump_path, spark)
     if "://" in output_dir:
         # os.path.abspath('s3://bucket/out') would silently mangle the
         # URI into '<cwd>/s3:/bucket/out' and "succeed" locally while
@@ -2360,28 +2305,7 @@ def convert_dump_onepass(
             "address — convert_dump writes object-store output through "
             "the per-table Spark writers"
         )
-    session_rows = int(spark.conf.get(_ARROW_BATCH_CONF))
-    stmt_rows = stmt_batch_rows
-    if schemas is None:
-        if multiline:
-            schemas = collect_schemas_multiline(spark, dump_path)
-        else:
-            schemas, mean_dml = collect_schemas(
-                spark, dump_path, return_stats=True
-            )
-            if stmt_rows is None:
-                stmt_rows = _stmt_cross_rows(mean_dml, session_rows)
-    elif stmt_rows is None and not multiline:
-        # Precomputed schemas skip the stats-bearing DDL pass, but the
-        # line crossing still needs byte-sized batches — the session
-        # default of 10,000 rows × real extended-INSERT statements
-        # (~100 KB–1 MB) accumulates ~1–8 GB of JVM Arrow buffers per
-        # in-flight task (the 90 vs 314 MB/s pathology documented in
-        # convert_dump).  One cheap single-stage aggregate recovers the
-        # mean; convert_dump avoids it by passing stmt_batch_rows.
-        stmt_rows = _stmt_cross_rows(
-            _mean_dml_bytes(spark, dump_path), session_rows
-        )
+    multiline = ranges is not None
     out_abs = os.path.abspath(output_dir)
     _gc_orphaned_staging(out_abs)
     staging = os.path.join(out_abs, f"_staging_{uuid.uuid4().hex}")
@@ -2446,14 +2370,10 @@ def convert_dump_onepass(
         )
 
     try:
-        with _session_conf(
-            spark, _SPLIT_CONF, _ONEPASS_SPLIT_BYTES
-        ), _session_conf(spark, _ARROW_BATCH_CONF, stmt_rows):
-            rep = (
-                _statement_source(spark, dump_path, multiline)
-                .mapInArrow(run_task, "table string, path string, nrows long")
-                .collect()
-            )
+        with _statement_source(spark, dump_path, ranges) as source:
+            rep = source.mapInArrow(
+                run_task, "table string, path string, nrows long"
+            ).collect()
         counts = {t: 0 for t in schemas}
         for t in schemas:
             d = os.path.join(out_abs, t)
@@ -2543,8 +2463,7 @@ def _convert_per_table(
     compression: str,
     schemas: dict[str, T.StructType],
     *,
-    multiline: bool,
-    stmt_rows: int | None,
+    ranges: list[tuple[str, int, int]] | None,
     progress: bool,
 ) -> dict[str, int]:
     """The fallback for output the driver cannot reach (a scheme in
@@ -2569,13 +2488,12 @@ def _convert_per_table(
             f"the per-table Spark writer cannot honor a {codec} level "
             f"({compression!r}); use zstd:N or a plain codec on this path"
         )
-    source = _statement_source(spark, dump_path, multiline)
 
     def one_table(item: tuple[str, T.StructType]) -> tuple[str, int]:
         table, schema = item
         t0 = _time.perf_counter()
         obs = Observation(f"ingest_{table}")
-        df = _table_df(source, table, schema, multiline)
+        df = _table_df(source, table, schema, multiline=ranges is not None)
         writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write
         if level is not None:
             # parquet-mr reads the level from the JOB's Hadoop conf, and
@@ -2590,9 +2508,7 @@ def _convert_per_table(
             print(f"[ingest] {table}: {n:,} rows in {dt:.1f}s", file=sys.stderr)
         return table, n
 
-    with _session_conf(spark, _SPLIT_CONF, _ONEPASS_SPLIT_BYTES), _session_conf(
-        spark, _ARROW_BATCH_CONF, stmt_rows
-    ):
+    with _statement_source(spark, dump_path, ranges) as source:
         with ThreadPoolExecutor(min(_TABLE_WRITERS, len(schemas))) as pool:
             return dict(pool.map(one_table, schemas.items()))
 
@@ -2603,7 +2519,6 @@ def convert_dump(
     output_dir: str,
     compression: str = "snappy",
     progress: bool = False,
-    multiline: str = "auto",
 ) -> dict[str, int]:
     """Full reference pipeline: dump → one Snappy Parquet dataset per table.
 
@@ -2615,14 +2530,15 @@ def convert_dump(
     job into Spark's Parquet sink (:func:`_convert_per_table`).  Both
     read the same statement source and call the same parse core.
 
-    ``multiline``: 'auto' (default) detects dumps whose INSERT statements
-    span lines (no --extended-insert) and switches to byte-range
-    statement reassembly (reference parity with main.rs:110–145, but
-    parallel WITHIN a file: ranges align on statement-terminator lines,
-    see :func:`_iter_range_statements`); 'never' raises
-    :class:`MultilineDumpError` instead — the one-line layout remains
-    preferable at 100 TB (no reassembly stage at all), but a multi-line
-    dump no longer serializes onto one task per file.
+    This is the one place the dump's layout is decided, with no knob: a
+    one-line dump (one INSERT per line, mysqldump's --extended-insert
+    default) reads through the JVM text scan; a dump whose INSERT
+    statements span lines, or any .xz member (no Hadoop codec), reads
+    through byte-range statement reassembly (reference parity with
+    main.rs:110–145, but parallel WITHIN a file: ranges align on
+    statement-terminator lines, see :func:`_iter_range_statements`).  A
+    glob pays at most one file listing, shared by the .xz check and the
+    ranges.
 
     ``progress=True`` reports per-table rows to stderr AND renders live
     task-level progress while jobs run (``progress.ProgressReporter``
@@ -2634,47 +2550,20 @@ def convert_dump(
 
     from ..progress import ProgressReporter
 
-    if multiline not in ("auto", "never"):
-        raise ValueError(f"multiline must be 'auto' or 'never', got {multiline!r}")
-    use_multiline, stmt_rows = False, None
-    try:
-        if _has_xz_members(spark, dump_path):
-            # .xz has no Hadoop codec, so the one-line JVM text scan
-            # cannot decode it — route through the Python-decoded
-            # reassembly path, which handles BOTH layouts (one-line
-            # statements are single lines to it) at one task per
-            # member, exactly like .gz members.
-            if multiline == "never":
-                raise DumpParseError(
-                    f"{dump_path}: .xz members need Python-side "
-                    "decode (the reassembly path), which "
-                    "multiline='never' forbids; recompress with "
-                    "zstd/gzip/bzip2 for the JVM-decoded layout"
-                )
-            raise MultilineDumpError(
-                f"{dump_path}: .xz member routed to Python-side decode"
-            )
-        schemas, mean_dml = collect_schemas(spark, dump_path, return_stats=True)
-        # Size the Arrow statement-crossing batches in BYTES, not rows:
-        # extended-insert statements run ~100 KB–1 MB each, and the
-        # session's 10,000-row default let the JVM accumulate ~800 MB
-        # Arrow buffers per in-flight task before anything crossed to
-        # Python — 32 concurrent tasks thrashed allocation and measured
-        # 90 MB/s where a ~32 MB batch target measures 314 MB/s on the
-        # same 2 GB dump.  The mean statement size rides the DDL pass's
-        # aggregate scan for free.
-        stmt_rows = _stmt_cross_rows(
-            mean_dml, int(spark.conf.get(_ARROW_BATCH_CONF))
-        )
-    except MultilineDumpError:
-        if multiline == "never":
-            raise
-        use_multiline = True
-        schemas = collect_schemas_multiline(spark, dump_path)
+    has_xz, files = _xz_listing(spark, dump_path)
+    schemas = ranges = None
+    if not has_xz:
+        with contextlib.suppress(MultilineDumpError):
+            schemas = _line_schemas(spark, dump_path)
+    if schemas is None:
+        if files is None:
+            files = _dump_files(spark, dump_path)
+        ranges = _multiline_ranges(spark, dump_path, files)
+        schemas = collect_schemas_multiline(spark, dump_path, ranges)
         if progress:
             print(
-                "[ingest] multi-line INSERT layout detected — byte-range "
-                "statement reassembly (parallel within files)",
+                "[ingest] multi-line INSERT layout or .xz members — "
+                "byte-range statement reassembly (parallel within files)",
                 file=sys.stderr,
             )
     if progress:
@@ -2693,8 +2582,7 @@ def convert_dump(
                     output_dir,
                     compression,
                     schemas=schemas,
-                    multiline=use_multiline,
-                    stmt_batch_rows=stmt_rows,
+                    ranges=ranges,
                 )
             except OnepassStagingInvisible:
                 print(
@@ -2709,8 +2597,7 @@ def convert_dump(
                 output_dir,
                 compression,
                 schemas,
-                multiline=use_multiline,
-                stmt_rows=stmt_rows,
+                ranges=ranges,
                 progress=progress,
             )
         elif progress:

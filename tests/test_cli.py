@@ -112,15 +112,11 @@ def test_cli_happy_path(spark, tmp_path, capsys, monkeypatch):
     assert spark.read.parquet(str(tmp_path / "out/acct")).count() == 3
 
 
-def test_cli_multiline_never_flag(spark, tmp_path, monkeypatch):
+def test_cli_converts_multiline_dump(spark, tmp_path, monkeypatch):
+    """The CLI has no layout flag: a multi-line dump converts as is."""
     monkeypatch.setattr(session_mod, "get_spark", lambda **kw: _NoStop(spark))
     dump = tmp_path / "ml.sql"
     dump.write_text("CREATE TABLE `m` (`id` int);\nINSERT INTO `m` VALUES\n(1);\n")
-    from mysqldump_to_parquet_spark.sources.mysqldump import MultilineDumpError
-
-    with pytest.raises(MultilineDumpError):
-        cli.main([str(dump), "--output", str(tmp_path / "out"), "--multiline", "never"])
-    # default auto converts it
     assert cli.main([str(dump), "--output", str(tmp_path / "out2")]) == 0
     assert spark.read.parquet(str(tmp_path / "out2/m")).count() == 1
 

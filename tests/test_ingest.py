@@ -341,6 +341,8 @@ def test_multiline_insert_auto_fallback(spark, tmp_path):
 
 
 def test_multiline_insert_rejected_when_forced_line_layout(spark, tmp_path):
+    """The one-line DDL pass (collect_schemas, the JVM text layout)
+    names a multi-line dump loudly; convert_dump reassembles it."""
     dump = tmp_path / "ml.sql"
     dump.write_text(
         "CREATE TABLE `m` (`id` int);\n"
@@ -348,10 +350,13 @@ def test_multiline_insert_rejected_when_forced_line_layout(spark, tmp_path):
         "(1),\n"
         "(2);\n"
     )
-    from mysqldump_to_parquet_spark.sources.mysqldump import MultilineDumpError
+    from mysqldump_to_parquet_spark.sources.mysqldump import (
+        MultilineDumpError,
+        collect_schemas,
+    )
 
-    with pytest.raises(MultilineDumpError):
-        convert_dump(spark, str(dump), str(tmp_path / "out"), multiline="never")
+    with pytest.raises(MultilineDumpError, match="multi-line INSERT"):
+        collect_schemas(spark, str(dump))
 
 
 def test_multiline_multi_table_gz(spark, tmp_path):
@@ -466,28 +471,16 @@ def test_xz_one_line_dump_routes_to_python_decode(spark, tmp_path):
     rows = spark.read.parquet(str(tmp_path / "out/acct")).orderBy("id").collect()
     assert [r.name for r in rows] == ["alice", "bob", "carol's"]
 
-    # multiline='never' enforces the splittable JVM layout, which xz
-    # can never satisfy — loud error, not garbage
-    with pytest.raises(DumpParseError, match="xz"):
-        convert_dump(
-            spark, str(f), str(tmp_path / "out2"), multiline="never"
-        )
-
 
 def test_xz_guard_on_direct_jvm_paths(spark, tmp_path):
-    """Direct collect_schemas / onepass callers get a loud error for .xz
-    inputs instead of a garbage JVM text scan."""
-    from mysqldump_to_parquet_spark.sources.mysqldump import (
-        collect_schemas,
-        convert_dump_onepass,
-    )
+    """Direct collect_schemas callers get a loud error for .xz inputs
+    instead of a garbage JVM text scan."""
+    from mysqldump_to_parquet_spark.sources.mysqldump import collect_schemas
 
     f = tmp_path / "demo.sql.xz"
     _write_compressed(f, DEMO_DUMP)
     with pytest.raises(DumpParseError, match="not JVM-decodable"):
         collect_schemas(spark, str(f))
-    with pytest.raises(DumpParseError, match="not JVM-decodable"):
-        convert_dump_onepass(spark, str(f), str(tmp_path / "o"))
 
 
 def test_zstd_stream_failure_is_loud(tmp_path):
@@ -645,11 +638,11 @@ def test_many_file_dump_skips_text_shuffle(spark, tmp_path):
     spark.conf.set("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     try:
-        source = _statement_source(spark, str(tmp_path / "*.sql"), False)
-        df = _table_df(source, "t", schema, multiline=False)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert sorted(r.id for r in df.collect()) == list(range(n_files))
+        with _statement_source(spark, str(tmp_path / "*.sql"), None) as source:
+            df = _table_df(source, "t", schema, multiline=False)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan
+            assert sorted(r.id for r in df.collect()) == list(range(n_files))
     finally:
         spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_max)
@@ -754,12 +747,14 @@ class TestMultilineRangeOwnership:
             )
             assert got == want, f"boundary at byte {cut}"
 
-    def _spark_statements(self, spark, path, split_bytes=None):
-        """Statements of the convert's range source, reassembled inside
-        Spark tasks (one task per range)."""
+    def _spark_statements(self, spark, path, ranges=None):
+        """Statements of the convert's range source (its own ranges
+        unless given), reassembled inside Spark tasks (one task per
+        range)."""
         import pyarrow as pa
 
         from mysqldump_to_parquet_spark.sources.mysqldump import (
+            _dump_files,
             _multiline_ranges,
             _ranges_df,
             _source_statements,
@@ -769,7 +764,8 @@ class TestMultilineRangeOwnership:
             got = list(_source_statements(batches, multiline=True))
             yield pa.RecordBatch.from_pydict({"value": got})
 
-        ranges = _multiline_ranges(spark, path, split_bytes)
+        if ranges is None:
+            ranges = _multiline_ranges(spark, path, _dump_files(spark, path))
         rows = _ranges_df(spark, ranges).mapInArrow(stmts, "value string")
         return sorted(r.value for r in rows.collect())
 
@@ -778,7 +774,9 @@ class TestMultilineRangeOwnership:
         multiset of statements as the sequential grammar."""
         f = tmp_path / "ml.sql"
         f.write_text(self.DUMP)
-        got = self._spark_statements(spark, str(f), split_bytes=512)
+        size = f.stat().st_size
+        ranges = [(str(f), off, min(off + 512, size)) for off in range(0, size, 512)]
+        got = self._spark_statements(spark, str(f), ranges)
         assert got == sorted(self._sequential())
 
     def test_gz_member_streams(self, spark, tmp_path):
@@ -850,58 +848,107 @@ def test_ddl_line_cap_fails_loudly(spark, tmp_path, monkeypatch):
         M.collect_schemas(spark, str(dump))
 
 
-def test_collect_schemas_stats_and_conf_restore(spark, tmp_path):
-    """The r8 DDL-pass rewrite: collect_schemas must (a) report the mean
-    INSERT-line byte length with return_stats=True, (b) restore the
-    split-size conf it scopes, and (c) never plan a CollectLimit — the
-    limit probe it replaced escalated through EVERY partition of a
-    one-line dump (49 s of a 110 s 16 GB convert)."""
+def test_collect_schemas_restores_split_conf(spark, tmp_path):
+    """The r8 DDL-pass rewrite: collect_schemas must restore the
+    split-size conf it scopes."""
     import mysqldump_to_parquet_spark.sources.mysqldump as M
 
     dump = tmp_path / "s.sql"
-    line1 = "INSERT INTO `t` VALUES (1,'aa');\n"          # 32 bytes
-    line2 = "INSERT INTO `t` VALUES (2,'aaaaaaaaaa');\n"  # 40 bytes
     dump.write_text(
-        "CREATE TABLE `t` (`id` int, `name` varchar(16));\n" + line1 + line2
+        "CREATE TABLE `t` (`id` int, `name` varchar(16));\n"
+        "INSERT INTO `t` VALUES (1,'aa');\n"
     )
     prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    schemas, mean_dml = M.collect_schemas(spark, str(dump), return_stats=True)
-    assert set(schemas) == {"t"}
-    # octet_length excludes the newline
-    assert mean_dml == pytest.approx((len(line1) + len(line2)) / 2 - 1)
+    assert set(M.collect_schemas(spark, str(dump))) == {"t"}
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == prev
-    # no-INSERT dump → stats None (downstream keeps the session default)
-    ddl_only = tmp_path / "d.sql"
-    ddl_only.write_text("CREATE TABLE `t` (`id` int);\n")
-    _, none_stats = M.collect_schemas(spark, str(ddl_only), return_stats=True)
-    assert none_stats is None
 
 
-def test_stmt_cross_rows_bounds():
-    """Arrow crossing batch sizing: bytes-targeted, clamped, and
-    defaulting to the session's 10k rows when no INSERT lines exist."""
+_ROWS_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+_BYTES_CONF = "spark.sql.execution.arrow.maxBytesPerBatch"
+
+
+def test_statement_crossing_is_byte_bounded(spark, tmp_path, monkeypatch):
+    """The Arrow batches that carry statement text into a convert task
+    are cut in bytes: each holds at most the cap plus one statement.  A
+    tighter session byte cap is never loosened, a lower session
+    maxRecordsPerBatch still binds, and both confs are restored."""
+    import pyarrow as pa
+
     import mysqldump_to_parquet_spark.sources.mysqldump as M
 
-    assert M._stmt_cross_rows(None) == 10_000
-    assert M._stmt_cross_rows(0) == 10_000
-    # 80 KB statements → ~420 rows ≈ 32 MB batches
-    assert M._stmt_cross_rows(80 * 1024) == M._STMT_CROSS_BATCH_BYTES // (
-        80 * 1024
-    )
-    assert M._stmt_cross_rows(100) == 10_000      # tiny lines: cap
-    assert M._stmt_cross_rows(64 * 1024 * 1024) == 16  # giant: floor
-    # a user conf BELOW the 16-row floor is never loosened (ADVICE r8):
-    # the sizing only tightens the session bound
-    assert M._stmt_cross_rows(None, session_rows=4) == 4
-    assert M._stmt_cross_rows(100, session_rows=4) == 4
-    assert M._stmt_cross_rows(64 * 1024 * 1024, session_rows=4) == 4
-    # Spark's documented zero/negative sentinel means NO LIMIT, not a
-    # 1-row bound: the byte-targeted sizing applies freely
-    assert M._stmt_cross_rows(None, session_rows=0) == 10_000
-    assert M._stmt_cross_rows(100, session_rows=-1) == (
-        M._STMT_CROSS_BATCH_BYTES // 100
-    )
-    assert M._stmt_cross_rows(64 * 1024 * 1024, session_rows=0) == 16
+    cap = 64 * 1024
+    monkeypatch.setattr(M, "_PARSE_FLUSH_BYTES", cap)
+    stmt = "INSERT INTO `t` VALUES " + ",".join(
+        f"({i},'{'x' * 20}')" for i in range(200)
+    ) + ";"
+    n_stmts = 100  # ~560 KB of statement text: one input split
+    dump = tmp_path / "d.sql"
+    dump.write_text("CREATE TABLE `t` (`id` int, `v` varchar(32));\n"
+                    + (stmt + "\n") * n_stmts)
+
+    def sizes(batches):
+        for b in batches:
+            text = b.column(0).to_pylist()
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [len(text)], "bytes": [sum(map(len, text))]}
+            )
+
+    def crossings():
+        with M._statement_source(spark, str(dump), None) as source:
+            got = source.mapInArrow(sizes, "rows long, bytes long").collect()
+        assert sum(r.rows for r in got) == n_stmts
+        return got
+
+    prev = (spark.conf.get(_ROWS_CONF), spark.conf.get(_BYTES_CONF))
+    got = crossings()
+    assert len(got) > 1
+    assert max(r.bytes for r in got) <= cap + len(stmt)
+
+    spark.conf.set(_BYTES_CONF, "16k")  # tighter than the cap: kept
+    try:
+        got = crossings()
+        assert max(r.bytes for r in got) <= 16 * 1024 + len(stmt)
+        assert spark.conf.get(_BYTES_CONF) == "16k"
+    finally:
+        spark.conf.set(_BYTES_CONF, prev[1])
+
+    spark.conf.set(_ROWS_CONF, "3")  # a lower row bound still binds
+    try:
+        got = crossings()
+        assert max(r.rows for r in got) == 3
+    finally:
+        spark.conf.set(_ROWS_CONF, prev[0])
+    assert (spark.conf.get(_ROWS_CONF), spark.conf.get(_BYTES_CONF)) == prev
+
+
+def test_glob_convert_lists_files_once(spark, tmp_path, monkeypatch):
+    """A ``dir/*`` glob convert lists the dump's files once: the .xz
+    check and, for a multi-line dump, the DDL pass and the statement
+    source all share the one binaryFile listing."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    listings = []
+    real_format = DataFrameReader.format
+
+    def counting_format(self, source):
+        if source == "binaryFile":
+            listings.append(source)
+        return real_format(self, source)
+
+    monkeypatch.setattr(DataFrameReader, "format", counting_format)
+    layouts = {
+        "one_line": "INSERT INTO `t` VALUES (1),(2);\n",
+        "multi_line": "INSERT INTO `t` VALUES\n(1),\n(2);\n",
+    }
+    for name, inserts in layouts.items():
+        d = tmp_path / name
+        d.mkdir()
+        (d / "a.sql").write_text("CREATE TABLE `t` (`id` int);\n")
+        (d / "b.sql").write_text(inserts)
+        listings.clear()
+        counts = convert_dump(spark, str(d / "*"), str(tmp_path / f"out_{name}"))
+        assert counts == {"t": 2}
+        assert len(listings) == 1, name
 
 
 def test_multiline_error_quotes_first_marker(spark, tmp_path):
@@ -919,12 +966,16 @@ def test_multiline_error_quotes_first_marker(spark, tmp_path):
 
 
 def test_convert_dump_scopes_and_restores_arrow_batch(spark, tmp_path):
-    """convert_dump must scope arrow.maxRecordsPerBatch for the parse
-    stages (the 10k default built ~800 MB JVM batches at real statement
-    sizes) and restore it afterwards — including on the error path."""
+    """convert_dump scopes the Arrow batch byte cap for the parse stages
+    (a row-only bound built ~800 MB JVM batches at real statement sizes)
+    and leaves both Arrow batch confs as it found them — including on
+    the error path."""
     import mysqldump_to_parquet_spark.sources.mysqldump as M
 
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    def confs():
+        return spark.conf.get(_ROWS_CONF), spark.conf.get(_BYTES_CONF)
+
+    prev = confs()
     dump = tmp_path / "ok.sql"
     dump.write_text(
         "CREATE TABLE `t` (`id` int);\n"
@@ -932,16 +983,12 @@ def test_convert_dump_scopes_and_restores_arrow_batch(spark, tmp_path):
     )
     counts = M.convert_dump(spark, str(dump), str(tmp_path / "out"))
     assert counts == {"t": 3}
-    assert (
-        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == prev
-    )
+    assert confs() == prev
     bad = tmp_path / "bad.sql"
     bad.write_text("-- no CREATE TABLE at all\n")
     with pytest.raises(M.DumpParseError):
         M.convert_dump(spark, str(bad), str(tmp_path / "out2"))
-    assert (
-        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == prev
-    )
+    assert confs() == prev
 
 
 # -------------------------------------------- DML statement variants
@@ -1106,13 +1153,16 @@ def test_multidb_collision_multiline_path(spark, tmp_path):
     """The whole-file (no --extended-insert) path applies the same guard."""
     from mysqldump_to_parquet_spark.sources.mysqldump import (
         DumpParseError,
+        _dump_files,
+        _multiline_ranges,
         collect_schemas_multiline,
     )
 
     dump = tmp_path / "multi_ml.sql"
     dump.write_text(MULTIDB_DUMP)
+    ranges = _multiline_ranges(spark, str(dump), _dump_files(spark, str(dump)))
     with pytest.raises(DumpParseError, match="defined twice"):
-        collect_schemas_multiline(spark, str(dump))
+        collect_schemas_multiline(spark, str(dump), ranges)
 
 
 def test_charset_introducers():
