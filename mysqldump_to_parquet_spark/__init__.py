@@ -16,5 +16,6 @@ picks the physical strategy.
 
 __version__ = "0.1.0"
 
+from . import zipimport_stamps  # noqa: F401  (first: see its docstring)
 from .session import get_spark, configure_for_oracle  # noqa: F401
 from .catalog import load_table, register_views  # noqa: F401

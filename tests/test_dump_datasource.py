@@ -5,6 +5,7 @@ convert_dump pipeline, and loud errors on misuse."""
 from __future__ import annotations
 
 import gzip
+import sys
 from datetime import date, datetime
 from decimal import Decimal
 
@@ -579,3 +580,26 @@ def test_schema_found_past_64_mib_of_other_inserts(tmp_path):
     ]
     with pytest.raises(DumpParseError, match=r"\.schema\("):
         MysqldumpDataSource({"path": str(p), "table": "absent"}).schema()
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="CPython 3.13 re-reads zip directories lazily"
+)
+def test_package_import_installs_zip_stamps_in_workers(spark):
+    """A Python task that references a package helper imports the package
+    in its worker, and with it the engine's zipimporter.invalidate_caches
+    (Spark calls importlib.invalidate_caches() on every task)."""
+    import zipimport
+
+    import pyarrow as pa
+
+    from mysqldump_to_parquet_spark.zipimport_stamps import invalidate_caches
+
+    def probe(batches):
+        for _ in batches:
+            pass
+        installed = zipimport.zipimporter.invalidate_caches is invalidate_caches
+        yield pa.RecordBatch.from_pydict({"installed": [installed]})
+
+    row = spark.range(1).mapInArrow(probe, "installed boolean").first()
+    assert row.installed

@@ -6,6 +6,7 @@ reference lacks (its writer path has zero tests, SURVEY.md §5)."""
 from __future__ import annotations
 
 import datetime
+import sys
 from decimal import Decimal
 
 import pytest
@@ -1903,3 +1904,54 @@ def test_empty_bit_literal_binary_context_is_zero_length(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out/t")).collect()
     )
     assert rows == [(1, b"", 0), (2, b"\x03", 5)]
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="CPython 3.13 re-reads zip directories lazily"
+)
+def test_invalidate_caches_skips_unchanged_zip_archive(monkeypatch, tmp_path):
+    """Spark's workers call importlib.invalidate_caches() on every task and
+    planner call; importing the package must stop that from re-reading an
+    unchanged zip archive's directory, and still pick up a rewritten one."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    import mysqldump_to_parquet_spark  # noqa: F401  (installs the stamps)
+
+    archive = str(tmp_path / "stamped.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zipstamp_probe_a.py", "X = 1\n")
+    saved_path = list(sys.path)
+    sys.path.insert(0, archive)
+    try:
+        import zipstamp_probe_a
+
+        assert zipstamp_probe_a.X == 1
+        importlib.invalidate_caches()  # the first call stamps the archive
+        reads = []
+        real_read = zipimport._read_directory
+
+        def spy(path):
+            reads.append(path)
+            return real_read(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", spy)
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 0
+
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("zipstamp_probe_a.py", "X = 1\n")
+            zf.writestr("zipstamp_probe_b.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        import zipstamp_probe_b
+
+        assert zipstamp_probe_b.Y == 2
+    finally:
+        sys.path[:] = saved_path
+        for name in ("zipstamp_probe_a", "zipstamp_probe_b"):
+            sys.modules.pop(name, None)
+        for key in [k for k in sys.path_importer_cache if k.startswith(archive)]:
+            del sys.path_importer_cache[key]
+        zipimport._zip_directory_cache.pop(archive, None)

@@ -12,6 +12,7 @@ the fixed-forward DECIMAL/DATE/BOOLEAN.
     python tools/bench_ingest.py [--mb 64] [--tables 8]
     python tools/bench_ingest.py --dumpgen-seed 1 --mb 160 --keep-dump
     python tools/bench_ingest.py --dump-path DUMP [--file-uri]
+    python tools/bench_ingest.py --fixed-cost
 
 Prints ONE JSON line: {"dump_mb": ..., "rows": ..., "wall_s": ...,
 "mb_per_s": ..., "rows_per_s": ...}.  The dump is generated to a temp
@@ -104,6 +105,99 @@ def generate_dump(path: str, target_mb: float, n_tables: int) -> int:
             rows += ROWS_PER_STMT
             i += 1
     return rows
+
+
+FIXED_COST_ROUNDS = 5
+FIXED_COST_TASKS = 40
+
+
+def _fixed_cost(spark, cpus: int) -> dict:
+    """Time the fixed cost of a Python crossing, after one warm call of
+    each pair, in FIXED_COST_ROUNDS alternating rounds: FIXED_COST_TASKS
+    no-op ``mapInArrow`` tasks against a projection with as many JVM tasks,
+    and a 10-row ``format("mysqldump")`` ``load()``, ``count()`` and
+    ``save()`` against their Parquet twins."""
+    from mysqldump_to_parquet_spark.sources.dump_datasource import (
+        MysqldumpDataSource,
+    )
+
+    spark.dataSource.register(MysqldumpDataSource)
+    work = tempfile.mkdtemp(prefix="fixed_cost_")
+    try:
+        dump = os.path.join(work, "ten.sql")
+        with open(dump, "w") as f:
+            f.write(DDL.format(name="ten"))
+            f.write(f"INSERT INTO `ten` VALUES {','.join(_row(i) for i in range(10))};\n")
+        twin = os.path.join(work, "ten.parquet")
+        spark.read.format("mysqldump").option("path", dump).option(
+            "table", "ten"
+        ).load().write.parquet(twin)
+
+        def noop(batches):
+            for b in batches:
+                yield b.slice(0, 0)
+
+        tasks = spark.range(0, FIXED_COST_TASKS, 1, FIXED_COST_TASKS)
+
+        def load(fmt):
+            if fmt == "parquet":
+                return spark.read.parquet(twin)
+            return spark.read.format("mysqldump").option("path", dump).option(
+                "table", "ten"
+            ).load()
+
+        def save(fmt):
+            w = spark.read.parquet(twin).write.mode("overwrite")
+            if fmt == "parquet":
+                w.parquet(os.path.join(work, "out.parquet"))
+            else:
+                w.format("mysqldump").option(
+                    "path", os.path.join(work, "out.sql")
+                ).option("table", "ten").save()
+
+        pairs = {
+            "tasks": {
+                "python": lambda: tasks.mapInArrow(noop, tasks.schema).count(),
+                "jvm": lambda: tasks.selectExpr("id + 1 AS id").count(),
+            },
+            "load": {f: (lambda f=f: load(f)) for f in ("mysqldump", "parquet")},
+            "count": {
+                f: (lambda f=f: load(f).count()) for f in ("mysqldump", "parquet")
+            },
+            "save": {f: (lambda f=f: save(f)) for f in ("mysqldump", "parquet")},
+        }
+        for sides in pairs.values():
+            for run in sides.values():
+                run()
+        seconds = {
+            what: {side: [] for side in sides} for what, sides in pairs.items()
+        }
+        for r in range(FIXED_COST_ROUNDS):
+            for what, sides in pairs.items():
+                order = list(sides) if r % 2 == 0 else list(sides)[::-1]
+                for side in order:
+                    t0 = time.perf_counter()
+                    sides[side]()
+                    seconds[what][side].append(round(time.perf_counter() - t0, 3))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return {
+        "what": f"{FIXED_COST_TASKS} no-op mapInArrow tasks vs a "
+        f"{FIXED_COST_TASKS}-task JVM projection over spark.range(0, "
+        f"{FIXED_COST_TASKS}, 1, {FIXED_COST_TASKS}).count(); a 10-row "
+        "format('mysqldump') load(), load().count() and save() vs the same "
+        "10 rows in Parquet; after one warm call of each, "
+        f"{FIXED_COST_ROUNDS} alternating rounds",
+        "cpus": cpus,
+        "nproc": os.cpu_count(),
+        "python": sys.version.split()[0],
+        "seconds": seconds,
+        "median_s": {
+            what: {side: sorted(v)[len(v) // 2] for side, v in sides.items()}
+            for what, sides in seconds.items()
+        },
+        "loadavg": [round(x, 2) for x in os.getloadavg()],
+    }
 
 
 def main() -> None:
@@ -199,6 +293,14 @@ def main() -> None:
         "(reads the row count from the `<dump>.rows` sidecar; skips "
         "generation).  Incompatible with --gzip/--multiline reshaping.",
     )
+    ap.add_argument(
+        "--fixed-cost",
+        action="store_true",
+        help="time the fixed cost of a Python crossing instead of a "
+        "conversion: no-op mapInArrow tasks against JVM tasks, and a "
+        "10-row format('mysqldump') load/count/save against Parquet "
+        "(the other flags are ignored)",
+    )
     args = ap.parse_args()
     if args.dumpgen_seed is not None and args.dump_path:
         ap.error("--dumpgen-seed generates a dump; --dump-path reuses one")
@@ -227,6 +329,12 @@ def main() -> None:
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
     )
+    if args.fixed_cost:
+        try:
+            print(json.dumps(_fixed_cost(spark, cpus)))
+        finally:
+            spark.stop()
+        return
     work = tempfile.mkdtemp(prefix="ingest_bench_")
     cleanup_dirs: list[str] = []
     try:
