@@ -15,7 +15,8 @@ first —
 Scale design:
 
 * **Splittable reads, both layouts.** ``partitions()`` carves plain
-  ``.sql`` files into byte ranges (default 32 MB); each task reads the
+  ``.sql`` files into byte ranges (default 32 MB) with the converter's
+  own carver (:func:`..mysqldump._carve_ranges`); each task reads the
   statements its range owns through the converter's own statement source
   (:func:`..mysqldump._range_statements`: a statement belongs to the
   range it starts in — Hadoop's line ownership for one-line dumps — and
@@ -23,10 +24,13 @@ Scale design:
   parsed exactly once and a 100 GB dump fans out across the cluster with
   zero driver involvement.  Compressed members (.gz/.bz2/.xz/.zst) are
   not seekable → one partition per file (same behavior as every Hadoop
-  text source; the scale path is many files).
+  text source; the scale path is many files), decoded in the task's
+  process by pyarrow's codecs (lzma for .xz), with no external binary.
 * **Schema from DDL, driver-side and streamed.** ``schema()`` finds the
-  table's CREATE TABLE anywhere in the sorted files — INSERT lines are
-  skipped by a byte-prefix test, without decoding — and reuses
+  table's CREATE TABLE anywhere in the sorted files through the same
+  line source (:func:`..mysqldump._range_lines`) and DDL filter as the
+  converter's multi-line DDL pass — INSERT lines are skipped by a
+  byte-prefix test, without decoding — and reuses
   :func:`..mysqldump.parse_create_table`: the same grammar, bug fixes,
   and type mapping as the CLI path.
 * **Same parse core.** Statements become final-typed Arrow batches in
@@ -51,11 +55,11 @@ from pyspark.sql.datasource import (
 )
 
 from .mysqldump import (
-    COMPRESSED_DUMP_EXTS,
     DumpParseError,
+    _carve_ranges,
     _ddl_statements,
     _offsets_and_data,
-    _open_dump,
+    _range_lines,
     _range_statements,
     _table_batches,
     parse_create_table,
@@ -80,12 +84,11 @@ def _table_schema(paths: list[str], table: str) -> T.StructType:
     order: mysqldump writes each table's DDL just before its data, so it
     can sit anywhere in the dump."""
     for path in paths:
-        with _open_dump(path) as fh:
-            for stmt in _ddl_statements(fh):
-                if stmt.startswith("CREATE TABLE"):
-                    parsed = parse_create_table(stmt)
-                    if parsed.table == table:
-                        return parsed.schema
+        for stmt in _ddl_statements(_range_lines(path, 0, -1)):
+            if stmt.startswith("CREATE TABLE"):
+                parsed = parse_create_table(stmt)
+                if parsed.table == table:
+                    return parsed.schema
     raise DumpParseError(
         f"{paths[0]}: no CREATE TABLE for {table!r} found — pass the "
         "table's schema with .schema(...) to read a dump without its DDL"
@@ -108,16 +111,8 @@ class MysqldumpReader(DataSourceReader):
         )
 
     def partitions(self):
-        parts: list[_Range] = []
-        for p in self._paths:
-            if p.endswith(COMPRESSED_DUMP_EXTS):
-                parts.append(_Range(p, 0, -1))  # not seekable
-                continue
-            size = os.path.getsize(p)
-            step = max(self._split_bytes, 1)
-            offsets = range(0, max(size, 1), step)
-            parts.extend(_Range(p, off, min(off + step, size)) for off in offsets)
-        return parts
+        files = [(p, os.path.getsize(p)) for p in self._paths]
+        return [_Range(*r) for r in _carve_ranges(files, self._split_bytes)]
 
     def read(self, part: _Range):
         stmts = _range_statements(part.path, part.start, part.end)

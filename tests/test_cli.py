@@ -59,28 +59,21 @@ def test_cli_stdin_compressed_stream_detected(
     magic bytes and suffixes the temp file accordingly, so compressed
     stdin decodes through the normal extension dispatch instead of
     garbage-parsing as .sql."""
-    import bz2
-    import gzip
     import io
     import lzma
-    import shutil as _shutil
-    import subprocess
     import sys as _sys
 
+    import pyarrow as pa
+
     raw = DEMO_DUMP.encode()
-    if codec == "gzip":
-        data = gzip.compress(raw)
-    elif codec == "bzip2":
-        data = bz2.compress(raw)
-    elif codec == "xz":
+    if codec == "xz":
         data = lzma.compress(raw)
     else:
-        if _shutil.which("zstd") is None:
-            pytest.skip("zstd CLI unavailable")
-        data = subprocess.run(
-            ["zstd", "-q", "-c"], input=raw, check=True,
-            stdout=subprocess.PIPE,
-        ).stdout
+        buf = pa.BufferOutputStream()
+        pa_codec = {"gzip": "gzip", "bzip2": "bz2", "zstd": "zstd"}[codec]
+        with pa.output_stream(buf, compression=pa_codec) as fh:
+            fh.write(raw)
+        data = buf.getvalue().to_pybytes()
 
     monkeypatch.setattr(session_mod, "get_spark", lambda **kw: _NoStop(spark))
 

@@ -103,24 +103,18 @@ def test_compressed_member_single_partition_still_correct(
     """The datasource decodes every converter-supported compression
     Python-side inside tasks — including .xz, which the JVM text scan
     cannot read (r12: reference parity is .gz only, main.rs:41–47)."""
-    import bz2 as _bz2
     import lzma
-    import shutil
-    import subprocess
+
+    import pyarrow as pa
 
     p = tmp_path / f"demo.sql.{ext}"
-    if ext == "bz2":
-        with _bz2.open(p, "wt") as fh:
-            fh.write(DEMO_DUMP)
-    elif ext == "xz":
+    if ext == "xz":
         with lzma.open(p, "wt") as fh:
             fh.write(DEMO_DUMP)
     else:
-        if shutil.which("zstd") is None:
-            pytest.skip("zstd CLI unavailable to write the fixture")
-        subprocess.run(
-            ["zstd", "-q", "-o", str(p)], input=DEMO_DUMP.encode(), check=True
-        )
+        codec = {"bz2": "bz2", "zst": "zstd"}[ext]
+        with pa.output_stream(str(p), compression=codec) as fh:
+            fh.write(DEMO_DUMP.encode())
     assert sorted(r.id for r in _demo_df(registered, p).collect()) == [1, 2, 3]
 
 

@@ -121,19 +121,17 @@ def test_range_ownership_partitions_any_dump(tmp_path_factory, dump, step):
     range's owned statements in offset order reproduces the sequential
     reassembly exactly — no statement lost, duplicated, or reordered."""
     from mysqldump_to_parquet_spark.sources.mysqldump import (
-        _iter_range_statements,
+        _carve_ranges,
+        _range_statements,
         iter_statements,
     )
 
     d = tmp_path_factory.mktemp("rng")
     f = d / "dump.sql"
     f.write_text(dump)
-    size = f.stat().st_size
     got: list[str] = []
-    for off in range(0, max(size, 1), step):
-        got.extend(
-            _iter_range_statements(str(f), off, min(off + step, size))
-        )
+    for path, lo, hi in _carve_ranges([(str(f), f.stat().st_size)], step):
+        got.extend(_range_statements(path, lo, hi))
     assert got == list(iter_statements(dump.splitlines()))
 
 

@@ -39,30 +39,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 ROWS_PER_STMT = 1000
 
 
-class _CliZstdWriter:
-    """Text writer streaming through ``zstd -q -f -o path`` (Python 3.11
-    has no stdlib zstd codec; the CLI is the same dependency the ingest's
-    Python-side .zst decode uses)."""
-
-    def __init__(self, path: str):
-        import io
-        import subprocess
-
-        self._proc = subprocess.Popen(
-            ["zstd", "-q", "-f", "-o", path, "--"],
-            stdin=subprocess.PIPE,
-        )
-        self._text = io.TextIOWrapper(self._proc.stdin)
-
-    def write(self, s: str) -> None:
-        self._text.write(s)
-
-    def close(self) -> None:
-        self._text.close()
-        rc = self._proc.wait()
-        if rc != 0:
-            raise RuntimeError(f"zstd compression exited {rc}")
-
 DDL = """CREATE TABLE `{name}` (
   `id` bigint NOT NULL,
   `name` varchar(64) NOT NULL,
@@ -396,21 +372,22 @@ def main() -> None:
             # shard the plain dump into N compressed members: DDL lines
             # go to member 0; INSERT lines round-robin (statements are
             # self-contained one-liners, so any sharding is valid)
-            ext = {"gzip": "gz", "zstd": "zst", "bzip2": "bz2"}[args.codec]
+            import io
 
-            def _member_out(path):
-                if args.codec == "gzip":
-                    import gzip as _gzip
+            import pyarrow as pa
 
-                    return _gzip.open(path, "wt")
-                if args.codec == "bzip2":
-                    import bz2 as _bz2
-
-                    return _bz2.open(path, "wt")
-                return _CliZstdWriter(path)
-
+            ext, codec = {
+                "gzip": ("gz", "gzip"),
+                "zstd": ("zst", "zstd"),
+                "bzip2": ("bz2", "bz2"),
+            }[args.codec]
             outs = [
-                _member_out(os.path.join(work, f"part{i:03d}.sql.{ext}"))
+                io.TextIOWrapper(
+                    pa.output_stream(
+                        os.path.join(work, f"part{i:03d}.sql.{ext}"),
+                        compression=codec,
+                    )
+                )
                 for i in range(args.gzip)
             ]
             with open(dump) as fh:
