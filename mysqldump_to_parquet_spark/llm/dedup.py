@@ -7,8 +7,8 @@ Scale design (the whole point of these operators at 100 TB):
   partial aggregation; the full text never shuffles (only its SHA-256).
 * **MinHash+LSH** shuffles fixed-size signatures (k hashes per doc) and
   joins only within LSH bands/buckets — candidate pairs, never the O(n²)
-  cross product.  Uses spark.ml's MinHashLSH (HashingTF shingles →
-  approxSimilarityJoin).
+  cross product.  Built from DataFrame primitives and one NumPy Arrow
+  stage (``dedup_near_minhash``), no ML pipeline.
 * **SimHash** reduces each document to a single 64-bit fingerprint via a
   per-row higher-order-function fold (no explode, no extra shuffle); near
   duplicates then group by fingerprint bands.
@@ -251,28 +251,6 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard_sim"),
         )
         .where(F.col("jaccard_sim") >= JACCARD_THRESHOLD)
-    )
-
-
-def dedup_near_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spark.ml variant of q_dedup_near (HashingTF → MinHashLSH →
-    approxSimilarityJoin) — kept as the library-backed alternative; the
-    native primitive-built version above is the default engine path."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    toks = _shingles(load_table(spark, sf_dir, "documents"))
-    tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 18)
-    feats = tf.transform(toks).where(F.expr("size(shingles) > 0"))
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, 0.6, distCol="jaccard_dist")
-    return (
-        pairs.select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round(1 - F.col("jaccard_dist"), 4).alias("jaccard_sim"),
-        )
-        .where(F.col("doc_a") < F.col("doc_b"))
     )
 
 
@@ -702,11 +680,6 @@ QUERIES = {
     # banding, partition-independent — its rows-only driver row pins a
     # reproducible count where the full pipeline is approx-by-design
     "q_dedup_near_candidates": dedup_near_candidates,
-    # dedup_near_minhash_ml (the spark.ml MinHashLSH variant of q_dedup_near)
-    # is intentionally NOT registered: it is a redundant twin of q_dedup_near
-    # (same semantics, ~8x slower) and would consume one of the driver's
-    # bounded correctness-check slots.  It stays implemented + pytest-covered
-    # (tests/test_llm.py) as the library-backed alternative.
     "q_dedup_simhash": dedup_simhash,
     "q_dedup_ngram_jaccard": dedup_ngram_jaccard,
     "q_dedup_components": dedup_components,

@@ -22,15 +22,17 @@ Scale design:
   range it starts in — Hadoop's line ownership for one-line dumps — and
   multi-line INSERTs reassemble across lines), so every statement is
   parsed exactly once and a 100 GB dump fans out across the cluster with
-  zero driver involvement.  Compressed members (.gz/.bz2/.xz/.zst) are
-  not seekable → one partition per file (same behavior as every Hadoop
-  text source; the scale path is many files), decoded in the task's
-  process by pyarrow's codecs (lzma for .xz), with no external binary.
+  zero driver involvement.  Other tables' statements are skipped at
+  their first line, as bytes: never joined, never decoded.  Compressed
+  members (.gz/.bz2/.xz/.zst) are not seekable → one partition per file
+  (same behavior as every Hadoop text source; the scale path is many
+  files), decoded in the task's process by pyarrow's codecs (lzma for
+  .xz), with no external binary.
 * **Schema from DDL, driver-side and streamed.** ``schema()`` finds the
   table's CREATE TABLE anywhere in the sorted files through the same
-  line source (:func:`..mysqldump._range_lines`) and DDL filter as the
-  converter's multi-line DDL pass — INSERT lines are skipped by a
-  byte-prefix test, without decoding — and reuses
+  statement source and DDL filter as the converter's multi-line DDL
+  pass — INSERT statements are skipped at their first line, without
+  decoding — and reuses
   :func:`..mysqldump.parse_create_table`: the same grammar, bug fixes,
   and type mapping as the CLI path.
 * **Same parse core.** Statements become final-typed Arrow batches in
@@ -55,13 +57,13 @@ from pyspark.sql.datasource import (
 )
 
 from .mysqldump import (
+    _DDL,
     DumpParseError,
     _carve_ranges,
-    _ddl_statements,
     _offsets_and_data,
-    _range_lines,
     _range_statements,
     _table_batches,
+    _text,
     parse_create_table,
 )
 
@@ -84,9 +86,9 @@ def _table_schema(paths: list[str], table: str) -> T.StructType:
     order: mysqldump writes each table's DDL just before its data, so it
     can sit anywhere in the dump."""
     for path in paths:
-        for stmt in _ddl_statements(_range_lines(path, 0, -1)):
-            if stmt.startswith("CREATE TABLE"):
-                parsed = parse_create_table(stmt)
+        for stmt in _range_statements(path, 0, -1, (_DDL,)):
+            if stmt.startswith(b"CREATE TABLE"):
+                parsed = parse_create_table(_text(stmt))
                 if parsed.table == table:
                     return parsed.schema
     raise DumpParseError(
@@ -115,7 +117,9 @@ class MysqldumpReader(DataSourceReader):
         return [_Range(*r) for r in _carve_ranges(files, self._split_bytes)]
 
     def read(self, part: _Range):
-        stmts = _range_statements(part.path, part.start, part.end)
+        stmts = _range_statements(
+            part.path, part.start, part.end, (self._table,)
+        )
         yield from _table_batches(stmts, self._table, self._schema)
 
 

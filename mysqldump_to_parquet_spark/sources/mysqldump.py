@@ -70,68 +70,119 @@ from pyspark.sql import types as T
 # statement grammar (pure Python — no Spark needed, unit-tested directly)
 # --------------------------------------------------------------------------
 
+#: DML statement prefixes a mysqldump can emit: plain, ``--insert-ignore``
+#: (INSERT IGNORE), and ``--replace`` (REPLACE INTO).  For a whole-table
+#: conversion the three are row-identical — IGNORE/REPLACE semantics only
+#: matter when loading into a table that already has rows, and a dump is
+#: self-consistent — so all three parse through the same path.
+DML_PREFIXES = ("INSERT INTO", "INSERT IGNORE INTO", "REPLACE INTO")
 
-def cleanup_key(line: str) -> str:
+_DML_HEAD = r"^(?:INSERT\s+(?:IGNORE\s+)?|REPLACE\s+)INTO"
+_INSERT_TABLE = _DML_HEAD + r"\s+[`\"]?(?P<name>[A-Za-z0-9_$]+)[`\"]?"
+
+#: A statement's route, read from its first bytes: group ``name`` for an
+#: INSERT whose head names its table, group ``dml`` alone for an
+#: INSERT/REPLACE head that does not (see :func:`_route`).
+_ROUTE_RE = re.compile(
+    rb"(?:" + _INSERT_TABLE.encode() + rb")|(?P<dml>INSERT|REPLACE)\b", re.I
+)
+
+#: The route of every statement that is not an INSERT.
+_DDL = "DDL"
+
+#: Heads of the statements the grammar keeps, besides USE (:func:`_is_use`).
+_KEPT_HEADS = tuple(p.encode() for p in ("CREATE TABLE",) + DML_PREFIXES)
+
+
+def _route(stmt: bytes) -> str | None:
+    """Where a statement (or its first line) goes: the lowercased table
+    name of an INSERT, :data:`_DDL` for any other statement, or None
+    for an INSERT/REPLACE whose table name is not in ``stmt`` — a first
+    line that ends before the name, or an INSERT no table can claim."""
+    m = _ROUTE_RE.match(stmt)
+    if m is None:
+        return _DDL
+    name = m.group("name")
+    return name.decode("ascii").lower() if name else None
+
+
+def _is_use(stmt: bytes) -> bool:
+    return stmt[:4].upper() in (b"USE ", b"USE`")
+
+
+def cleanup_key(line: bytes) -> bytes:
     """Strip MySQL index prefix lengths: ``KEY k (col(144))`` → ``KEY k (col)``.
 
     Same paren-depth semantics as the reference (main.rs:158–181): content at
     depth ≥ 2 is dropped, including the depth-2 closing paren.
     """
-    if "KEY " not in line:
+    if b"KEY " not in line:
         return line
-    out: list[str] = []
+    out = bytearray()
     depth = 0
     for ch in line:
-        if ch == "(":
+        if ch == 40:  # (
             depth += 1
-        if ch == ")":
+        if ch == 41:  # )
             depth -= 1
             if depth == 1:
                 continue
         if depth >= 2:
             continue
         out.append(ch)
-    return "".join(out)
+    return bytes(out)
 
 
-def _is_noise(line: str) -> bool:
-    """Comment/blank filter (main.rs:123–128)."""
-    return (
-        not line
-        or line.startswith("--")
-        or (line.startswith("/*") and line.endswith("*/;"))
-    )
+def _is_noise_bytes(s: bytes) -> bool:
+    """Comment/blank filter over a stripped raw line (main.rs:123–128)."""
+    return not s or s.startswith(b"--") or (s.startswith(b"/*") and s.endswith(b"*/;"))
 
 
-def iter_statements(lines: Iterable[str]) -> Iterator[str]:
-    """Reassemble trimmed lines into SQL statements; yield only
-    CREATE TABLE / INSERT INTO statements (main.rs:110–145)."""
-    current: list[str] = []
-    in_create = False
+def iter_statements(lines: Iterable[bytes], routes=None) -> Iterator[bytes]:
+    """Reassemble raw dump lines into statements, as bytes; yield only
+    CREATE TABLE / INSERT INTO statements (main.rs:110–145).
+
+    ``routes``, when given, keeps only the statements whose
+    :func:`_route` it holds.  The route is read from a statement's first
+    non-noise line, so a statement routed elsewhere is skipped line by
+    line, never buffered or joined; a first line that does not name its
+    table yet is kept and the statement is routed once assembled."""
+    current: list[bytes] = []
+    in_create = skip = False
+    route = None
     for raw in lines:
         line = raw.strip()
-        if _is_noise(line):
+        if _is_noise_bytes(line):
+            continue
+        if routes is not None and not current and not skip:
+            route = _route(line)
+            skip = route is not None and route not in routes
+        if skip:
+            skip = not line.endswith(b";")
             continue
         if in_create:
             current.append(cleanup_key(line))
         else:
             current.append(line)
-            if not in_create and line.startswith("CREATE TABLE"):
-                in_create = True
-        if line.endswith(";"):
-            stmt = " ".join(current).strip()
+            in_create = line.startswith(b"CREATE TABLE")
+        if line.endswith(b";"):
+            stmt = b" ".join(current)
+            current.clear()
+            in_create = False
             # USE statements ride along solely as database context for the
             # duplicate-table guard (build_schemas); every downstream
             # consumer filters by CREATE/DML prefix.
-            if (
-                stmt.startswith("CREATE TABLE")
-                or stmt.startswith(DML_PREFIXES)
-                or stmt.upper().startswith("USE ")
-                or stmt.upper().startswith("USE`")
+            if (stmt.startswith(_KEPT_HEADS) or _is_use(stmt)) and (
+                routes is None or (route or _route(stmt)) in routes
             ):
                 yield stmt
-            current.clear()
-            in_create = False
+
+
+def _text(stmt: bytes) -> str:
+    """The one decode of dump statement text (invalid UTF-8 becomes
+    U+FFFD): where a statement reaches the exhaustive tokenizer and where
+    DDL reaches :func:`parse_create_table`."""
+    return stmt.decode("utf-8", errors="replace")
 
 
 # --------------------------------------------------------------------------
@@ -435,12 +486,6 @@ def parse_create_table(stmt: str) -> TableSchema:
 # INSERT → rows (value tokenizer — the P3 analog, line_parser.rs:200–272)
 # --------------------------------------------------------------------------
 
-#: DML statement prefixes a mysqldump can emit: plain, ``--insert-ignore``
-#: (INSERT IGNORE), and ``--replace`` (REPLACE INTO).  For a whole-table
-#: conversion the three are row-identical — IGNORE/REPLACE semantics only
-#: matter when loading into a table that already has rows, and a dump is
-#: self-consistent — so all three parse through the same path.
-DML_PREFIXES = ("INSERT INTO", "INSERT IGNORE INTO", "REPLACE INTO")
 
 def _dml_line_pred():
     """JVM-side predicate: line starts with any DML prefix (scan-level
@@ -451,11 +496,7 @@ def _dml_line_pred():
     return pred
 
 
-_DML_HEAD = r"^(?:INSERT\s+(?:IGNORE\s+)?|REPLACE\s+)INTO"
-
-_INSERT_TABLE_RE = re.compile(
-    _DML_HEAD + r"\s+[`\"]?(?P<name>[A-Za-z0-9_$]+)[`\"]?", re.I
-)
+_INSERT_TABLE_RE = re.compile(_INSERT_TABLE, re.I)
 _INSERT_COLS_RE = re.compile(
     _DML_HEAD + r"\s+[`\"]?[A-Za-z0-9_$]+[`\"]?\s*\((?P<cols>[^)]*)\)\s*VALUES",
     re.I,
@@ -502,11 +543,6 @@ class BitLit(int):
         # int's default feeds the VALUE back into __new__, which expects
         # the bit string — reconstruct it so pickling round-trips
         return (format(self, f"0{self.nbits}b") if self.nbits else "",)
-
-
-def insert_table_name(stmt: str) -> str | None:
-    m = _INSERT_TABLE_RE.match(stmt)
-    return m.group("name").lower() if m else None
 
 
 def parse_insert(stmt: str) -> tuple[str, list[tuple]]:
@@ -894,14 +930,15 @@ def _at_field_start(arr, pos):
     return (pos == 0) | (before == 40) | (before == 44)
 
 
-def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
+def _values_csv_bytes(stmt: bytes) -> tuple[bytes, int] | None:
     """Rewrite one canonical extended-INSERT statement's VALUES text into
     CSV bytes (one line per row, outer parens stripped), or None when any
     structural guard trips.
 
-    A statement whose raw VALUES text holds a byte 0x00–0x03 returns
-    None (SOH, STX and ETX are the payload's stand-ins for ``\\0``, hex
-    and bit literals, see :data:`_NUL_STAND_IN`).  Backslash escapes are
+    A statement with a column list (``--complete-insert``) returns None,
+    and so does one whose raw VALUES text holds a byte 0x00–0x03 (SOH,
+    STX and ETX are the payload's stand-ins for ``\\0``, hex and bit
+    literals, see :data:`_NUL_STAND_IN`).  Backslash escapes are
     then resolved by
     :func:`_unescape_bytes` (so text-corpus dumps full of ``\\'`` and
     ``\\0`` stay on the fast path), and insignificant top-level
@@ -918,27 +955,27 @@ def _values_csv_bytes(stmt: str) -> tuple[bytes, int] | None:
     the row count the caller must see back from Arrow."""
     import numpy as np
 
-    tm = _INSERT_TABLE_RE.match(stmt)
+    tm = _ROUTE_RE.match(stmt)
     # search from the table-name end: a table named `values_log` must not
     # match its own name as the keyword (same rule as parse_insert_full).
-    # The keyword sits within a few bytes of the table name (the caller
-    # already excluded column-list statements), so case-fold only a small
-    # window — upper() of the WHOLE statement measured ~6% of the scan on
-    # a 76 KB extended INSERT; fall back to the full fold only if the
-    # window misses (pathological spacing).
+    # The keyword sits within a few bytes of the table name unless a
+    # column list comes between, so case-fold only a small window —
+    # upper() of the WHOLE statement measured ~6% of the scan on a 76 KB
+    # extended INSERT; fall back to the full fold only if the window
+    # misses (pathological spacing).
     start = tm.end() if tm else 0
-    vpos = stmt[start : start + 96].upper().find("VALUES")
+    vpos = stmt[start : start + 96].upper().find(b"VALUES")
     vpos = (
-        vpos + start if vpos >= 0 else stmt.upper().find("VALUES", start)
+        vpos + start if vpos >= 0 else stmt.upper().find(b"VALUES", start)
     )
-    if vpos < 0:
+    if vpos < 0 or b"(" in stmt[start:vpos]:
+        return None  # no keyword, or a column list before it
+    seg = stmt[vpos + 6 :].strip(b" \t\r\n")
+    if seg.endswith(b";"):
+        seg = seg.rstrip(b";").rstrip(b" \t\r\n")
+    if len(seg) < 2 or not (seg.startswith(b"(") and seg.endswith(b")")):
         return None
-    seg = stmt[vpos + 6 :].strip(" \t\r\n")
-    if seg.endswith(";"):
-        seg = seg.rstrip(";").rstrip(" \t\r\n")
-    if len(seg) < 2 or not (seg.startswith("(") and seg.endswith(")")):
-        return None
-    data = seg[1:-1].encode("utf-8")
+    data = seg[1:-1]
     if not data or np.frombuffer(data, dtype=np.uint8).min() <= 3:
         return None  # raw NUL or a stand-in byte
     if b"\\" in data:
@@ -1406,7 +1443,7 @@ def coerce_row(row: tuple, target: T.StructType, table: str) -> tuple:
                 out.append(bytes(v))  # 0x… hex literal (--hex-blob dumps)
             elif isinstance(v, str):
                 # A quoted literal destined for a binary column came through
-                # spark.read.text's UTF-8 decode.  Valid UTF-8 round-trips
+                # the statement decode (_text).  Valid UTF-8 round-trips
                 # byte-faithfully; invalid bytes were already replaced with
                 # U+FFFD and the original is unrecoverable — fail loudly
                 # (C3 contract; the reference errors on invalid UTF-8 too,
@@ -1451,11 +1488,11 @@ def _arrow_type(dt: T.DataType):
     return simple[type(dt)]
 
 
-def parse_statements(stmts: list[str], table: str, schema: T.StructType):
-    """INSERT statements of ``table`` → one pyarrow Table in ``schema``'s
-    final types.  This is the only place dump text becomes typed Arrow:
-    the one-pass convert task, the per-table fallback and the DataSource
-    reader all call it (through :func:`_statement_groups`).
+def parse_statements(stmts: list[bytes], table: str, schema: T.StructType):
+    """INSERT statements of ``table``, as raw bytes → one pyarrow Table in
+    ``schema``'s final types.  This is the only place dump text becomes
+    typed Arrow: the one-pass convert task, the per-table fallback and
+    the DataSource reader all call it (through :func:`_statement_groups`).
 
     Fast-path-eligible statements append their CSV rows to ONE
     ``bytearray`` payload, read by a single Arrow-CSV call into carrier
@@ -1464,8 +1501,10 @@ def parse_statements(stmts: list[str], table: str, schema: T.StructType):
     every statement of the fast group when its read or a cast fails, go
     through the exhaustive tokenizer, which parses them correctly or
     raises the contextual :class:`DumpParseError` — identical C1–C3
-    semantics on both paths.  Only references to the statements are held
-    until the read."""
+    semantics on both paths.  Arrow's UTF-8 check refuses a fast group
+    holding invalid UTF-8, so such text reaches the tokenizer, decoded
+    by :func:`_text`.  Only references to the statements are held until
+    the read."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1473,13 +1512,13 @@ def parse_statements(stmts: list[str], table: str, schema: T.StructType):
         [pa.field(f.name, _arrow_type(f.dataType)) for f in schema.fields]
     )
     names = schema.names
-    fast: list[str] = []
-    slow: list[str] = []
+    fast: list[bytes] = []
+    slow: list[bytes] = []
     payload = bytearray()
     fast_rows = 0
     for stmt in stmts:
         stmt = stmt.strip()  # the same object unless it has edge whitespace
-        fb = None if _INSERT_COLS_RE.match(stmt) else _values_csv_bytes(stmt)
+        fb = _values_csv_bytes(stmt)
         if fb is None:
             slow.append(stmt)
             continue
@@ -1530,7 +1569,7 @@ def parse_statements(stmts: list[str], table: str, schema: T.StructType):
 
     rows = []
     for stmt in slow:
-        _t, cols, tuples = parse_insert_full(stmt.rstrip(";") + ";")
+        _t, cols, tuples = parse_insert_full(_text(stmt.rstrip(b";")) + ";")
         for tup in tuples:
             if cols is not None:  # --complete-insert dumps
                 tup = align_row(tup, cols, schema, table)
@@ -1543,24 +1582,25 @@ def parse_statements(stmts: list[str], table: str, schema: T.StructType):
     return pa.concat_tables(parts) if parts else target.empty_table()
 
 
-#: Statement text buffered per table before one :func:`parse_statements`
-#: call (one Arrow-CSV read; one parquet row group or reader batch), in
-#: every front end.  Also the byte cap of the Arrow batches that carry
-#: statement text into the convert's tasks (:func:`_statement_source`),
-#: so one crossing batch holds about one flush.
+#: Bytes of statement text buffered per table before one
+#: :func:`parse_statements` call (one Arrow-CSV read; one parquet row
+#: group or reader batch), in every front end.  Also the byte cap of the
+#: Arrow batches that carry statement text into the convert's tasks
+#: (:func:`_statement_source`), so one crossing batch holds about one
+#: flush.
 _PARSE_FLUSH_BYTES = 32 * 1024 * 1024
 
 
 def _statement_groups(
-    stmts: Iterable[str], tables
-) -> Iterator[tuple[str, list[str]]]:
-    """Route INSERT statements by table name: ``(table, statements)``
+    stmts: Iterable[bytes], tables
+) -> Iterator[tuple[str, list[bytes]]]:
+    """Route INSERT statements by :func:`_route`: ``(table, statements)``
     groups of at least _PARSE_FLUSH_BYTES, then each table's remainder.
     Statements of no table in ``tables`` — DDL, and orphan INSERTs with
     no CREATE TABLE (W3 parity) — are dropped."""
     bufs: dict[str, list] = {}
     for stmt in stmts:
-        table = insert_table_name(stmt)
+        table = _route(stmt)
         if table not in tables:
             continue
         buf = bufs.setdefault(table, [[], 0])
@@ -1572,7 +1612,7 @@ def _statement_groups(
         yield table, group
 
 
-def _table_batches(stmts: Iterable[str], table: str, schema: T.StructType):
+def _table_batches(stmts: Iterable[bytes], table: str, schema: T.StructType):
     """One table's final-typed Arrow batches out of a statement stream —
     the body of the DataSource reader and of the per-table fallback."""
     for _t, group in _statement_groups(stmts, (table,)):
@@ -1686,15 +1726,16 @@ def _line_schemas(
         # marker-free and ≤ MAX_DDL_LINES: the filtered set is tiny and
         # safe to collect whole (partition order — same ordering contract
         # the CollectLimit path had)
-        ddl_lines = [r[0] for r in lines_df.where(is_ddl).collect()]
+        binary = F.col("value").cast("binary")
+        ddl_lines = [r[0] for r in lines_df.where(is_ddl).select(binary).collect()]
     schemas = build_schemas(iter_statements(ddl_lines))
     _require_tables(schemas, dump_path)
     return schemas
 
 
-def build_schemas(stmts: Iterable[str]) -> dict[str, T.StructType]:
-    """CREATE TABLE statements → ``{table: schema}``, fail-loud on
-    duplicate table names.
+def build_schemas(stmts: Iterable[bytes]) -> dict[str, T.StructType]:
+    """CREATE TABLE statements, as raw bytes → ``{table: schema}``,
+    fail-loud on duplicate table names.
 
     ``mysqldump --databases`` dumps define tables under a ``USE`` context
     that INSERT statements do not carry, so two databases with a
@@ -1708,12 +1749,12 @@ def build_schemas(stmts: Iterable[str]) -> dict[str, T.StructType]:
     table_db: dict[str, str | None] = {}
     current_db: str | None = None
     for stmt in stmts:
-        if stmt.upper().startswith("USE ") or stmt.upper().startswith("USE`"):
-            current_db = stmt[3:].strip(" `\";") or None
+        if _is_use(stmt):
+            current_db = _text(stmt[3:].strip(b" `\";")) or None
             continue
-        if not stmt.startswith("CREATE TABLE"):
+        if not stmt.startswith(b"CREATE TABLE"):
             continue
-        ts = parse_create_table(stmt)
+        ts = parse_create_table(_text(stmt))
         if ts.table in schemas:
             first_db = table_db[ts.table]
             ctx = (
@@ -1742,17 +1783,12 @@ def build_schemas(stmts: Iterable[str]) -> dict[str, T.StructType]:
 # --------------------------------------------------------------------------
 
 
-def _is_noise_bytes(s: bytes) -> bool:
-    """:func:`_is_noise` over a stripped raw line, without decoding."""
-    return not s or s.startswith(b"--") or (s.startswith(b"/*") and s.endswith(b"*/;"))
-
-
 def _is_terminator_line(raw: bytes) -> bool:
-    """Byte-level twin of the grammar :func:`iter_statements` applies per
-    line: a statement terminates at a NON-noise line whose stripped text
-    ends with ';' (noise is skipped there, so it must not anchor a range
-    boundary either).  Both neighbors of every split boundary use this
-    same classifier, so each statement is owned by exactly one range."""
+    """The terminator test of :func:`iter_statements`: a statement
+    terminates at a NON-noise line whose stripped text ends with ';'
+    (noise is skipped there, so it must not anchor a range boundary
+    either).  Both neighbors of every split boundary use this same
+    classifier, so each statement is owned by exactly one range."""
     s = raw.strip()
     return s.endswith(b";") and not _is_noise_bytes(s)
 
@@ -1887,46 +1923,14 @@ def _range_lines(path: str, lo: int, hi: int) -> Iterator[bytes]:
             raise DumpParseError(f"{path}: {codec} decode failed: {e}") from e
 
 
-def _range_statements(path: str, lo: int, hi: int) -> Iterator[str]:
-    """Statements owned by one reassembly range (:func:`_range_lines`).
-    Lines decode one at a time: ``\\n`` is never part of a UTF-8
-    sequence, so the text equals a whole-range decode."""
-    return iter_statements(
-        ln.decode("utf-8", errors="replace")
-        for ln in _range_lines(path, lo, hi)
-    )
-
-
-def _ddl_statements(lines: Iterable[bytes]) -> Iterator[str]:
-    """CREATE TABLE / USE statements out of raw dump lines, skipping
-    INSERT bodies at the bytes level (no decode, no join): a dump's bytes
-    are overwhelmingly INSERT text, and the DDL scans need only the DDL.
-    Candidate statements are re-assembled through the SAME grammar
-    (:func:`iter_statements`) so cleanup/noise semantics cannot drift;
-    overcollection (e.g. a ``USES...`` statement) is filtered there, and
-    undercollection is impossible because every statement start is
-    prefix-tested.  Streams: one candidate statement is held at a time."""
-    buf: list[bytes] = []
-    in_stmt = collecting = False
-    for ln in lines:
-        s = ln.strip()
-        if _is_noise_bytes(s):
-            continue
-        if not in_stmt:
-            in_stmt = True
-            collecting = s.startswith(b"CREATE TABLE") or s[:3].upper() == b"USE"
-        if collecting:
-            buf.append(ln)
-        if s.endswith(b";"):
-            in_stmt = False
-            if buf:
-                text = (b.decode("utf-8", errors="replace") for b in buf)
-                yield from (
-                    st
-                    for st in iter_statements(text)
-                    if not st.startswith(DML_PREFIXES)
-                )
-                buf = []
+def _range_statements(
+    path: str, lo: int, hi: int, routes=None
+) -> Iterator[bytes]:
+    """Statements owned by one reassembly range (:func:`_range_lines`),
+    as bytes, kept to ``routes`` when given (:func:`iter_statements`):
+    ``(table,)`` for one table's reader or job, ``(_DDL,)`` for the DDL
+    scans, which then never buffer or join an INSERT body."""
+    return iter_statements(_range_lines(path, lo, hi), routes)
 
 
 def _carve_ranges(
@@ -2043,20 +2047,15 @@ def collect_schemas_multiline(
     """Pass 1 for multi-line dumps: a map-only parallel DDL scan over the
     convert's reassembly ranges that filters Python-side, so INSERT text
     never crosses to the JVM; the (tiny) CREATE TABLE / USE statement set
-    is collected to the driver."""
+    is collected to the driver as bytes."""
     import pyarrow as pa
 
     def ddl_only(batches):
-        for batch in batches:
-            out = [
-                stmt
-                for path, lo, hi in zip(*(c.to_pylist() for c in batch.columns))
-                for stmt in _ddl_statements(_range_lines(path, lo, hi))
-            ]
-            yield pa.RecordBatch.from_pydict({"value": pa.array(out, pa.string())})
+        out = list(_source_statements(batches, multiline=True, routes=(_DDL,)))
+        yield pa.RecordBatch.from_pydict({"value": pa.array(out, pa.binary())})
 
     rdf = _ranges_df(spark, ranges)
-    stmts = [r.value for r in rdf.mapInArrow(ddl_only, "value string").collect()]
+    stmts = [r.value for r in rdf.mapInArrow(ddl_only, "value binary").collect()]
     schemas = build_schemas(stmts)
     _require_tables(schemas, dump_path)
     return schemas
@@ -2099,14 +2098,22 @@ def _statement_source(
             yield _ranges_df(spark, ranges)
 
 
-def _source_statements(arrow_batches, multiline: bool) -> Iterator[str]:
-    """Statements out of the Arrow batches of a :func:`_statement_source`."""
+def _source_statements(
+    arrow_batches, multiline: bool, routes=None
+) -> Iterator[bytes]:
+    """Statements, as bytes, out of the Arrow batches of a
+    :func:`_statement_source`.  JVM text lines cast to binary (zero-copy)
+    and arrive whole; range statements are kept to ``routes`` at their
+    first line (:func:`_range_statements`).  Either way the caller routes
+    what arrives (:func:`_statement_groups`)."""
+    import pyarrow as pa
+
     for batch in arrow_batches:
         if not multiline:
-            yield from batch.column(0).to_pylist()
+            yield from batch.column(0).cast(pa.binary()).to_pylist()
             continue
         for path, lo, hi in zip(*(c.to_pylist() for c in batch.columns)):
-            yield from _range_statements(path, lo, hi)
+            yield from _range_statements(path, lo, hi, routes)
 
 
 #: Orphaned staging directories older than this are swept at the start
@@ -2307,7 +2314,7 @@ def convert_dump_onepass(
         pid = TaskContext.get().partitionId()
         codec, level = parse_compression(compression)
         writers: dict[str, list] = {}  # table -> [writer, path, rows]
-        stmts = _source_statements(arrow_batches, multiline)
+        stmts = _source_statements(arrow_batches, multiline, schemas)
         for table, group in _statement_groups(stmts, schemas):
             final = parse_statements(group, table, schemas[table])
             if table not in writers:
@@ -2396,14 +2403,14 @@ def _table_df(
     ``mapInArrow`` of the parse core, with no repartition and no cache.
     One-line sources are pruned to the table's own lines by a JVM-side
     prefix filter first; multi-line ones skip foreign statements
-    Python-side."""
+    Python-side at their first line, undecoded."""
     from functools import reduce
 
     if not multiline:
         # mysqldump writes the table name back-quoted; cover the
         # bare/double-quoted spellings too — the Python-side name check
         # stays the correctness guard.  Table names are lowercased (like
-        # insert_table_name does), so `Users` lines reach table `users`;
+        # _route does), so `Users` lines reach table `users`;
         # 96 chars hold the longest prefix with a 64-char name.
         head = F.lower(F.substring("value", 1, 96))
         source = source.where(
@@ -2420,7 +2427,7 @@ def _table_df(
         )
     return source.mapInArrow(
         lambda batches: _table_batches(
-            _source_statements(batches, multiline), table, schema
+            _source_statements(batches, multiline, (table,)), table, schema
         ),
         # every column nullable, as in the one-pass writers' Arrow schema
         T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields]),

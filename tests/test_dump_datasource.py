@@ -553,6 +553,50 @@ def test_multiline_dump_reads_like_convert(registered, tmp_path, ext):
     assert got == want == [(1, "a"), (2, "b"), (3, "c")]
 
 
+@pytest.mark.parametrize("layout", ["one-line", "multi-line"])
+def test_invalid_utf8_reads_alike_on_every_route(registered, tmp_path, layout):
+    """One decode policy: a VARCHAR byte that is not UTF-8 reads as
+    U+FFFD through the one-pass convert, the per-table fallback and the
+    reader, in both layouts; the same byte in a BLOB dumped without
+    --hex-blob fails each of them with the hex-blob hint."""
+    from mysqldump_to_parquet_spark.sources.mysqldump import convert_dump
+
+    sep = b" " if layout == "one-line" else b"\n"
+
+    def dump(table: str, sql_type: str) -> str:
+        p = tmp_path / f"{table}.sql"
+        p.write_bytes(
+            f"CREATE TABLE `{table}` (`id` int, `v` {sql_type});\n".encode()
+            + f"INSERT INTO `{table}` VALUES".encode()
+            + sep + b"(1,'a\xffb')," + sep + b"(2,'c');\n"
+        )
+        return str(p)
+
+    def routes(path: str, table: str) -> dict:
+        def convert(out: str):
+            def run():
+                convert_dump(registered, path, out)
+                return registered.read.parquet(f"{out}/{table}").collect()
+
+            return run
+
+        return {
+            "one-pass": convert(str(tmp_path / f"{table}_onepass")),
+            "per-table": convert(f"file://{tmp_path}/{table}_per_table"),
+            "reader": lambda: registered.read.format("mysqldump")
+            .option("path", path)
+            .option("table", table)
+            .load()
+            .collect(),
+        }
+
+    for route, run in routes(dump("t", "varchar(8)"), "t").items():
+        assert sorted(map(tuple, run())) == [(1, "a\ufffdb"), (2, "c")], route
+    for route, run in routes(dump("b", "blob"), "b").items():
+        with pytest.raises(Exception, match=r"DumpParseError: b\.v: .*hex-blob"):
+            run()
+
+
 def test_schema_found_past_64_mib_of_other_inserts(tmp_path):
     """mysqldump writes each table's DDL just before its data, so a
     table's CREATE TABLE can sit far into the dump: schema() finds it

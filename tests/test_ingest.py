@@ -39,7 +39,7 @@ from mysqldump_to_parquet_spark.sources.mysqldump import (
     ],
 )
 def test_cleanup_key(src, expected):
-    assert cleanup_key(src) == expected
+    assert cleanup_key(src.encode()) == expected.encode()
 
 
 # ------------------------------------------------------------- INSERT parsing
@@ -128,13 +128,13 @@ def test_parse_create_table_unknown_type_errors():
 
 # ------------------------------------------------------- statement reassembly
 def test_iter_statements_filters_and_reassembles():
-    lines = DEMO_DUMP.splitlines()
+    lines = DEMO_DUMP.encode().splitlines()
     stmts = list(iter_statements(lines))
     # DROP/LOCK/UNLOCK/SET/comments all filtered (main.rs:136–142)
     assert len(stmts) == 2
-    assert stmts[0].startswith("CREATE TABLE `acct`")
-    assert "(`name`)" in stmts[0]  # prefix length (64) stripped by cleanup_key
-    assert stmts[1].startswith("INSERT INTO `acct`")
+    assert stmts[0].startswith(b"CREATE TABLE `acct`")
+    assert b"(`name`)" in stmts[0]  # prefix length (64) stripped by cleanup_key
+    assert stmts[1].startswith(b"INSERT INTO `acct`")
 
 
 # ---------------------------------------------------------- compression spec
@@ -497,7 +497,7 @@ def test_zst_member_reads_without_zstd_binary(tmp_path, monkeypatch):
     empty.mkdir()
     monkeypatch.setenv("PATH", str(empty))
     assert list(_range_statements(str(f), 0, -1)) == list(
-        iter_statements(DEMO_DUMP.splitlines())
+        iter_statements(DEMO_DUMP.encode().splitlines())
     )
 
 
@@ -704,7 +704,7 @@ class TestMultilineRangeOwnership:
             iter_statements,
         )
 
-        return list(iter_statements(self.DUMP.splitlines()))
+        return list(iter_statements(self.DUMP.encode().splitlines()))
 
     @pytest.mark.parametrize("step", [7, 64, 256, 1 << 20])
     def test_every_split_size_partitions_statements(self, tmp_path, step):
@@ -758,12 +758,12 @@ class TestMultilineRangeOwnership:
 
         def stmts(batches):
             got = list(_source_statements(batches, multiline=True))
-            yield pa.RecordBatch.from_pydict({"value": got})
+            yield pa.RecordBatch.from_pydict({"value": pa.array(got, pa.binary())})
 
         if ranges is None:
             ranges = _multiline_ranges(spark, path, _dump_files(spark, path))
-        rows = _ranges_df(spark, ranges).mapInArrow(stmts, "value string")
-        return sorted(r.value for r in rows.collect())
+        rows = _ranges_df(spark, ranges).mapInArrow(stmts, "value binary")
+        return sorted(bytes(r.value) for r in rows.collect())
 
     def test_stmts_df_matches_sequential(self, spark, tmp_path):
         """The Spark-side range source (parallel ranges) yields the same
@@ -1226,7 +1226,7 @@ class TestArrowFastPath:
         )
 
         stmt = "INSERT INTO `t` VALUES (1,'a'),(2,'b''s'),(3,NULL);"
-        out = _values_csv_bytes(stmt)
+        out = _values_csv_bytes(stmt.encode())
         assert out is not None
         csv, n = out
         assert n == 3
@@ -1238,7 +1238,7 @@ class TestArrowFastPath:
         )
 
         stmt = "INSERT INTO `t` VALUES (1,'x),(y'),(2,'z');"
-        csv, n = _values_csv_bytes(stmt)
+        csv, n = _values_csv_bytes(stmt.encode())
         assert n == 2
         assert csv == b"1,'x),(y'\n2,'z'"
 
@@ -1267,7 +1267,7 @@ class TestArrowFastPath:
             _values_csv_bytes,
         )
 
-        assert _values_csv_bytes(stmt) is None
+        assert _values_csv_bytes(stmt.encode()) is None
 
     @pytest.mark.parametrize(
         "stmt,want_csv,want_n",
@@ -1289,7 +1289,7 @@ class TestArrowFastPath:
             parse_insert_full,
         )
 
-        csv, n = _values_csv_bytes(stmt)
+        csv, n = _values_csv_bytes(stmt.encode())
         assert (csv, n) == (want_csv, want_n)
         # differential: the exhaustive grammar yields the same values
         _, _, rows = parse_insert_full(stmt)
@@ -1307,7 +1307,7 @@ class TestArrowFastPath:
             "INSERT INTO `t` VALUES "
             "(1,'a\\nb'),(2,'q\\'s'),(3,'c:\\\\dir'),(4,'pct\\%');"
         )
-        csv, n = _values_csv_bytes(stmt)
+        csv, n = _values_csv_bytes(stmt.encode())
         assert n == 4
         assert csv == b"1,'a\nb'\n2,'q''s'\n3,'c:\\dir'\n4,'pct\\%'"
 
@@ -1320,7 +1320,7 @@ class TestArrowFastPath:
         )
 
         stmt = "INSERT INTO `t` VALUES (1,'it\\'s ),( fine'),(2,'x');"
-        csv, n = _values_csv_bytes(stmt)
+        csv, n = _values_csv_bytes(stmt.encode())
         assert n == 2
         assert csv == b"1,'it''s ),( fine'\n2,'x'"
         # differential: exhaustive grammar agrees on the decoded values
@@ -1335,7 +1335,7 @@ class TestArrowFastPath:
         )
 
         stmt = "INSERT INTO `my_values_log` VALUES (1,'a'),(2,'b');"
-        csv, n = _values_csv_bytes(stmt)
+        csv, n = _values_csv_bytes(stmt.encode())
         assert n == 2
         assert csv == b"1,'a'\n2,'b'"
 
@@ -1357,12 +1357,12 @@ class TestArrowFastPath:
             "INSERT INTO `t1` VALUES "
             "(5,'nul\\0byte',0.5,2.00,0,'2024-05-06 07:08:09');"
         )
-        assert _values_csv_bytes(nul_stmt) is not None
+        assert _values_csv_bytes(nul_stmt.encode()) is not None
         soh_stmt = (
             "INSERT INTO `t1` VALUES "
             "(6,'raw\x01soh',0.5,3.00,1,'2024-06-07 08:09:10');"
         )
-        assert _values_csv_bytes(soh_stmt) is None
+        assert _values_csv_bytes(soh_stmt.encode()) is None
 
         dump = (
             "CREATE TABLE `t1` (\n"
@@ -1442,7 +1442,7 @@ class TestArrowFastPath:
             raise AssertionError("fast-path group fell back to the tokenizer")
 
         monkeypatch.setattr(md, "parse_insert_full", no_tokenizer)
-        assert md.parse_statements(stmts, "t", schema).to_pylist() == want
+        assert md.parse_statements([s.encode() for s in stmts], "t", schema).to_pylist() == want
 
     def test_binary_group_over_1mb_stays_on_fast_path(self, monkeypatch):
         """A statement group past 1 MB of ``--hex-blob`` output — ``0x…``
@@ -1486,7 +1486,7 @@ class TestArrowFastPath:
             raise AssertionError("fast-path group fell back to the tokenizer")
 
         monkeypatch.setattr(md, "parse_insert_full", no_tokenizer)
-        assert md.parse_statements(stmts, "b", schema).to_pylist() == want
+        assert md.parse_statements([s.encode() for s in stmts], "b", schema).to_pylist() == want
 
     def test_fast_path_matches_exhaustive_on_generated_rows(self):
         """Differential: the Arrow path and the exhaustive tokenizer parse
@@ -1523,7 +1523,7 @@ class TestArrowFastPath:
             row(i) for i in range(500)
         ) + ";"
         _, _, slow_rows = parse_insert_full(stmt)
-        csv, n = _values_csv_bytes(stmt)
+        csv, n = _values_csv_bytes(stmt.encode())
         tbl = _arrow_read_values(
             csv, [f.name for f in schema.fields], _arrow_fast_types(schema)
         )
@@ -1554,7 +1554,7 @@ class TestArrowFastPath:
         )
 
         stmt = "INSERT INTO `t` VALUES (1,'caf\\é 中\\文');"
-        csv, n = _values_csv_bytes(stmt)
+        csv, n = _values_csv_bytes(stmt.encode())
         assert n == 1 and csv.decode() == "1,'café 中文'"
         _, _, rows = parse_insert_full(stmt)
         assert rows == [(1, "café 中文")]
@@ -1581,7 +1581,7 @@ class TestArrowFastPath:
             _values_csv_bytes,
         )
 
-        assert _values_csv_bytes(stmt) is None
+        assert _values_csv_bytes(stmt.encode()) is None
 
     def test_glued_introducer_end_to_end_matches_tokenizer(self):
         """Differential: the introducer statement parses through the
@@ -1603,7 +1603,7 @@ class TestArrowFastPath:
         )
 
         stmt = "INSERT INTO `t` VALUES (1,''),(2,'a''b''c'),(3,'''');"
-        csv, n = _values_csv_bytes(stmt)
+        csv, n = _values_csv_bytes(stmt.encode())
         assert n == 3
         assert csv == b"1,''\n2,'a''b''c'\n3,''''"
 

@@ -10,6 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mysqldump_to_parquet_spark.sources.mysqldump import (
+    DML_PREFIXES,
     iter_statements,
     parse_insert,
 )
@@ -69,9 +70,9 @@ def test_insert_roundtrip(rows):
 def test_statement_reassembly_single_insert(s):
     stmt = f"INSERT INTO `t` VALUES ('{_sql_escape(s)}');"
     # newlines inside literals are escaped in real dumps; feed as one line
-    out = list(iter_statements([stmt]))
+    out = list(iter_statements([stmt.encode()]))
     if "\n" not in stmt:
-        assert out == [stmt]
+        assert out == [stmt.encode()]
 
 
 # ------------------------------------------- multiline range ownership
@@ -80,7 +81,11 @@ def test_statement_reassembly_single_insert(s):
 @st.composite
 def _random_dump(draw):
     """A synthetic multi-line dump: statements with random line breaks,
-    noise lines, string values containing ';' and ')' at line ends."""
+    noise lines, string values containing ';' and ')' at line ends.
+    INSERTs name mixed-case and prefix-sharing tables (``t``, ``T``,
+    ``t2``), quoted or bare, under every DML keyword (lower case too,
+    which the grammar drops), and may break their first line before the
+    table name."""
     parts = ["-- header comment", "/*!40101 SET NAMES utf8mb4 */;"]
     n = draw(st.integers(1, 12))
     for i in range(n):
@@ -96,15 +101,26 @@ def _random_dump(draw):
             ["'a;'", "'b)'", "'c,('", "42", "NULL", "'x'"]
         ), min_size=1, max_size=4))
         tuples = [f"({j},{v})" for j, v in enumerate(vals)]
-        layout = draw(st.sampled_from(["oneline", "tuple_lines", "ragged"]))
+        name = draw(st.sampled_from(["t0", "t", "T", "t2", "T2"]))
+        spelling = draw(st.sampled_from(["`{}`", '"{}"', "{}"])).format(name)
+        keyword = draw(st.sampled_from(DML_PREFIXES + ("insert into",)))
+        head = f"{keyword} {spelling} VALUES"
+        layout = draw(
+            st.sampled_from(["oneline", "tuple_lines", "ragged", "split_head"])
+        )
         if layout == "oneline":
-            parts.append(f"INSERT INTO `t{i % 3}` VALUES {','.join(tuples)};")
+            parts.append(f"{head} {','.join(tuples)};")
         elif layout == "tuple_lines":
-            parts.append(f"INSERT INTO `t{i % 3}` VALUES")
+            parts.append(head)
             parts += [t + "," for t in tuples[:-1]]
             parts.append(tuples[-1] + ";")
+        elif layout == "split_head":  # the first line ends before the name
+            words = head.split(" ")
+            cut = draw(st.integers(1, len(words) - 1))
+            parts += [" ".join(words[:cut]),
+                      " ".join(words[cut:]) + f" {','.join(tuples)};"]
         else:  # ragged: break after commas inside the VALUES list
-            text = f"INSERT INTO `t{i % 3}` VALUES {', '.join(tuples)};"
+            text = f"{head} {', '.join(tuples)};"
             cut = draw(st.integers(10, max(11, len(text) - 2)))
             at = text.rfind(",", 0, cut)
             if at > 0:
@@ -129,10 +145,43 @@ def test_range_ownership_partitions_any_dump(tmp_path_factory, dump, step):
     d = tmp_path_factory.mktemp("rng")
     f = d / "dump.sql"
     f.write_text(dump)
-    got: list[str] = []
+    got: list[bytes] = []
     for path, lo, hi in _carve_ranges([(str(f), f.stat().st_size)], step):
         got.extend(_range_statements(path, lo, hi))
-    assert got == list(iter_statements(dump.splitlines()))
+    assert got == list(iter_statements(dump.encode().splitlines()))
+
+
+@given(_random_dump(), st.integers(3, 200))
+@settings(max_examples=60, deadline=None)
+def test_head_filter_keeps_exactly_the_routed_statements(
+    tmp_path_factory, dump, step
+):
+    """A range read kept to one table yields exactly the statements the
+    unfiltered stream routes to that table (prefix-sharing and
+    mixed-case names, quoted or bare, every DML keyword, first lines
+    that end before the name), and the DDL filter yields exactly the
+    non-INSERT statements — never an INSERT."""
+    from mysqldump_to_parquet_spark.sources.mysqldump import (
+        _DDL,
+        _carve_ranges,
+        _range_statements,
+        _route,
+    )
+
+    d = tmp_path_factory.mktemp("heads")
+    f = d / "dump.sql"
+    f.write_text(dump)
+    ranges = _carve_ranges([(str(f), f.stat().st_size)], step)
+
+    def read(routes=None):
+        return [s for r in ranges for s in _range_statements(*r, routes)]
+
+    everything = read()
+    for table in {"t", "t2", "t0"} | {_route(s) for s in everything} - {_DDL}:
+        assert read((table,)) == [s for s in everything if _route(s) == table]
+    ddl = read((_DDL,))
+    assert ddl == [s for s in everything if _route(s) == _DDL]
+    assert not any(s[:7].upper().startswith((b"INSERT", b"REPLACE")) for s in ddl)
 
 
 # --------------------------------------------------------- DDL fuzzing
@@ -258,7 +307,7 @@ def test_arrow_fast_path_matches_exhaustive_on_hostile_strings():
         stmt = f"INSERT INTO `t` VALUES {body};"
         _, _, slow = parse_insert_full(stmt)
         nul_stmts += any("\x00" in r[1] for r in slow if r[1] is not None)
-        fb = _values_csv_bytes(stmt)
+        fb = _values_csv_bytes(stmt.encode())
         assert fb is not None, stmt[:200]
         tbl = _arrow_read_values(fb[0], names, ft)
         fast = [tuple(d.values()) for d in tbl.to_pylist()]
@@ -355,7 +404,7 @@ def test_arrow_fast_path_matches_exhaustive_on_hostile_binary():
         ]
 
     def fast(stmt, schema=schema):
-        fb = _values_csv_bytes(stmt)
+        fb = _values_csv_bytes(stmt.encode())
         if fb is None:
             return None
         return _arrow_read_values(
@@ -372,13 +421,13 @@ def test_arrow_fast_path_matches_exhaustive_on_hostile_binary():
             want = tokenizer(stmt, schema)
         except DumpParseError:
             with pytest.raises(DumpParseError):
-                parse_statements([stmt], "t", schema)
+                parse_statements([stmt.encode()], "t", schema)
             return
         for r in want:  # DECIMAL text (the BIT(64) carrier) → final value
             for f in schema.fields:
                 if isinstance(f.dataType, T.DecimalType) and r[f.name] is not None:
                     r[f.name] = Decimal(r[f.name])
-        assert parse_statements([stmt], "t", schema).to_pylist() == want
+        assert parse_statements([stmt.encode()], "t", schema).to_pylist() == want
 
     def row(i, caption="'c''1'"):
         return f"({i},{payload()},{small()},{big()},{caption})"
@@ -447,7 +496,7 @@ def test_glued_introducers_always_fall_back_and_parse(spark=None):
             + "),(".join(f"{i},{v}" for i, v in enumerate(vals))
             + ");"
         )
-        assert _values_csv_bytes(stmt) is None, stmt
+        assert _values_csv_bytes(stmt.encode()) is None, stmt
         _, _, rows = parse_insert_full(stmt)
         assert [r[1] for r in rows] == want, stmt
 

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from mysqldump_to_parquet_spark.llm.dedup import (
     dedup_near_minhash,
-    dedup_near_minhash_ml,
     dedup_simhash,
 )
 from mysqldump_to_parquet_spark.llm.similarity import sim_topk
@@ -36,24 +35,6 @@ def test_minhash_finds_planted_duplicate(spark, tmp_path):
     ), f"planted near-dup not found in {len(pairs)} pairs"
     # no self-pairs, ordered pairs only
     assert all(r.doc_a < r.doc_b for r in pairs)
-
-
-def test_minhash_ml_variant_finds_planted_duplicate(spark, tmp_path):
-    """The spark.ml MinHashLSH alternative (not registry-listed — redundant
-    twin of q_dedup_near) keeps working: same planted-dup check."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    base = docs.limit(50)
-    src = base.where(F.col("doc_id") == 0).select("text").collect()[0][0]
-    mutated = " ".join(["ZZZ"] + src.split(" ")[1:])
-    extra = spark.createDataFrame(
-        [(100000, mutated, "en", "srcX", len(mutated))],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    planted_dir = str(tmp_path / "docs")
-    base.unionByName(extra).write.parquet(f"{planted_dir}/documents.parquet")
-
-    pairs = dedup_near_minhash_ml(spark, planted_dir).collect()
-    assert any((r.doc_a == 0 and r.doc_b == 100000) for r in pairs)
 
 
 def test_minhash_bucket_cap_bounds_degenerate_corpus(spark, tmp_path):

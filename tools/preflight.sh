@@ -9,8 +9,10 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/4 unit + property tests =="
-python -m pytest tests/ -q
+echo "== 1/4 unit + property tests (the ROADMAP Tier-1 command) =="
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+  timeout -k 10 2670 python -m pytest tests/ -q \
+  --continue-on-collection-errors -p no:cacheprovider
 
 echo "== 2/4 driver simulation (pandas canon + stability, all keys) =="
 python tools/driver_sim.py --all
